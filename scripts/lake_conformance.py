@@ -67,6 +67,12 @@ Checked fixtures (written by graft.Verify's run of the graded queries):
       re-derived from the manifest-list's partition_spec_id tags; the
       planned file counts and residual censuses must match the dump.
 
+Every fixture root must also be free of staging debris: no directory
+named like a write stage (`_stage-*`, or the older `.stage*` spelling)
+and no Spark job-output marker (`_SUCCESS`, `_temporary`) anywhere
+under it — a finished commit moves its staged files out and removes
+the rest.
+
 Usage:  python3 scripts/lake_conformance.py <sfDir> <verifyOutDir>
 
 Exit 0 = every comparison matched; 1 = any mismatch (diffs printed).
@@ -844,6 +850,16 @@ def check_iceberg_specevo(con, base: str, outdir: str):
     return failures
 
 
+def stage_debris(base: str):
+    """Paths under `base` that a staged write left behind."""
+    found = []
+    for d, dirs, files in os.walk(base):
+        for n in dirs + files:
+            if re.match(r"[._]stage", n) or n in ("_SUCCESS", "_temporary"):
+                found.append(os.path.relpath(os.path.join(d, n), base))
+    return sorted(found)
+
+
 def main():
     if len(sys.argv) != 3:
         print(__doc__)
@@ -876,6 +892,7 @@ def main():
             fs = fn(con, base, outdir)
         except Exception as e:  # a parse failure IS a conformance failure
             fs = [f"{label}: {type(e).__name__}: {e}"]
+        fs += [f"{label}: staging left behind: {p}" for p in stage_debris(base)]
         if fs:
             failures += fs
             print(f"FAIL {label} ({base})")

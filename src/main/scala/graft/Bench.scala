@@ -1,4 +1,6 @@
 package graft
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark entry point (SURVEY §3.3). Prints ONE JSON line the driver
@@ -14,6 +16,11 @@ import org.apache.spark.sql.SparkSession
   * regressions on sub-second queries. The memoized dedup artifacts are
   * evicted between passes so every pass pays its own index build (the
   * min stays honest about build cost).
+  *
+  * A query that throws in any pass is not timed: it is left out of
+  * `queries` and `value`, logged to stderr, and listed in a
+  * `{"failed":[...]}` line and in `BENCH_OUT.json` (written to the
+  * working directory).
   *
   * Per-query detail is printed FASTEST-first in ≤1400-char chunks: the
   * driver keeps only the tail of stdout, so the expensive queries — the
@@ -56,7 +63,7 @@ object Bench {
         "lineitem", "documents", "embeddings")
         .foreach(t => spark.read.parquet(s"$sfDir/$t.parquet").count())
       Tables.events(spark, sfDir).count()
-    } catch { case _: Throwable => }
+    } catch { case NonFatal(e) => System.err.println(s"[bench] warm-up failed: $e") }
     // SPARK_GRAFT_BENCH_ONLY: comma-separated names or prefixes —
     // run a family in isolation to separate a query's own cost from
     // suite-context pressure (codegen cache, heap, /tmp churn). Dev
@@ -78,11 +85,17 @@ object Bench {
       case None => named1
     }
     val best = scala.collection.mutable.Map.empty[String, Double]
+    // a query that throws in ANY pass is reported as failed, never timed
+    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
     for (_ <- 1 to passes) {
       graft.queries.DedupQueries.evict(spark)
       named.foreach { case (name, fn) =>
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+        try fn(spark, sfDir).count()
+        catch { case e: Throwable =>
+          System.err.println(s"[bench] $name failed: $e")
+          failed += name
+        }
         val sec = (System.nanoTime() - t0) / 1e9
         if (sec < best.getOrElse(name, Double.MaxValue)) best(name) = sec
         // between-queries hygiene, OUTSIDE the timer: drop the query's
@@ -92,7 +105,7 @@ object Bench {
         try Hygiene.sweep(spark) catch { case _: Throwable => () }
       }
     }
-    val results = named.map { case (name, _) => name -> best(name) }
+    val results = named.collect { case (name, _) if !failed(name) => name -> best(name) }
     val total = math.round(results.map(_._2).sum * 100) / 100.0
     def entry(k: String, v: Double): String =
       "\"" + k + "\":" + (math.round(v * 100) / 100.0)
@@ -115,16 +128,17 @@ object Bench {
     val all = fmt(results.sortBy(-_._2))
     val qs = if (all.length <= 1500) all
              else fmt(results.filter(p => headline.contains(p._1)))
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val line = s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"passes":$passes,"queries":$qs,"sf":"$sfDir"}"""
     // belt and braces: every BENCH_r* file so far shows parsed:null — the
     // driver has never consumed the stdout line (sbt [info] prefix /
     // trailing [success] line). ALSO write the metric JSON — with the FULL
     // per-query map, no tail-buffer cap — to a well-known file.
-    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"passes":$passes,"queries":$all,"sf":"$sfDir"}"""
-    try java.nio.file.Files.write(
-      java.nio.file.Paths.get("/root/repo/BENCH_OUT.json"),
-      (fullLine + "\n").getBytes("UTF-8"))
-    catch { case _: Throwable => () }
+    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"passes":$passes,"queries":$all,"failed":$failedJson,"sf":"$sfDir"}"""
+    val out = java.nio.file.Paths.get(System.getProperty("user.dir"), "BENCH_OUT.json")
+    try java.nio.file.Files.write(out, (fullLine + "\n").getBytes("UTF-8"))
+    catch { case NonFatal(e) => System.err.println(s"[bench] cannot write $out: $e") }
+    if (failed.nonEmpty) println(s"""{"failed":$failedJson}""")
     println(line)
     spark.stop()
   }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.sources.TxnLog
+import graft.sources.{Stage, TxnLog}
 
 /** Transactional-table (lakehouse-lite) surface: time travel over an
   * atomic commit log, copy-on-write delete, and manifest-level file
@@ -2839,26 +2839,13 @@ object LakehouseQueries extends QueryGroup {
                           df: org.apache.spark.sql.DataFrame,
                           groupCol: org.apache.spark.sql.Column,
                           relFor: String => String): Map[String, (String, Long)] = {
-    import java.nio.file.{Files, Paths}
-    import scala.jdk.CollectionConverters._
-    val tmp = s"$base/.stage"
-    TxnLog.rmrf(tmp)
-    df.withColumn("__g", groupCol.cast("string"))
-      .repartition(1).write.partitionBy("__g").parquet(tmp)
-    val moved = graft.sources.Fs.list(Paths.get(tmp)).iterator
-      .filter(_.getFileName.toString.startsWith("__g="))
-      .map { dir =>
-        val v = dir.getFileName.toString.stripPrefix("__g=")
-        val parts = graft.sources.Fs.list(dir).iterator
-          .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
-        require(parts.size == 1,
-          s"single-task partitionBy wrote ${parts.size} files for group $v")
-        val rel = relFor(v)
-        Files.createDirectories(Paths.get(base, rel).getParent)
-        Files.move(parts.head, Paths.get(base, rel))
-        v -> rel
+    val moved = Stage(base)(df.withColumn("__g", groupCol.cast("string"))
+      .repartition(1).write.partitionBy("__g").parquet(_)) { leaves =>
+      Stage.cells(leaves).map { l =>
+        val v = l.value("__g")
+        v -> Stage.move(l, base, relFor(v))
       }.toMap
-    TxnLog.rmrf(tmp)
+    }
     val counts = s.read.parquet(moved.values.map(r => s"$base/$r").toSeq: _*)
       .groupBy(col("_metadata.file_name").as("f"))
       .agg(count(lit(1)).as("n"))
@@ -2947,17 +2934,7 @@ object LakehouseQueries extends QueryGroup {
     Files.createDirectories(Paths.get(base, "_change_data"))
     val o = iceOrders(s, d)
     def writeOne(df: org.apache.spark.sql.DataFrame, rel: String): (String, Long) = {
-      val tmp = s"$base/.stage"
-      TxnLog.rmrf(tmp)
-      df.coalesce(1).write.parquet(tmp)
-      val it = graft.sources.Fs.list(Paths.get(tmp)).iterator
-      var src: java.nio.file.Path = null
-      while (it.hasNext) {
-        val p = it.next()
-        if (p.getFileName.toString.endsWith(".parquet")) src = p
-      }
-      Files.move(src, Paths.get(base, rel))
-      TxnLog.rmrf(tmp)
+      Stage.file(df, base, rel)
       (rel, df.count())
     }
     def add(g: (String, Long)) = {
@@ -3019,21 +2996,8 @@ object LakehouseQueries extends QueryGroup {
     Files.createDirectories(Paths.get(base, "data"))
 
     /** Write `df` as exactly ONE file at `rel` under the table base. */
-    def writeOne(df: org.apache.spark.sql.DataFrame, rel: String, avro: Boolean = false): Unit = {
-      val tmp = s"$base/.stage"
-      TxnLog.rmrf(tmp)
-      val staged = df.coalesce(1).write
-      if (avro) staged.format(avroFmt).save(tmp) else staged.parquet(tmp)
-      val ext = if (avro) ".avro" else ".parquet"
-      val it = graft.sources.Fs.list(Paths.get(tmp)).iterator
-      var src: java.nio.file.Path = null
-      while (it.hasNext) {
-        val p = it.next()
-        if (p.getFileName.toString.endsWith(ext)) src = p
-      }
-      Files.move(src, Paths.get(base, rel))
-      TxnLog.rmrf(tmp)
-    }
+    def writeOne(df: org.apache.spark.sql.DataFrame, rel: String, avro: Boolean = false): Unit =
+      Stage.file(df, base, rel, if (avro) avroFmt else "parquet")
 
     private def sizeOf(rel: String): Long = Files.size(Paths.get(base, rel))
 
@@ -3267,30 +3231,14 @@ object LakehouseQueries extends QueryGroup {
     writeGroups(s, base, o, pmod(col("o_orderkey"), lit(3)),
       v => s"g${v}_0-0-0_001.parquet")
     Files.writeString(Paths.get(base, ".hoodie", "001.commit"), "{}")
-    hudiWriteFile(s, base, o.filter(pmod(col("o_orderkey"), lit(3)) === 0 &&
-      col("o_orderpriority") =!= "1-URGENT"), "g0_0-0-0_002.parquet")
+    Stage.file(o.filter(pmod(col("o_orderkey"), lit(3)) === 0 &&
+      col("o_orderpriority") =!= "1-URGENT"), base, "g0_0-0-0_002.parquet")
     Files.writeString(Paths.get(base, ".hoodie", "002.commit"), "{}")
     // instant 003 started rewriting g1 but never completed
-    hudiWriteFile(s, base, o.filter(pmod(col("o_orderkey"), lit(3)) === 1).limit(1),
+    Stage.file(o.filter(pmod(col("o_orderkey"), lit(3)) === 1).limit(1), base,
       "g1_0-0-0_003.parquet")
     Files.writeString(Paths.get(base, ".hoodie", "003.inflight"), "")
     base
-  }
-
-  private def hudiWriteFile(s: SparkSession, base: String,
-                            df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-    import java.nio.file.{Files, Paths}
-    val tmp = s"$base/.stage"
-    TxnLog.rmrf(tmp)
-    df.coalesce(1).write.parquet(tmp)
-    val it = graft.sources.Fs.list(Paths.get(tmp)).iterator
-    var src: java.nio.file.Path = null
-    while (it.hasNext) {
-      val p = it.next()
-      if (p.getFileName.toString.endsWith(".parquet")) src = p
-    }
-    Files.move(src, Paths.get(base, name))
-    TxnLog.rmrf(tmp)
   }
 
   /** Build the Hudi incremental fixture: like [[mkHudiFixture]] but
@@ -3317,7 +3265,7 @@ object LakehouseQueries extends QueryGroup {
         col("cents") + 7).otherwise(col("cents")))
       .withColumn("_hoodie_commit_time", when(col("o_orderpriority") === "2-HIGH",
         lit("002")).otherwise(col("_hoodie_commit_time")))
-    hudiWriteFile(s, base, g0v2, "g0_0-0-0_002.parquet")
+    Stage.file(g0v2, base, "g0_0-0-0_002.parquet")
     Files.writeString(Paths.get(base, ".hoodie", "002.commit"), "{}")
     base
   }

@@ -37,9 +37,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object DeltaLogReader {
 
   /** Sessions whose DV path-spelling probe already passed (weak: a
-    * stopped session must not pin its entry). */
-  private val probedSessions = java.util.Collections.newSetFromMap(
-    new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
+    * stopped session must not pin its entry; synchronized: concurrent
+    * reads on one session share it). */
+  private val probedSessions = java.util.Collections.synchronizedSet(
+    java.util.Collections.newSetFromMap(
+      new java.util.WeakHashMap[SparkSession, java.lang.Boolean]()))
 
   /** Spec deletion-vector descriptor riding an add action: which rows
     * of the file are soft-deleted, as a serialized roaring bitmap in a
@@ -639,30 +641,23 @@ object DeltaLogReader {
     if (raw.length > 1 && raw.endsWith("/")) raw.dropRight(1) else raw
   }
 
-  /** Apply each file's deletion vector (if any) to the scan: decode the
-    * KB-scale bitmaps into (file, row_index) pairs — payload bytes ship
-    * to executors, positions never materialize on the driver — and
-    * LEFT ANTI join against Spark's native parquet row positions, the
-    * same shape as Iceberg position deletes. Files without a DV pass
-    * through untouched; pushdown and pruning on the data side survive
-    * because the scan itself stays the ordinary parquet read. */
+  /** Apply each file's deletion vector (if any) to the scan: stamp
+    * Spark's native parquet row positions as `__path`/`__pos`, mask
+    * them through [[dvMaskKeep]] and project the scan's own columns
+    * back. Files without a DV pass through untouched; pushdown and
+    * pruning on the data side survive because the scan itself stays
+    * the ordinary parquet read. */
   private def applyDvs(spark: SparkSession, base: String,
                        adds: Seq[DeltaAdd], data: DataFrame): DataFrame = {
     val withDv = adds.filter(_.dv.isDefined)
     if (withDv.isEmpty) return data
-    import org.apache.spark.sql.functions.{broadcast, col, regexp_replace}
+    import org.apache.spark.sql.functions.{col, regexp_replace}
     // both join sides must normalize to the SAME absolute form: the
     // driver side resolves rel paths against the ABSOLUTE table root
     // (a relative `base` would otherwise never match and the DVs would
     // silently no-op — soft-deleted rows resurrected with no error)
     // while the scan side strips the scan's `file:` URI scheme
     val absBase = Paths.get(base).toAbsolutePath.normalize
-    val payloads: Seq[(String, Array[Byte])] = withDv.map { a =>
-      val abs = scanSpelling(absBase.resolve(a.path))
-      val d = a.dv.get
-      (abs, RoaringDv.loadPayload(base, d.storageType, d.pathOrInlineDv,
-        d.offset, d.sizeInBytes))
-    }
     // sanity-pin the convention with one O(1-row) probe: a direct scan
     // of the first DV-carrying file must yield exactly the driver-side
     // spelling, else the anti-join keys have drifted (path encoding,
@@ -681,19 +676,10 @@ object DeltaLogReader {
         s"DV path-match convention broke: scan spells '$probed', driver '$probeKey'")
       probedSessions.add(spark)
     }
-    val enc = org.apache.spark.sql.Encoders.tuple(
-      org.apache.spark.sql.Encoders.STRING, org.apache.spark.sql.Encoders.scalaLong)
-    val dels = spark.createDataset(payloads)(org.apache.spark.sql.Encoders.tuple(
-        org.apache.spark.sql.Encoders.STRING, org.apache.spark.sql.Encoders.BINARY))
-      .flatMap { case (p, bytes) => RoaringDv.deserialize(bytes).map(pos => (p, pos)) }(enc)
-      .toDF("__del_path", "__del_pos")
     val cols = data.columns.map(col)
-    data
+    dvMaskKeep(spark, base, withDv, data
       .withColumn("__path", regexp_replace(col("_metadata.file_path"), "^file:/*", "/"))
-      .withColumn("__pos", col("_metadata.row_index"))
-      .join(broadcast(dels),
-        col("__path") === col("__del_path") && col("__pos") === col("__del_pos"),
-        "left_anti")
+      .withColumn("__pos", col("_metadata.row_index")))
       .select(cols.toIndexedSeq: _*)
   }
 

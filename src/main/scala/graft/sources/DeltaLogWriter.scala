@@ -371,30 +371,18 @@ object DeltaLogWriter {
 
   private def writeData(df: DataFrame, base: String, version: Long,
                         partitionBy: Seq[String] = Nil): Seq[String] = {
-    val tmp = s"$base/.stage-v$version"
-    TxnLog.rmrf(tmp)
     val w = df.write
     // column-mapped frames carry parquet.field.id metadata — the spec
     // requires the files to EMBED those ids (id-based readers bind by
     // them), which needs the session flag on for this write only
     val stampsIds = df.schema.fields.exists(_.metadata.contains("parquet.field.id"))
-    def run(): Unit =
+    def run(tmp: String): Unit =
       (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(tmp)
-    if (stampsIds) withFieldIdWrites(df.sparkSession)(run()) else run()
-    Files.createDirectories(Paths.get(base))
-    val moved = Fs.walk(Paths.get(tmp)).iterator
-      .filter(_.getFileName.toString.endsWith(".parquet"))
-      .map { p =>
-        val relDir = Paths.get(tmp).relativize(p.getParent).toString
-        val prefix = if (relDir.isEmpty) "" else relDir + "/"
-        val rel = s"$prefix" + s"v$version-${p.getFileName}"
-        Files.createDirectories(Paths.get(base, rel).getParent)
-        Files.move(p, Paths.get(base, rel))
-        rel
-      }.toSeq
-    TxnLog.rmrf(tmp)
-    require(moved.nonEmpty, s"writeData produced no part files under $tmp")
-    moved
+    Stage(base)(tmp => if (stampsIds) withFieldIdWrites(df.sparkSession)(run(tmp)) else run(tmp)) {
+      leaves =>
+        require(leaves.nonEmpty, s"writeData produced no part files for $base")
+        leaves.map(l => Stage.move(l, base, s"${l.prefix()}v$version-${l.name}"))
+    }
   }
 
   private[graft] def commit(base: String, version: Long, actions: Seq[String]): Unit = {
@@ -537,31 +525,14 @@ object DeltaLogWriter {
     val next = ctx.version + 1
     // one write task per occupied (partition, z-bucket) cell; flat
     // tables are the zero-partition case (flat deterministic names)
-    val tmp = s"$base/.stage-zopt$next"
-    TxnLog.rmrf(tmp)
     val staged = toPhysical(df0.withColumn("__zb", shiftrightunsigned(z, shift)),
       ctx.colMap)
     val stageCols = ctx.physPcols :+ "__zb"
-    staged.repartition(stageCols.map(col): _*)
-      .write.partitionBy(stageCols: _*).parquet(tmp)
-    val tmpP = Paths.get(tmp)
-    val rels = Fs.walk(tmpP).iterator
-      .filter(p => Files.isDirectory(p) && p.getFileName.toString.startsWith("__zb="))
-      .flatMap { dir =>
-        val zb = dir.getFileName.toString.stripPrefix("__zb=")
-        val prefix = tmpP.relativize(dir.getParent).toString match {
-          case "" => ""
-          case d  => d + "/"
-        }
-        val parts = Fs.list(dir).iterator
-          .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
-        require(parts.size == 1, s"z-bucket $prefix$zb staged ${parts.size} files")
-        val rel = s"${prefix}v$next-zb$zb.parquet"
-        Files.createDirectories(Paths.get(base, rel).getParent)
-        Files.move(parts.head, Paths.get(base, rel))
-        Seq(rel)
-      }.toSeq.sorted
-    TxnLog.rmrf(tmp)
+    val rels = Stage(base)(staged.repartition(stageCols.map(col): _*)
+      .write.partitionBy(stageCols: _*).parquet(_)) { leaves =>
+      Stage.cells(leaves).map(l =>
+        Stage.move(l, base, s"${l.prefix("__zb")}v$next-zb${l.value("__zb")}.parquet"))
+    }.sorted
     val hwm = ctx.rtConf.map(_ =>
       DeltaLogReader.rowIdHighWaterMark(Some(spark), base, ctx.version).getOrElse(-1L))
     val (adds, total) = addActionsCounted(spark, base, rels,
@@ -1468,7 +1439,6 @@ object DeltaLogWriter {
               coalesce(matCol(matVer), col("__rt_ver")).cast("long").as(matVer)): _*)
       }
     }
-    var counter = 0
     val packed = domains.flatMap { case (prefix, files) =>
       val bytes = files.map(_.size).sum
       val numOut = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
@@ -1477,20 +1447,9 @@ object DeltaLogWriter {
         // stage the packed rewrite, then move parts under the SAME
         // partition dir — partition values live in the path (and the
         // add's partitionValues derive from it)
-        val tmp = s"$base/.stage-opt$next-$counter"
-        counter += 1
-        TxnLog.rmrf(tmp)
-        domainRead(files)
-          .repartition(numOut).write.parquet(tmp)
-        val rels = Fs.list(Paths.get(tmp)).iterator
-          .filter(_.getFileName.toString.endsWith(".parquet"))
-          .map { p =>
-            val rel = s"$prefix" + s"v$next-${p.getFileName}"
-            Files.createDirectories(Paths.get(base, rel).getParent)
-            Files.move(p, Paths.get(base, rel))
-            rel
-          }.toSeq
-        TxnLog.rmrf(tmp)
+        val rels = Stage(base)(domainRead(files).repartition(numOut).write.parquet(_)) {
+          _.map(l => Stage.move(l, base, s"${prefix}v$next-${l.name}"))
+        }
         Some((files, rels))
       }
     }
@@ -1983,20 +1942,12 @@ object DeltaLogWriter {
     * throwing, or the orphans collide with the next DML's move. */
   private def writeCdc(spark: SparkSession, base: String, version: Long,
                        changes: DataFrame, affected: Int): Seq[(String, String)] = {
-    Files.createDirectories(Paths.get(base, "_change_data"))
-    val cdcTmp = s"$base/.stage-cdc$version"
-    TxnLog.rmrf(cdcTmp)
-    changes.coalesce(math.max(1, affected)).write.parquet(cdcTmp)
-    val rels = Fs.list(Paths.get(cdcTmp)).iterator
-      .filter(_.getFileName.toString.endsWith(".parquet"))
-      .toSeq.sortBy(_.getFileName.toString)
-      .zipWithIndex.map { case (p, i) =>
-        val rel = s"_change_data/cdc-$version-$i.parquet"
-        Files.move(p, Paths.get(base, rel))
-        rel
+    val rels = Stage(base)(changes.coalesce(math.max(1, affected)).write.parquet(_)) { leaves =>
+      require(leaves.nonEmpty, "no cdc file staged")
+      leaves.zipWithIndex.map { case (l, i) =>
+        Stage.move(l, base, s"_change_data/cdc-$version-$i.parquet")
       }
-    TxnLog.rmrf(cdcTmp)
-    require(rels.nonEmpty, "no cdc file staged")
+    }
     rels.map(rel => rel ->
       (s"""{"cdc":{"path":"${esc(rel)}","partitionValues":{},""" +
         s""""size":${Files.size(Paths.get(base, rel))},"dataChange":false}}"""))
@@ -2422,22 +2373,13 @@ object DeltaLogWriter {
     (version, actionRows, addRows)
   }
 
-  /** Stage-write one single-part parquet of `rows` and move it to
-    * `dest`; returns the row count. */
-  private def writeOneParquet(spark: SparkSession, stage: String,
+  /** Write one single-part parquet of `rows` at `rel` under `base`. */
+  private def writeOneParquet(spark: SparkSession, base: String,
                               rows: Seq[org.apache.spark.sql.Row],
                               schema: org.apache.spark.sql.types.StructType,
-                              dest: java.nio.file.Path): Unit = {
-    TxnLog.rmrf(stage)
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
-      .coalesce(1).write.parquet(stage)
-    val part = Fs.list(Paths.get(stage)).iterator
-      .find(_.getFileName.toString.endsWith(".parquet"))
-      .getOrElse(throw new IllegalStateException(s"stage $stage wrote no parquet"))
-    Files.createDirectories(dest.getParent)
-    Files.move(part, dest)
-    TxnLog.rmrf(stage)
-  }
+                              rel: String): Unit =
+    Stage.file(spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema),
+      base, rel)
 
   def checkpoint(spark: SparkSession, base: String): Long = {
     import org.apache.spark.sql.Row
@@ -2450,8 +2392,7 @@ object DeltaLogWriter {
     val rows = actions.map(r => Row(r.get(0), r.get(1), r.get(2), r.get(3), null)) ++
       adds.map(r => Row(null, null, null, null, r.get(0)))
     val dir = Paths.get(base, "_delta_log")
-    writeOneParquet(spark, s"$base/_delta_log/.ckpt-stage", rows, schema,
-      dir.resolve(f"$version%020d.checkpoint.parquet"))
+    writeOneParquet(spark, base, rows, schema, f"_delta_log/$version%020d.checkpoint.parquet")
     Files.write(dir.resolve("_last_checkpoint"),
       s"""{"version":$version,"size":${rows.size}}""".getBytes(StandardCharsets.UTF_8))
     version
@@ -2480,8 +2421,7 @@ object DeltaLogWriter {
       // spec only requires uniqueness within _sidecars/
       val name = java.util.UUID.nameUUIDFromBytes(
         s"$base-$version-$i".getBytes(StandardCharsets.UTF_8)).toString + ".parquet"
-      writeOneParquet(spark, s"$base/_delta_log/.sidecar-stage$i", rows, sideSchema,
-        sideDir.resolve(name))
+      writeOneParquet(spark, base, rows, sideSchema, s"_delta_log/_sidecars/$name")
       (name, Files.size(sideDir.resolve(name)))
     }
     val ckptMetaT = StructType(Seq(StructField("version", LongType)))
@@ -2501,8 +2441,8 @@ object DeltaLogWriter {
     val dir = Paths.get(base, "_delta_log")
     val unique = java.util.UUID.nameUUIDFromBytes(
       s"$base-$version-top".getBytes(StandardCharsets.UTF_8)).toString
-    writeOneParquet(spark, s"$base/_delta_log/.ckpt-stage", topRows, topSchema,
-      dir.resolve(f"$version%020d.checkpoint.$unique.parquet"))
+    writeOneParquet(spark, base, topRows, topSchema,
+      f"_delta_log/$version%020d.checkpoint.$unique.parquet")
     Files.write(dir.resolve("_last_checkpoint"),
       s"""{"version":$version,"size":${topRows.size}}""".getBytes(StandardCharsets.UTF_8))
     version

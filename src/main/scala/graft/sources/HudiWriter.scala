@@ -67,20 +67,11 @@ object HudiWriter {
                            bucketOf: Column, instant: String,
                            fileIdPrefix: String = "g",
                            drop: Seq[String] = Nil): Unit = {
-    val tmp = s"$base/.stage"
-    TxnLog.rmrf(tmp)
-    df.withColumn("__g", bucketOf.cast("string")).drop(drop: _*)
-      .repartition(col("__g")).write.partitionBy("__g").parquet(tmp)
-    Fs.list(Paths.get(tmp)).iterator
-      .filter(_.getFileName.toString.startsWith("__g="))
-      .foreach { dir =>
-        val g = dir.getFileName.toString.stripPrefix("__g=")
-        val parts = Fs.list(dir).iterator
-          .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
-        require(parts.size == 1, s"bucket $g staged ${parts.size} files")
-        Files.move(parts.head, Paths.get(base, s"$fileIdPrefix${g}_0-0-0_$instant.parquet"))
-      }
-    TxnLog.rmrf(tmp)
+    Stage(base)(df.withColumn("__g", bucketOf.cast("string")).drop(drop: _*)
+      .repartition(col("__g")).write.partitionBy("__g").parquet(_)) { leaves =>
+      Stage.cells(leaves).foreach(l =>
+        Stage.move(l, base, s"$fileIdPrefix${l.value("__g")}_0-0-0_$instant.parquet"))
+    }
   }
 
   /** Create a COW table at `base`: every row stamped with the creating
@@ -116,27 +107,13 @@ object HudiWriter {
   private def writePartitionedBuckets(spark: SparkSession, df: DataFrame,
                                       base: String, partCol: String,
                                       bucketOf: Column, instant: String): Unit = {
-    val tmp = s"$base/.stage"
-    TxnLog.rmrf(tmp)
-    df.withColumn("__p", col(partCol).cast("string"))
+    Stage(base)(df.withColumn("__p", col(partCol).cast("string"))
       .withColumn("__g", bucketOf.cast("string"))
       .repartition(col("__p"), col("__g"))
-      .write.partitionBy("__p", "__g").parquet(tmp)
-    Fs.list(Paths.get(tmp)).iterator
-      .filter(_.getFileName.toString.startsWith("__p=")).foreach { pdir =>
-        val escVal = pdir.getFileName.toString.stripPrefix("__p=")
-        val outDir = Paths.get(base, s"$partCol=$escVal")
-        Files.createDirectories(outDir)
-        Fs.list(pdir).iterator
-          .filter(_.getFileName.toString.startsWith("__g=")).foreach { gdir =>
-            val g = gdir.getFileName.toString.stripPrefix("__g=")
-            val parts = Fs.list(gdir).iterator
-              .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
-            require(parts.size == 1, s"cell ($escVal, $g) staged ${parts.size} files")
-            Files.move(parts.head, outDir.resolve(s"g${g}_0-0-0_$instant.parquet"))
-          }
-      }
-    TxnLog.rmrf(tmp)
+      .write.partitionBy("__p", "__g").parquet(_)) { leaves =>
+      Stage.cells(leaves).foreach(l => Stage.move(l, base,
+        s"$partCol=${l.value("__p")}/g${l.value("__g")}_0-0-0_$instant.parquet"))
+    }
   }
 
   /** Create a HIVE-PARTITIONED CoW table: one file group per
@@ -427,26 +404,13 @@ object HudiWriter {
     val baseInstantOf = slices.map(b => b.fileId -> b.instant).toMap
     val existingLogs = HudiReader.logFiles(base)
     val bucket = pmod(col(key), lit(n))
-    val tmp = s"$base/.stage-log"
-    TxnLog.rmrf(tmp)
-    def moveLog(dir: java.nio.file.Path, qfid: String, outDir: java.nio.file.Path): Unit = {
-      val bi = baseInstantOf.getOrElse(qfid,
-        throw new IllegalStateException(s"log write targets unknown file group $qfid"))
-      val parts = Fs.list(dir).iterator
-        .filter(_.getFileName.toString.endsWith(".avro")).toSeq
-      require(parts.size == 1, s"cell $qfid staged ${parts.size} log files")
-      val v = existingLogs.count(l => l.fileId == qfid && l.baseInstant == bi) + 1
-      val fname = s"${qfid.split('/').last}_$bi.log.${v}_$instant.avro"
-      Files.createDirectories(outDir)
-      Files.move(parts.head, outDir.resolve(fname))
-    }
     // STAGE FIRST — the one full computation of `records` — then
     // validate emptiness and the within-commit clash rule from the
     // staged KB-scale files in ONE aggregate job. The old shape ran
     // three actions over `records` (isEmpty, clash groupBy, write),
     // each recomputing the source — for deleteWhere that was a full
     // MOR merge per action (§1.2: remove repeated passes).
-    partCol match {
+    def stageLogs(tmp: String): Unit = partCol match {
       case None =>
         records.withColumn("__g", bucket.cast("string"))
           .repartition(col("__g")).write.partitionBy("__g")
@@ -457,52 +421,35 @@ object HudiWriter {
           .repartition(col("__p"), col("__g")).write.partitionBy("__p", "__g")
           .format("org.apache.spark.sql.avro.AvroFileFormat").save(tmp)
     }
-    val stagedLeaves = Fs.walk(Paths.get(tmp))
-      .filter(_.getFileName.toString.endsWith(".avro")).map(_.toString).sorted
-    if (stagedLeaves.isEmpty) {
-      TxnLog.rmrf(tmp)
-      throw new IllegalArgumentException("logCommit with nothing to write")
-    }
-    // within-commit determinism: one deltacommit may not carry two
-    // records for the same (partition-local) key — they would land in
-    // the same log file with the same merge precedence and the
-    // snapshot survivor would be random
-    val clashCols =
-      if (partCol.isDefined) Seq("_hoodie_partition_path", "_hoodie_record_key")
-      else Seq("_hoodie_record_key")
-    val clashes = spark.read.format("org.apache.spark.sql.avro.AvroFileFormat")
-      .load(stagedLeaves: _*)
-      .groupBy(clashCols.map(col): _*)
-      .count().filter(col("count") > 1).count()
-    if (clashes > 0L) {
-      TxnLog.rmrf(tmp)
-      throw new IllegalArgumentException(
+    Stage(base)(stageLogs) { staged =>
+      if (staged.isEmpty) throw new IllegalArgumentException("logCommit with nothing to write")
+      // within-commit determinism: one deltacommit may not carry two
+      // records for the same (partition-local) key — they would land in
+      // the same log file with the same merge precedence and the
+      // snapshot survivor would be random
+      val clashCols =
+        if (partCol.isDefined) Seq("_hoodie_partition_path", "_hoodie_record_key")
+        else Seq("_hoodie_record_key")
+      val clashes = spark.read.format("org.apache.spark.sql.avro.AvroFileFormat")
+        .load(staged.map(_.path.toString): _*)
+        .groupBy(clashCols.map(col): _*)
+        .count().filter(col("count") > 1).count()
+      if (clashes > 0L) throw new IllegalArgumentException(
         s"logCommit carries $clashes keys more than once (upsert/delete overlap " +
           "or duplicate upserts) — the per-key survivor would be nondeterministic")
+      // inflight marker before any file becomes VISIBLE (the staged tree
+      // is outside the readers' name grammar) — the two-phase protocol
+      Files.writeString(Paths.get(base, ".hoodie", s"$instant.inflight"), "")
+      Stage.cells(staged).foreach { l =>
+        // partitioned logs live IN the cell's escaped partition dir
+        val dir = partCol.fold("")(pc => s"$pc=${l.value("__p")}/")
+        val qfid = s"${dir}g${l.value("__g")}"
+        val bi = baseInstantOf.getOrElse(qfid,
+          throw new IllegalStateException(s"log write targets unknown file group $qfid"))
+        val v = existingLogs.count(e => e.fileId == qfid && e.baseInstant == bi) + 1
+        Stage.move(l, base, s"${qfid}_$bi.log.${v}_$instant.avro")
+      }
     }
-    // inflight marker before any file becomes VISIBLE (the staged tree
-    // is outside the readers' name grammar) — the two-phase protocol
-    Files.writeString(Paths.get(base, ".hoodie", s"$instant.inflight"), "")
-    partCol match {
-      case None =>
-        Fs.list(Paths.get(tmp)).iterator
-          .filter(_.getFileName.toString.startsWith("__g="))
-          .foreach { dir =>
-            val g = dir.getFileName.toString.stripPrefix("__g=")
-            moveLog(dir, s"g$g", Paths.get(base))
-          }
-      case Some(pc) =>
-        Fs.list(Paths.get(tmp)).iterator
-          .filter(_.getFileName.toString.startsWith("__p=")).foreach { pdir =>
-            val escVal = pdir.getFileName.toString.stripPrefix("__p=")
-            Fs.list(pdir).iterator
-              .filter(_.getFileName.toString.startsWith("__g=")).foreach { gdir =>
-                val g = gdir.getFileName.toString.stripPrefix("__g=")
-                moveLog(gdir, s"$pc=$escVal/g$g", Paths.get(base, s"$pc=$escVal"))
-              }
-          }
-    }
-    TxnLog.rmrf(tmp)
     Files.delete(Paths.get(base, ".hoodie", s"$instant.inflight"))
     Files.writeString(Paths.get(base, ".hoodie", s"$instant.deltacommit"), "{}")
     instant
@@ -528,20 +475,9 @@ object HudiWriter {
     // still needs a fresh base: without one the old slice stays live
     // with its logs forever and the READ-OPTIMIZED view can never
     // converge — real compaction retires the logs with a 0-row base
-    def emptyBase(out: java.nio.file.Path): Unit = {
-      val tmp = s"$base/.stage-empty"
-      TxnLog.rmrf(tmp)
-      merged.limit(0).coalesce(1).write.parquet(tmp)
-      val part = Fs.list(Paths.get(tmp)).iterator
-        .find(_.getFileName.toString.endsWith(".parquet"))
-        .getOrElse(throw new IllegalStateException("no empty base staged"))
-      Files.createDirectories(out.getParent)
-      Files.move(part, out)
-      TxnLog.rmrf(tmp)
-    }
     def fillEmptyCells(): Unit = dirty.foreach { case (b, _) =>
-      val out = Paths.get(base, s"${b.fileId}_0-0-0_$instant.parquet")
-      if (!Files.exists(out)) emptyBase(out)
+      val rel = s"${b.fileId}_0-0-0_$instant.parquet"
+      if (!Files.exists(Paths.get(base, rel))) Stage.file(merged.limit(0), base, rel)
     }
     HudiReader.partitionFields(base).headOption match {
       case None =>

@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Paths, StandardOpenOption}
 import java.nio.charset.StandardCharsets
 
 import scala.jdk.CollectionConverters._
@@ -48,20 +48,10 @@ object IcebergWriter {
     * `data/s<snapshot>-<i>.parquet` names; returns (relPath, rows). */
   private def writeData(spark: SparkSession, df: DataFrame, base: String,
                         snapshot: Long): Seq[(String, Long)] = {
-    val tmp = s"$base/.stage-s$snapshot"
-    TxnLog.rmrf(tmp)
-    df.write.parquet(tmp)
-    Files.createDirectories(Paths.get(base, "data"))
-    val moved = Fs.list(Paths.get(tmp)).iterator
-      .filter(_.getFileName.toString.endsWith(".parquet"))
-      .toSeq.sortBy(_.getFileName.toString)
-      .zipWithIndex.map { case (p, i) =>
-        val rel = s"data/s$snapshot-$i.parquet"
-        Files.move(p, Paths.get(base, rel))
-        rel
-      }
-    TxnLog.rmrf(tmp)
-    require(moved.nonEmpty, s"writeData produced no part files under $tmp")
+    val moved = Stage(base)(df.write.parquet(_)) { leaves =>
+      require(leaves.nonEmpty, s"writeData produced no part files for $base")
+      leaves.zipWithIndex.map { case (l, i) => Stage.move(l, base, s"data/s$snapshot-$i.parquet") }
+    }
     // record_count per staged file from the parquet FOOTERS (metadata
     // plane) — the old read-back job re-scanned every byte just written
     moved.map(rel => rel -> ParquetFooters.rowCount(Paths.get(base, rel)))
@@ -117,25 +107,16 @@ object IcebergWriter {
     val idx = vals.zipWithIndex.foldLeft(flit(-1)) { case (acc, (v, i)) =>
       when(col(partitionCol) === v, i).otherwise(acc)
     }
-    val tmp = s"$base/.stage-s1"
-    TxnLog.rmrf(tmp)
     // repartition BY the partition index (the createTransformPartitioned
     // shape): one write task per partition value, in parallel, and each
     // __g= dir still gets exactly one part file
-    df.withColumn("__g", idx.cast("string"))
-      .repartition(col("__g")).write.partitionBy("__g").parquet(tmp)
-    val rels = Fs.list(Paths.get(tmp)).iterator
-      .filter(_.getFileName.toString.startsWith("__g="))
-      .map { dir =>
-        val i = dir.getFileName.toString.stripPrefix("__g=").toInt
-        val parts = Fs.list(dir).iterator
-          .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
-        require(parts.size == 1, s"partition $i staged ${parts.size} files")
-        val rel = s"data/part-p$i.parquet"
-        Files.move(parts.head, Paths.get(base, rel))
-        i -> rel
+    val rels = Stage(base)(df.withColumn("__g", idx.cast("string"))
+      .repartition(col("__g")).write.partitionBy("__g").parquet(_)) { leaves =>
+      Stage.cells(leaves).map { l =>
+        val i = l.value("__g").toInt
+        i -> Stage.move(l, base, s"data/part-p$i.parquet")
       }.toMap
-    TxnLog.rmrf(tmp)
+    }
     val entries = vals.zipWithIndex.map { case (v, i) =>
       val rel = rels(i)
       // record_count from the footer — no read-back data pass
@@ -168,27 +149,18 @@ object IcebergWriter {
     TxnLog.rmrf(base)
     Files.createDirectories(Paths.get(base, "metadata"))
     Files.createDirectories(Paths.get(base, "data"))
-    val tmp = s"$base/.stage-s1"
-    TxnLog.rmrf(tmp)
     // repartition BY the transform value: each partition dir is written
     // by exactly one task (one file per partition, the invariant below)
     // and the ~|distinct values| writes run in parallel — a month
     // transform over years of data is dozens of files, not one task's
     // sequential loop
-    df.withColumn("__g", partExpr.cast("long").cast("string"))
-      .repartition(col("__g")).write.partitionBy("__g").parquet(tmp)
-    val rels = Fs.list(Paths.get(tmp)).iterator
-      .filter(_.getFileName.toString.startsWith("__g="))
-      .map { dir =>
-        val v = dir.getFileName.toString.stripPrefix("__g=").toLong
-        val parts = Fs.list(dir).iterator
-          .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
-        require(parts.size == 1, s"partition $v staged ${parts.size} files")
-        val rel = s"data/part-$fieldName-$v.parquet"
-        Files.move(parts.head, Paths.get(base, rel))
-        v -> rel
+    val rels = Stage(base)(df.withColumn("__g", partExpr.cast("long").cast("string"))
+      .repartition(col("__g")).write.partitionBy("__g").parquet(_)) { leaves =>
+      Stage.cells(leaves).map { l =>
+        val v = l.value("__g").toLong
+        v -> Stage.move(l, base, s"data/part-$fieldName-$v.parquet")
       }.toMap
-    TxnLog.rmrf(tmp)
+    }
     val schema = StructType(Seq(
       StructField("status", IntegerType, nullable = false),
       StructField("data_file", StructType(Seq(
@@ -338,9 +310,12 @@ object IcebergWriter {
       else refs.toSeq.sortBy(_._1).map { case (n, (id, t)) =>
         s""""$n":{"snapshot-id":$id,"type":"$t"}"""
       }.mkString(""","refs":{""", ",", "}")
+    // CREATE_NEW: a second writer at the same metadata version must
+    // fail, not replace the first — the catalog's mutual-exclusion point
     Files.writeString(Paths.get(base, "metadata", s"v$v.metadata.json"),
       s"""{"format-version":$formatVersion,"table-uuid":"graft-export","location":"$base"$schemasFrag$specsFrag,""" +
-        s""""current-snapshot-id":$current,"snapshots":[${ss.mkString(",")}]$nri$statsJson$refsJson}""")
+        s""""current-snapshot-id":$current,"snapshots":[${ss.mkString(",")}]$nri$statsJson$refsJson}""",
+      StandardOpenOption.CREATE_NEW)
     Files.writeString(Paths.get(base, "metadata", "version-hint.text"), v.toString)
   }
 
@@ -450,22 +425,13 @@ object IcebergWriter {
     val prevManifests = IcebergReader.manifestsWithSpecs(spark, base, prev)
     val snap = prev + 1
     // stage one write task per transformed value (the parallel shape)
-    val tmp = s"$base/.stage-s$snap"
-    TxnLog.rmrf(tmp)
-    df.withColumn("__g", partExpr.cast("string"))
-      .repartition(col("__g")).write.partitionBy("__g").parquet(tmp)
-    val rels = Fs.list(Paths.get(tmp)).iterator
-      .filter(_.getFileName.toString.startsWith("__g="))
-      .map { dir =>
-        val g = dir.getFileName.toString.stripPrefix("__g=").toLong
-        val parts = Fs.list(dir).iterator
-          .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
-        require(parts.size == 1, s"partition $g staged ${parts.size} files")
-        val rel = s"data/part-${f.name}-s$snap-$g.parquet"
-        Files.move(parts.head, Paths.get(base, rel))
-        g -> rel
+    val rels = Stage(base)(df.withColumn("__g", partExpr.cast("string"))
+      .repartition(col("__g")).write.partitionBy("__g").parquet(_)) { leaves =>
+      Stage.cells(leaves).map { l =>
+        val g = l.value("__g").toLong
+        g -> Stage.move(l, base, s"data/part-${f.name}-s$snap-$g.parquet")
       }.toMap
-    TxnLog.rmrf(tmp)
+    }
     val schema = StructType(Seq(
       StructField("status", IntegerType, nullable = false),
       StructField("data_file", StructType(Seq(
@@ -1219,7 +1185,6 @@ object IcebergWriter {
       val delEntries =
         if (delPosByFile.isEmpty) Nil
         else {
-          Files.createDirectories(Paths.get(base, "data"))
           val rows = delPosByFile.toSeq.sortBy(_._1).flatMap { case (p, ps) =>
             ps.distinct.sorted.map(pos => Row(p, pos))
           }
@@ -1227,13 +1192,8 @@ object IcebergWriter {
             StructField("file_path", StringType, nullable = false),
             StructField("pos", LongType, nullable = false)))
           val rel = s"data/del-s$snap-0.parquet"
-          spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
-            .coalesce(1).write.parquet(s"$base/.stage-rd$snap")
-          val part = Fs.list(Paths.get(base, s".stage-rd$snap")).iterator
-            .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
-          require(part.size == 1, s"expected one staged delete file, got ${part.size}")
-          Files.move(part.head, Paths.get(base, rel))
-          TxnLog.rmrf(s"$base/.stage-rd$snap")
+          Stage.file(spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema),
+            base, rel)
           Seq((1, rel, rows.size.toLong, 1, snap.toLong))
         }
       writeV2Manifest(spark, base, s"metadata/m$snap.avro",
@@ -1285,38 +1245,30 @@ object IcebergWriter {
     // wide DELETE at 100 TB writes one spec-legal delete file per
     // shuffle partition (the manifest lists them all); the commit
     // census is one KB-scale read-back over the staged files
-    Files.createDirectories(Paths.get(base, "data"))
-    val tmp = s"$base/.stage-del$snap"
-    TxnLog.rmrf(tmp)
-    data.filter(predicate.eqNullSafe(true))
+    val (nFiles, delRels) = Stage(base)(data.filter(predicate.eqNullSafe(true))
       .select(col("__path").as("file_path"), col("__pos").as("pos"))
       .repartitionByRange(math.max(1, scan.dataFiles.size),
         col("file_path"), col("pos"))
       .sortWithinPartitions("file_path", "pos")
-      .write.parquet(tmp)
-    val staged = Fs.list(Paths.get(tmp)).iterator
-      .filter(_.getFileName.toString.endsWith(".parquet"))
-      .toSeq.sortBy(_.getFileName.toString)
-    require(staged.nonEmpty, "no delete file staged")
-    // per-part census (drops the empty parts Spark writes for empty
-    // range partitions) before the move assigns final names — counts
-    // come from the staged files' footers, no read-back data pass
-    val counts = staged.map(p =>
-      p.getFileName.toString -> ParquetFooters.rowCount(p)).toMap
-    val nonEmpty = staged.filter(p => counts.get(p.getFileName.toString).exists(_ > 0))
-    val nDel = counts.values.sum
-    if (nDel == 0L) { TxnLog.rmrf(tmp); return (0, 0L) }
-    // global distinct: a data file whose positions straddle a range
-    // boundary appears in two delete files but counts once
-    val nFiles = spark.read.parquet(staged.map(_.toString): _*)
-      .select("file_path").distinct().count()
-    val delRels = nonEmpty.zipWithIndex.map { case (p, i) =>
-      val rel = s"data/del-s$snap-$i.parquet"
-      val n = counts(p.getFileName.toString)
-      Files.move(p, Paths.get(base, rel))
-      (rel, n)
+      .write.parquet(_)) { staged =>
+      require(staged.nonEmpty, "no delete file staged")
+      // per-part census (drops the empty parts Spark writes for empty
+      // range partitions) before the move assigns final names — counts
+      // come from the staged files' footers, no read-back data pass
+      val nonEmpty = staged.map(l => l -> ParquetFooters.rowCount(l.path)).filter(_._2 > 0)
+      if (nonEmpty.isEmpty) (0L, Nil)
+      else {
+        // global distinct: a data file whose positions straddle a range
+        // boundary appears in two delete files but counts once
+        val nFiles = spark.read.parquet(staged.map(_.path.toString): _*)
+          .select("file_path").distinct().count()
+        (nFiles, nonEmpty.zipWithIndex.map { case ((l, n), i) =>
+          (Stage.move(l, base, s"data/del-s$snap-$i.parquet"), n)
+        })
+      }
     }
-    TxnLog.rmrf(tmp)
+    val nDel = delRels.map(_._2).sum
+    if (nDel == 0L) return (0, 0L)
     writeV2Manifest(spark, base, s"metadata/m$snap.avro",
       carriedEntries(scan, base) ++
         delRels.map { case (rel, n) => (1, rel, n, 1, snap.toLong) })
@@ -1348,9 +1300,6 @@ object IcebergWriter {
     // the eq-delete file's OWN columns are the equality tuple (the
     // reader resolves the spec's equality_ids to exactly the columns
     // the file carries)
-    Files.createDirectories(Paths.get(base, "data"))
-    val tmp = s"$base/.stage-eqdel$snap"
-    TxnLog.rmrf(tmp)
     // stage parallelism sized by the SOURCE'S BYTES (optimizer estimate,
     // free driver-side), not by core count: the old cores/4 pin split a
     // KB-scale key set into one file per 4 cores (8 eq-delete files at
@@ -1362,30 +1311,22 @@ object IcebergWriter {
     val parts = math.max(1L, math.min(
       (estBytes / (64L << 20)).toLong + 1L,
       spark.sparkContext.defaultParallelism * 4L)).toInt
-    keyTuples
-      .repartitionByRange(parts, eqCols.map(col): _*)
-      .sortWithinPartitions(eqCols.map(col): _*)
-      .write.parquet(tmp)
     // same staging discipline as deleteWhere: one spec-legal eq-delete
     // file per non-empty range partition (the manifest lists them
     // all) — a wide CDC batch never funnels through a single sort task
-    val staged = Fs.list(Paths.get(tmp)).iterator
-      .filter(_.getFileName.toString.endsWith(".parquet"))
-      .toSeq.sortBy(_.getFileName.toString)
-    require(staged.nonEmpty, "no eq-delete file staged")
-    // per-file counts from the staged footers — no read-back data pass
-    val counts = staged.map(p =>
-      p.getFileName.toString -> ParquetFooters.rowCount(p)).toMap
-    val nonEmpty = staged.filter(p => counts.get(p.getFileName.toString).exists(_ > 0))
-    val nKeys = counts.values.sum
-    require(nKeys > 0, "upsertEq with an empty source")
-    val delRels = nonEmpty.zipWithIndex.map { case (p, i) =>
-      val rel = s"data/eqdel-s$snap-$i.parquet"
-      val n = counts(p.getFileName.toString)
-      Files.move(p, Paths.get(base, rel))
-      (rel, n)
+    val delRels = Stage(base)(keyTuples
+      .repartitionByRange(parts, eqCols.map(col): _*)
+      .sortWithinPartitions(eqCols.map(col): _*)
+      .write.parquet(_)) { staged =>
+      require(staged.nonEmpty, "no eq-delete file staged")
+      // per-file counts from the staged footers — no read-back data pass
+      val nonEmpty = staged.map(l => l -> ParquetFooters.rowCount(l.path)).filter(_._2 > 0)
+      require(nonEmpty.nonEmpty, "upsertEq with an empty source")
+      nonEmpty.zipWithIndex.map { case ((l, n), i) =>
+        (Stage.move(l, base, s"data/eqdel-s$snap-$i.parquet"), n)
+      }
     }
-    TxnLog.rmrf(tmp)
+    val nKeys = delRels.map(_._2).sum
     val files = writeData(spark, source, base, snap)
     writeV2Manifest(spark, base, s"metadata/m$snap.avro",
       carriedEntries(scan, base) ++

@@ -22,19 +22,8 @@ class DeltaLogSpec extends SparkSpec {
     Files.write(Paths.get(base, "_delta_log", f"$v%020d.json"),
       lines.mkString("", "\n", "\n").getBytes("UTF-8"))
 
-  private def writeParquet(base: String, rel: String, ids: Seq[Long]): Unit = {
-    val tmp = s"$base/.stage"
-    spark.createDataFrame(ids.map(Tuple1(_))).toDF("id")
-      .coalesce(1).write.parquet(tmp)
-    val part = Files.list(Paths.get(tmp)).iterator()
-    var src: java.nio.file.Path = null
-    while (part.hasNext) {
-      val p = part.next()
-      if (p.getFileName.toString.endsWith(".parquet")) src = p
-    }
-    Files.move(src, Paths.get(base, rel))
-    graft.sources.TxnLog.rmrf(tmp)
-  }
+  private def writeParquet(base: String, rel: String, ids: Seq[Long]): Unit =
+    graft.sources.Stage.file(spark.createDataFrame(ids.map(Tuple1(_))).toDF("id"), base, rel)
 
   test("replay accumulates adds and drops removes; versions are pinned") {
     val base = mkTable("replay")
@@ -131,17 +120,9 @@ class DeltaLogSpec extends SparkSpec {
       StructField("add", StructType(Seq(
         StructField("path", StringType), StructField("size", LongType))))))
     val ckptRows = Seq(Row(Row(1), null), Row(null, Row("b.parquet", 1L)))
-    val tmp = s"$base/.ckpt-stage"
-    spark.createDataFrame(spark.sparkContext.parallelize(ckptRows, 1), ckptSchema)
-      .coalesce(1).write.parquet(tmp)
-    val part = Files.list(Paths.get(tmp)).iterator()
-    var src: java.nio.file.Path = null
-    while (part.hasNext) {
-      val p = part.next()
-      if (p.getFileName.toString.endsWith(".parquet")) src = p
-    }
-    Files.move(src, Paths.get(base, "_delta_log", f"${1L}%020d.checkpoint.parquet"))
-    graft.sources.TxnLog.rmrf(tmp)
+    graft.sources.Stage.file(
+      spark.createDataFrame(spark.sparkContext.parallelize(ckptRows, 1), ckptSchema),
+      base, f"_delta_log/${1L}%020d.checkpoint.parquet")
     Files.writeString(Paths.get(base, "_delta_log", "_last_checkpoint"),
       """{"version":1,"size":2}""")
     // checkpoint + tail equals full replay
@@ -239,13 +220,7 @@ class DeltaLogSpec extends SparkSpec {
     Files.createDirectories(Paths.get(base, "_change_data"))
     val cdcDf = spark.createDataFrame(Seq((2L, "update_preimage"), (7L, "update_postimage")))
       .toDF("id", "_change_type")
-    val tmp = s"$base/.cdcstage"
-    cdcDf.coalesce(1).write.parquet(tmp)
-    val part = Files.list(Paths.get(tmp)).iterator()
-    var src: java.nio.file.Path = null
-    while (part.hasNext) { val p = part.next(); if (p.getFileName.toString.endsWith(".parquet")) src = p }
-    Files.move(src, Paths.get(base, "_change_data", "cdc-1.parquet"))
-    graft.sources.TxnLog.rmrf(tmp)
+    graft.sources.Stage.file(cdcDf, base, "_change_data/cdc-1.parquet")
     writeParquet(base, "a2.parquet", Seq(1L, 7L))
     commit(base, 1,
       """{"cdc":{"path":"_change_data/cdc-1.parquet","partitionValues":{},"size":1,"dataChange":false}}""",
@@ -1099,5 +1074,26 @@ class DeltaLogSpec extends SparkSpec {
       .filter(col("_change_type") === "delete")
       .agg(min("id"), max("id")).head()
     assert(delIds.getLong(0) == 5L && delIds.getLong(1) == 19L)
+  }
+
+  test("DV-masked reads from 8 threads on one session agree") {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration.Duration
+    import graft.sources.{DeltaLogWriter => W}
+    val base = "/tmp/graft_delta_test/dv_threads"
+    W.create(spark, spark.range(1, 101).toDF("id").repartition(4), base, "t-dv-mt")
+    W.deleteWhereDv(spark, base, col("id") % 7 === 0)
+    val expected = (1L to 100L).filterNot(_ % 7 == 0)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+    try {
+      val reads = (1 to 8).map(_ => Future {
+        val r = DeltaLogReader.read(spark, base).agg(count(lit(1)), sum("id")).head()
+        (r.getLong(0), r.getLong(1))
+      })
+      reads.map(Await.result(_, Duration(300, "s"))).foreach { got =>
+        assert(got == ((expected.size.toLong, expected.sum)))
+      }
+    } finally pool.shutdown()
   }
 }

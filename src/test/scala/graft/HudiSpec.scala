@@ -21,19 +21,8 @@ class HudiSpec extends SparkSpec {
     base
   }
 
-  private def writeFile(base: String, name: String, ids: Seq[Long]): Unit = {
-    val tmp = s"$base/.stage"
-    graft.sources.TxnLog.rmrf(tmp)
-    spark.createDataFrame(ids.map(Tuple1(_))).toDF("id").coalesce(1).write.parquet(tmp)
-    val it = Files.list(Paths.get(tmp)).iterator()
-    var src: java.nio.file.Path = null
-    while (it.hasNext) {
-      val p = it.next()
-      if (p.getFileName.toString.endsWith(".parquet")) src = p
-    }
-    Files.move(src, Paths.get(base, name))
-    graft.sources.TxnLog.rmrf(tmp)
-  }
+  private def writeFile(base: String, name: String, ids: Seq[Long]): Unit =
+    graft.sources.Stage.file(spark.createDataFrame(ids.map(Tuple1(_))).toDF("id"), base, name)
 
   private def commit(base: String, instant: String): Unit =
     Files.writeString(Paths.get(base, ".hoodie", s"$instant.commit"), "{}")
@@ -73,20 +62,9 @@ class HudiSpec extends SparkSpec {
   }
 
   private def writeFileWithTime(base: String, name: String,
-                                rows: Seq[(Long, String)]): Unit = {
-    val tmp = s"$base/.stage"
-    graft.sources.TxnLog.rmrf(tmp)
-    spark.createDataFrame(rows).toDF("id", "_hoodie_commit_time")
-      .coalesce(1).write.parquet(tmp)
-    val it = Files.list(Paths.get(tmp)).iterator()
-    var src: java.nio.file.Path = null
-    while (it.hasNext) {
-      val p = it.next()
-      if (p.getFileName.toString.endsWith(".parquet")) src = p
-    }
-    Files.move(src, Paths.get(base, name))
-    graft.sources.TxnLog.rmrf(tmp)
-  }
+                                rows: Seq[(Long, String)]): Unit =
+    graft.sources.Stage.file(spark.createDataFrame(rows).toDF("id", "_hoodie_commit_time"),
+      base, name)
 
   test("incremental read surfaces only the range's rows and prunes untouched groups") {
     val base = mkTable("incr")

@@ -701,4 +701,18 @@ class IcebergSpec extends SparkSpec {
     intercept[IllegalArgumentException](
       IcebergWriter.evolveAddColumnDefault(spark, v1base, "t", "string", "\"x\""))
   }
+
+  test("metadata publish is create-no-overwrite: a stale writer cannot replace vN") {
+    val base = "/tmp/graft_iceberg_test/publish_race"
+    val df = spark.createDataFrame((1L to 10L).map(i => (i, i * 2L))).toDF("k", "v")
+    IcebergWriter.create(spark, df, base)
+    IcebergWriter.append(spark, df, base)
+    val v2 = Paths.get(base, "metadata", "v2.metadata.json")
+    val before = Files.readAllBytes(v2)
+    // a writer that still sees v1 (stale hint) commits at v2 too
+    Files.writeString(Paths.get(base, "metadata", "version-hint.text"), "1")
+    intercept[java.nio.file.FileAlreadyExistsException](
+      IcebergWriter.deleteWhere(spark, base, col("k") <= 3))
+    assert(java.util.Arrays.equals(Files.readAllBytes(v2), before))
+  }
 }
