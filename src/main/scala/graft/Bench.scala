@@ -1,7 +1,9 @@
 package graft
+import scala.collection.mutable
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.sql.{GraftPlanBridge, SparkSession}
 
 /** Benchmark entry point (SURVEY §3.3). Prints ONE JSON line the driver
   * parses from the LAST ~2000 chars of stdout — so the metric line must
@@ -22,6 +24,11 @@ import org.apache.spark.sql.SparkSession
   * `{"failed":[...]}` line and in `BENCH_OUT.json` (written to the
   * working directory).
   *
+  * `BENCH_OUT.json` also carries each timed query's last-pass job,
+  * stage and task counts (`"census"`, see [[QueryCensus]]): the
+  * fixture-commit-bound queries cost job count × per-job overhead, not
+  * bytes.
+  *
   * Per-query detail is printed FASTEST-first in ≤1400-char chunks: the
   * driver keeps only the tail of stdout, so the expensive queries — the
   * ones worth reading — must sit nearest the metric line.
@@ -36,26 +43,9 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val passes = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "2").toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // Tables.events reads TIMESTAMP_NTZ micros and casts to TimestampType;
-      // that cast is only the identity under a UTC session TZ. Pin it here
-      // (not just via build.sbt javaOptions) so a bare `java graft.Bench`
-      // on a non-UTC host can't shift event timestamps.
-      .config("spark.sql.session.timeZone", "UTC")
-      // 213 queries × several codegen'd stages each blows straight past
-      // the default 100-entry generated-class cache — every pass then
-      // re-compiles Janino classes it just evicted (the r5 suite-wide
-      // drift). Static conf, so it must be set before the session exists.
-      // Env-overridable for drift bisection (the r11 watch item).
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4000"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bootstrap.local(cpus)
     // untimed warmup: JIT/codegen/parquet-footer startup is process cost,
     // not query cost — touch each table once before the timed loop
     try {
@@ -87,24 +77,31 @@ object Bench {
     val best = scala.collection.mutable.Map.empty[String, Double]
     // a query that throws in ANY pass is reported as failed, never timed
     val failed = scala.collection.mutable.LinkedHashSet.empty[String]
-    for (_ <- 1 to passes) {
+    val census = new QueryCensus
+    val sc = spark.sparkContext
+    sc.addSparkListener(census)
+    for (pass <- 1 to passes) {
       graft.queries.DedupQueries.evict(spark)
       named.foreach { case (name, fn) =>
+        // only the last pass is censused, so no count needs a reset
+        if (pass == passes) sc.setLocalProperty(QueryCensus.Key, name)
         val t0 = System.nanoTime()
         try fn(spark, sfDir).count()
         catch { case e: Throwable =>
           System.err.println(s"[bench] $name failed: $e")
           failed += name
-        }
+        } finally sc.setLocalProperty(QueryCensus.Key, null)
         val sec = (System.nanoTime() - t0) / 1e9
         if (sec < best.getOrElse(name, Double.MaxValue)) best(name) = sec
         // between-queries hygiene, OUTSIDE the timer: drop the query's
         // fixture trees / drained memory sinks / pinned checkpoint and
         // state blocks so pass-context pressure never compounds into
         // later queries' times (the measured r11/r12 suite drift)
-        try Hygiene.sweep(spark) catch { case _: Throwable => () }
+        try Hygiene.sweep(spark)
+        catch { case NonFatal(e) => System.err.println(s"[bench] sweep after $name failed: $e") }
       }
     }
+    val counts = census.drained(spark)
     val results = named.collect { case (name, _) if !failed(name) => name -> best(name) }
     val total = math.round(results.map(_._2).sum * 100) / 100.0
     def entry(k: String, v: Double): String =
@@ -134,7 +131,11 @@ object Bench {
     // driver has never consumed the stdout line (sbt [info] prefix /
     // trailing [success] line). ALSO write the metric JSON — with the FULL
     // per-query map, no tail-buffer cap — to a well-known file.
-    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"passes":$passes,"queries":$all,"failed":$failedJson,"sf":"$sfDir"}"""
+    val censusJson = results.map { case (name, _) =>
+      val (j, st, t) = counts.getOrElse(name, (0L, 0L, 0L))
+      s""""$name":{"jobs":$j,"stages":$st,"tasks":$t}"""
+    }.mkString("{", ",", "}")
+    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"passes":$passes,"queries":$all,"failed":$failedJson,"census":$censusJson,"sf":"$sfDir"}"""
     val out = java.nio.file.Paths.get(System.getProperty("user.dir"), "BENCH_OUT.json")
     try java.nio.file.Files.write(out, (fullLine + "\n").getBytes("UTF-8"))
     catch { case NonFatal(e) => System.err.println(s"[bench] cannot write $out: $e") }
@@ -142,4 +143,40 @@ object Bench {
     println(line)
     spark.stop()
   }
+}
+
+/** Jobs, stages and tasks per query: a job counts toward the query named
+  * by its [[QueryCensus.Key]] local property (set around the query's
+  * action; Spark hands it to every job the thread schedules), and its
+  * stages and tasks follow it. Untagged jobs are not counted. Stages are
+  * the ones that ran (skipped stages complete no tasks). The listener
+  * bus is asynchronous, so read the counts through [[drained]]. */
+final class QueryCensus extends SparkListener {
+  private val counts = mutable.Map.empty[String, Array[Long]]
+  private val stageTag = mutable.Map.empty[Int, String]
+
+  override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+    Option(e.properties).flatMap(p => Option(p.getProperty(QueryCensus.Key))).foreach { tag =>
+      counts.getOrElseUpdate(tag, Array(0L, 0L, 0L))(0) += 1
+      e.stageIds.foreach(stageTag(_) = tag)
+    }
+  }
+
+  override def onStageCompleted(e: SparkListenerStageCompleted): Unit = synchronized {
+    stageTag.get(e.stageInfo.stageId).foreach(counts(_)(1) += 1)
+  }
+
+  override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
+    stageTag.get(e.stageId).foreach(counts(_)(2) += 1)
+  }
+
+  /** (jobs, stages, tasks) per tag, once every posted event is handled. */
+  def drained(spark: SparkSession): Map[String, (Long, Long, Long)] = {
+    GraftPlanBridge.drainListenerBus(spark)
+    synchronized(counts.map { case (k, c) => k -> ((c(0), c(1), c(2))) }.toMap)
+  }
+}
+
+object QueryCensus {
+  val Key = "graft.bench.query"
 }

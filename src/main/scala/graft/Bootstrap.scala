@@ -15,6 +15,10 @@ import org.apache.spark.sql.SparkSession
   *
   * The session set is weak so a stopped/discarded session doesn't pin its
   * JVM-wide entry (tests build and stop many sessions).
+  *
+  * Every entry point (Bench, Verify, the tools, the test session) builds
+  * its session through [[builder]] and [[start]], so their confs cannot
+  * drift apart.
   */
 object Bootstrap {
   private val done = java.util.Collections.newSetFromMap(
@@ -38,4 +42,29 @@ object Bootstrap {
         done.add(s)
       }
     }
+
+  /** The confs every session shares. UTC is what makes Tables.events'
+    * NTZ→timestamp cast the identity, on any host TZ. The codegen cache
+    * is static, so it must be set before the session exists: 200+
+    * queries × several codegen'd stages each overflow the default
+    * 100-entry cache, and every pass then recompiles the Janino classes
+    * it just evicted (~24% of bench wall-clock). */
+  def builder(master: String, partitions: Int): SparkSession.Builder =
+    SparkSession.builder()
+      .master(master)
+      .config("spark.sql.shuffle.partitions", partitions.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", "4000")
+
+  /** Create (or reuse) the session, at WARN, with [[init]] done. */
+  def start(b: SparkSession.Builder): SparkSession = {
+    val s = b.getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    init(s)
+    s
+  }
+
+  /** `local[cpus]` with `cpus` shuffle partitions. */
+  def local(cpus: Int): SparkSession = start(builder(s"local[$cpus]", cpus))
 }

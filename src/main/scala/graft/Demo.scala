@@ -3,7 +3,6 @@ package graft
 import graft.multimodal.MediaPipeline
 import graft.streaming.EventStreams
 import graft.streaming.EventStreams.Ev
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 import java.sql.Timestamp
@@ -18,13 +17,7 @@ import java.sql.Timestamp
 object Demo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Bootstrap.local(4)
     import spark.implicits._
 
     println("=== streaming: 1h tumbling counts with 10min watermark ===")

@@ -1,6 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -9,17 +10,7 @@ object Verify {
     // optional third arg: comma-separated query names — local iteration
     // only; the driver always runs the full dump
     val only: Set[String] = if (args.length > 2) args(2).split(",").toSet else Set.empty
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // 200+ queries in one JVM overflow the default 100-entry generated-
-      // class cache (see Bench.scala — measured 24% of suite wall-clock)
-      .config("spark.sql.codegen.cache.maxEntries", "4000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bootstrap.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
@@ -31,7 +22,8 @@ object Verify {
       }
       // per-query hygiene: fixtures rebuild per invocation, so sweeping
       // leftovers keeps a 386-query dump at steady-state /tmp and heap
-      try Hygiene.sweep(spark) catch { case _: Throwable => () }
+      try Hygiene.sweep(spark)
+      catch { case NonFatal(e) => System.err.println(s"[verify] sweep after $name failed: $e") }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -57,8 +57,8 @@ object StreamQueries extends QueryGroup {
     * fixed per-batch cost (open/commit/snapshot), so a stateful drain's
     * parallelism must be sized to the STREAM's volume, not inherited
     * from the batch default: at this fixture scale 32 instances spend
-    * 2.4× more wall-clock on state plumbing than 8 (measured via
-    * graft.tools.PerfProbe: interval join 6.3 s → 2.8 s). On a real
+    * 2.4× more wall-clock on state plumbing than 8 (measured by sweeping
+    * shuffle partitions: interval join 6.3 s → 2.8 s). On a real
     * cluster the same knob scales UP with key cardinality and arrival
     * rate — the point is that it is a deliberate choice pinned at the
     * first checkpoint, not a default. Partitioning never changes

@@ -528,9 +528,11 @@ object IcebergReader {
       // so an avro logical type this converter does not cover (date /
       // decimal on a foreign-written manifest) fails here, inside the try
       spark.createDataFrame(rows.asJava, sqlType)
-    } catch { case scala.util.control.NonFatal(_) =>
+    } catch { case scala.util.control.NonFatal(e) =>
       // non-local URIs, unreadable OCF, logical-type conversion gaps:
       // the distributed source keeps spark-avro's resolution rules
+      System.err.println(s"[iceberg] driver-side avro decode of ${paths.mkString(", ")} " +
+        s"failed (${e.getClass.getName}: ${e.getMessage}); falling back to spark-avro")
       spark.read.format(avroFmt).load(paths.toIndexedSeq: _*)
     }
   }

@@ -114,19 +114,12 @@ object ClusterSmoke {
       "java.base/sun.nio.ch", "java.base/sun.nio.cs",
       "java.base/sun.security.action", "java.base/sun.util.calendar",
     ).map(p => s"--add-opens=$p=ALL-UNNAMED").mkString(" ")
-    val spark = SparkSession.builder()
-      .master("local-cluster[2,4,4096]")
-      .appName("graft-cluster-smoke")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = graft.Bootstrap.start(graft.Bootstrap.builder("local-cluster[2,4,4096]", 8)
       .config("spark.executor.memory", "2g")
       // executor JVMs need the library classes (this build's classdirs
       // ride the test JVM's classpath) and the JDK17 module opens
       .config("spark.executor.extraClassPath", sys.props("java.class.path"))
-      .config("spark.executor.extraJavaOptions", addOpens)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      .config("spark.executor.extraJavaOptions", addOpens))
     try {
       val execs = waitForExecutors(spark, want = 2, timeoutMs = 120000)
       require(execs >= 2, s"only $execs executors registered — not a multi-executor run")

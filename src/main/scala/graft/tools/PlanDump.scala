@@ -2,7 +2,7 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Dev tool: dump `.explain("formatted")` for declared queries to files.
   *
@@ -21,15 +21,7 @@ object PlanDump {
     val outDir = args(1)
     val names = args(2).split(",").map(_.trim).filter(_.nonEmpty)
     val suffix = if (args.length > 3) args(3) else "before"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "4000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Bootstrap.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     Files.createDirectories(Paths.get(outDir))
     names.foreach { name =>
       try {
@@ -41,7 +33,8 @@ object PlanDump {
       } catch { case e: Throwable =>
         System.err.println(s"[plandump] $name failed: ${e.getMessage}")
       }
-      try graft.Hygiene.sweep(spark) catch { case _: Throwable => () }
+      try graft.Hygiene.sweep(spark)
+      catch { case NonFatal(e) => System.err.println(s"[plandump] sweep after $name failed: $e") }
     }
     spark.stop()
   }

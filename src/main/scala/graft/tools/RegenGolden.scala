@@ -1,7 +1,6 @@
 package graft.tools
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.{Bootstrap, SparkEntry}
 import java.nio.file.{Files, Paths}
 
 /** Regenerates the committed golden outputs for the NO-ORACLE queries
@@ -32,13 +31,7 @@ object RegenGolden {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bootstrap.local(4)
     Files.createDirectories(Paths.get(GoldenDir))
     NoOracle.foreach { name =>
       val out = render(SparkEntry.queries(name)(spark, SfDir))

@@ -25,7 +25,6 @@ object RunJob {
 
   private[graft] def run(query: String, sfDir: String, outDir: String,
                          format: String, spark: SparkSession): Long = {
-    graft.Bootstrap.init(spark)
     val df = if (query.startsWith("sql:")) {
       Seq("region", "nation", "customer", "supplier", "part", "orders",
         "lineitem", "documents", "embeddings").foreach { t =>
@@ -60,14 +59,9 @@ object RunJob {
     }
     val Array(query, sfDir, outDir) = args.take(3)
     val format = if (args.length > 3) args(3) else "parquet"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = graft.Bootstrap.start(
+      graft.Bootstrap.builder(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"), cpus))
     try {
       val t0 = System.nanoTime()
       val rows = run(query, sfDir, outDir, format, spark)

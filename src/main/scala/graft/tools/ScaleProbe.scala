@@ -115,15 +115,7 @@ object ScaleProbe {
     val src = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val out = if (args.length > 1) args(1) else "/tmp/graft_scaleprobe"
     val f = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.codegen.cache.maxEntries", "4000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+    val s = graft.Bootstrap.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     replicate(s, src, out, f)
 
     def time(name: String, dir: String): Double = {

@@ -82,6 +82,10 @@ object GraftPlanBridge {
   def unloadStateStores(): Unit =
     execution.streaming.state.StateStore.unloadAll()
 
+  /** Block until the listener bus has handled every event posted so far
+    * (`waitUntilEmpty` is private[spark]). */
+  def drainListenerBus(spark: SparkSession): Unit = spark.sparkContext.listenerBus.waitUntilEmpty()
+
   /** Apply an extensions installer to a fresh SparkSessionExtensions and
     * return what it would contribute to a new session — the builder
     * methods are private[sql], so the config-path test

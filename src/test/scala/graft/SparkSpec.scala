@@ -3,20 +3,11 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared test harness: one SparkSession per forked test JVM, shaped like
-  * the driver's Verify/Bench sessions (local[4], shuffle=4, UTC). */
+/** Shared test harness: one SparkSession per forked test JVM, from the
+  * same factory as the Verify/Bench sessions, at a fixed
+  * local[4] whatever SPARK_GRAFT_CPUS says. */
 object SparkSpec {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Bootstrap.local(4)
   val sf0001 = "/root/testdata/sf0.001"
   val sf001 = "/root/testdata/sf0.01"
 }
