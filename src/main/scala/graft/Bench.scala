@@ -21,10 +21,12 @@ import org.apache.spark.sql.{GraftPlanBridge, SparkSession}
   *
   * A query that throws in any pass is not timed: it is left out of
   * `queries` and `value`, logged to stderr, and listed in a
-  * `{"failed":[...]}` line and in `BENCH_OUT.json` (written to the
-  * working directory).
+  * `{"failed":[...]}` line and in `BENCH_OUT_c<cpus>_sf<sf>.json`
+  * (written to the working directory; `<sf>` is the last path element
+  * of the corpus dir, so `BENCH_OUT_c32_sf0.1.json`). One file per cpu
+  * count and corpus: a c8 run does not overwrite a c32 run.
   *
-  * `BENCH_OUT.json` also carries each timed query's last-pass job,
+  * The file also carries each timed query's last-pass job,
   * stage and task counts (`"census"`, see [[QueryCensus]]): the
   * fixture-commit-bound queries cost job count × per-job overhead, not
   * bytes.
@@ -127,16 +129,16 @@ object Bench {
              else fmt(results.filter(p => headline.contains(p._1)))
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val line = s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"passes":$passes,"queries":$qs,"sf":"$sfDir"}"""
-    // belt and braces: every BENCH_r* file so far shows parsed:null — the
-    // driver has never consumed the stdout line (sbt [info] prefix /
-    // trailing [success] line). ALSO write the metric JSON — with the FULL
-    // per-query map, no tail-buffer cap — to a well-known file.
+    // the stdout line is capped for a reader that keeps only the tail;
+    // the per-run file carries the FULL per-query map, the failures and
+    // the census
     val censusJson = results.map { case (name, _) =>
       val (j, st, t) = counts.getOrElse(name, (0L, 0L, 0L))
       s""""$name":{"jobs":$j,"stages":$st,"tasks":$t}"""
     }.mkString("{", ",", "}")
     val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"passes":$passes,"queries":$all,"failed":$failedJson,"census":$censusJson,"sf":"$sfDir"}"""
-    val out = java.nio.file.Paths.get(System.getProperty("user.dir"), "BENCH_OUT.json")
+    val sfLeaf = java.nio.file.Paths.get(sfDir).getFileName.toString.stripPrefix("sf")
+    val out = java.nio.file.Paths.get(System.getProperty("user.dir"), s"BENCH_OUT_c${cpus}_sf$sfLeaf.json")
     try java.nio.file.Files.write(out, (fullLine + "\n").getBytes("UTF-8"))
     catch { case NonFatal(e) => System.err.println(s"[bench] cannot write $out: $e") }
     if (failed.nonEmpty) println(s"""{"failed":$failedJson}""")

@@ -1,6 +1,8 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.nio.file.{Files, Paths}
+
+import org.apache.spark.sql.{DataFrame, RelationalGroupedDataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -17,6 +19,76 @@ object LakehouseQueries extends QueryGroup {
 
   private def cents(c: String) = round(col(c) * 100).cast("long")
 
+  // ---- fixture kit -------------------------------------------------------
+  // Every lake query gets its table root, catalog, TxnLog set-up and
+  // census from the helpers below, so a change to any of them lands in
+  // one place instead of at each fixture.
+
+  private def hex(d: String): String = Integer.toHexString(d.hashCode)
+
+  /** `/tmp/graft_<family>_<hex(sfDir.hashCode)>/<table>`: one fixture
+    * tree per format family and corpus, so two sfDirs never share a
+    * table and `graft.Hygiene` sweeps every tree by one glob. */
+  private def root(d: String, family: String, table: String): String =
+    s"/tmp/graft_${family}_${hex(d)}/$table"
+
+  /** Empty `base` and recreate the `subdirs` under it: the idempotent
+    * start of a fixture that composes its table layout by hand. */
+  private def fresh(base: String, subdirs: String*): String = {
+    TxnLog.rmrf(base)
+    subdirs.foreach(sd => Files.createDirectories(Paths.get(base, sd)))
+    base
+  }
+
+  /** Register a `graft.sources.GraftCatalog` over `root` and return its
+    * name, `<prefix>_<hex>`. The name is per sfDir because
+    * CatalogManager caches a catalog instance by name at first
+    * resolution: a shared name would pin the first corpus's root. */
+  private def catalog(s: SparkSession, prefix: String, d: String, root: String): String = {
+    val cat = s"${prefix}_${hex(d)}"
+    s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
+    s.conf.set(s"spark.sql.catalog.$cat.root", root)
+    cat
+  }
+
+  /** A fresh, initialised TxnLog table at `base` with min/max stats on
+    * `o_year` (the q_txn_* fixtures' layout order). */
+  private def txnLog(s: SparkSession, base: String, bloomCol: Option[String] = None): TxnLog = {
+    val log = new TxnLog(s, fresh(base), statCol = Some("o_year"), bloomCol = bloomCol)
+    log.init()
+    log
+  }
+
+  /** `orders` as the format fixtures store it: key, priority, cents. */
+  private def iceOrders(s: SparkSession, d: String): DataFrame =
+    Tables.orders(s, d).select(
+      col("o_orderkey"), col("o_orderpriority"),
+      cents("o_totalprice").as("cents"))
+
+  /** `orders` as the TxnLog fixtures store it: key, status, cents, year. */
+  private def txnOrders(s: SparkSession, d: String): DataFrame =
+    Tables.orders(s, d).select(
+      col("o_orderkey"), col("o_orderstatus"),
+      cents("o_totalprice").as("cents"),
+      year(col("o_orderdate")).cast("long").as("o_year"))
+
+  /** The census the lake queries grade: `n_rows` and `total_cents` (the
+    * sum of `cents`) per group of `g`, each tag a literal column placed
+    * first and the group keys between the tags and the census. */
+  private def census(g: RelationalGroupedDataset, tags: (String, Any)*): DataFrame =
+    g.agg(count(lit(1)).as("n_rows"), sum(col("cents")).as("total_cents"))
+      .select(tags.map { case (name, v) => lit(v).as(name) } :+ col("*"): _*)
+
+  /** [[census]] of the whole of `df`: one row. */
+  private def census(df: DataFrame, tags: (String, Any)*): DataFrame =
+    census(df.groupBy(), tags: _*)
+
+  /** The same census as SQL text over `from`, for the reads only SQL
+    * can spell (`VERSION AS OF`, `TIMESTAMP AS OF`). */
+  private def sqlCensus(s: SparkSession, tag: String, from: String): DataFrame =
+    s.sql(s"SELECT '$tag' AS surface, count(*) AS n_rows, " +
+      s"CAST(sum(cents) AS BIGINT) AS total_cents FROM $from")
+
   def queries: Map[String, QFn] = Map(
 
     // ---- time travel across append / append / COW-delete / append -------
@@ -30,14 +102,8 @@ object LakehouseQueries extends QueryGroup {
     // snapshots declaratively from `orders`; hash equality proves the
     // log's add/remove algebra and the COW rewrite lossless.
     "q_txn_timetravel" -> ((s, d) => {
-      val base = s"/tmp/graft_txn_${Integer.toHexString(d.hashCode)}/orders_tt"
-      TxnLog.rmrf(base)
-      val log = new graft.sources.TxnLog(s, base, statCol = Some("o_year"))
-      log.init()
-      val o = Tables.orders(s, d).select(
-        col("o_orderkey"), col("o_orderstatus"),
-        cents("o_totalprice").as("cents"),
-        year(col("o_orderdate")).cast("long").as("o_year"))
+      val log = txnLog(s, root(d, "txn", "orders_tt"))
+      val o = txnOrders(s, d)
       // modest file counts per commit: enough files that the COW delete
       // exercises multi-file remove+rewrite, few enough that local fixture
       // job counts stay sane
@@ -45,14 +111,8 @@ object LakehouseQueries extends QueryGroup {
       log.append(o.filter(col("o_year").between(1997, 1998)).repartition(4))
       log.deleteWhere(col("o_orderstatus") === "F")
       log.append(o.filter(col("o_year") >= 1999).repartition(4))
-      val versions = (0 to 3).map { v =>
-        log.read(v).agg(
-          count(lit(1)).as("n_rows"),
-          sum(col("cents")).as("total_cents"))
-          .select(lit(v).cast("long").as("version"),
-            col("n_rows"), col("total_cents"))
-      }
-      versions.reduce(_ unionAll _).orderBy("version")
+      (0 to 3).map(v => census(log.read(v), "version" -> v.toLong))
+        .reduce(_ unionAll _).orderBy("version")
     }),
 
     // ---- PUBLIC-spec Delta Lake log interop (read-only) -----------------
@@ -70,13 +130,8 @@ object LakehouseQueries extends QueryGroup {
     // replay, unknown-action skipping, and version pinning.
     "q_delta_scan" -> ((s, d) => {
       val base = LakehouseQueries.mkDeltaFixture(s, d, "orders_dl")
-      val versions = (0L to 2L).map { v =>
-        graft.sources.DeltaLogReader.read(s, base, v).agg(
-          count(lit(1)).as("n_rows"),
-          sum(col("cents")).as("total_cents"))
-          .select(lit(v).as("version"), col("n_rows"), col("total_cents"))
-      }
-      versions.reduce(_ unionAll _).orderBy("version")
+      (0L to 2L).map(v => census(graft.sources.DeltaLogReader.read(s, base, v), "version" -> v))
+        .reduce(_ unionAll _).orderBy("version")
     }),
 
     // ---- PUBLIC-spec Delta Lake EXPORT (the write path) ------------------
@@ -89,19 +144,14 @@ object LakehouseQueries extends QueryGroup {
     // travel. A writer that mis-stated adds, dropped part files, or
     // broke the version chain hash-fails.
     "q_delta_roundtrip" -> ((s, d) => {
-      val base = s"/tmp/graft_deltaw_${Integer.toHexString(d.hashCode)}/orders_rt"
+      val base = root(d, "deltaw", "orders_rt")
       val o = iceOrders(s, d)
       graft.sources.DeltaLogWriter.create(s,
         o.filter(col("o_orderpriority") === "1-URGENT").repartition(2), base, "graft-orders-rt")
       graft.sources.DeltaLogWriter.append(s,
         o.filter(col("o_orderpriority") =!= "1-URGENT").repartition(3), base)
-      val versions = Seq(0L, 1L).map { v =>
-        graft.sources.DeltaLogReader.read(s, base, v).agg(
-          count(lit(1)).as("n_rows"),
-          sum(col("cents")).as("total_cents"))
-          .select(lit(v).as("version"), col("n_rows"), col("total_cents"))
-      }
-      versions.reduce(_ unionAll _).orderBy("version")
+      Seq(0L, 1L).map(v => census(graft.sources.DeltaLogReader.read(s, base, v), "version" -> v))
+        .reduce(_ unionAll _).orderBy("version")
     }),
 
     // ---- PUBLIC-spec Apache Iceberg EXPORT (the write path) -------------
@@ -116,19 +166,15 @@ object LakehouseQueries extends QueryGroup {
     // files, mis-counted record_count, or broke the snapshot chain
     // hash-fails.
     "q_iceberg_roundtrip" -> ((s, d) => {
-      val base = s"${iceBase(d, "orders_rt")}"
+      val base = root(d, "iceberg", "orders_rt")
       val o = iceOrders(s, d)
       graft.sources.IcebergWriter.create(s,
         o.filter(col("o_orderpriority") === "1-URGENT").repartition(2), base)
       graft.sources.IcebergWriter.append(s,
         o.filter(col("o_orderpriority") =!= "1-URGENT").repartition(3), base)
-      val versions = Seq(1L, 2L).map { snap =>
-        graft.sources.IcebergReader.read(s, base, snap).agg(
-          count(lit(1)).as("n_rows"),
-          sum(col("cents")).as("total_cents"))
-          .select(lit(snap).as("snapshot_id"), col("n_rows"), col("total_cents"))
-      }
-      versions.reduce(_ unionAll _).orderBy("snapshot_id")
+      Seq(1L, 2L).map(snap =>
+        census(graft.sources.IcebergReader.read(s, base, snap), "snapshot_id" -> snap))
+        .reduce(_ unionAll _).orderBy("snapshot_id")
     }),
 
     // ---- cross-format migration (Iceberg → Delta) -----------------------
@@ -143,14 +189,11 @@ object LakehouseQueries extends QueryGroup {
     // actual cost profile of a 100 TB format migration.
     "q_lake_migrate" -> ((s, d) => {
       val src = LakehouseQueries.mkIcebergFixture(s, d, "orders_mig")
-      val dst = s"/tmp/graft_deltaw_${Integer.toHexString(d.hashCode)}/orders_mig"
+      val dst = root(d, "deltaw", "orders_mig")
       val live = graft.sources.IcebergReader.read(s, src, 2L)
       graft.sources.DeltaLogWriter.create(s, live.repartition(2), dst, "graft-orders-mig")
-      def census(df: org.apache.spark.sql.DataFrame, which: String) =
-        df.agg(count(lit(1)).as("n_rows"), sum(col("cents")).as("total_cents"))
-          .select(lit(which).as("side"), col("n_rows"), col("total_cents"))
-      census(live, "source")
-        .unionAll(census(graft.sources.DeltaLogReader.read(s, dst), "migrated"))
+      census(live, "side" -> "source")
+        .unionAll(census(graft.sources.DeltaLogReader.read(s, dst), "side" -> "migrated"))
         .orderBy("side")
     }),
 
@@ -163,15 +206,14 @@ object LakehouseQueries extends QueryGroup {
     // proving the WRITER emitted partition metadata a planner can
     // actually use, not just a layout.
     "q_iceberg_part_write" -> ((s, d) => {
-      val base = s"${iceBase(d, "orders_pw")}"
+      val base = root(d, "iceberg", "orders_pw")
       graft.sources.IcebergWriter.createPartitioned(s, iceOrders(s, d),
         base, "o_orderpriority")
       val keep = Seq("1-URGENT", "2-HIGH")
-      graft.sources.IcebergReader.readWhere(s, base, 1L,
+      census(graft.sources.IcebergReader.readWhere(s, base, 1L,
           col("data_file.partition.o_orderpriority").isin(keep: _*))
         .filter(col("o_orderpriority").isin(keep: _*))
-        .groupBy(col("o_orderpriority"))
-        .agg(count(lit(1)).as("n_rows"), sum(col("cents")).as("total_cents"))
+        .groupBy(col("o_orderpriority")))
         .orderBy("o_orderpriority")
     }),
 
@@ -184,23 +226,19 @@ object LakehouseQueries extends QueryGroup {
     // the compaction invariant AND that the manifests tell the truth
     // about what the rewrite did.
     "q_iceberg_compact" -> ((s, d) => {
-      val base = s"${iceBase(d, "orders_cp")}"
+      val base = root(d, "iceberg", "orders_cp")
       val o = iceOrders(s, d)
       graft.sources.IcebergWriter.create(s,
         o.filter(col("o_orderpriority") === "1-URGENT").repartition(3), base)
       graft.sources.IcebergWriter.append(s,
         o.filter(col("o_orderpriority") === "2-HIGH").repartition(2), base)
       graft.sources.IcebergWriter.rewrite(s, base)
-      val versions = Seq(2L, 3L).map { snap =>
+      Seq(2L, 3L).map { snap =>
         val nFiles = graft.sources.IcebergReader.filesTable(s, base, snap)
           .filter(col("content") === 0).count()
-        graft.sources.IcebergReader.read(s, base, snap).agg(
-          count(lit(1)).as("n_rows"),
-          sum(col("cents")).as("total_cents"))
-          .select(lit(snap).as("snapshot_id"), lit(nFiles).as("n_files"),
-            col("n_rows"), col("total_cents"))
-      }
-      versions.reduce(_ unionAll _).orderBy("snapshot_id")
+        census(graft.sources.IcebergReader.read(s, base, snap),
+          "snapshot_id" -> snap, "n_files" -> nFiles)
+      }.reduce(_ unionAll _).orderBy("snapshot_id")
     }),
 
     // ---- Iceberg snapshot expiry ----------------------------------------
@@ -214,7 +252,7 @@ object LakehouseQueries extends QueryGroup {
     // referenced file would hash-fail — while n_orphans and
     // n_snapshots pin the cleanup's exact scope.
     "q_iceberg_expire" -> ((s, d) => {
-      val base = s"${iceBase(d, "orders_ex")}"
+      val base = root(d, "iceberg", "orders_ex")
       val o = iceOrders(s, d)
       graft.sources.IcebergWriter.create(s,
         o.filter(col("o_orderpriority") === "1-URGENT").repartition(3), base)
@@ -224,11 +262,8 @@ object LakehouseQueries extends QueryGroup {
       val orphans = graft.sources.IcebergWriter.expireSnapshots(s, base, keepFrom = 3L)
       val nSnaps = graft.sources.IcebergReader.snapshots(base,
         graft.sources.IcebergReader.currentMetadataVersion(base)).size.toLong
-      graft.sources.IcebergReader.read(s, base).agg(
-        count(lit(1)).as("n_rows"),
-        sum(col("cents")).as("total_cents"))
-        .select(lit(orphans.size.toLong).as("n_orphans"),
-          lit(nSnaps).as("n_snapshots"), col("n_rows"), col("total_cents"))
+      census(graft.sources.IcebergReader.read(s, base),
+        "n_orphans" -> orphans.size.toLong, "n_snapshots" -> nSnaps)
     }),
 
     // ---- Delta OPTIMIZE (bin-pack compaction) ----------------------------
@@ -241,22 +276,17 @@ object LakehouseQueries extends QueryGroup {
     // rewrite actually happened and that the reader replays
     // dataChange=false actions like any other add/remove.
     "q_delta_optimize" -> ((s, d) => {
-      val base = s"/tmp/graft_deltaw_${Integer.toHexString(d.hashCode)}/orders_opt"
+      val base = root(d, "deltaw", "orders_opt")
       val o = iceOrders(s, d)
       graft.sources.DeltaLogWriter.create(s,
         o.filter(col("o_orderpriority") === "1-URGENT").repartition(3), base, "graft-orders-opt")
       graft.sources.DeltaLogWriter.append(s,
         o.filter(col("o_orderpriority") =!= "1-URGENT").repartition(4), base)
       graft.sources.DeltaLogWriter.optimize(s, base)
-      val versions = Seq(1L, 2L).map { v =>
+      Seq(1L, 2L).map { v =>
         val nFiles = graft.sources.DeltaLogReader.snapshotFiles(Some(s), base, v).size.toLong
-        graft.sources.DeltaLogReader.read(s, base, v).agg(
-          count(lit(1)).as("n_rows"),
-          sum(col("cents")).as("total_cents"))
-          .select(lit(v).as("version"), lit(nFiles).as("n_files"),
-            col("n_rows"), col("total_cents"))
-      }
-      versions.reduce(_ unionAll _).orderBy("version")
+        census(graft.sources.DeltaLogReader.read(s, base, v), "version" -> v, "n_files" -> nFiles)
+      }.reduce(_ unionAll _).orderBy("version")
     }),
 
     // ---- Delta DML: DELETE WHERE + UPDATE, CDF emitted by the WRITER ----
@@ -271,7 +301,7 @@ object LakehouseQueries extends QueryGroup {
     // censuses, every one produced by this engine's writer and
     // consumed by its reader — DML round-trip through the open format.
     "q_delta_dml" -> ((s, d) => {
-      val base = s"/tmp/graft_deltaw_${Integer.toHexString(d.hashCode)}/orders_dml"
+      val base = root(d, "deltaw", "orders_dml")
       val o = iceOrders(s, d)
       graft.sources.DeltaLogWriter.create(s, o.repartition(2), base, "graft-orders-dml")
       graft.sources.DeltaLogWriter.deleteWhere(s, base,
@@ -298,7 +328,7 @@ object LakehouseQueries extends QueryGroup {
     // replacement, and insert/update classification are all
     // hash-graded through the engine's own writer AND reader.
     "q_delta_merge" -> ((s, d) => {
-      val base = s"/tmp/graft_deltaw_${Integer.toHexString(d.hashCode)}/orders_merge"
+      val base = root(d, "deltaw", "orders_merge")
       val o = iceOrders(s, d)
       val evens = o.filter(pmod(col("o_orderkey"), lit(2)) === 0)
       val odds = o.filter(pmod(col("o_orderkey"), lit(2)) === 1)
@@ -332,20 +362,15 @@ object LakehouseQueries extends QueryGroup {
     // data path stays the ordinary pushdown-friendly parquet scan.
     // Oracle replays both predicates over `orders`.
     "q_delta_dv" -> ((s, d) => {
-      val base = s"/tmp/graft_deltaw_${Integer.toHexString(d.hashCode)}/orders_dv"
+      val base = root(d, "deltaw", "orders_dv")
       val o = iceOrders(s, d)
       graft.sources.DeltaLogWriter.create(s, o.repartition(2), base, "graft-orders-dv")
       graft.sources.DeltaLogWriter.deleteWhereDv(s, base,
         col("o_orderpriority") === "1-URGENT")
       graft.sources.DeltaLogWriter.deleteWhereDv(s, base,
         col("o_orderpriority") === "2-HIGH")
-      val versions = (0L to 2L).map { v =>
-        graft.sources.DeltaLogReader.read(s, base, v).agg(
-          count(lit(1)).as("n_rows"),
-          sum(col("cents")).as("total_cents"))
-          .select(lit(v).as("version"), col("n_rows"), col("total_cents"))
-      }
-      versions.reduce(_ unionAll _).orderBy("version")
+      (0L to 2L).map(v => census(graft.sources.DeltaLogReader.read(s, base, v), "version" -> v))
+        .reduce(_ unionAll _).orderBy("version")
     }),
 
     // ---- Delta LIQUID CLUSTERING (z-ordered OPTIMIZE + 2-D skipping) -------
@@ -365,7 +390,7 @@ object LakehouseQueries extends QueryGroup {
     // hash-gated, not just asserted.
     "q_delta_clustered" -> ((s, d) => {
       import graft.sources.{DeltaLogReader, DeltaLogWriter}
-      val base = s"/tmp/graft_deltaw_${Integer.toHexString(d.hashCode)}/orders_clust"
+      val base = root(d, "deltaw", "orders_clust")
       val o = Tables.orders(s, d).select(
         col("o_orderkey"),
         year(col("o_orderdate")).cast("long").as("o_year"),
@@ -380,11 +405,8 @@ object LakehouseQueries extends QueryGroup {
       def phase(id: Long, c: String, lo: Long, hi: Long) = {
         val v = DeltaLogReader.latestVersion(base)
         val planned = DeltaLogReader.filesWhere(s, base, v, c, lo, hi).size.toLong
-        DeltaLogReader.readWhere(s, base, v, c, lo, hi)
-          .filter(col(c).between(lo, hi))
-          .agg(count(lit(1)).as("n_rows"), sum(col("cents")).as("total_cents"))
-          .select(lit(id).as("phase"), lit(planned).as("n_files_planned"),
-            col("n_rows"), col("total_cents"))
+        census(DeltaLogReader.readWhere(s, base, v, c, lo, hi).filter(col(c).between(lo, hi)),
+          "phase" -> id, "n_files_planned" -> planned)
       }
       val p1 = phase(1L, "o_year", 1996L, 1997L)
       DeltaLogWriter.optimizeClustered(s, base)
@@ -392,10 +414,8 @@ object LakehouseQueries extends QueryGroup {
       val p3 = phase(3L, "pb", 0L, 9L)
       val vEnd = DeltaLogReader.latestVersion(base)
       val nLive = DeltaLogReader.snapshotFiles(Some(s), base, vEnd).size.toLong
-      val p4 = DeltaLogReader.read(s, base, vEnd)
-        .agg(count(lit(1)).as("n_rows"), sum(col("cents")).as("total_cents"))
-        .select(lit(4L).as("phase"), lit(nLive).as("n_files_planned"),
-          col("n_rows"), col("total_cents"))
+      val p4 = census(DeltaLogReader.read(s, base, vEnd),
+        "phase" -> 4L, "n_files_planned" -> nLive)
       Seq(p1, p2, p3, p4).reduce(_ unionAll _).orderBy("phase")
     }),
 
@@ -419,7 +439,7 @@ object LakehouseQueries extends QueryGroup {
     // rewrite + delete + expiry.
     "q_delta_row_tracking" -> ((s, d) => {
       import graft.sources.{DeltaLogReader, DeltaLogWriter}
-      val base = s"/tmp/graft_deltaw_${Integer.toHexString(d.hashCode)}/nation_rt"
+      val base = root(d, "deltaw", "nation_rt")
       val n = Tables.nation(s, d).select(col("n_nationkey"), col("n_regionkey"))
       DeltaLogWriter.createRowTracked(s,
         n.repartition(1).sortWithinPartitions("n_nationkey"), base, "graft-nation-rt")
@@ -450,7 +470,7 @@ object LakehouseQueries extends QueryGroup {
     // and OPTIMIZE must contribute NO change rows — an extra phase row
     // hash-fails on row count.
     "q_delta_reorg" -> ((s, d) => {
-      val base = s"/tmp/graft_deltaw_${Integer.toHexString(d.hashCode)}/orders_reorg"
+      val base = root(d, "deltaw", "orders_reorg")
       val o = iceOrders(s, d)
       graft.sources.DeltaLogWriter.create(s, o.repartition(3), base, "graft-orders-reorg")
       graft.sources.DeltaLogWriter.deleteWhereDv(s, base,
@@ -462,14 +482,10 @@ object LakehouseQueries extends QueryGroup {
         o.filter(col("o_orderpriority") === "1-URGENT")
           .withColumn("cents", col("cents") + 1).coalesce(1), base)
       graft.sources.DeltaLogWriter.optimize(s, base)
-      val versions = (0L to 5L).map { v =>
-        graft.sources.DeltaLogReader.read(s, base, v).agg(
-          count(lit(1)).as("n_rows"), sum(col("cents")).as("total_cents"))
-          .select(lit(v).as("phase"), col("n_rows"), col("total_cents"))
-      }
-      val cdf = graft.sources.DeltaLogReader.readChanges(s, base, 0L, 5L)
-        .groupBy((col("_commit_version") + 10L).as("phase"))
-        .agg(count(lit(1)).as("n_rows"), sum(col("cents")).as("total_cents"))
+      val versions = (0L to 5L).map(v =>
+        census(graft.sources.DeltaLogReader.read(s, base, v), "phase" -> v))
+      val cdf = census(graft.sources.DeltaLogReader.readChanges(s, base, 0L, 5L)
+        .groupBy((col("_commit_version") + 10L).as("phase")))
       (versions :+ cdf).reduce(_ unionAll _).orderBy("phase")
     }),
 
@@ -485,16 +501,13 @@ object LakehouseQueries extends QueryGroup {
     // only col-N names and can answer neither. Oracle replays from
     // orders.
     "q_delta_colmap" -> ((s, d) => {
-      val base = s"/tmp/graft_deltaw_${Integer.toHexString(d.hashCode)}/orders_cm"
+      val base = root(d, "deltaw", "orders_cm")
       graft.sources.DeltaLogWriter.createColumnMapped(s, iceOrders(s, d),
         base, "graft-orders-cm")
       graft.sources.DeltaLogWriter.renameColumn(s, base, "o_orderpriority", "priority")
-      def census(v: Long, logical: String) =
-        graft.sources.DeltaLogReader.read(s, base, v)
-          .groupBy(col(logical).as("priority"))
-          .agg(count(lit(1)).as("n_rows"), sum(col("cents")).as("total_cents"))
-          .select(lit(v).as("version"), col("priority"), col("n_rows"), col("total_cents"))
-      census(0L, "o_orderpriority").unionAll(census(1L, "priority"))
+      def byPriority(v: Long, logical: String) = census(graft.sources.DeltaLogReader
+        .read(s, base, v).groupBy(col(logical).as("priority")), "version" -> v)
+      byPriority(0L, "o_orderpriority").unionAll(byPriority(1L, "priority"))
         .orderBy("version", "priority")
     }),
 
@@ -510,19 +523,16 @@ object LakehouseQueries extends QueryGroup {
     // the original name, v3 under the renamed one; an id-blind,
     // name-bound reader would group by pcol_N and answer neither.
     "q_delta_colmap_id" -> ((s, d) => {
-      val base = s"/tmp/graft_deltaw_${Integer.toHexString(d.hashCode)}/orders_cmid"
+      val base = root(d, "deltaw", "orders_cmid")
       val W = graft.sources.DeltaLogWriter
       W.createColumnMappedId(s, iceOrders(s, d), base, "graft-orders-cmid")
       W.renameColumn(s, base, "o_orderpriority", "priority")
       W.deleteWhereDv(s, base, pmod(col("o_orderkey"), lit(10)) === 6)
       W.update(s, base, pmod(col("o_orderkey"), lit(10)) === 7,
         df => df.withColumn("cents", col("cents") + 3))
-      def census(v: Long, logical: String) =
-        graft.sources.DeltaLogReader.read(s, base, v)
-          .groupBy(col(logical).as("priority"))
-          .agg(count(lit(1)).as("n_rows"), sum(col("cents")).as("total_cents"))
-          .select(lit(v).as("version"), col("priority"), col("n_rows"), col("total_cents"))
-      census(0L, "o_orderpriority").unionAll(census(3L, "priority"))
+      def byPriority(v: Long, logical: String) = census(graft.sources.DeltaLogReader
+        .read(s, base, v).groupBy(col(logical).as("priority")), "version" -> v)
+      byPriority(0L, "o_orderpriority").unionAll(byPriority(3L, "priority"))
         .orderBy("version", "priority")
     }),
 
@@ -536,10 +546,8 @@ object LakehouseQueries extends QueryGroup {
     // kept per spec. The residual row filter keeps the engine honest;
     // the oracle replays the predicate over `orders`.
     "q_delta_stats_skip" -> ((s, d) => {
-      val base = s"/tmp/graft_deltaw_${Integer.toHexString(d.hashCode)}/orders_skip"
-      val o = Tables.orders(s, d).select(
-        col("o_orderkey"), cents("o_totalprice").as("cents"),
-        year(col("o_orderdate")).cast("long").as("o_year"))
+      val base = root(d, "deltaw", "orders_skip")
+      val o = txnOrders(s, d).drop("o_orderstatus")
       val years = o.select(min("o_year"), max("o_year")).collect().head
       (years.getLong(0) to years.getLong(1)).zipWithIndex.foreach { case (y, i) =>
         val slice = o.filter(col("o_year") === y).coalesce(1)
@@ -547,11 +555,10 @@ object LakehouseQueries extends QueryGroup {
           "graft-orders-skip", statsFor = Seq("o_year"))
         else graft.sources.DeltaLogWriter.append(s, slice, base, statsFor = Seq("o_year"))
       }
-      graft.sources.DeltaLogReader.readWhere(s, base,
+      census(graft.sources.DeltaLogReader.readWhere(s, base,
           graft.sources.DeltaLogReader.latestVersion(base), "o_year", 1997L, 1998L)
         .filter(col("o_year").between(1997, 1998))
-        .groupBy(col("o_year"))
-        .agg(count(lit(1)).as("n_rows"), sum(col("cents")).as("total_cents"))
+        .groupBy(col("o_year")))
         .orderBy("o_year")
     }),
 
@@ -564,20 +571,15 @@ object LakehouseQueries extends QueryGroup {
     // promises); the per-version live file counts 3 → 1 → 3 pin that
     // every transition actually happened, including the add-back path.
     "q_delta_restore" -> ((s, d) => {
-      val base = s"/tmp/graft_deltaw_${Integer.toHexString(d.hashCode)}/orders_restore"
+      val base = root(d, "deltaw", "orders_restore")
       val o = iceOrders(s, d).filter(col("o_orderpriority") === "1-URGENT")
       graft.sources.DeltaLogWriter.create(s, o.repartition(3), base, "graft-orders-restore")
       graft.sources.DeltaLogWriter.optimize(s, base)
       graft.sources.DeltaLogWriter.restore(s, base, 0L)
-      val versions = (0L to 2L).map { v =>
+      (0L to 2L).map { v =>
         val nFiles = graft.sources.DeltaLogReader.snapshotFiles(Some(s), base, v).size.toLong
-        graft.sources.DeltaLogReader.read(s, base, v).agg(
-          count(lit(1)).as("n_rows"),
-          sum(col("cents")).as("total_cents"))
-          .select(lit(v).as("version"), lit(nFiles).as("n_files"),
-            col("n_rows"), col("total_cents"))
-      }
-      versions.reduce(_ unionAll _).orderBy("version")
+        census(graft.sources.DeltaLogReader.read(s, base, v), "version" -> v, "n_files" -> nFiles)
+      }.reduce(_ unionAll _).orderBy("version")
     }),
 
     // ---- Delta partitioned write (hive layout + partitionValues) --------
@@ -590,13 +592,12 @@ object LakehouseQueries extends QueryGroup {
     // partition column itself, which the data files do NOT carry —
     // only a reader that recovers it from the layout can answer.
     "q_delta_part_write" -> ((s, d) => {
-      val base = s"/tmp/graft_deltaw_${Integer.toHexString(d.hashCode)}/orders_part"
+      val base = root(d, "deltaw", "orders_part")
       graft.sources.DeltaLogWriter.create(s, iceOrders(s, d), base,
         "graft-orders-part", partitionBy = Seq("o_orderpriority"))
-      graft.sources.DeltaLogReader.read(s, base)
+      census(graft.sources.DeltaLogReader.read(s, base)
         .filter(col("o_orderpriority").isin("2-HIGH", "4-NOT SPECIFIED"))
-        .groupBy(col("o_orderpriority"))
-        .agg(count(lit(1)).as("n_rows"), sum(col("cents")).as("total_cents"))
+        .groupBy(col("o_orderpriority")))
         .orderBy("o_orderpriority")
     }),
 
@@ -615,7 +616,7 @@ object LakehouseQueries extends QueryGroup {
     // partition routing, hive-path partitionValues, and the new
     // partition's birth through MERGE.
     "q_delta_part_dml" -> ((s, d) => {
-      val base = s"/tmp/graft_deltaw_${Integer.toHexString(d.hashCode)}/orders_pdml"
+      val base = root(d, "deltaw", "orders_pdml")
       val o = iceOrders(s, d)
       graft.sources.DeltaLogWriter.create(s, o.repartition(2), base,
         "graft-orders-pdml", partitionBy = Seq("o_orderpriority"))
@@ -632,16 +633,10 @@ object LakehouseQueries extends QueryGroup {
           .select((col("o_orderkey") + 100000000L).as("o_orderkey"),
             lit("9-SYNTH").as("o_orderpriority"), lit(1234L).as("cents")))
       graft.sources.DeltaLogWriter.merge(s, base, source, "o_orderkey")
-      val versions = (0L to 3L).map { v =>
-        graft.sources.DeltaLogReader.read(s, base, v).agg(
-          count(lit(1)).as("n_rows"), sum(col("cents")).as("total_cents"))
-          .select(lit(v).as("phase"), lit("*").as("pri"),
-            col("n_rows"), col("total_cents"))
-      }
-      val byPart = graft.sources.DeltaLogReader.read(s, base, 3L)
-        .groupBy(col("o_orderpriority").as("pri"))
-        .agg(count(lit(1)).as("n_rows"), sum(col("cents")).as("total_cents"))
-        .select(lit(4L).as("phase"), col("pri"), col("n_rows"), col("total_cents"))
+      val versions = (0L to 3L).map(v =>
+        census(graft.sources.DeltaLogReader.read(s, base, v), "phase" -> v, "pri" -> "*"))
+      val byPart = census(graft.sources.DeltaLogReader.read(s, base, 3L)
+        .groupBy(col("o_orderpriority").as("pri")), "phase" -> 4L)
       (versions :+ byPart).reduce(_ unionAll _).orderBy("phase", "pri")
     }),
 
@@ -657,43 +652,36 @@ object LakehouseQueries extends QueryGroup {
     // row-masked (DV/delete-file/MOR) cases ride the V1-read fallback
     // and are graded separately by q_lake_dsv2_dv.
     "q_lake_dsv2" -> ((s, d) => {
-      val root = s"/tmp/graft_deltaw_${Integer.toHexString(d.hashCode)}/dsv2"
+      val lake = root(d, "deltaw", "dsv2")
       val o = iceOrders(s, d)
-      val dBase = s"$root/delta"
-      val iBase = s"$root/ice"
-      val hBase = s"$root/hudi"
+      val dBase = s"$lake/delta"
+      val iBase = s"$lake/ice"
+      val hBase = s"$lake/hudi"
       graft.sources.DeltaLogWriter.create(s, o.repartition(2), dBase,
         "graft-orders-dsv2", partitionBy = Seq("o_orderpriority"))
       graft.sources.IcebergWriter.create(s, o.repartition(2), iBase)
       graft.sources.HudiWriter.create(s, o, hBase, "orders_dsv2", "o_orderkey", 4)
-      def census(tag: String, df: org.apache.spark.sql.DataFrame) =
-        df.agg(count(lit(1)).as("n_rows"), sum(col("cents")).as("total_cents"))
-          .select(lit(tag).as("surface"), col("n_rows"), col("total_cents"))
-      val delta = census("delta", s.read.format("graft-delta")
-        .option("path", dBase).load()
-        .filter(col("o_orderpriority") === "2-HIGH"))
-      val ice = census("iceberg", s.read.format("graft-iceberg")
-        .option("path", iBase).load()
-        .filter(pmod(col("o_orderkey"), lit(3)) === 0))
-      val hudi = census("hudi", s.read.format("graft-hudi")
-        .option("path", hBase).load()
-        .filter(pmod(col("o_orderkey"), lit(3)) === 1))
+      val delta = census(s.read.format("graft-delta").option("path", dBase).load()
+        .filter(col("o_orderpriority") === "2-HIGH"), "surface" -> "delta")
+      val ice = census(s.read.format("graft-iceberg").option("path", iBase).load()
+        .filter(pmod(col("o_orderkey"), lit(3)) === 0), "surface" -> "iceberg")
+      val hudi = census(s.read.format("graft-hudi").option("path", hBase).load()
+        .filter(pmod(col("o_orderkey"), lit(3)) === 1), "surface" -> "hudi")
       s.sql(s"CREATE OR REPLACE TEMPORARY VIEW dsv2_delta " +
         s"USING `graft-delta` OPTIONS (path '$dBase')")
-      val sql = census("sql", s.sql(
-        "SELECT cents FROM dsv2_delta WHERE o_orderpriority = '5-LOW'"))
+      val sql = census(s.sql(
+        "SELECT cents FROM dsv2_delta WHERE o_orderpriority = '5-LOW'"), "surface" -> "sql")
       // COLUMN-MAPPED tables ride the front door too: the requested
       // schema carries parquet.field.id = delta.columnMapping.id under
       // the LOGICAL names, so the physical `col-N` files bind by id —
       // including through a metadata-only RENAME (the scan asks for
       // the new spelling, same field id)
-      val mBase = s"$root/mapped"
+      val mBase = s"$lake/mapped"
       graft.sources.DeltaLogWriter.createColumnMapped(s, o, mBase, "graft-orders-dsv2m")
       graft.sources.DeltaLogWriter.renameColumn(s, mBase, "cents", "pennies")
-      val mapped = s.read.format("graft-delta").option("path", mBase).load()
-        .filter(col("o_orderpriority") === "1-URGENT")
-        .agg(count(lit(1)).as("n_rows"), sum(col("pennies")).as("total_cents"))
-        .select(lit("mapped").as("surface"), col("n_rows"), col("total_cents"))
+      val mapped = census(s.read.format("graft-delta").option("path", mBase).load()
+        .filter(col("o_orderpriority") === "1-URGENT").select(col("pennies").as("cents")),
+        "surface" -> "mapped")
       Seq(delta, ice, hudi, sql, mapped).reduce(_ unionAll _).orderBy("surface")
     }),
 
@@ -707,7 +695,7 @@ object LakehouseQueries extends QueryGroup {
     // proving each clause fired on exactly its rows and nothing
     // double-counted.
     "q_delta_merge_multi" -> ((s, d) => {
-      val base = s"/tmp/graft_deltaw_${Integer.toHexString(d.hashCode)}/orders_mmulti"
+      val base = root(d, "deltaw", "orders_mmulti")
       val W = graft.sources.DeltaLogWriter
       val o = iceOrders(s, d)
       W.create(s, o.repartition(3), base, "graft-orders-mmulti")
@@ -722,16 +710,10 @@ object LakehouseQueries extends QueryGroup {
         insertUnmatched = true,
         bySourceDelete = Some(col("o_orderpriority") === "5-LOW" &&
           pmod(col("o_orderkey"), lit(10)) === 9))
-      val versions = (0L to 1L).map { v =>
-        graft.sources.DeltaLogReader.read(s, base, v).agg(
-          count(lit(1)).as("n_rows"), sum(col("cents")).as("total_cents"))
-          .select(lit(v).as("phase"), lit("*").as("tag"),
-            col("n_rows"), col("total_cents"))
-      }
-      val cdf = graft.sources.DeltaLogReader.readChanges(s, base, 1L, 1L)
-        .groupBy(col("_change_type").as("tag"))
-        .agg(count(lit(1)).as("n_rows"), sum(col("cents")).as("total_cents"))
-        .select(lit(10L).as("phase"), col("tag"), col("n_rows"), col("total_cents"))
+      val versions = (0L to 1L).map(v =>
+        census(graft.sources.DeltaLogReader.read(s, base, v), "phase" -> v, "tag" -> "*"))
+      val cdf = census(graft.sources.DeltaLogReader.readChanges(s, base, 1L, 1L)
+        .groupBy(col("_change_type").as("tag")), "phase" -> 10L)
       (versions :+ cdf).reduce(_ unionAll _).orderBy("phase", "tag")
     }),
 
@@ -752,7 +734,7 @@ object LakehouseQueries extends QueryGroup {
     // replays every phase from `orders`; row-id stability is pinned in
     // DeltaComposedSpec (not SQL-expressible).
     "q_delta_composed" -> ((s, d) => {
-      val base = s"/tmp/graft_deltaw_${Integer.toHexString(d.hashCode)}/orders_composed"
+      val base = root(d, "deltaw", "orders_composed")
       val W = graft.sources.DeltaLogWriter
       val o = iceOrders(s, d)
       W.createComposed(s, o.repartition(2), base, "graft-orders-composed",
@@ -774,33 +756,24 @@ object LakehouseQueries extends QueryGroup {
       W.optimizeClustered(s, base)
       W.restore(s, base, 2L)
       W.renameColumn(s, base, "cents", "pennies")
-      val versions = (0L to 5L).map { v =>
-        graft.sources.DeltaLogReader.read(s, base, v).agg(
-          count(lit(1)).as("n_rows"), sum(col("cents")).as("total_cents"))
-          .select(lit(v).as("phase"), lit("*").as("pri"),
-            col("n_rows"), col("total_cents"))
-      }
-      val renamed = graft.sources.DeltaLogReader.read(s, base, 6L)
-        .groupBy(col("o_orderpriority").as("pri"))
-        .agg(count(lit(1)).as("n_rows"), sum(col("pennies")).as("total_cents"))
-        .select(lit(6L).as("phase"), col("pri"), col("n_rows"), col("total_cents"))
+      val versions = (0L to 5L).map(v =>
+        census(graft.sources.DeltaLogReader.read(s, base, v), "phase" -> v, "pri" -> "*"))
+      val renamed = census(graft.sources.DeltaLogReader.read(s, base, 6L)
+        .select(col("o_orderpriority").as("pri"), col("pennies").as("cents"))
+        .groupBy(col("pri")), "phase" -> 6L)
       // v7/v8: SCHEMA EVOLUTION on the column-mapped table — ADD COLUMN
       // mints a fresh physical id above maxColumnId (metadata-only;
       // every existing file surfaces it as NULL through the
       // physical-schema scan), then TYPE WIDENING re-types it int →
       // bigint with zero bytes moved (the r12 refusals, now served)
       W.addColumn(s, base, "bonus", "INT")
-      val postAdd = graft.sources.DeltaLogReader.read(s, base, 7L)
-        .filter(col("bonus").isNull)
-        .agg(count(lit(1)).as("n_rows"), sum(col("pennies")).as("total_cents"))
-        .select(lit(7L).as("phase"), lit("*").as("pri"),
-          col("n_rows"), col("total_cents"))
+      val postAdd = census(graft.sources.DeltaLogReader.read(s, base, 7L)
+        .filter(col("bonus").isNull).select(col("pennies").as("cents")),
+        "phase" -> 7L, "pri" -> "*")
       W.widenColumnType(s, base, "bonus", "BIGINT")
-      val postWiden = graft.sources.DeltaLogReader.read(s, base, 8L)
-        .agg(count(lit(1)).as("n_rows"),
-          sum(col("pennies") + coalesce(col("bonus"), lit(0L))).as("total_cents"))
-        .select(lit(8L).as("phase"), lit("*").as("pri"),
-          col("n_rows"), col("total_cents"))
+      val postWiden = census(graft.sources.DeltaLogReader.read(s, base, 8L)
+        .select((col("pennies") + coalesce(col("bonus"), lit(0L))).as("cents")),
+        "phase" -> 8L, "pri" -> "*")
       (versions :+ renamed :+ postAdd :+ postWiden)
         .reduce(_ unionAll _).orderBy("phase", "pri")
     }),
@@ -816,32 +789,22 @@ object LakehouseQueries extends QueryGroup {
     // writer obligation intact. Census: per-format SQL reads + the
     // CTAS+INSERT table + the SHOW TABLES inventory.
     "q_lake_catalog" -> ((s, d) => {
-      val root = s"/tmp/graft_deltaw_${Integer.toHexString(d.hashCode)}/lakecat"
-      graft.sources.TxnLog.rmrf(root)
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(root, "sales"))
+      val lake = fresh(root(d, "deltaw", "lakecat"), "sales")
       val o = iceOrders(s, d)
       def grp(r: Int) = o.filter(pmod(col("o_orderkey"), lit(3)) === r)
       graft.sources.DeltaLogWriter.create(s, grp(0).repartition(2),
-        s"$root/sales/orders_delta", "cat-delta")
+        s"$lake/sales/orders_delta", "cat-delta")
       graft.sources.IcebergWriter.create(s, grp(1).repartition(2),
-        s"$root/sales/orders_ice")
-      graft.sources.HudiWriter.create(s, grp(2), s"$root/sales/orders_hudi",
+        s"$lake/sales/orders_ice")
+      graft.sources.HudiWriter.create(s, grp(2), s"$lake/sales/orders_hudi",
         "orders_cat", "o_orderkey", 4)
-      // per-sfDir catalog NAME: CatalogManager caches the instance by
-      // name at first resolution, so a shared name would pin the first
-      // sfDir's root for the whole session
-      val cat = s"lakecat_${Integer.toHexString(d.hashCode)}"
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.root", root)
+      val cat = catalog(s, "lakecat", d, lake)
       s.sql(s"DROP TABLE IF EXISTS $cat.sales.high")
       s.sql(s"CREATE TABLE $cat.sales.high USING `graft-delta` AS " +
         s"SELECT * FROM $cat.sales.orders_delta WHERE o_orderpriority = '2-HIGH'")
       s.sql(s"INSERT INTO $cat.sales.high " +
         s"SELECT * FROM $cat.sales.orders_ice WHERE o_orderpriority = '2-HIGH'")
-      def census(tag: String, table: String) =
-        s.sql(s"SELECT count(*) AS n_rows, sum(cents) AS total_cents FROM $table")
-          .select(lit(tag).as("surface"), col("n_rows"), col("total_cents"))
-      val ctas = census("ctas", s"$cat.sales.high")
+      val ctas = census(s.table(s"$cat.sales.high"), "surface" -> "ctas")
       // pure-SQL ALTER: ADD COLUMN (NULL-backfilled, metadata-only),
       // INSERT with the new column, then WIDEN it int→bigint — the
       // whole schema-evolution loop without a line of Scala
@@ -850,10 +813,8 @@ object LakehouseQueries extends QueryGroup {
         s"SELECT o_orderkey, o_orderpriority, cents, CAST(pmod(cents, 1000) AS INT) " +
         s"FROM $cat.sales.orders_ice WHERE o_orderpriority = '1-URGENT'")
       s.sql(s"ALTER TABLE $cat.sales.high ALTER COLUMN bonus TYPE BIGINT")
-      val altered = s.sql(
-        s"SELECT count(*) AS n_rows, " +
-          s"sum(cents + coalesce(bonus, 0)) AS total_cents FROM $cat.sales.high")
-        .select(lit("altered").as("surface"), col("n_rows"), col("total_cents"))
+      val altered = census(s.table(s"$cat.sales.high")
+        .select((col("cents") + coalesce(col("bonus"), lit(0))).as("cents")), "surface" -> "altered")
       // the catalog WRITE side serves Iceberg too: CTAS mints a
       // schema-only snapshot-less table then appends snapshot 1, and a
       // plain INSERT INTO commits snapshot 2 — pure SQL, no Scala
@@ -864,14 +825,14 @@ object LakehouseQueries extends QueryGroup {
       s.sql(s"INSERT INTO $cat.sales.high_ice " +
         s"SELECT o_orderkey, o_orderpriority, cents FROM $cat.sales.orders_delta " +
         s"WHERE o_orderpriority = '2-HIGH'")
-      val ctasIce = census("ctas_ice", s"$cat.sales.high_ice")
+      val ctasIce = census(s.table(s"$cat.sales.high_ice"), "surface" -> "ctas_ice")
       val inventory = s.sql(s"SHOW TABLES IN $cat.sales")
         .agg(count(lit(1)).as("n_rows"))
         .select(lit("tables").as("surface"), col("n_rows"),
           lit(0L).as("total_cents"))
-      Seq(census("delta", s"$cat.sales.orders_delta"),
-        census("iceberg", s"$cat.sales.orders_ice"),
-        census("hudi", s"$cat.sales.orders_hudi"),
+      Seq(census(s.table(s"$cat.sales.orders_delta"), "surface" -> "delta"),
+        census(s.table(s"$cat.sales.orders_ice"), "surface" -> "iceberg"),
+        census(s.table(s"$cat.sales.orders_hudi"), "surface" -> "hudi"),
         ctas, ctasIce, altered,
         inventory).reduce(_ unionAll _).orderBy("surface")
     }),
@@ -888,17 +849,13 @@ object LakehouseQueries extends QueryGroup {
     // broken down by change type — each clause fired on exactly its
     // rows. The oracle replays every statement from `orders`.
     "q_lake_sql_dml" -> ((s, d) => {
-      val hex = Integer.toHexString(d.hashCode)
-      val root = s"/tmp/graft_deltaw_$hex/sqldml"
-      graft.sources.TxnLog.rmrf(root)
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(root, "sales"))
-      val base = s"$root/sales/t"
+      val hex = LakehouseQueries.hex(d)
+      val lake = fresh(root(d, "deltaw", "sqldml"), "sales")
+      val base = s"$lake/sales/t"
       val o = iceOrders(s, d)
       graft.sources.DeltaLogWriter.create(s, o.repartition(2), base, "sqldml-t",
         extraConf = Map("delta.enableChangeDataFeed" -> "true"))
-      val cat = s"sqldmlcat_$hex"
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.root", root)
+      val cat = catalog(s, "sqldmlcat", d, lake)
       s.sql(s"DELETE FROM $cat.sales.t WHERE o_orderpriority = '1-URGENT'")
       s.sql(s"UPDATE $cat.sales.t SET cents = cents + 13 WHERE o_orderkey % 10 = 4")
       o.filter(pmod(col("o_orderkey"), lit(10)) === 7 &&
@@ -915,25 +872,19 @@ object LakehouseQueries extends QueryGroup {
            |WHEN MATCHED THEN UPDATE SET cents = s.cents
            |WHEN NOT MATCHED THEN INSERT (o_orderkey, o_orderpriority, cents)
            |VALUES (s.o_orderkey, s.o_orderpriority, s.cents)""".stripMargin)
-      val versions = (0L to 3L).map { v =>
-        graft.sources.DeltaLogReader.read(s, base, v).agg(
-          count(lit(1)).as("n_rows"), sum(col("cents")).as("total_cents"))
-          .select(lit(v).as("phase"), lit("*").as("tag"),
-            col("n_rows"), col("total_cents"))
-      }
-      val cdf = graft.sources.DeltaLogReader.readChanges(s, base, 1L, 3L)
-        .groupBy(col("_change_type").as("tag"))
-        .agg(count(lit(1)).as("n_rows"), sum(col("cents")).as("total_cents"))
-        .select(lit(10L).as("phase"), col("tag"), col("n_rows"), col("total_cents"))
+      val versions = (0L to 3L).map(v =>
+        census(graft.sources.DeltaLogReader.read(s, base, v), "phase" -> v, "tag" -> "*"))
+      val cdf = census(graft.sources.DeltaLogReader.readChanges(s, base, 1L, 3L)
+        .groupBy(col("_change_type").as("tag")), "phase" -> 10L)
       // the HIVE-PARTITIONED leg: the executor writers stage one file
       // per touched partition (`o_orderpriority=.../dml-*.parquet`,
       // partition column dropped from the file bytes, partitionValues
       // derived from the staged path) — UPDATE touches one partition's
       // rows in place, MERGE births synthetic rows into another
-      val ptBase = s"$root/sales/pt"
+      val ptBase = s"$lake/sales/pt"
       graft.sources.DeltaLogWriter.createComposed(s, o.repartition(2), ptBase,
         "sqldml-pt", partitionBy = Seq("o_orderpriority"))
-      s.sql(s"UPDATE sqldmlcat_$hex.sales.pt SET cents = cents + 21 " +
+      s.sql(s"UPDATE $cat.sales.pt SET cents = cents + 21 " +
         s"WHERE o_orderpriority = '3-MEDIUM' AND o_orderkey % 5 = 0")
       o.filter(col("o_orderpriority") === "4-NOT SPECIFIED" &&
           pmod(col("o_orderkey"), lit(11)) === 0)
@@ -941,29 +892,25 @@ object LakehouseQueries extends QueryGroup {
           col("o_orderpriority"), lit(444L).as("cents"))
         .createOrReplaceTempView(s"sqldml_ptsrc_$hex")
       s.sql(
-        s"""MERGE INTO sqldmlcat_$hex.sales.pt AS t USING sqldml_ptsrc_$hex AS s
+        s"""MERGE INTO $cat.sales.pt AS t USING sqldml_ptsrc_$hex AS s
            |ON t.o_orderkey = s.o_orderkey
            |WHEN NOT MATCHED THEN INSERT (o_orderkey, o_orderpriority, cents)
            |VALUES (s.o_orderkey, s.o_orderpriority, s.cents)""".stripMargin)
-      val pt = graft.sources.DeltaLogReader.read(s, ptBase)
-        .groupBy(col("o_orderpriority").as("tag"))
-        .agg(count(lit(1)).as("n_rows"), sum(col("cents")).as("total_cents"))
-        .select(lit(20L).as("phase"), col("tag"), col("n_rows"), col("total_cents"))
+      val pt = census(graft.sources.DeltaLogReader.read(s, ptBase)
+        .groupBy(col("o_orderpriority").as("tag")), "phase" -> 20L)
       // the COLUMN-MAPPED leg: the table was RENAMED (cents→pennies)
       // before the DML, so the SQL binds the new logical spelling while
       // the executor writers stage PHYSICAL col-N columns with embedded
       // parquet field ids (the spec's writer rule; the id-bound and
       // physical-name scan paths read the staged file like any other)
-      val cmBase = s"$root/sales/cm"
+      val cmBase = s"$lake/sales/cm"
       graft.sources.DeltaLogWriter.createComposed(s, o.repartition(2), cmBase,
         "sqldml-cm", columnMapped = true)
       graft.sources.DeltaLogWriter.renameColumn(s, cmBase, "cents", "pennies")
-      s.sql(s"UPDATE sqldmlcat_$hex.sales.cm SET pennies = pennies + 9 " +
+      s.sql(s"UPDATE $cat.sales.cm SET pennies = pennies + 9 " +
         s"WHERE o_orderkey % 13 = 0")
-      val cm = graft.sources.DeltaLogReader.read(s, cmBase)
-        .agg(count(lit(1)).as("n_rows"), sum(col("pennies")).as("total_cents"))
-        .select(lit(30L).as("phase"), lit("*").as("tag"),
-          col("n_rows"), col("total_cents"))
+      val cm = census(graft.sources.DeltaLogReader.read(s, cmBase)
+        .select(col("pennies").as("cents")), "phase" -> 30L, "tag" -> "*")
       // the ROW-TRACKED leg: SQL UPDATE + MERGE preserve stable row
       // ids — each target row's id rides the __rid metadata column
       // into the staged files' materialized column, inserts take fresh
@@ -971,12 +918,12 @@ object LakehouseQueries extends QueryGroup {
       // mark. Phase 41 grades the id machinery itself: n_rows = rows
       // whose id survived the two DMLs (all pre-existing rows),
       // total_cents = inserted rows whose id collides with NO v0 id
-      val rtBase = s"$root/sales/rt"
+      val rtBase = s"$lake/sales/rt"
       graft.sources.DeltaLogWriter.createComposed(s, o.repartition(2), rtBase,
         "sqldml-rt", rowTracked = true)
       val rt0 = graft.sources.DeltaLogReader.readRowIds(s, rtBase, 0L)
         .select(col("o_orderkey"), col("_row_id").as("rid0"))
-      s.sql(s"UPDATE sqldmlcat_$hex.sales.rt SET cents = cents + 11 " +
+      s.sql(s"UPDATE $cat.sales.rt SET cents = cents + 11 " +
         "WHERE o_orderkey % 6 = 2")
       o.filter(pmod(col("o_orderkey"), lit(17)) === 0)
         .select((col("o_orderkey") + 900000000L).as("o_orderkey"),
@@ -986,15 +933,12 @@ object LakehouseQueries extends QueryGroup {
           .select(col("o_orderkey"), col("o_orderpriority"), lit(123L).as("cents")))
         .createOrReplaceTempView(s"sqldml_rtsrc_$hex")
       s.sql(
-        s"""MERGE INTO sqldmlcat_$hex.sales.rt AS t USING sqldml_rtsrc_$hex AS s
+        s"""MERGE INTO $cat.sales.rt AS t USING sqldml_rtsrc_$hex AS s
            |ON t.o_orderkey = s.o_orderkey
            |WHEN MATCHED THEN UPDATE SET cents = s.cents
            |WHEN NOT MATCHED THEN INSERT (o_orderkey, o_orderpriority, cents)
            |VALUES (s.o_orderkey, s.o_orderpriority, s.cents)""".stripMargin)
-      val rt = graft.sources.DeltaLogReader.read(s, rtBase)
-        .agg(count(lit(1)).as("n_rows"), sum(col("cents")).as("total_cents"))
-        .select(lit(40L).as("phase"), lit("*").as("tag"),
-          col("n_rows"), col("total_cents"))
+      val rt = census(graft.sources.DeltaLogReader.read(s, rtBase), "phase" -> 40L, "tag" -> "*")
       val rtAfter = graft.sources.DeltaLogReader.readRowIds(s, rtBase,
         graft.sources.DeltaLogReader.latestVersion(rtBase))
       val rtIds = rtAfter.join(rt0, Seq("o_orderkey"), "left")
@@ -1021,39 +965,33 @@ object LakehouseQueries extends QueryGroup {
     // puffin DVs, Hudi MERGE-ON-READ with log upserts AND deletes, and
     // the zero-Scala SQL view over the masked Delta table.
     "q_lake_dsv2_dv" -> ((s, d) => {
-      val root = s"/tmp/graft_deltaw_${Integer.toHexString(d.hashCode)}/dsv2dv"
+      val lake = root(d, "deltaw", "dsv2dv")
       val o = iceOrders(s, d)
-      val dBase = s"$root/delta"
+      val dBase = s"$lake/delta"
       graft.sources.DeltaLogWriter.create(s, o.repartition(2), dBase, "dsv2dv-delta")
       graft.sources.DeltaLogWriter.deleteWhereDv(s, dBase,
         pmod(col("o_orderkey"), lit(10)) < 2)
-      val iBase = s"$root/ice"
+      val iBase = s"$lake/ice"
       graft.sources.IcebergWriter.createV3(s, o.repartition(2), iBase)
       graft.sources.IcebergWriter.deleteWhereV3(s, iBase,
         col("o_orderpriority") === "1-URGENT")
-      val hBase = s"$root/hudi"
+      val hBase = s"$lake/hudi"
       graft.sources.HudiWriter.createMor(s, o, hBase, "dsv2dv-hudi", "o_orderkey", 4)
       graft.sources.HudiWriter.logCommit(s, hBase,
         o.filter(pmod(col("o_orderkey"), lit(10)) === 5)
           .withColumn("cents", col("cents") + 3),
         deleteKeys = Some(o.filter(pmod(col("o_orderkey"), lit(10)) === 6)
           .select(col("o_orderkey"))))
-      def census(tag: String, df: org.apache.spark.sql.DataFrame) =
-        df.agg(count(lit(1)).as("n_rows"), sum(col("cents")).as("total_cents"))
-          .select(lit(tag).as("surface"), col("n_rows"), col("total_cents"))
-      val delta = census("delta", s.read.format("graft-delta")
-        .option("path", dBase).load()
-        .filter(col("o_orderpriority") === "2-HIGH"))
-      val ice = census("iceberg", s.read.format("graft-iceberg")
-        .option("path", iBase).load()
-        .filter(pmod(col("o_orderkey"), lit(3)) === 0))
-      val hudi = census("hudi", s.read.format("graft-hudi")
-        .option("path", hBase).load()
-        .filter(pmod(col("o_orderkey"), lit(3)) === 1))
+      val delta = census(s.read.format("graft-delta").option("path", dBase).load()
+        .filter(col("o_orderpriority") === "2-HIGH"), "surface" -> "delta")
+      val ice = census(s.read.format("graft-iceberg").option("path", iBase).load()
+        .filter(pmod(col("o_orderkey"), lit(3)) === 0), "surface" -> "iceberg")
+      val hudi = census(s.read.format("graft-hudi").option("path", hBase).load()
+        .filter(pmod(col("o_orderkey"), lit(3)) === 1), "surface" -> "hudi")
       s.sql(s"CREATE OR REPLACE TEMPORARY VIEW dsv2dv_delta " +
         s"USING `graft-delta` OPTIONS (path '$dBase')")
-      val sql = census("sql", s.sql(
-        "SELECT cents FROM dsv2dv_delta WHERE o_orderpriority = '5-LOW'"))
+      val sql = census(s.sql(
+        "SELECT cents FROM dsv2dv_delta WHERE o_orderpriority = '5-LOW'"), "surface" -> "sql")
       Seq(delta, ice, hudi, sql).reduce(_ unionAll _).orderBy("surface")
     }),
 
@@ -1067,45 +1005,37 @@ object LakehouseQueries extends QueryGroup {
     // — at 100 TB the historical read plans exactly the old snapshot's
     // file set, no log replay over data.
     "q_lake_travel" -> ((s, d) => {
-      val hex = Integer.toHexString(d.hashCode)
-      val root = s"/tmp/graft_deltaw_$hex/travel"
-      graft.sources.TxnLog.rmrf(root)
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(root, "db"))
+      val lake = fresh(root(d, "deltaw", "travel"), "db")
       val o = iceOrders(s, d)
-      val dBase = s"$root/db/d"
+      val dBase = s"$lake/db/d"
       graft.sources.DeltaLogWriter.create(s,
         o.filter(pmod(col("o_orderkey"), lit(2)) === 0).repartition(2), dBase, "trav-d")
       graft.sources.DeltaLogWriter.append(s,
         o.filter(pmod(col("o_orderkey"), lit(2)) === 1 &&
           col("o_orderpriority") === "5-LOW"), dBase)
-      val iBase = s"$root/db/i"
+      val iBase = s"$lake/db/i"
       graft.sources.IcebergWriter.create(s, o.repartition(2), iBase)
       graft.sources.IcebergWriter.append(s,
         o.filter(pmod(col("o_orderkey"), lit(10)) === 0)
           .select((col("o_orderkey") + 600000000L).as("o_orderkey"),
             col("o_orderpriority"), lit(321L).as("cents")), iBase)
-      val hBase = s"$root/db/h"
+      val hBase = s"$lake/db/h"
       graft.sources.HudiWriter.create(s, o, hBase, "trav-h", "o_orderkey", 4)
       graft.sources.HudiWriter.upsert(s,
         o.filter(pmod(col("o_orderkey"), lit(10)) === 3)
           .withColumn("cents", col("cents") + 5), hBase)
-      val cat = s"travcat_$hex"
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.root", root)
-      def census(tag: String, from: String) = s.sql(
-        s"SELECT '$tag' AS surface, count(*) AS n_rows, " +
-          s"CAST(sum(cents) AS BIGINT) AS total_cents FROM $from")
+      val cat = catalog(s, "travcat", d, lake)
       Seq(
-        census("delta_v0", s"$cat.db.d VERSION AS OF 0"),
-        census("delta_now", s"$cat.db.d"),
-        census("ice_s1", s"$cat.db.i VERSION AS OF 1"),
+        sqlCensus(s, "delta_v0", s"$cat.db.d VERSION AS OF 0"),
+        sqlCensus(s, "delta_now", s"$cat.db.d"),
+        sqlCensus(s, "ice_s1", s"$cat.db.i VERSION AS OF 1"),
         // this writer stamps snapshot timestamp-ms = snapshot id, so
         // the wall-clock form resolves real snapshot boundaries
-        census("ice_t1",
+        sqlCensus(s, "ice_t1",
           s"$cat.db.i TIMESTAMP AS OF timestamp'1970-01-01 00:00:00.001+00:00'"),
-        census("ice_now", s"$cat.db.i"),
-        census("hudi_i1", s"$cat.db.h VERSION AS OF '001'"),
-        census("hudi_now", s"$cat.db.h")
+        sqlCensus(s, "ice_now", s"$cat.db.i"),
+        sqlCensus(s, "hudi_i1", s"$cat.db.h VERSION AS OF '001'"),
+        sqlCensus(s, "hudi_now", s"$cat.db.h")
       ).reduce(_ unionAll _).orderBy("surface")
     }),
 
@@ -1117,16 +1047,12 @@ object LakehouseQueries extends QueryGroup {
     // The historical censuses ride the new VERSION AS OF surface, so
     // this also proves old snapshots do NOT see later delete files.
     "q_lake_sql_dml_ice" -> ((s, d) => {
-      val hex = Integer.toHexString(d.hashCode)
-      val root = s"/tmp/graft_iceberg_$hex/sqldelice"
-      graft.sources.TxnLog.rmrf(root)
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(root, "db"))
+      val hex = LakehouseQueries.hex(d)
+      val lake = fresh(root(d, "iceberg", "sqldelice"), "db")
       val o = iceOrders(s, d)
-      graft.sources.IcebergWriter.create(s, o.repartition(2), s"$root/db/i2")
-      graft.sources.IcebergWriter.createV3(s, o.repartition(2), s"$root/db/i3")
-      val cat = s"icedelcat_$hex"
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.root", root)
+      graft.sources.IcebergWriter.create(s, o.repartition(2), s"$lake/db/i2")
+      graft.sources.IcebergWriter.createV3(s, o.repartition(2), s"$lake/db/i3")
+      val cat = catalog(s, "icedelcat", d, lake)
       // simple DELETEs stay FILTER-TRANSLATABLE (SupportsDelete's
       // metadata-only route); UPDATE / MERGE / complex predicates
       // rewrite through the delta-based row-level operation — executors
@@ -1150,14 +1076,11 @@ object LakehouseQueries extends QueryGroup {
            |VALUES (s.o_orderkey, s.o_orderpriority, s.cents)""".stripMargin)
       s.sql(s"DELETE FROM $cat.db.i3 WHERE o_orderpriority IN ('2-HIGH', '5-LOW')")
       s.sql(s"UPDATE $cat.db.i3 SET cents = 1 WHERE o_orderkey % 9 = 2")
-      def census(tag: String, from: String) = s.sql(
-        s"SELECT '$tag' AS surface, count(*) AS n_rows, " +
-          s"CAST(sum(cents) AS BIGINT) AS total_cents FROM $from")
       Seq(
-        census("i2_s1", s"$cat.db.i2 VERSION AS OF 1"),
-        census("i2_s2", s"$cat.db.i2 VERSION AS OF 2"),
-        census("i2_now", s"$cat.db.i2"),
-        census("i3_now", s"$cat.db.i3")
+        sqlCensus(s, "i2_s1", s"$cat.db.i2 VERSION AS OF 1"),
+        sqlCensus(s, "i2_s2", s"$cat.db.i2 VERSION AS OF 2"),
+        sqlCensus(s, "i2_now", s"$cat.db.i2"),
+        sqlCensus(s, "i3_now", s"$cat.db.i3")
       ).reduce(_ unionAll _).orderBy("surface")
     }),
 
@@ -1173,7 +1096,7 @@ object LakehouseQueries extends QueryGroup {
     // again (era 3). Census: per-tier totals (old rows are all bronze)
     // + the boost sum (eras 1-2 contribute the default).
     "q_iceberg_default" -> ((s, d) => {
-      val base = s"/tmp/graft_iceberg_${Integer.toHexString(d.hashCode)}/orders_default"
+      val base = root(d, "iceberg", "orders_default")
       val IW = graft.sources.IcebergWriter
       val o = iceOrders(s, d).select(col("o_orderkey"), col("cents"))
       def grp(r: Int) = o.filter(pmod(col("o_orderkey"), lit(3)) === r)
@@ -1206,7 +1129,7 @@ object LakehouseQueries extends QueryGroup {
     // totals; phase 0 grades the pre-widening ints, phase 2 the mixed
     // int/long files, phase 3 the double re-read of unchanged values.
     "q_delta_type_widening" -> ((s, d) => {
-      val base = s"/tmp/graft_deltaw_${Integer.toHexString(d.hashCode)}/orders_widen"
+      val base = root(d, "deltaw", "orders_widen")
       val W = graft.sources.DeltaLogWriter
       val o = iceOrders(s, d)
       val narrow = o.select(col("o_orderkey"),
@@ -1220,15 +1143,14 @@ object LakehouseQueries extends QueryGroup {
         pmod(col("cents"), lit(97)).cast("int").as("septile"))
       W.append(s, wide, base)
       W.widenColumnType(s, base, "septile", "DOUBLE")
-      def census(phase: Long, v: Long) =
+      Seq(0L, 2L, 3L).map { v =>
         graft.sources.DeltaLogReader.read(s, base, v).agg(
           count(lit(1)).as("n_rows"),
           sum(col("qty")).cast("long").as("total_qty"),
           sum(col("septile")).cast("long").as("total_septile"))
-          .select(lit(phase).as("phase"), col("n_rows"),
+          .select(lit(v).as("phase"), col("n_rows"),
             col("total_qty"), col("total_septile"))
-      Seq(census(0L, 0L), census(2L, 2L), census(3L, 3L))
-        .reduce(_ unionAll _).orderBy("phase")
+      }.reduce(_ unionAll _).orderBy("phase")
     }),
 
     // ---- Delta GENERATED columns (writer feature `generatedColumns`) ------
@@ -1244,7 +1166,7 @@ object LakehouseQueries extends QueryGroup {
     // writer that skipped computing, mis-computed, or bound the
     // expression to the wrong row hash-fails.
     "q_delta_generated" -> ((s, d) => {
-      val base = s"/tmp/graft_deltaw_${Integer.toHexString(d.hashCode)}/orders_gen"
+      val base = root(d, "deltaw", "orders_gen")
       val W = graft.sources.DeltaLogWriter
       val o = iceOrders(s, d)
       W.createGenerated(s, o.repartition(2), base, "graft-orders-gen",
@@ -1287,7 +1209,7 @@ object LakehouseQueries extends QueryGroup {
     // it with row_number). Census: per-version id range + a bind
     // checksum tying each id to ITS row's key.
     "q_delta_identity" -> ((s, d) => {
-      val base = s"/tmp/graft_deltaw_${Integer.toHexString(d.hashCode)}/orders_sk"
+      val base = root(d, "deltaw", "orders_sk")
       val W = graft.sources.DeltaLogWriter
       val o = iceOrders(s, d)
       W.createIdentity(s, o.filter(pmod(col("o_orderkey"), lit(3)) =!= 0),
@@ -1318,10 +1240,10 @@ object LakehouseQueries extends QueryGroup {
     // door. Census: every delta version + the final front-door read +
     // the iceberg state after its format() append.
     "q_lake_dsv2_write" -> ((s, d) => {
-      val root = s"/tmp/graft_deltaw_${Integer.toHexString(d.hashCode)}/dsv2w"
+      val lake = root(d, "deltaw", "dsv2w")
       val o = iceOrders(s, d)
-      val dBase = s"$root/delta"
-      val iBase = s"$root/ice"
+      val dBase = s"$lake/delta"
+      val iBase = s"$lake/ice"
       def grp(r: Int) = o.filter(pmod(col("o_orderkey"), lit(3)) === r)
       graft.sources.DeltaLogWriter.create(s, grp(0).repartition(2), dBase,
         "graft-orders-dsv2w")
@@ -1338,17 +1260,10 @@ object LakehouseQueries extends QueryGroup {
       graft.sources.IcebergWriter.create(s, grp(0).repartition(2), iBase)
       grp(1).write.format("graft-iceberg").option("path", iBase)
         .mode("append").save()
-      val versions = (0L to 3L).map { v =>
-        graft.sources.DeltaLogReader.read(s, dBase, v).agg(
-          count(lit(1)).as("n_rows"), sum(col("cents")).as("total_cents"))
-          .select(lit(v).as("phase"), col("n_rows"), col("total_cents"))
-      }
-      val door = s.read.format("graft-delta").option("path", dBase).load()
-        .agg(count(lit(1)).as("n_rows"), sum(col("cents")).as("total_cents"))
-        .select(lit(10L).as("phase"), col("n_rows"), col("total_cents"))
-      val ice = s.read.format("graft-iceberg").option("path", iBase).load()
-        .agg(count(lit(1)).as("n_rows"), sum(col("cents")).as("total_cents"))
-        .select(lit(20L).as("phase"), col("n_rows"), col("total_cents"))
+      val versions = (0L to 3L).map(v =>
+        census(graft.sources.DeltaLogReader.read(s, dBase, v), "phase" -> v))
+      val door = census(s.read.format("graft-delta").option("path", dBase).load(), "phase" -> 10L)
+      val ice = census(s.read.format("graft-iceberg").option("path", iBase).load(), "phase" -> 20L)
       (versions ++ Seq(door, ice)).reduce(_ unionAll _).orderBy("phase")
     }),
 
@@ -1362,7 +1277,7 @@ object LakehouseQueries extends QueryGroup {
     // exactly one commit). A checkpoint that missed a live file,
     // mis-sized, or a reader that still demanded commit 0 hash-fails.
     "q_delta_checkpoint" -> ((s, d) => {
-      val base = s"/tmp/graft_deltaw_${Integer.toHexString(d.hashCode)}/orders_ckpt"
+      val base = root(d, "deltaw", "orders_ckpt")
       val o = iceOrders(s, d)
       def grp(r: Int) = o.filter(pmod(col("o_orderkey"), lit(3)) === r)
       graft.sources.DeltaLogWriter.create(s, grp(0).coalesce(1), base, "graft-orders-ckpt")
@@ -1370,13 +1285,8 @@ object LakehouseQueries extends QueryGroup {
       graft.sources.DeltaLogWriter.checkpoint(s, base)
       graft.sources.DeltaLogWriter.expireLog(base)
       graft.sources.DeltaLogWriter.append(s, grp(2).coalesce(1), base)
-      val versions = Seq(1L, 2L).map { v =>
-        graft.sources.DeltaLogReader.read(s, base, v).agg(
-          count(lit(1)).as("n_rows"),
-          sum(col("cents")).as("total_cents"))
-          .select(lit(v).as("version"), col("n_rows"), col("total_cents"))
-      }
-      versions.reduce(_ unionAll _).orderBy("version")
+      Seq(1L, 2L).map(v => census(graft.sources.DeltaLogReader.read(s, base, v), "version" -> v))
+        .reduce(_ unionAll _).orderBy("version")
     }),
 
     // ---- Delta V2 CHECKPOINT (checkpointPolicy=v2 + sidecars) -------------
@@ -1391,7 +1301,7 @@ object LakehouseQueries extends QueryGroup {
     // expireLog (v0's JSON is gone; v1 is reconstructable ONLY through
     // the sidecars), then append v2 and census both readable versions.
     "q_delta_v2checkpoint" -> ((s, d) => {
-      val base = s"/tmp/graft_deltaw_${Integer.toHexString(d.hashCode)}/orders_v2ck"
+      val base = root(d, "deltaw", "orders_v2ck")
       val o = iceOrders(s, d)
       def grp(r: Int) = o.filter(pmod(col("o_orderkey"), lit(3)) === r)
       graft.sources.DeltaLogWriter.create(s, grp(0).coalesce(1), base, "graft-orders-v2ck")
@@ -1399,13 +1309,8 @@ object LakehouseQueries extends QueryGroup {
       graft.sources.DeltaLogWriter.checkpointV2(s, base)
       graft.sources.DeltaLogWriter.expireLog(base)
       graft.sources.DeltaLogWriter.append(s, grp(2).coalesce(1), base)
-      val versions = Seq(1L, 2L).map { v =>
-        graft.sources.DeltaLogReader.read(s, base, v).agg(
-          count(lit(1)).as("n_rows"),
-          sum(col("cents")).as("total_cents"))
-          .select(lit(v).as("version"), col("n_rows"), col("total_cents"))
-      }
-      versions.reduce(_ unionAll _).orderBy("version")
+      Seq(1L, 2L).map(v => census(graft.sources.DeltaLogReader.read(s, base, v), "version" -> v))
+        .reduce(_ unionAll _).orderBy("version")
     }),
 
     // ---- Delta Change Data Feed ------------------------------------------
@@ -1442,13 +1347,9 @@ object LakehouseQueries extends QueryGroup {
     // pinning are all hash-graded.
     "q_iceberg_scan" -> ((s, d) => {
       val base = LakehouseQueries.mkIcebergFixture(s, d, "orders_ice")
-      val versions = Seq(1L, 2L).map { snap =>
-        graft.sources.IcebergReader.read(s, base, snap).agg(
-          count(lit(1)).as("n_rows"),
-          sum(col("cents")).as("total_cents"))
-          .select(lit(snap).as("snapshot_id"), col("n_rows"), col("total_cents"))
-      }
-      versions.reduce(_ unionAll _).orderBy("snapshot_id")
+      Seq(1L, 2L).map(snap =>
+        census(graft.sources.IcebergReader.read(s, base, snap), "snapshot_id" -> snap))
+        .reduce(_ unionAll _).orderBy("snapshot_id")
     }),
 
     // ---- SQL-text front door: lakehouse TABLE-VALUED FUNCTIONS -----------
@@ -1488,13 +1389,9 @@ object LakehouseQueries extends QueryGroup {
     // the oracle replays as a plain predicate.
     "q_iceberg_deletes" -> ((s, d) => {
       val base = LakehouseQueries.mkIcebergV2Fixture(s, d, "orders_ice2")
-      val versions = Seq(1L, 2L).map { snap =>
-        graft.sources.IcebergReader.read(s, base, snap).agg(
-          count(lit(1)).as("n_rows"),
-          sum(col("cents")).as("total_cents"))
-          .select(lit(snap).as("snapshot_id"), col("n_rows"), col("total_cents"))
-      }
-      versions.reduce(_ unionAll _).orderBy("snapshot_id")
+      Seq(1L, 2L).map(snap =>
+        census(graft.sources.IcebergReader.read(s, base, snap), "snapshot_id" -> snap))
+        .reduce(_ unionAll _).orderBy("snapshot_id")
     }),
 
     // ---- Iceberg `files` metadata relation -------------------------------
@@ -1546,11 +1443,10 @@ object LakehouseQueries extends QueryGroup {
     "q_iceberg_prune" -> ((s, d) => {
       val base = LakehouseQueries.mkIcebergPartFixture(s, d, "orders_icep")
       val keep = Seq("1-URGENT", "2-HIGH")
-      graft.sources.IcebergReader.readWhere(s, base, 1L,
+      census(graft.sources.IcebergReader.readWhere(s, base, 1L,
           col("data_file.partition.o_orderpriority").isin(keep: _*))
         .filter(col("o_orderpriority").isin(keep: _*))
-        .groupBy(col("o_orderpriority"))
-        .agg(count(lit(1)).as("n_rows"), sum(col("cents")).as("total_cents"))
+        .groupBy(col("o_orderpriority")))
         .orderBy("o_orderpriority")
     }),
 
@@ -1567,11 +1463,10 @@ object LakehouseQueries extends QueryGroup {
     // engine honest; the oracle replays the predicate over `orders`.
     "q_iceberg_stats_prune" -> ((s, d) => {
       val base = LakehouseQueries.mkIcebergStatsFixture(s, d, "orders_ices")
-      graft.sources.IcebergReader.readWhere(s, base, 1L,
+      census(graft.sources.IcebergReader.readWhere(s, base, 1L,
           graft.sources.IcebergReader.boundsOverlap(3, 1997L, 1998L))
         .filter(col("o_year").between(1997, 1998))
-        .groupBy(col("o_year"))
-        .agg(count(lit(1)).as("n_rows"), sum(col("cents")).as("total_cents"))
+        .groupBy(col("o_year")))
         .orderBy("o_year")
     }),
 
@@ -1590,13 +1485,8 @@ object LakehouseQueries extends QueryGroup {
       val base = LakehouseQueries.mkHudiFixture(s, d, "orders_hudi")
       val at001 = graft.sources.HudiReader.readAsOf(s, base, "001")
       val latest = graft.sources.HudiReader.read(s, base)
-      val snaps = Seq(1L -> at001, 2L -> latest).map { case (i, df) =>
-        df.agg(
-          count(lit(1)).as("n_rows"),
-          sum(col("cents")).as("total_cents"))
-          .select(lit(i).as("snapshot"), col("n_rows"), col("total_cents"))
-      }
-      snaps.reduce(_ unionAll _).orderBy("snapshot")
+      census(at001, "snapshot" -> 1L).unionAll(census(latest, "snapshot" -> 2L))
+        .orderBy("snapshot")
     }),
 
     // ---- PUBLIC-spec Apache Hudi EXPORT (the write path) ----------------
@@ -1612,18 +1502,15 @@ object LakehouseQueries extends QueryGroup {
     // read of just the upsert batch (phase 3) — which hash-fails if
     // the writer stamped carried rows with the new instant.
     "q_hudi_roundtrip" -> ((s, d) => {
-      val base = s"/tmp/graft_hudi_${Integer.toHexString(d.hashCode)}/orders_rt"
+      val base = root(d, "hudi", "orders_rt")
       val o = iceOrders(s, d)
       val c1 = graft.sources.HudiWriter.create(s, o, base, "orders_rt", "o_orderkey", 3)
       val upd = o.filter(col("o_orderpriority") === "2-HIGH")
         .withColumn("cents", col("cents") + 9)
       val c2 = graft.sources.HudiWriter.upsert(s, upd, base)
-      def census(df: org.apache.spark.sql.DataFrame, phase: Long) =
-        df.agg(count(lit(1)).as("n_rows"), sum(col("cents")).as("total_cents"))
-          .select(lit(phase).as("phase"), col("n_rows"), col("total_cents"))
-      Seq(census(graft.sources.HudiReader.readAsOf(s, base, c1), 1L),
-        census(graft.sources.HudiReader.read(s, base), 2L),
-        census(graft.sources.HudiReader.readIncremental(s, base, c1, c2), 3L))
+      Seq(census(graft.sources.HudiReader.readAsOf(s, base, c1), "phase" -> 1L),
+        census(graft.sources.HudiReader.read(s, base), "phase" -> 2L),
+        census(graft.sources.HudiReader.readIncremental(s, base, c1, c2), "phase" -> 3L))
         .reduce(_ unionAll _).orderBy("phase")
     }),
 
@@ -1648,7 +1535,7 @@ object LakehouseQueries extends QueryGroup {
     // time travel to v0 answers with the narrow schema. Oracle replays
     // both versions from orders.
     "q_delta_evolve" -> ((s, d) => {
-      val base = s"/tmp/graft_deltaw_${Integer.toHexString(d.hashCode)}/orders_evo"
+      val base = root(d, "deltaw", "orders_evo")
       val o = iceOrders(s, d)
       graft.sources.DeltaLogWriter.create(s,
         o.filter(col("o_orderpriority") === "1-URGENT").select("o_orderkey", "cents"),
@@ -1678,10 +1565,7 @@ object LakehouseQueries extends QueryGroup {
       val base = LakehouseQueries.mkDeltaTsFixture(s, d, "orders_ts")
       val probes = Seq(1500L, 2500L, 3500L).map { ts =>
         val v = graft.sources.DeltaLogReader.versionAtTimestamp(base, ts)
-        graft.sources.DeltaLogReader.read(s, base, v).agg(
-          count(lit(1)).as("n_rows"), sum(col("cents")).as("total_cents"))
-          .select(lit(ts).as("probe_ts"), lit(v).as("version"),
-            col("n_rows"), col("total_cents"))
+        census(graft.sources.DeltaLogReader.read(s, base, v), "probe_ts" -> ts, "version" -> v)
       }
       val early =
         try { graft.sources.DeltaLogReader.versionAtTimestamp(base, 500L); 0L }
@@ -1704,7 +1588,7 @@ object LakehouseQueries extends QueryGroup {
     // committed NOTHING), the rejected-batch count, and the census
     // (only valid rows present).
     "q_delta_constraint" -> ((s, d) => {
-      val base = s"/tmp/graft_deltaw_${Integer.toHexString(d.hashCode)}/orders_chk"
+      val base = root(d, "deltaw", "orders_chk")
       val o = iceOrders(s, d)
       graft.sources.DeltaLogWriter.create(s,
         o.filter(col("o_orderpriority") === "1-URGENT"), base, "graft-orders-chk")
@@ -1718,10 +1602,8 @@ object LakehouseQueries extends QueryGroup {
           0L
         } catch { case _: IllegalArgumentException => 1L }
       val nVersions = graft.sources.DeltaLogReader.versions(base).size.toLong
-      graft.sources.DeltaLogReader.read(s, base).agg(
-        count(lit(1)).as("n_rows"), sum(col("cents")).as("total_cents"))
-        .select(lit(nVersions).as("n_versions"), lit(rejected).as("rejected_batches"),
-          col("n_rows"), col("total_cents"))
+      census(graft.sources.DeltaLogReader.read(s, base),
+        "n_versions" -> nVersions, "rejected_batches" -> rejected)
     }),
 
     // ---- Iceberg refs: tags + branches -------------------------------------
@@ -1735,7 +1617,7 @@ object LakehouseQueries extends QueryGroup {
     // 'audit' still answers snapshot 1 after two later commits. The
     // oracle replays both slices.
     "q_iceberg_refs" -> ((s, d) => {
-      val base = iceBase(d, "orders_refs")
+      val base = root(d, "iceberg", "orders_refs")
       val o = iceOrders(s, d)
       graft.sources.IcebergWriter.create(s,
         o.filter(col("o_orderpriority") === "1-URGENT").repartition(2), base)
@@ -1745,12 +1627,9 @@ object LakehouseQueries extends QueryGroup {
       graft.sources.IcebergWriter.setRef(s, base, "dev", 2L, "branch")
       graft.sources.IcebergWriter.append(s,
         o.filter(col("o_orderpriority") === "1-URGENT").repartition(1), base)
-      def census(ref: String, ord: Long) =
-        graft.sources.IcebergReader.readRef(s, base, ref).agg(
-          count(lit(1)).as("n_rows"), sum(col("cents")).as("total_cents"))
-          .select(lit(ord).as("ord"), lit(ref).as("ref"),
-            col("n_rows"), col("total_cents"))
-      census("audit", 1L).unionAll(census("dev", 2L)).orderBy("ord")
+      Seq("audit" -> 1L, "dev" -> 2L).map { case (ref, ord) =>
+        census(graft.sources.IcebergReader.readRef(s, base, ref), "ord" -> ord, "ref" -> ref)
+      }.reduce(_ unionAll _).orderBy("ord")
     }),
 
     // ---- Delta VACUUM (the data half) -------------------------------------
@@ -1763,7 +1642,7 @@ object LakehouseQueries extends QueryGroup {
     // output, so a vacuum that deleted a live file (content drift) or
     // missed a dead one (count drift) hash-fails.
     "q_delta_vacuum" -> ((s, d) => {
-      val base = s"/tmp/graft_deltaw_${Integer.toHexString(d.hashCode)}/orders_vac"
+      val base = root(d, "deltaw", "orders_vac")
       val o = iceOrders(s, d).filter(col("o_orderpriority") === "1-URGENT")
       graft.sources.DeltaLogWriter.create(s, o.repartition(3), base, "graft-orders-vac")
       graft.sources.DeltaLogWriter.optimize(s, base)
@@ -1776,14 +1655,11 @@ object LakehouseQueries extends QueryGroup {
             p.getFileName.toString.endsWith(".parquet") &&
             !p.toString.contains("_delta_log")).toLong
       }
-      def census(phase: Long, nFiles: Long) =
-        graft.sources.DeltaLogReader.read(s, base).agg(
-          count(lit(1)).as("n_rows"), sum(col("cents")).as("total_cents"))
-          .select(lit(phase).as("phase"), lit(nFiles).as("n_files"),
-            col("n_rows"), col("total_cents"))
-      val pre = census(1L, diskFiles())
+      def live(phase: Long) = census(graft.sources.DeltaLogReader.read(s, base),
+        "phase" -> phase, "n_files" -> diskFiles())
+      val pre = live(1L)
       graft.sources.DeltaLogWriter.vacuum(s, base)
-      val post = census(2L, diskFiles())
+      val post = live(2L)
       pre.unionAll(post).orderBy("phase")
     }),
 
@@ -1803,14 +1679,11 @@ object LakehouseQueries extends QueryGroup {
         graft.sources.Fs.list(java.nio.file.Paths.get(base, "data"))
           .size.toLong
       }
-      def census(phase: Long, nFiles: Long) =
-        graft.sources.IcebergReader.read(s, base).agg(
-          count(lit(1)).as("n_rows"), sum(col("cents")).as("total_cents"))
-          .select(lit(phase).as("phase"), lit(nFiles).as("n_files"),
-            col("n_rows"), col("total_cents"))
-      val pre = census(1L, diskFiles())
+      def live(phase: Long) = census(graft.sources.IcebergReader.read(s, base),
+        "phase" -> phase, "n_files" -> diskFiles())
+      val pre = live(1L)
       graft.sources.IcebergWriter.removeOrphans(s, base)
-      val post = census(2L, diskFiles())
+      val post = live(2L)
       pre.unionAll(post).orderBy("phase")
     }),
 
@@ -1823,7 +1696,7 @@ object LakehouseQueries extends QueryGroup {
     // latest slice) and the disk counts 9 → 3 pin that the reclaim
     // actually happened and took nothing live.
     "q_hudi_clean" -> ((s, d) => {
-      val base = s"/tmp/graft_hudi_${Integer.toHexString(d.hashCode)}/orders_clean"
+      val base = root(d, "hudi", "orders_clean")
       val o = iceOrders(s, d)
       graft.sources.HudiWriter.create(s, o, base, "orders_clean", "o_orderkey", 3)
       graft.sources.HudiWriter.upsert(s,
@@ -1833,14 +1706,11 @@ object LakehouseQueries extends QueryGroup {
         o.filter(col("o_orderpriority") === "1-URGENT")
           .withColumn("cents", col("cents") + 9), base)
       def diskFiles(): Long = graft.sources.HudiReader.baseFiles(base).size.toLong
-      def census(phase: Long, nFiles: Long) =
-        graft.sources.HudiReader.read(s, base).agg(
-          count(lit(1)).as("n_rows"), sum(col("cents")).as("total_cents"))
-          .select(lit(phase).as("phase"), lit(nFiles).as("n_files"),
-            col("n_rows"), col("total_cents"))
-      val pre = census(1L, diskFiles())
+      def live(phase: Long) = census(graft.sources.HudiReader.read(s, base),
+        "phase" -> phase, "n_files" -> diskFiles())
+      val pre = live(1L)
       graft.sources.HudiWriter.clean(s, base)
-      val post = census(2L, diskFiles())
+      val post = live(2L)
       pre.unionAll(post).orderBy("phase")
     }),
 
@@ -1861,7 +1731,7 @@ object LakehouseQueries extends QueryGroup {
     "q_hudi_lifecycle" -> ((s, d) => {
       import graft.sources.{HudiReader, HudiWriter}
       import java.nio.file.{Files => JFiles, Paths => JPaths}
-      val base = s"/tmp/graft_hudi_${Integer.toHexString(d.hashCode)}/orders_life"
+      val base = root(d, "hudi", "orders_life")
       val o = iceOrders(s, d)
       val t1 = HudiWriter.create(s, o, base, "orders_life", "o_orderkey", 3)
       HudiWriter.savepoint(s, base, t1)
@@ -1869,27 +1739,23 @@ object LakehouseQueries extends QueryGroup {
         o.filter(col("o_orderpriority") === "2-HIGH")
           .withColumn("cents", col("cents") + 9), base)
       def disk(): Long = HudiReader.baseFiles(base).size.toLong
-      def census(phase: Long, df: org.apache.spark.sql.DataFrame, files: Long) =
-        df.agg(count(lit(1)).as("n_rows"), sum(col("cents")).as("total_cents"))
-          .select(lit(phase).as("phase"), lit(files).as("n_disk_files"),
-            col("n_rows"), col("total_cents"))
-      val p1 = census(1L, HudiReader.read(s, base), disk())
+      def phase(p: Long, df: DataFrame) = census(df, "phase" -> p, "n_disk_files" -> disk())
+      val p1 = phase(1L, HudiReader.read(s, base))
       // a CRASHED write: data staged under a fresh instant whose
       // inflight marker never completed
       val committed = HudiReader.baseFiles(base).head.path
       JFiles.copy(JPaths.get(committed), JPaths.get(base, "zcrash_0-0-0_099.parquet"))
       JFiles.writeString(JPaths.get(base, ".hoodie", "099.inflight"), "")
-      val p2 = census(2L, HudiReader.read(s, base), disk())
+      val p2 = phase(2L, HudiReader.read(s, base))
       HudiWriter.rollback(s, base)
-      val p3 = census(3L, HudiReader.read(s, base), disk())
+      val p3 = phase(3L, HudiReader.read(s, base))
       HudiWriter.clean(s, base) // savepoint held: shielded slices survive
       // EAGER: this census reads the savepoint-shielded slices the
       // phase-5 clean deletes — a lazy plan would evaluate after them
-      val p4 = census(4L, HudiReader.readAsOf(s, base, t1), disk())
-        .localCheckpoint(true)
+      val p4 = phase(4L, HudiReader.readAsOf(s, base, t1)).localCheckpoint(true)
       HudiWriter.releaseSavepoint(s, base, t1)
       HudiWriter.clean(s, base)
-      val p5 = census(5L, HudiReader.read(s, base), disk())
+      val p5 = phase(5L, HudiReader.read(s, base))
       Seq(p1, p2, p3, p4, p5).reduce(_ unionAll _).orderBy("phase")
     }),
 
@@ -1907,13 +1773,9 @@ object LakehouseQueries extends QueryGroup {
     // _metadata.file_path; the oracle replays delete+reinsert.
     "q_iceberg_eq_deletes" -> ((s, d) => {
       val base = LakehouseQueries.mkIcebergEqDelFixture(s, d, "orders_eqd")
-      val versions = Seq(1L, 2L).map { snap =>
-        graft.sources.IcebergReader.read(s, base, snap).agg(
-          count(lit(1)).as("n_rows"),
-          sum(col("cents")).as("total_cents"))
-          .select(lit(snap).as("snapshot_id"), col("n_rows"), col("total_cents"))
-      }
-      versions.reduce(_ unionAll _).orderBy("snapshot_id")
+      Seq(1L, 2L).map(snap =>
+        census(graft.sources.IcebergReader.read(s, base, snap), "snapshot_id" -> snap))
+        .reduce(_ unionAll _).orderBy("snapshot_id")
     }),
 
     // ---- Iceberg partition TRANSFORMS (bucket / truncate / month) --------
@@ -1935,11 +1797,8 @@ object LakehouseQueries extends QueryGroup {
         col("o_orderkey"), col("o_orderdate"),
         cents("o_totalprice").as("cents"),
         year(col("o_orderdate")).cast("long").as("o_year"))
-      def census(df: org.apache.spark.sql.DataFrame, phase: Long) =
-        df.agg(count(lit(1)).as("n_rows"), sum(col("cents")).as("total_cents"))
-          .select(lit(phase).as("phase"), col("n_rows"), col("total_cents"))
       // bucket(8) on the key column, probed at the min and max keys
-      val b1 = iceBase(d, "orders_tb")
+      val b1 = root(d, "iceberg", "orders_tb")
       IcebergWriter.createTransformPartitioned(s, o.select("o_orderkey", "cents"),
         b1, "okey_bucket", IcebergTransforms.bucketCol(8, col("o_orderkey")),
         "bucket[8]", sourceId = 1)
@@ -1948,22 +1807,22 @@ object LakehouseQueries extends QueryGroup {
       val buckets = keys.map(k => IcebergTransforms.bucket(8)(k).toLong).distinct
       val p1 = census(IcebergReader.readWhere(s, b1, 1L,
           col("data_file.partition.okey_bucket").isin(buckets: _*))
-        .filter(col("o_orderkey").isin(keys: _*)), 1L)
+        .filter(col("o_orderkey").isin(keys: _*)), "phase" -> 1L)
       // truncate(2) on the year column, probed at 1997-98
-      val b2 = iceBase(d, "orders_tt")
+      val b2 = root(d, "iceberg", "orders_tt")
       IcebergWriter.createTransformPartitioned(s, o.select("o_year", "cents"),
         b2, "year_trunc", IcebergTransforms.truncateCol(2L, col("o_year")),
         "truncate[2]", sourceId = 1)
       val truncs = Seq(1997L, 1998L).map(IcebergTransforms.truncate(2L)).distinct
       val p2 = census(IcebergReader.readWhere(s, b2, 1L,
           col("data_file.partition.year_trunc").isin(truncs: _*))
-        .filter(col("o_year").between(1997, 1998)), 2L)
+        .filter(col("o_year").between(1997, 1998)), "phase" -> 2L)
       // month() on the date column, probed at 1997-03..1997-04 — the
       // fixture holds the 1996-98 slice (3 years ≈ 33 monthly files;
       // the probe predicate sits inside it, so the graded output and
       // oracle are unchanged while the fixture build writes a third of
       // the files a full-history month layout would)
-      val b3 = iceBase(d, "orders_tm")
+      val b3 = root(d, "iceberg", "orders_tm")
       IcebergWriter.createTransformPartitioned(s,
         o.filter(col("o_year").between(1996, 1998)).select("o_orderdate", "cents"),
         b3, "odate_month", IcebergTransforms.monthCol(col("o_orderdate")),
@@ -1972,7 +1831,8 @@ object LakehouseQueries extends QueryGroup {
         IcebergTransforms.monthOf("1997-04-01"))
       val p3 = census(IcebergReader.readWhere(s, b3, 1L,
           col("data_file.partition.odate_month").isin(months: _*))
-        .filter(col("o_orderdate") >= "1997-03-01" && col("o_orderdate") < "1997-05-01"), 3L)
+        .filter(col("o_orderdate") >= "1997-03-01" && col("o_orderdate") < "1997-05-01"),
+        "phase" -> 3L)
       Seq(p1, p2, p3).reduce(_ unionAll _).orderBy("phase")
     }),
 
@@ -1989,15 +1849,12 @@ object LakehouseQueries extends QueryGroup {
     // pins that the live data-file set is byte-identical across them.
     "q_iceberg_dml" -> ((s, d) => {
       import graft.sources.{IcebergReader, IcebergWriter}
-      val base = iceBase(d, "orders_dml")
+      val base = root(d, "iceberg", "orders_dml")
       IcebergWriter.create(s, iceOrders(s, d), base)
       IcebergWriter.deleteWhere(s, base, col("o_orderpriority") === "1-URGENT")
       IcebergWriter.deleteWhere(s, base, col("o_orderpriority") === "2-HIGH")
-      def census(snap: Long) =
-        IcebergReader.read(s, base, snap)
-          .agg(count(lit(1)).as("n_rows"), sum(col("cents")).as("total_cents"))
-          .select(lit(snap).as("snapshot_id"), col("n_rows"), col("total_cents"))
-      Seq(1L, 2L, 3L).map(census).reduce(_ unionAll _).orderBy("snapshot_id")
+      Seq(1L, 2L, 3L).map(snap => census(IcebergReader.read(s, base, snap), "snapshot_id" -> snap))
+        .reduce(_ unionAll _).orderBy("snapshot_id")
     }),
 
     // ---- Iceberg FORMAT-VERSION 3: deletion vectors in Puffin --------------
@@ -2014,7 +1871,7 @@ object LakehouseQueries extends QueryGroup {
     // anti-join on native row positions.
     "q_iceberg_v3_dv" -> ((s, d) => {
       import graft.sources.{IcebergReader, IcebergWriter}
-      val base = iceBase(d, "orders_v3dv")
+      val base = root(d, "iceberg", "orders_v3dv")
       val o = iceOrders(s, d)
       IcebergWriter.createV3(s, o.repartition(2), base)
       IcebergWriter.deleteWhereV3(s, base, col("o_orderpriority") === "1-URGENT")
@@ -2022,11 +1879,8 @@ object LakehouseQueries extends QueryGroup {
       IcebergWriter.append(s,
         o.filter(pmod(col("o_orderkey"), lit(5)) === 0)
           .withColumn("cents", col("cents") + 3), base)
-      def census(snap: Long) =
-        IcebergReader.read(s, base, snap)
-          .agg(count(lit(1)).as("n_rows"), sum(col("cents")).as("total_cents"))
-          .select(lit(snap).as("snapshot_id"), col("n_rows"), col("total_cents"))
-      Seq(1L, 2L, 3L, 4L).map(census).reduce(_ unionAll _).orderBy("snapshot_id")
+      (1L to 4L).map(snap => census(IcebergReader.read(s, base, snap), "snapshot_id" -> snap))
+        .reduce(_ unionAll _).orderBy("snapshot_id")
     }),
 
     // ---- Iceberg TABLE STATISTICS (Puffin NDV sketches) --------------------
@@ -2043,7 +1897,7 @@ object LakehouseQueries extends QueryGroup {
     // and hash-fails). Oracle recomputes the exact NDVs from `orders`.
     "q_iceberg_ndv_stats" -> ((s, d) => {
       import graft.sources.{IcebergReader, IcebergWriter, Puffin}
-      val base = iceBase(d, "orders_stats")
+      val base = root(d, "iceberg", "orders_stats")
       val o = iceOrders(s, d)
       IcebergWriter.create(s, o.repartition(2), base)
       IcebergWriter.writeStats(s, base,
@@ -2085,7 +1939,7 @@ object LakehouseQueries extends QueryGroup {
     // id assignment with row_number over the sorted batches.
     "q_iceberg_v3_lineage" -> ((s, d) => {
       import graft.sources.{IcebergReader, IcebergWriter}
-      val base = iceBase(d, "nation_v3rl")
+      val base = root(d, "iceberg", "nation_v3rl")
       val n = Tables.nation(s, d).select(col("n_nationkey"), col("n_regionkey"))
       IcebergWriter.createV3(s,
         n.repartition(1).sortWithinPartitions("n_nationkey"), base)
@@ -2126,7 +1980,7 @@ object LakehouseQueries extends QueryGroup {
     // read; each phase hash-gates its PLANNED FILE COUNT, which the
     // oracle reconstructs from the value distribution.
     "q_iceberg_spec_evolution" -> ((s, d) => {
-      val base = iceBase(d, "specevo")
+      val base = root(d, "iceberg", "specevo")
       val W = graft.sources.IcebergWriter
       val R = graft.sources.IcebergReader
       val o = Tables.orders(s, d).select(col("o_orderkey"), col("o_orderpriority"),
@@ -2137,25 +1991,20 @@ object LakehouseQueries extends QueryGroup {
       W.appendSpec(s, o.filter(col("o_orderdate") >= "1998-01-01"),
         base, "o_orderdate")
       val snap = R.currentSnapshotId(base, R.currentMetadataVersion(base))
-      def census(phase: Long, scan: R.SnapshotScan,
-                 residual: org.apache.spark.sql.Column) = {
-        val planned = scan.dataFiles.size.toLong
-        s.read.parquet(scan.dataFiles.map(_._1): _*).filter(residual)
-          .agg(count(lit(1)).as("n_rows"), sum(col("cents")).as("total_cents"))
-          .select(lit(phase).as("phase"), lit(planned).as("n_files_planned"),
-            col("n_rows"), col("total_cents"))
-      }
-      val p1 = census(1L, R.planSnapshotBySpec(s, base, snap, {
+      def probe(phase: Long, scan: R.SnapshotScan, residual: org.apache.spark.sql.Column) =
+        census(s.read.parquet(scan.dataFiles.map(_._1): _*).filter(residual),
+          "phase" -> phase, "n_files_planned" -> scan.dataFiles.size.toLong)
+      val p1 = probe(1L, R.planSnapshotBySpec(s, base, snap, {
         case 0 => col("data_file.partition.o_orderpriority") === "2-HIGH"
         case _ => lit(true)
       }), col("o_orderpriority") === "2-HIGH")
       val mLo = graft.sources.IcebergTransforms.monthOf("1999-03-01")
       val mHi = graft.sources.IcebergTransforms.monthOf("1999-06-30")
-      val p2 = census(2L, R.planSnapshotBySpec(s, base, snap, {
+      val p2 = probe(2L, R.planSnapshotBySpec(s, base, snap, {
         case 1 => col("data_file.partition.o_month").between(mLo, mHi)
         case _ => lit(true)
       }), col("o_orderdate").between("1999-03-01", "1999-06-30"))
-      val p3 = census(3L, R.planSnapshot(s, base, snap), lit(true))
+      val p3 = probe(3L, R.planSnapshot(s, base, snap), lit(true))
       Seq(p1, p2, p3).reduce(_ unionAll _).orderBy("phase")
     }),
 
@@ -2173,7 +2022,7 @@ object LakehouseQueries extends QueryGroup {
     // rewritten). Phase plans are captured EAGERLY between ops, so each
     // phase grades the schema in force when it was built.
     "q_iceberg_schema_evolution" -> ((s, d) => {
-      val base = iceBase(d, "evolve")
+      val base = root(d, "iceberg", "evolve")
       val W = graft.sources.IcebergWriter
       val R = graft.sources.IcebergReader
       val o = iceOrders(s, d)
@@ -2187,25 +2036,25 @@ object LakehouseQueries extends QueryGroup {
         .select((col("o_orderkey") + 300000000L).as("o_orderkey"),
           col("o_orderpriority"), (col("cents") + 9).as("pennies"),
           lit("gold").as("tier")).coalesce(1), base)
-      def census(phase: Long, snap: Long, tierCol: Option[String]) =
+      def era(phase: Long, snap: Long, tierCol: Option[String]) =
         R.read(s, base, snap).agg(
           count(lit(1)).as("n_rows"), sum(col("pennies")).as("total_pennies"),
           tierCol.map(t => count(col(t)).cast("long")).getOrElse(lit(-1L)).as("n_tier"))
           .select(lit(phase).as("phase"), col("n_rows"),
             col("total_pennies"), col("n_tier"))
       // eras through the post-add schema (tier visible, NULL before B)
-      val p1 = census(1L, 1L, Some("tier"))
-      val p2 = census(2L, 2L, Some("tier"))
-      val p3 = census(3L, 3L, Some("tier"))
+      val p1 = era(1L, 1L, Some("tier"))
+      val p2 = era(2L, 2L, Some("tier"))
+      val p3 = era(3L, 3L, Some("tier"))
       // DROP COLUMN: metadata-only; the final census no longer sees it
       W.evolveDropColumn(s, base, "tier")
-      val p4 = census(4L, 3L, None)
+      val p4 = era(4L, 3L, None)
       Seq(p1, p2, p3, p4).reduce(_ unionAll _).orderBy("phase")
     }),
 
     "q_iceberg_eq_dml" -> ((s, d) => {
       import graft.sources.{IcebergReader, IcebergWriter}
-      val base = iceBase(d, "orders_eqdml")
+      val base = root(d, "iceberg", "orders_eqdml")
       val o = iceOrders(s, d)
       IcebergWriter.create(s, o.repartition(2), base)
       IcebergWriter.upsertEq(s,
@@ -2223,11 +2072,8 @@ object LakehouseQueries extends QueryGroup {
           .select((col("o_orderkey") + 100000000L).as("o_orderkey"),
             lit("9-SYNTH").as("o_orderpriority"), lit(1234L).as("cents")),
         base)
-      def census(snap: Long) =
-        IcebergReader.read(s, base, snap)
-          .agg(count(lit(1)).as("n_rows"), sum(col("cents")).as("total_cents"))
-          .select(lit(snap).as("snapshot_id"), col("n_rows"), col("total_cents"))
-      Seq(1L, 2L, 3L, 4L).map(census).reduce(_ unionAll _).orderBy("snapshot_id")
+      (1L to 4L).map(snap => census(IcebergReader.read(s, base, snap), "snapshot_id" -> snap))
+        .reduce(_ unionAll _).orderBy("snapshot_id")
     }),
 
     // ---- Iceberg TIMESTAMP transforms (day / hour / year) -----------------
@@ -2243,28 +2089,25 @@ object LakehouseQueries extends QueryGroup {
     "q_iceberg_ts_transform" -> ((s, d) => {
       import graft.sources.{IcebergReader, IcebergTransforms => T, IcebergWriter}
       val ev = graft.Tables.events(s, d).select(col("ts"), col("event_id"))
-      def census(df: org.apache.spark.sql.DataFrame, phase: Long) =
-        df.agg(count(lit(1)).as("n_rows"), sum(col("event_id")).as("sum_ids"))
-          .select(lit(phase).as("phase"), col("n_rows"), col("sum_ids"))
       // day(ts): one file per day of January 2024, probed at Jan 10-12
-      val b1 = iceBase(d, "events_td")
+      val b1 = root(d, "iceberg", "events_td")
       IcebergWriter.createTransformPartitioned(s, ev, b1, "ts_day",
         T.dayColTs(col("ts")), "day", sourceId = 1)
       val days = (10 to 12).map(i => T.dayOf(f"2024-01-$i%02d 00:00:00"))
-      val p1 = census(IcebergReader.readWhere(s, b1, 1L,
+      val p1 = IcebergReader.readWhere(s, b1, 1L,
           col("data_file.partition.ts_day").isin(days: _*))
-        .filter(col("ts") >= "2024-01-10" && col("ts") < "2024-01-13"), 1L)
+        .filter(col("ts") >= "2024-01-10" && col("ts") < "2024-01-13")
       // hour(ts) over Jan 5: 24 hourly files, probed at 09:00-11:59
-      val b2 = iceBase(d, "events_th")
+      val b2 = root(d, "iceberg", "events_th")
       IcebergWriter.createTransformPartitioned(s,
         ev.filter(col("ts") >= "2024-01-05" && col("ts") < "2024-01-06"),
         b2, "ts_hour", T.hourColTs(col("ts")), "hour", sourceId = 1)
       val hours = (9 to 11).map(h => T.hourOf(f"2024-01-05 $h%02d:00:00"))
-      val p2 = census(IcebergReader.readWhere(s, b2, 1L,
+      val p2 = IcebergReader.readWhere(s, b2, 1L,
           col("data_file.partition.ts_hour").isin(hours: _*))
-        .filter(col("ts") >= "2024-01-05 09:00:00" && col("ts") < "2024-01-05 12:00:00"), 2L)
+        .filter(col("ts") >= "2024-01-05 09:00:00" && col("ts") < "2024-01-05 12:00:00")
       // year(o_ts): orders dates as midnight timestamps, probed 1995-96
-      val b3 = iceBase(d, "orders_ty")
+      val b3 = root(d, "iceberg", "orders_ty")
       val o = Tables.orders(s, d).select(
         col("o_orderdate").cast("timestamp").as("o_ts"),
         cents("o_totalprice").as("cents"))
@@ -2274,9 +2117,11 @@ object LakehouseQueries extends QueryGroup {
       val p3 = IcebergReader.readWhere(s, b3, 1L,
           col("data_file.partition.ts_year").isin(years: _*))
         .filter(col("o_ts") >= "1995-01-01" && col("o_ts") < "1997-01-01")
-        .agg(count(lit(1)).as("n_rows"), sum(col("cents")).as("sum_ids"))
-        .select(lit(3L).as("phase"), col("n_rows"), col("sum_ids"))
-      Seq(p1, p2, p3).reduce(_ unionAll _).orderBy("phase")
+        .select(col("cents").as("event_id"))
+      Seq(p1, p2, p3).zipWithIndex.map { case (df, i) =>
+        df.agg(count(lit(1)).as("n_rows"), sum(col("event_id")).as("sum_ids"))
+          .select(lit(i + 1L).as("phase"), col("n_rows"), col("sum_ids"))
+      }.reduce(_ unionAll _).orderBy("phase")
     }),
 
     // ---- Hudi MERGE_ON_READ (snapshot + read-optimized + compaction) ----
@@ -2294,20 +2139,17 @@ object LakehouseQueries extends QueryGroup {
     // AFTER compaction — base-only now equals the snapshot, proving
     // the fold was lossless. Oracle replays upsert+delete from orders.
     "q_hudi_mor" -> ((s, d) => {
-      val base = s"/tmp/graft_hudi_${Integer.toHexString(d.hashCode)}/orders_mor"
+      val base = root(d, "hudi", "orders_mor")
       val o = iceOrders(s, d)
       graft.sources.HudiWriter.createMor(s, o, base, "orders_mor", "o_orderkey", 3)
       val ups = o.filter(col("o_orderpriority") === "2-HIGH")
         .withColumn("cents", col("cents") + 7)
       val dels = o.filter(col("o_orderpriority") === "1-URGENT").select("o_orderkey")
       graft.sources.HudiWriter.logCommit(s, base, ups, Some(dels))
-      def census(df: org.apache.spark.sql.DataFrame, phase: Long) =
-        df.agg(count(lit(1)).as("n_rows"), sum(col("cents")).as("total_cents"))
-          .select(lit(phase).as("phase"), col("n_rows"), col("total_cents"))
-      val ro = census(graft.sources.HudiReader.readOptimized(s, base, "002"), 1L)
-      val snap = census(graft.sources.HudiReader.readMor(s, base), 2L)
+      val ro = census(graft.sources.HudiReader.readOptimized(s, base, "002"), "phase" -> 1L)
+      val snap = census(graft.sources.HudiReader.readMor(s, base), "phase" -> 2L)
       graft.sources.HudiWriter.compactMor(s, base)
-      val post = census(graft.sources.HudiReader.readOptimized(s, base, "003"), 3L)
+      val post = census(graft.sources.HudiReader.readOptimized(s, base, "003"), "phase" -> 3L)
       Seq(ro, snap, post).reduce(_ unionAll _).orderBy("phase")
     }),
 
@@ -2325,21 +2167,18 @@ object LakehouseQueries extends QueryGroup {
     // rows keep their ORIGINAL commit times, so only the 002 upserts
     // surface even though every live file was written at 003.
     "q_hudi_cluster" -> ((s, d) => {
-      val base = s"/tmp/graft_hudi_${Integer.toHexString(d.hashCode)}/orders_cluster"
+      val base = root(d, "hudi", "orders_cluster")
       val o = iceOrders(s, d)
       graft.sources.HudiWriter.create(s, o, base, "orders_cluster", "o_orderkey", 3)
       val ups = o.filter(col("o_orderpriority") === "1-URGENT")
         .withColumn("cents", col("cents") + 5)
       graft.sources.HudiWriter.upsert(s, ups, base)
-      def census(df: org.apache.spark.sql.DataFrame, phase: Long) =
-        df.agg(count(lit(1)).as("n_rows"), sum(col("cents")).as("total_cents"))
-          .select(lit(phase).as("phase"), col("n_rows"), col("total_cents"))
-      val pre = census(graft.sources.HudiReader.read(s, base), 1L)
+      val pre = census(graft.sources.HudiReader.read(s, base), "phase" -> 1L)
       graft.sources.HudiWriter.cluster(s, base, 2)
-      val post = census(graft.sources.HudiReader.read(s, base), 2L)
-      val tt = census(graft.sources.HudiReader.readAsOf(s, base, "002"), 3L)
+      val post = census(graft.sources.HudiReader.read(s, base), "phase" -> 2L)
+      val tt = census(graft.sources.HudiReader.readAsOf(s, base, "002"), "phase" -> 3L)
       val incr = census(
-        graft.sources.HudiReader.readIncremental(s, base, "001", "003"), 4L)
+        graft.sources.HudiReader.readIncremental(s, base, "001", "003"), "phase" -> 4L)
       // ingest AFTER clustering (nightly clustering + continuous ingest,
       // the normal lifecycle): keys route through the rebuilt key-range
       // index; then clean — retired bucket groups are dead wholesale,
@@ -2349,23 +2188,19 @@ object LakehouseQueries extends QueryGroup {
       graft.sources.HudiWriter.upsert(s,
         o.filter(col("o_orderpriority") === "3-MEDIUM")
           .withColumn("cents", col("cents") + 9), base)
-      val postUp = census(graft.sources.HudiReader.read(s, base), 5L)
+      val postUp = census(graft.sources.HudiReader.read(s, base), "phase" -> 5L)
       val early = Seq(pre, post, tt, incr, postUp)
         .map(_.localCheckpoint(true))
       graft.sources.HudiWriter.clean(s, base)
-      val postClean = census(graft.sources.HudiReader.read(s, base), 6L)
+      val postClean = census(graft.sources.HudiReader.read(s, base), "phase" -> 6L)
       (early :+ postClean).reduce(_ unionAll _).orderBy("phase")
     }),
 
     "q_hudi_incr" -> ((s, d) => {
       val base = LakehouseQueries.mkHudiIncrFixture(s, d, "orders_hudi_i")
-      val batches = Seq(("000", "001"), ("001", "002")).zipWithIndex.map { case ((lo, hi), i) =>
-        graft.sources.HudiReader.readIncremental(s, base, lo, hi).agg(
-          count(lit(1)).as("n_rows"),
-          sum(col("cents")).as("total_cents"))
-          .select(lit(i + 1L).as("batch"), col("n_rows"), col("total_cents"))
-      }
-      batches.reduce(_ unionAll _).orderBy("batch")
+      Seq(("000", "001"), ("001", "002")).zipWithIndex.map { case ((lo, hi), i) =>
+        census(graft.sources.HudiReader.readIncremental(s, base, lo, hi), "batch" -> (i + 1L))
+      }.reduce(_ unionAll _).orderBy("batch")
     }),
 
     // ---- hive-partitioned Hudi: the layout real tables almost always have
@@ -2384,7 +2219,7 @@ object LakehouseQueries extends QueryGroup {
     // file count from the key/partition distribution.
     "q_hudi_partitioned" -> ((s, d) => {
       import graft.sources.{HudiReader, HudiWriter}
-      val base = s"/tmp/graft_hudi_${Integer.toHexString(d.hashCode)}/orders_part"
+      val base = root(d, "hudi", "orders_part")
       val o = iceOrders(s, d)
       HudiWriter.createPartitioned(s, o, base, "orders_part",
         "o_orderkey", 2, "o_orderpriority")
@@ -2397,21 +2232,16 @@ object LakehouseQueries extends QueryGroup {
             lit("9-SYNTH").as("o_orderpriority"), lit(777L).as("cents")))
       HudiWriter.upsert(s, ups, base)
       val last = HudiReader.completedCommits(base).last
-      def census(df: org.apache.spark.sql.DataFrame, phase: Long, pri: String,
-                 nFiles: Long) =
-        df.agg(count(lit(1)).as("n_rows"), sum(col("cents")).as("total_cents"))
-          .select(lit(phase).as("phase"), lit(pri).as("pri"),
-            lit(nFiles).as("n_files"), col("n_rows"), col("total_cents"))
       val pris = Seq("1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED",
         "5-LOW", "9-SYNTH")
       val perPart = pris.map { p =>
-        census(HudiReader.readWhere(s, base, "o_orderpriority", p), 1L, p,
-          HudiReader.sliceFilesWhere(base, last, "o_orderpriority", p).size.toLong)
+        census(HudiReader.readWhere(s, base, "o_orderpriority", p), "phase" -> 1L, "pri" -> p,
+          "n_files" -> HudiReader.sliceFilesWhere(base, last, "o_orderpriority", p).size.toLong)
       }
-      val full = census(HudiReader.read(s, base), 2L, "*",
-        HudiReader.sliceFiles(base, last).size.toLong)
-      val incr = census(HudiReader.readIncremental(s, base, "001", "002"), 3L, "*",
-        HudiReader.incrementalFiles(base, "001", "002").size.toLong)
+      val full = census(HudiReader.read(s, base), "phase" -> 2L, "pri" -> "*",
+        "n_files" -> HudiReader.sliceFiles(base, last).size.toLong)
+      val incr = census(HudiReader.readIncremental(s, base, "001", "002"), "phase" -> 3L,
+        "pri" -> "*", "n_files" -> HudiReader.incrementalFiles(base, "001", "002").size.toLong)
       (perPart :+ full :+ incr).reduce(_ unionAll _).orderBy("phase", "pri")
     }),
 
@@ -2432,8 +2262,7 @@ object LakehouseQueries extends QueryGroup {
     // from `orders`.
     "q_hudi_part_mor" -> ((s, d) => {
       import graft.sources.{HudiReader, HudiWriter}
-      val hex = Integer.toHexString(d.hashCode)
-      val base = s"/tmp/graft_hudi_$hex/orders_pmor"
+      val base = root(d, "hudi", "orders_pmor")
       val o = iceOrders(s, d)
       HudiWriter.createMorPartitioned(s, o, base, "orders_pmor",
         "o_orderkey", 4, "o_orderpriority")
@@ -2446,14 +2275,11 @@ object LakehouseQueries extends QueryGroup {
         o.filter(col("o_orderpriority") === "2-HIGH" &&
             pmod(col("o_orderkey"), lit(10)) === 8)
           .withColumn("cents", col("cents") + 11))
-      def census(df: org.apache.spark.sql.DataFrame, phase: Long) =
-        df.agg(count(lit(1)).as("n_rows"), sum(col("cents")).as("total_cents"))
-          .select(lit(phase).as("phase"), col("n_rows"), col("total_cents"))
-      val snap = census(HudiReader.readMor(s, base), 0L)
+      val snap = census(HudiReader.readMor(s, base), "phase" -> 0L)
       val ro = census(HudiReader.readOptimized(s, base,
-        HudiReader.completedCommits(base).last), 1L)
+        HudiReader.completedCommits(base).last), "phase" -> 1L)
       val pruned = census(
-        HudiReader.readMorWhere(s, base, "o_orderpriority", "2-HIGH"), 2L)
+        HudiReader.readMorWhere(s, base, "o_orderpriority", "2-HIGH"), "phase" -> 2L)
       // censuses above reference files compaction supersedes — they
       // stay correct (old slices remain on disk), but materialize the
       // pre-compaction state eagerly for determinism of the fixture.
@@ -2462,16 +2288,14 @@ object LakehouseQueries extends QueryGroup {
       // three driver-blocking materializations (§1.2)
       val early = snap.unionAll(ro).unionAll(pruned).localCheckpoint(true)
       HudiWriter.compactMor(s, base)
-      val post = census(HudiReader.readMor(s, base), 3L)
+      val post = census(HudiReader.readMor(s, base), "phase" -> 3L)
       val postRo = census(HudiReader.readOptimized(s, base,
-        HudiReader.completedCommits(base).last), 4L)
+        HudiReader.completedCommits(base).last), "phase" -> 4L)
       // pure-SQL DELETE through the catalog: tombstones by (key,
       // partition) in one delta commit, no base file rewritten
-      val cat = s"hpmorcat_$hex"
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.root", s"/tmp/graft_hudi_$hex")
+      val cat = catalog(s, "hpmorcat", d, Paths.get(base).getParent.toString)
       s.sql(s"DELETE FROM $cat.orders_pmor WHERE o_orderpriority = '5-LOW'")
-      val sqlDel = census(HudiReader.readMor(s, base), 5L)
+      val sqlDel = census(HudiReader.readMor(s, base), "phase" -> 5L)
       Seq(early, post, postRo, sqlDel).reduce(_ unionAll _).orderBy("phase")
     }),
 
@@ -2484,14 +2308,8 @@ object LakehouseQueries extends QueryGroup {
     // and 7 years of them). TxnLogSpec pins inputFiles.length == 2; the
     // oracle proves pruning lossless (superset guarantee + row filter).
     "q_txn_prune" -> ((s, d) => {
-      val base = s"/tmp/graft_txn_${Integer.toHexString(d.hashCode)}/orders_py"
-      TxnLog.rmrf(base)
-      val log = new graft.sources.TxnLog(s, base, statCol = Some("o_year"))
-      log.init()
-      val o = Tables.orders(s, d).select(
-        col("o_orderkey"), col("o_orderstatus"),
-        cents("o_totalprice").as("cents"),
-        year(col("o_orderdate")).cast("long").as("o_year"))
+      val log = txnLog(s, root(d, "txn", "orders_py"))
+      val o = txnOrders(s, d)
         .localCheckpoint(eager = false) // 7 appends share one materialization
       (1995 to 2001).foreach { y =>
         log.append(o.filter(col("o_year") === y).coalesce(1))
@@ -2515,14 +2333,8 @@ object LakehouseQueries extends QueryGroup {
     // re-enter), and the net. The oracle recomputes every step's row
     // algebra from `orders` declaratively.
     "q_txn_cdc" -> ((s, d) => {
-      val base = s"/tmp/graft_txn_${Integer.toHexString(d.hashCode)}/orders_cdc"
-      TxnLog.rmrf(base)
-      val log = new graft.sources.TxnLog(s, base, statCol = Some("o_year"))
-      log.init()
-      val o = Tables.orders(s, d).select(
-        col("o_orderkey"), col("o_orderstatus"),
-        cents("o_totalprice").as("cents"),
-        year(col("o_orderdate")).cast("long").as("o_year"))
+      val log = txnLog(s, root(d, "txn", "orders_cdc"))
+      val o = txnOrders(s, d)
       log.append(o.filter(col("o_year") <= 1996).repartition(4))
       log.append(o.filter(col("o_year").between(1997, 1998)).repartition(4))
       log.deleteWhere(col("o_orderstatus") === "F")
@@ -2548,10 +2360,7 @@ object LakehouseQueries extends QueryGroup {
     // TxnLogSpec pins the group counts (18 -> 7) and that pre-compaction
     // time travel still sees the fine-grained layout.
     "q_txn_compact" -> ((s, d) => {
-      val base = s"/tmp/graft_txn_${Integer.toHexString(d.hashCode)}/orders_oc"
-      TxnLog.rmrf(base)
-      val log = new graft.sources.TxnLog(s, base, statCol = Some("o_year"))
-      log.init()
+      val log = txnLog(s, root(d, "txn", "orders_oc"))
       val o = Tables.orders(s, d).select(
         col("o_orderkey"), col("o_orderstatus"),
         cents("o_totalprice").as("cents"),
@@ -2599,14 +2408,8 @@ object LakehouseQueries extends QueryGroup {
     // matter the table size. The census proves both faces: 1997-98
     // cents exactly +10%, 1999+ present, earlier years untouched.
     "q_txn_upsert" -> ((s, d) => {
-      val base = s"/tmp/graft_txn_${Integer.toHexString(d.hashCode)}/orders_up"
-      TxnLog.rmrf(base)
-      val log = new graft.sources.TxnLog(s, base, statCol = Some("o_year"))
-      log.init()
-      val o = Tables.orders(s, d).select(
-        col("o_orderkey"), col("o_orderstatus"),
-        cents("o_totalprice").as("cents"),
-        year(col("o_orderdate")).cast("long").as("o_year"))
+      val log = txnLog(s, root(d, "txn", "orders_up"))
+      val o = txnOrders(s, d)
       log.append(o.filter(col("o_year") <= 1998).repartition(4))
       val delta = o.filter(col("o_year").between(1997, 1998))
         .withColumn("cents", col("cents") + expr("cents div 10"))
@@ -2631,14 +2434,9 @@ object LakehouseQueries extends QueryGroup {
     // delta algebra (including the delete's remove+rewrite pair)
     // converges to exactly the full recompute.
     "q_txn_incr_agg" -> ((s, d) => {
-      val base = s"/tmp/graft_txn_${Integer.toHexString(d.hashCode)}/orders_incr"
-      TxnLog.rmrf(base)
-      val log = new graft.sources.TxnLog(s, base, statCol = Some("o_year"))
-      log.init()
-      val o = Tables.orders(s, d).select(
-        col("o_orderkey"), col("o_orderstatus"),
-        cents("o_totalprice").as("cents"),
-        year(col("o_orderdate")).cast("long").as("o_year"))
+      val base = root(d, "txn", "orders_incr")
+      val log = txnLog(s, base)
+      val o = txnOrders(s, d)
       log.append(o.filter(col("o_year") <= 1997).repartition(4))             // v0
       log.append(o.filter(col("o_year").between(1998, 1999)).repartition(4)) // v1
       log.deleteWhere(col("o_orderstatus") === "F")                          // v2
@@ -2675,10 +2473,7 @@ object LakehouseQueries extends QueryGroup {
     // with the same %97 rule: hash equality proves the gate diverted
     // exactly the violations, atomically, with nothing lost.
     "q_txn_constraint" -> ((s, d) => {
-      val base = s"/tmp/graft_txn_${Integer.toHexString(d.hashCode)}/orders_chk"
-      TxnLog.rmrf(base)
-      val log = new graft.sources.TxnLog(s, base, statCol = Some("o_year"))
-      log.init()
+      val log = txnLog(s, root(d, "txn", "orders_chk"))
       val o = Tables.orders(s, d).select(
         col("o_orderkey"),
         when(col("o_orderkey") % 97 === 0, -cents("o_totalprice"))
@@ -2709,26 +2504,18 @@ object LakehouseQueries extends QueryGroup {
     // the oracle recomputes each head declaratively: equality proves
     // the two tips are fully isolated and the ancestor unchanged.
     "q_txn_branch" -> ((s, d) => {
-      val base = s"/tmp/graft_txn_${Integer.toHexString(d.hashCode)}/orders_br"
-      TxnLog.rmrf(base)
-      val log = new graft.sources.TxnLog(s, base, statCol = Some("o_year"))
-      log.init()
-      val o = Tables.orders(s, d).select(
-        col("o_orderkey"), col("o_orderstatus"),
-        cents("o_totalprice").as("cents"),
-        year(col("o_orderdate")).cast("long").as("o_year"))
+      val log = txnLog(s, root(d, "txn", "orders_br"))
+      val o = txnOrders(s, d)
       log.append(o.filter(col("o_year") <= 1997).repartition(4))             // v0
       log.append(o.filter(col("o_year").between(1998, 1999)).repartition(4)) // v1
       val exp = log.branch("experiment", fromVersion = 1)
       log.append(o.filter(col("o_year") >= 2000).repartition(4))             // main v2
       exp.deleteWhere(col("o_orderstatus") === "F")                          // branch v2
-      def census(df: org.apache.spark.sql.DataFrame, head: String) =
-        df.agg(count(lit(1)).as("n"), sum(col("cents")).as("total_cents"))
-          .select(lit(head).as("head"), col("n"), col("total_cents"))
-      census(log.read(1), "ancestor_v1")
-        .unionAll(census(log.read(), "main"))
-        .unionAll(census(exp.read(), "experiment"))
-        .orderBy("head")
+      Seq("ancestor_v1" -> log.read(1), "main" -> log.read(), "experiment" -> exp.read())
+        .map { case (head, df) =>
+          df.agg(count(lit(1)).as("n"), sum(col("cents")).as("total_cents"))
+            .select(lit(head).as("head"), col("n"), col("total_cents"))
+        }.reduce(_ unionAll _).orderBy("head")
     }),
 
     // ---- additive schema evolution on the commit log ---------------------
@@ -2739,10 +2526,7 @@ object LakehouseQueries extends QueryGroup {
     // rewrite of the old groups. The census proves old and new
     // generations keep their exact row/cents masses through the merge.
     "q_txn_evolve" -> ((s, d) => {
-      val base = s"/tmp/graft_txn_${Integer.toHexString(d.hashCode)}/orders_ev"
-      TxnLog.rmrf(base)
-      val log = new graft.sources.TxnLog(s, base, statCol = Some("o_year"))
-      log.init()
+      val log = txnLog(s, root(d, "txn", "orders_ev"))
       val o = Tables.orders(s, d).select(
         col("o_orderkey"), cents("o_totalprice").as("cents"),
         year(col("o_orderdate")).cast("long").as("o_year"),
@@ -2767,26 +2551,15 @@ object LakehouseQueries extends QueryGroup {
     // interval stays auditable instead of being scrubbed. Oracle
     // recomputes each version's expected mass declaratively from orders.
     "q_txn_restore" -> ((s, d) => {
-      val base = s"/tmp/graft_txn_${Integer.toHexString(d.hashCode)}/orders_rs"
-      TxnLog.rmrf(base)
-      val log = new graft.sources.TxnLog(s, base, statCol = Some("o_year"))
-      log.init()
-      val o = Tables.orders(s, d).select(
-        col("o_orderkey"), col("o_orderstatus"),
-        cents("o_totalprice").as("cents"),
-        year(col("o_orderdate")).cast("long").as("o_year"))
+      val log = txnLog(s, root(d, "txn", "orders_rs"))
+      val o = txnOrders(s, d)
       log.append(o.filter(col("o_year") <= 1997).repartition(4))   // v0
       log.append(o.filter(col("o_year") >= 1998).repartition(4))   // v1
       log.deleteWhere(col("o_orderstatus") === "O")                // v2 (bad)
       val v3 = log.restore(1)                                      // undo
       require(v3 == 3, s"restore committed unexpected version $v3")
-      val versions = (0 to 3).map { v =>
-        log.read(v).agg(
-          count(lit(1)).as("n_rows"), sum(col("cents")).as("total_cents"))
-          .select(lit(v).cast("long").as("version"), col("n_rows"),
-            col("total_cents"))
-      }
-      versions.reduce(_ unionAll _).orderBy("version")
+      (0 to 3).map(v => census(log.read(v), "version" -> v.toLong))
+        .reduce(_ unionAll _).orderBy("version")
     }),
 
     // ---- bloom-index point lookup: file skipping beyond min/max ----------
@@ -2804,15 +2577,8 @@ object LakehouseQueries extends QueryGroup {
     // never corrupt the answer (TxnLogSpec pins the planned-file count
     // and the degrade-to-scan path for unindexed groups).
     "q_txn_bloom_skip" -> ((s, d) => {
-      val base = s"/tmp/graft_txn_${Integer.toHexString(d.hashCode)}/orders_bf"
-      TxnLog.rmrf(base)
-      val log = new graft.sources.TxnLog(s, base, statCol = Some("o_year"),
-        bloomCol = Some("o_orderkey"))
-      log.init()
-      val o = Tables.orders(s, d).select(
-        col("o_orderkey"), col("o_orderstatus"),
-        cents("o_totalprice").as("cents"),
-        year(col("o_orderdate")).cast("long").as("o_year"))
+      val log = txnLog(s, root(d, "txn", "orders_bf"), bloomCol = Some("o_orderkey"))
+      val o = txnOrders(s, d)
         .localCheckpoint(eager = false)
       (1995 to 2001).foreach { y =>
         log.append(o.filter(col("o_year") === y).coalesce(1))
@@ -2855,6 +2621,30 @@ object LakehouseQueries extends QueryGroup {
     }
   }
 
+  /** The hand-composed Delta log of the spec fixtures under `base`. */
+  private final class DeltaHandLog(base: String) {
+    /** Write commit `v`: one JSON action per line. */
+    def commit(v: Long, lines: Seq[String]): Unit =
+      Files.write(Paths.get(base, "_delta_log", f"$v%020d.json"),
+        lines.mkString("", "\n", "\n").getBytes("UTF-8"))
+
+    /** The `add` action of a staged group file `(rel path, rows)`, with
+      * the spec's `numRecords` stats unless `stats` is off. */
+    def add(g: (String, Long), stats: Boolean = true): String = {
+      val sz = Files.size(Paths.get(base, g._1))
+      val st = if (stats) s""","stats":"{\\"numRecords\\":${g._2}}"""" else ""
+      s"""{"add":{"path":"${g._1}","partitionValues":{},"size":$sz,"modificationTime":0,"dataChange":true$st}}"""
+    }
+  }
+
+  /** [[writeGroups]] by `o_orderkey % n`: one file per residue at
+    * `rel(residue)` under `base`, returned in residue order. */
+  private def keyGroups(s: SparkSession, base: String, df: DataFrame, n: Int)(
+      rel: String => String): Seq[(String, Long)] = {
+    val g = writeGroups(s, base, df, pmod(col("o_orderkey"), lit(n)), rel)
+    (0 until n).map(i => g(i.toString))
+  }
+
   /** Build the shared 3-commit public-spec Delta fixture from `orders`:
     * one parquet file per o_orderkey%3 residue, v0 adds g0+g1 (with
     * protocol+metaData), v1 appends g2, v2 removes g0. Add actions
@@ -2863,25 +2653,12 @@ object LakehouseQueries extends QueryGroup {
     * from `orders`. Idempotent per (corpus, suffix) — rebuilt from
     * scratch each call, TxnLog-fixture discipline. */
   private[queries] def mkDeltaFixture(s: SparkSession, d: String, suffix: String): String = {
-    import java.nio.file.{Files, Paths}
-    val base = s"/tmp/graft_delta_${Integer.toHexString(d.hashCode)}/$suffix"
-    TxnLog.rmrf(base)
-    Files.createDirectories(Paths.get(base, "_delta_log"))
-    val o = Tables.orders(s, d).select(
-      col("o_orderkey"), col("o_orderpriority"),
-      cents("o_totalprice").as("cents"))
+    val base = fresh(root(d, "delta", suffix), "_delta_log")
     // one parquet FILE per group, spec-style relative add paths —
     // all three groups in a single staged job
-    val g = writeGroups(s, base, o, pmod(col("o_orderkey"), lit(3)),
-      v => s"part-g$v.parquet")
-    val Seq(g0, g1, g2) = (0 to 2).map(i => g(i.toString))
-    def commit(v: Long, lines: Seq[String]): Unit =
-      Files.write(Paths.get(base, "_delta_log", f"$v%020d.json"),
-        lines.mkString("", "\n", "\n").getBytes("UTF-8"))
-    def add(g: (String, Long)) = {
-      val sz = Files.size(Paths.get(base, g._1))
-      s"""{"add":{"path":"${g._1}","partitionValues":{},"size":$sz,"modificationTime":0,"dataChange":true,"stats":"{\\"numRecords\\":${g._2}}"}}"""
-    }
+    val Seq(g0, g1, g2) = keyGroups(s, base, iceOrders(s, d), 3)(v => s"part-g$v.parquet")
+    val log = new DeltaHandLog(base)
+    import log.{add, commit}
     commit(0, Seq(
       """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}""",
       """{"metaData":{"id":"graft-orders-dl","format":{"provider":"parquet","options":{}},"schemaString":"{}","partitionColumns":[],"configuration":{},"createdTime":0}}""",
@@ -2896,27 +2673,18 @@ object LakehouseQueries extends QueryGroup {
     * (in-commit `commitInfo.timestamp` provenance at 1000/2000/3000 ms)
     * adding the o_orderkey%3 residue groups one per commit. */
   private[queries] def mkDeltaTsFixture(s: SparkSession, d: String, suffix: String): String = {
-    import java.nio.file.{Files, Paths}
-    val base = s"/tmp/graft_delta_${Integer.toHexString(d.hashCode)}/$suffix"
-    TxnLog.rmrf(base)
-    Files.createDirectories(Paths.get(base, "_delta_log"))
-    val o = iceOrders(s, d)
-    val g = writeGroups(s, base, o, pmod(col("o_orderkey"), lit(3)),
-      v => s"part-g$v.parquet")
-    def commit(v: Long, lines: Seq[String]): Unit =
-      Files.write(Paths.get(base, "_delta_log", f"$v%020d.json"),
-        lines.mkString("", "\n", "\n").getBytes("UTF-8"))
-    def add(p: (String, Long)) = {
-      val sz = Files.size(Paths.get(base, p._1))
-      s"""{"add":{"path":"${p._1}","partitionValues":{},"size":$sz,"modificationTime":0,"dataChange":true}}"""
-    }
+    val base = fresh(root(d, "delta", suffix), "_delta_log")
+    val Seq(g0, g1, g2) = keyGroups(s, base, iceOrders(s, d), 3)(v => s"part-g$v.parquet")
+    val log = new DeltaHandLog(base)
+    import log.commit
+    def add(p: (String, Long)) = log.add(p, stats = false)
     commit(0, Seq(
       """{"commitInfo":{"operation":"WRITE","timestamp":1000}}""",
       """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}""",
       """{"metaData":{"id":"graft-orders-ts","format":{"provider":"parquet","options":{}},"schemaString":"{}","partitionColumns":[],"configuration":{},"createdTime":0}}""",
-      add(g("0"))))
-    commit(1, Seq("""{"commitInfo":{"operation":"WRITE","timestamp":2000}}""", add(g("1"))))
-    commit(2, Seq("""{"commitInfo":{"operation":"WRITE","timestamp":3000}}""", add(g("2"))))
+      add(g0)))
+    commit(1, Seq("""{"commitInfo":{"operation":"WRITE","timestamp":2000}}""", add(g1)))
+    commit(2, Seq("""{"commitInfo":{"operation":"WRITE","timestamp":3000}}""", add(g2)))
     base
   }
 
@@ -2927,26 +2695,15 @@ object LakehouseQueries extends QueryGroup {
     * v2 deletes f1 with no cdc files — the remove-pre-image derivation
     * path. */
   private[queries] def mkDeltaCdfFixture(s: SparkSession, d: String, suffix: String): String = {
-    import java.nio.file.{Files, Paths}
-    val base = s"/tmp/graft_delta_${Integer.toHexString(d.hashCode)}/$suffix"
-    TxnLog.rmrf(base)
-    Files.createDirectories(Paths.get(base, "_delta_log"))
-    Files.createDirectories(Paths.get(base, "_change_data"))
+    val base = fresh(root(d, "delta", suffix), "_delta_log", "_change_data")
     val o = iceOrders(s, d)
-    def writeOne(df: org.apache.spark.sql.DataFrame, rel: String): (String, Long) = {
+    def writeOne(df: DataFrame, rel: String): (String, Long) = {
       Stage.file(df, base, rel)
       (rel, df.count())
     }
-    def add(g: (String, Long)) = {
-      val sz = Files.size(Paths.get(base, g._1))
-      s"""{"add":{"path":"${g._1}","partitionValues":{},"size":$sz,"modificationTime":0,"dataChange":true,"stats":"{\\"numRecords\\":${g._2}}"}}"""
-    }
-    def commit(v: Long, lines: Seq[String]): Unit =
-      Files.write(Paths.get(base, "_delta_log", f"$v%020d.json"),
-        lines.mkString("", "\n", "\n").getBytes("UTF-8"))
-    val gcdf = writeGroups(s, base, o, pmod(col("o_orderkey"), lit(2)),
-      v => s"f$v.parquet")
-    val Seq(f0, f1) = (0 to 1).map(i => gcdf(i.toString))
+    val log = new DeltaHandLog(base)
+    import log.{add, commit}
+    val Seq(f0, f1) = keyGroups(s, base, o, 2)(v => s"f$v.parquet")
     commit(0, Seq(
       """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}""",
       """{"metaData":{"id":"graft-orders-cdf","format":{"provider":"parquet","options":{}},"schemaString":"{}","partitionColumns":[],"configuration":{"delta.enableChangeDataFeed":"true"},"createdTime":0}}""",
@@ -2987,16 +2744,13 @@ object LakehouseQueries extends QueryGroup {
     * has a deterministic name, avro manifests / manifest lists via the
     * ordinary Spark avro source, and the metadata JSON + version hint. */
   private[queries] final class IceTable(s: SparkSession, val base: String) {
-    import java.nio.file.{Files, Paths}
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     private val avroFmt = "org.apache.spark.sql.avro.AvroFileFormat"
-    TxnLog.rmrf(base)
-    Files.createDirectories(Paths.get(base, "metadata"))
-    Files.createDirectories(Paths.get(base, "data"))
+    fresh(base, "metadata", "data")
 
     /** Write `df` as exactly ONE file at `rel` under the table base. */
-    def writeOne(df: org.apache.spark.sql.DataFrame, rel: String, avro: Boolean = false): Unit =
+    def writeOne(df: DataFrame, rel: String, avro: Boolean = false): Unit =
       Stage.file(df, base, rel, if (avro) avroFmt else "parquet")
 
     private def sizeOf(rel: String): Long = Files.size(Paths.get(base, rel))
@@ -3045,45 +2799,34 @@ object LakehouseQueries extends QueryGroup {
       writeOne(s.createDataFrame(s.sparkContext.parallelize(rows, 1), schema), rel, avro = true)
     }
 
-    /** One snapshot's manifest list at metadata/snap-`id`.avro. */
-    def manifestList(id: Long, manifests: Seq[String]): Unit = {
+    /** Commit snapshot `id` over `manifests`: its manifest list at
+      * metadata/snap-`id`.avro, then metadata/v`id`.metadata.json
+      * listing snapshots 1..`id` with `id` current, then the version
+      * hint (last call wins). */
+    def snapshot(id: Long, manifests: Seq[String], formatVersion: Int = 1): Unit = {
       val schema = StructType(Seq(
         StructField("manifest_path", StringType, nullable = false),
         StructField("manifest_length", LongType, nullable = false)))
       val rows = manifests.map(m => Row(m, sizeOf(m)))
       writeOne(s.createDataFrame(s.sparkContext.parallelize(rows, 1), schema),
         s"metadata/snap-$id.avro", avro = true)
-    }
-
-    /** metadata/v`v`.metadata.json + the version hint (last call wins). */
-    def meta(v: Int, current: Long, snaps: Seq[Long], formatVersion: Int = 1): Unit = {
-      val ss = snaps.map(i =>
+      val ss = (1L to id).map(i =>
         s"""{"snapshot-id":$i,"timestamp-ms":0,"manifest-list":"metadata/snap-$i.avro"}""")
-      Files.writeString(Paths.get(base, "metadata", s"v$v.metadata.json"),
+      Files.writeString(Paths.get(base, "metadata", s"v$id.metadata.json"),
         s"""{"format-version":$formatVersion,"table-uuid":"graft-orders-ice","location":"$base",""" +
-          s""""current-snapshot-id":$current,"snapshots":[${ss.mkString(",")}]}""")
-      Files.writeString(Paths.get(base, "metadata", "version-hint.text"), v.toString)
+          s""""current-snapshot-id":$id,"snapshots":[${ss.mkString(",")}]}""")
+      Files.writeString(Paths.get(base, "metadata", "version-hint.text"), id.toString)
     }
   }
-
-  private def iceBase(d: String, suffix: String): String =
-    s"/tmp/graft_iceberg_${Integer.toHexString(d.hashCode)}/$suffix"
-
-  private def iceOrders(s: SparkSession, d: String) =
-    Tables.orders(s, d).select(
-      col("o_orderkey"), col("o_orderpriority"),
-      cents("o_totalprice").as("cents"))
 
   /** Build the shared 2-snapshot public-spec Iceberg fixture from
     * `orders` (v1 layout): four data files by o_orderkey%4;
     * snapshot 1 = {g0,g1,g2} (all ADDED), snapshot 2 = g0 DELETED,
     * g1,g2 EXISTING, g3 ADDED. */
   private[queries] def mkIcebergFixture(s: SparkSession, d: String, suffix: String): String = {
-    val t = new IceTable(s, iceBase(d, suffix))
+    val t = new IceTable(s, root(d, "iceberg", suffix))
     val o = iceOrders(s, d)
-    val g = writeGroups(s, t.base, o, pmod(col("o_orderkey"), lit(4)),
-      v => s"data/part-g$v.parquet")
-    val groups = (0 to 3).map(i => g(i.toString))
+    val groups = keyGroups(s, t.base, o, 4)(v => s"data/part-g$v.parquet")
     // snapshot 1: first three groups ADDED; snapshot 2: g0 DELETED,
     // g1/g2 carried as EXISTING, g3 ADDED
     t.manifest("metadata/m1.avro",
@@ -3091,10 +2834,8 @@ object LakehouseQueries extends QueryGroup {
     t.manifest("metadata/m2.avro", Seq(
       IceEntry(2, groups(0)._1, groups(0)._2), IceEntry(0, groups(1)._1, groups(1)._2),
       IceEntry(0, groups(2)._1, groups(2)._2), IceEntry(1, groups(3)._1, groups(3)._2)))
-    t.manifestList(1L, Seq("metadata/m1.avro"))
-    t.manifestList(2L, Seq("metadata/m2.avro"))
-    t.meta(1, current = 1L, snaps = Seq(1L))
-    t.meta(2, current = 2L, snaps = Seq(1L, 2L))
+    t.snapshot(1L, Seq("metadata/m1.avro"))
+    t.snapshot(2L, Seq("metadata/m2.avro"))
     t.base
   }
 
@@ -3104,18 +2845,15 @@ object LakehouseQueries extends QueryGroup {
     * `upper_bounds` for field id 3 (`o_year`) in single-value
     * serialization (8-byte little-endian longs keyed by field id). */
   private[queries] def mkIcebergStatsFixture(s: SparkSession, d: String, suffix: String): String = {
-    val t = new IceTable(s, iceBase(d, suffix))
-    val o = Tables.orders(s, d).select(
-      col("o_orderkey"), cents("o_totalprice").as("cents"),
-      year(col("o_orderdate")).cast("long").as("o_year"))
+    val t = new IceTable(s, root(d, "iceberg", suffix))
+    val o = txnOrders(s, d).drop("o_orderstatus")
     val g = writeGroups(s, t.base, o, col("o_year"), v => s"data/part-y$v.parquet")
     val entries = g.keys.toSeq.sortBy(_.toLong).map { v =>
       val (rel, n) = g(v)
       IceEntry(1, rel, n, bounds = Some((3, v.toLong, v.toLong)))
     }
     t.manifest("metadata/m1.avro", entries)
-    t.manifestList(1L, Seq("metadata/m1.avro"))
-    t.meta(1, current = 1L, snaps = Seq(1L))
+    t.snapshot(1L, Seq("metadata/m1.avro"))
     t.base
   }
 
@@ -3128,11 +2866,9 @@ object LakehouseQueries extends QueryGroup {
     * which is also why the oracle can replay the delete as a plain
     * predicate. */
   private[queries] def mkIcebergV2Fixture(s: SparkSession, d: String, suffix: String): String = {
-    val t = new IceTable(s, iceBase(d, suffix))
+    val t = new IceTable(s, root(d, "iceberg", suffix))
     val o = iceOrders(s, d)
-    val g2 = writeGroups(s, t.base, o, pmod(col("o_orderkey"), lit(2)),
-      v => s"data/part-g$v.parquet")
-    val groups = (0 to 1).map(i => g2(i.toString))
+    val groups = keyGroups(s, t.base, o, 2)(v => s"data/part-g$v.parquet")
     val delRows = s.read.parquet(s"${t.base}/${groups(0)._1}")
       .filter(col("o_orderpriority") === "1-URGENT")
       .select(col("_metadata.file_path").as("file_path"),
@@ -3146,10 +2882,8 @@ object LakehouseQueries extends QueryGroup {
       groups.map { case (p, n) => IceEntry(0, p, n) }, withContent = true)
     t.manifest("metadata/md2.avro",
       Seq(IceEntry(1, delRel, nDel, content = 1)), withContent = true)
-    t.manifestList(1L, Seq("metadata/m1.avro"))
-    t.manifestList(2L, Seq("metadata/m2.avro", "metadata/md2.avro"))
-    t.meta(1, current = 1L, snaps = Seq(1L), formatVersion = 2)
-    t.meta(2, current = 2L, snaps = Seq(1L, 2L), formatVersion = 2)
+    t.snapshot(1L, Seq("metadata/m1.avro"), formatVersion = 2)
+    t.snapshot(2L, Seq("metadata/m2.avro", "metadata/md2.avro"), formatVersion = 2)
     t.base
   }
 
@@ -3161,11 +2895,9 @@ object LakehouseQueries extends QueryGroup {
     * cents+11 — which must SURVIVE, because the delete only erases
     * rows from files with a strictly smaller sequence number. */
   private[queries] def mkIcebergEqDelFixture(s: SparkSession, d: String, suffix: String): String = {
-    val t = new IceTable(s, iceBase(d, suffix))
+    val t = new IceTable(s, root(d, "iceberg", suffix))
     val o = iceOrders(s, d)
-    val g2 = writeGroups(s, t.base, o, pmod(col("o_orderkey"), lit(2)),
-      v => s"data/part-g$v.parquet")
-    val groups = (0 to 1).map(i => g2(i.toString))
+    val groups = keyGroups(s, t.base, o, 2)(v => s"data/part-g$v.parquet")
     val eqRel = "data/eqdel-1.parquet"
     t.writeOne(s.createDataFrame(Seq(Tuple1("1-URGENT"))).toDF("o_orderpriority"), eqRel)
     val reins = o.filter(col("o_orderpriority") === "1-URGENT")
@@ -3181,10 +2913,8 @@ object LakehouseQueries extends QueryGroup {
         IceEntry(1, eqRel, 1L, content = 2, seq = 2L),
         IceEntry(1, reinsRel, nReins, seq = 2L)),
       withContent = true, withSeq = true)
-    t.manifestList(1L, Seq("metadata/m1.avro"))
-    t.manifestList(2L, Seq("metadata/m2.avro"))
-    t.meta(1, current = 1L, snaps = Seq(1L), formatVersion = 2)
-    t.meta(2, current = 2L, snaps = Seq(1L, 2L), formatVersion = 2)
+    t.snapshot(1L, Seq("metadata/m1.avro"), formatVersion = 2)
+    t.snapshot(2L, Seq("metadata/m2.avro"), formatVersion = 2)
     t.base
   }
 
@@ -3192,15 +2922,12 @@ object LakehouseQueries extends QueryGroup {
     * group files, plus ONE unclaimed parquet planted in data/ — the
     * debris a failed write leaves behind. */
   private[queries] def mkIcebergOrphanFixture(s: SparkSession, d: String, suffix: String): String = {
-    val t = new IceTable(s, iceBase(d, suffix))
+    val t = new IceTable(s, root(d, "iceberg", suffix))
     val o = iceOrders(s, d)
-    val g = writeGroups(s, t.base, o, pmod(col("o_orderkey"), lit(2)),
-      v => s"data/part-g$v.parquet")
-    val groups = (0 to 1).map(i => g(i.toString))
+    val groups = keyGroups(s, t.base, o, 2)(v => s"data/part-g$v.parquet")
     t.writeOne(o.limit(5), "data/orphan-debris.parquet")
     t.manifest("metadata/m1.avro", groups.map { case (p, n) => IceEntry(1, p, n) })
-    t.manifestList(1L, Seq("metadata/m1.avro"))
-    t.meta(1, current = 1L, snaps = Seq(1L))
+    t.snapshot(1L, Seq("metadata/m1.avro"))
     t.base
   }
 
@@ -3221,10 +2948,7 @@ object LakehouseQueries extends QueryGroup {
     * instant 003 rewrites g1 but is left INFLIGHT — its base file sits
     * in the same directory and must stay invisible to every read. */
   private[queries] def mkHudiFixture(s: SparkSession, d: String, suffix: String): String = {
-    import java.nio.file.{Files, Paths}
-    val base = s"/tmp/graft_hudi_${Integer.toHexString(d.hashCode)}/$suffix"
-    TxnLog.rmrf(base)
-    Files.createDirectories(Paths.get(base, ".hoodie"))
+    val base = fresh(root(d, "hudi", suffix), ".hoodie")
     Files.writeString(Paths.get(base, ".hoodie", "hoodie.properties"),
       "hoodie.table.name=orders_hudi\nhoodie.table.type=COPY_ON_WRITE\n")
     val o = iceOrders(s, d)
@@ -3249,10 +2973,7 @@ object LakehouseQueries extends QueryGroup {
     * their ORIGINAL commit time, which is exactly what makes
     * incremental reads surface only the changed rows. */
   private[queries] def mkHudiIncrFixture(s: SparkSession, d: String, suffix: String): String = {
-    import java.nio.file.{Files, Paths}
-    val base = s"/tmp/graft_hudi_${Integer.toHexString(d.hashCode)}/$suffix"
-    TxnLog.rmrf(base)
-    Files.createDirectories(Paths.get(base, ".hoodie"))
+    val base = fresh(root(d, "hudi", suffix), ".hoodie")
     Files.writeString(Paths.get(base, ".hoodie", "hoodie.properties"),
       "hoodie.table.name=orders_hudi_incr\nhoodie.table.type=COPY_ON_WRITE\n")
     val o = iceOrders(s, d).withColumn("_hoodie_commit_time", lit("001"))
@@ -3275,7 +2996,7 @@ object LakehouseQueries extends QueryGroup {
     * `data_file.partition` struct that [[graft.sources.IcebergReader.readWhere]]
     * prunes on. One snapshot. */
   private[queries] def mkIcebergPartFixture(s: SparkSession, d: String, suffix: String): String = {
-    val t = new IceTable(s, iceBase(d, suffix))
+    val t = new IceTable(s, root(d, "iceberg", suffix))
     val o = iceOrders(s, d)
     val pris = o.select("o_orderpriority").distinct()
       .collect().map(_.getString(0)).sorted.toSeq
@@ -3290,8 +3011,7 @@ object LakehouseQueries extends QueryGroup {
       IceEntry(1, rel, n, part = Some(pri))
     }
     t.manifest("metadata/m1.avro", entries, partCol = Some("o_orderpriority"))
-    t.manifestList(1L, Seq("metadata/m1.avro"))
-    t.meta(1, current = 1L, snaps = Seq(1L))
+    t.snapshot(1L, Seq("metadata/m1.avro"))
     t.base
   }
 

@@ -584,10 +584,14 @@ object RelationalQueries extends QueryGroup {
     // integer cents (DOUBLE↔DECIMAL drift across JDBC dialects is the
     // classic silent killer). mode("overwrite") drops and recreates the
     // table, keeping passes idempotent. Oracle on the original table.
+    // The database lives in Derby's in-memory store: an on-disk one
+    // under /tmp/graft_* stays booted after the query returns (the
+    // frame is lazy, so the fn cannot shut it down), and the fixture
+    // sweep between queries would delete its files under the live engine.
     "q_source_jdbc" -> ((s, d) => {
       System.setProperty("derby.system.home", "/tmp")
       val tag = Integer.toHexString(d.hashCode)
-      val url = s"jdbc:derby:/tmp/graft_jdbc_$tag;create=true"
+      val url = s"jdbc:derby:memory:graft_jdbc_$tag;create=true"
       val props = new java.util.Properties()
       Tables.orders(s, d)
         .select(col("o_orderkey"), col("o_orderpriority"),

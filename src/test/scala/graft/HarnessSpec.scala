@@ -1,7 +1,7 @@
 package graft
 
 /** The session factory every entry point builds through, and the
-  * per-query job census Bench writes into `BENCH_OUT.json`. */
+  * per-query job census Bench writes into `BENCH_OUT_c<cpus>_sf<sf>.json`. */
 class HarnessSpec extends SparkSpec {
 
   test("the shared test session carries every factory conf and is bootstrapped") {

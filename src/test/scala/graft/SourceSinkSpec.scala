@@ -73,6 +73,17 @@ class SourceSinkSpec extends SparkSpec {
     assert(back.collect().toSeq == src.collect().toSeq)
   }
 
+  test("q_source_jdbc answers the same after the fixture sweep between queries") {
+    // Bench and Verify sweep /tmp/graft_* between queries: the query's
+    // database must not live there while its engine is still booted.
+    // sf0.01, not sf0.001: with the smaller table a swept on-disk
+    // database still answered, so the defect did not show
+    def rows() = SparkEntry.queries("q_source_jdbc")(spark, sf001).collect().toSeq
+    val first = rows()
+    Hygiene.sweep(spark)
+    assert(rows() == first)
+  }
+
   test("merge upsert materialization equals read-side compaction over the full corpus") {
     // update-else-insert with a time-cutoff delta is EXACTLY latest-per-key
     // over the whole corpus: a user with any post-cutoff event gets the
