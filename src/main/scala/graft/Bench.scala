@@ -8,9 +8,11 @@ import org.apache.spark.sql.{GraftPlanBridge, SparkSession}
 /** Benchmark entry point (SURVEY §3.3). Prints ONE JSON line the driver
   * parses from the LAST ~2000 chars of stdout — so the metric line must
   * stay short: per-query seconds are rounded to 2dp and, if the full map
-  * would overflow the driver's tail buffer, only the headline queries
-  * (the BASELINE.md §6 set) are itemized while `value` remains the total
-  * over ALL queries.
+  * would overflow that tail, the headline queries (the BASELINE.md §6
+  * set) and then the slowest others are itemized (see [[stdoutQueries]])
+  * while `value` remains the total over ALL queries.
+  * The line is printed after `spark.stop()`, so no shutdown output
+  * follows it.
   *
   * Noise control: the whole query set runs SPARK_GRAFT_BENCH_PASSES
   * times (default 2) and each query reports its MINIMUM — run-order and
@@ -38,10 +40,35 @@ import org.apache.spark.sql.{GraftPlanBridge, SparkSession}
 object Bench {
 
   /** Queries mapped 1:1 to rows of the measured baseline in BASELINE.md. */
-  private val headline = Seq(
+  private[graft] val headline = Seq(
     "q_agg_pricing", "q_filter_between", "q_join_3way_topk", "q_join_anti",
     "q_win_rank", "q_win_running", "q_session_30m", "q_rollup",
     "q_dedup_exact", "q_sim_knn", "q_json_funcs", "q_tokenize_top20")
+
+  /** Longest per-query map the stdout metric line carries: the reader
+    * keeps a 2000-char tail incl. sbt log prefix/suffix noise, and a
+    * line cut by that tail does not parse. */
+  private val stdoutMapChars = 1500
+
+  private def entry(k: String, v: Double): String =
+    "\"" + k + "\":" + (math.round(v * 100) / 100.0)
+
+  private def fmt(pairs: Seq[(String, Double)]): String =
+    pairs.map { case (k, v) => entry(k, v) }.mkString("{", ",", "}")
+
+  /** The stdout metric line's `queries` map: every timed query,
+    * slowest first, when that fits in [[stdoutMapChars]]; otherwise the
+    * headline queries that ran, then the slowest remaining ones, for as
+    * long as the map still fits. */
+  private[graft] def stdoutQueries(results: Seq[(String, Double)]): String = {
+    val all = fmt(results.sortBy(-_._2))
+    if (all.length <= stdoutMapChars) return all
+    val (head, rest) = results.partition(p => headline.contains(p._1))
+    val ranked = head.sortBy(-_._2) ++ rest.sortBy(-_._2)
+    // "{}" plus one comma between entries
+    val widths = ranked.map(p => entry(p._1, p._2).length + 1).scanLeft(1)(_ + _).tail
+    fmt(ranked.take(widths.takeWhile(_ <= stdoutMapChars).size))
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -106,10 +133,6 @@ object Bench {
     val counts = census.drained(spark)
     val results = named.collect { case (name, _) if !failed(name) => name -> best(name) }
     val total = math.round(results.map(_._2).sum * 100) / 100.0
-    def entry(k: String, v: Double): String =
-      "\"" + k + "\":" + (math.round(v * 100) / 100.0)
-    def fmt(pairs: Seq[(String, Double)]): String =
-      pairs.map { case (k, v) => entry(k, v) }.mkString("{", ",", "}")
     // detail chunks, fastest-first, each its own parseable JSON line
     val ascending = results.sortBy(_._2)
     val chunks = scala.collection.mutable.ArrayBuffer(scala.collection.mutable.ArrayBuffer.empty[String])
@@ -119,14 +142,8 @@ object Bench {
         chunks += scala.collection.mutable.ArrayBuffer.empty[String]
       chunks.last += e
     }
-    chunks.zipWithIndex.foreach { case (c, i) =>
-      println(s"""{"detail_${i + 1}_of_${chunks.size}":${c.mkString("{", ",", "}")}}""")
-    }
-    // driver tail buffer is 2000 chars incl. sbt log prefix/suffix noise;
-    // stay well under it or the judge sees parsed=null (rounds 1-2 did).
     val all = fmt(results.sortBy(-_._2))
-    val qs = if (all.length <= 1500) all
-             else fmt(results.filter(p => headline.contains(p._1)))
+    val qs = stdoutQueries(results)
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val line = s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"passes":$passes,"queries":$qs,"sf":"$sfDir"}"""
     // the stdout line is capped for a reader that keeps only the tail;
@@ -141,9 +158,12 @@ object Bench {
     val out = java.nio.file.Paths.get(System.getProperty("user.dir"), s"BENCH_OUT_c${cpus}_sf$sfLeaf.json")
     try java.nio.file.Files.write(out, (fullLine + "\n").getBytes("UTF-8"))
     catch { case NonFatal(e) => System.err.println(s"[bench] cannot write $out: $e") }
+    spark.stop()
+    chunks.zipWithIndex.foreach { case (c, i) =>
+      println(s"""{"detail_${i + 1}_of_${chunks.size}":${c.mkString("{", ",", "}")}}""")
+    }
     if (failed.nonEmpty) println(s"""{"failed":$failedJson}""")
     println(line)
-    spark.stop()
   }
 }
 

@@ -550,35 +550,19 @@ object HudiWriter {
   /** Routing expression mapping a record key to its LIVE file-group id.
     * Bucket layout: `g<key mod n>` — exact, no data read. Clustered
     * layout (live groups are key-range replacements): a range index
-    * rebuilt from the live groups' per-file MIN key (one column-pruned
-    * scan of just the key column — at cluster scale, a parquet
-    * footer-stats read) — key k routes to the group with the largest
-    * min ≤ k, else the lowest group. */
-  private def keyRouter(spark: SparkSession, base: String, key: String,
+    * rebuilt from the live groups' per-file MIN key, read from each
+    * file's parquet footer (no Spark job) — key k routes to the group
+    * with the largest min ≤ k, else the lowest group. */
+  private def keyRouter(base: String, key: String,
                         live: Seq[HudiReader.BaseFile], clustered: Boolean): Column = {
-    import org.apache.spark.sql.functions.{concat, lit => flit, min, when}
+    import org.apache.spark.sql.functions.{concat, lit => flit, when}
     if (!clustered)
       return concat(flit("g"), pmod(col(key), lit(numBuckets(base))).cast("string"))
-    val fidByName = live.map(f => Paths.get(f.path).getFileName.toString -> f.fileId).toMap
-    // per-file MIN key straight from the parquet footers (the scaladoc's
-    // promised shape) — falls back to the column-pruned scan only when a
-    // footer can't answer exactly (non-integral key type)
-    val viaFooters: Option[Seq[(String, Any)]] = {
-      val per = live.map { f =>
-        ParquetFooters.statsOf(Paths.get(f.path), Seq(key)).flatMap(_._2.get(key))
-          .map(b => f.fileId -> b._1)
-      }
-      if (per.forall(_.isDefined))
-        Some(per.flatten.sortBy(_._2).map { case (fid, mn) => (fid, mn: Any) })
-      else None
-    }
-    val mins = viaFooters.getOrElse {
-      spark.read.parquet(live.map(_.path): _*)
-        .groupBy(col("_metadata.file_name").as("f"))
-        .agg(min(col(key)).as("mn"))
-        .orderBy("mn").collect()
-        .map(r => (fidByName(r.getString(0)), r.get(1))).toSeq
-    }
+    val mins = live.map { f =>
+      val mn = ParquetFooters.statsOf(Paths.get(f.path), Seq(key))._2.get(key)
+      require(mn.isDefined, s"no integral footer min for record key $key in ${f.path}")
+      f.fileId -> mn.get._1
+    }.sortBy(_._2)
     mins.tail.foldLeft(flit(mins.head._1): Column) { case (acc, (fid, mn)) =>
       when(col(key) >= flit(mn), fid).otherwise(acc)
     }
@@ -609,7 +593,7 @@ object HudiWriter {
     val asOf = HudiReader.completedCommits(base).last
     val live = HudiReader.liveSlices(base, asOf)
     val clustered = HudiReader.replacedGroups(base, asOf).nonEmpty
-    val router = keyRouter(spark, base, key, live, clustered)
+    val router = keyRouter(base, key, live, clustered)
     val fidOf = regexp_extract(col("_metadata.file_name"),
       "^(.+?)_[0-9]+-[0-9]+-[0-9]+_", 1)
     // groups the batch routes INTO ...

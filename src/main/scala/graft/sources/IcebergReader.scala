@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions.{broadcast, col, lit, regexp_replace}
   *
   * Scope (minimal, spec-conformant): version-hint + metadata parsing,
   * snapshot selection (current or explicit id — time travel), manifest
-  * walking via the ordinary Spark avro source, and the status filter
+  * walking via a driver-side avro decode, and the status filter
   * (entries with status=2 DELETED are dropped; 0 EXISTING / 1 ADDED are
   * live). The data path hands the live file list to the plain parquet
   * source — pruning/pushdown intact, metadata stays KB-scale. Relative
@@ -470,80 +470,59 @@ object IcebergReader {
   final case class DvRef(puffin: String, offset: Long, size: Long,
                          referenced: String, cardinality: Long, seq: Long)
 
-  private val avroFmt = "org.apache.spark.sql.avro.AvroFileFormat"
-
   /** Load KB-scale metadata avro (manifest lists, manifests) as a
     * DataFrame WITHOUT a distributed read: decode the OCF files on the
     * driver (same plane as the metadata JSON parses) and wrap the rows
     * in a local relation. Planning a snapshot used to cost one Spark
     * job per avro load — a scheduling round-trip to read a few KB —
     * and every census/time-travel re-plans, so lakehouse queries paid
-    * it dozens of times. Falls back to the spark-avro source when the
-    * files don't share one writer schema (never this writer's output;
-    * foreign multi-schema mixes keep spark-avro's resolution rules). */
+    * it dozens of times. Files open through Hadoop's `FileSystem`, so
+    * any scheme the session can read works (relative entries were
+    * resolved against the table base, absolute URIs pass through). One
+    * load takes files of ONE writer schema; a mix fails, naming them. */
   private def readMetaAvro(spark: SparkSession, paths: Seq[String]): DataFrame = {
     import scala.jdk.CollectionConverters._
     import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
     import org.apache.avro.file.DataFileReader
-    // resolve() passes absolute URIs through unchanged (the reader's
-    // documented contract) — map file: URIs back to local files here;
-    // any other scheme throws and takes the spark-avro fallback below
-    def localFile(p: String): java.io.File =
-      if (p.startsWith("file:")) new java.io.File(java.net.URI.create(p))
-      else new java.io.File(p)
+    import org.apache.avro.mapred.FsInput
+    val hadoopConf = spark.sparkContext.hadoopConfiguration
     def decode(p: String): (org.apache.avro.Schema, Seq[GenericRecord]) = {
-      val r = new DataFileReader[GenericRecord](
-        localFile(p), new GenericDatumReader[GenericRecord]())
+      val r = DataFileReader.openReader(new FsInput(new org.apache.hadoop.fs.Path(p), hadoopConf),
+        new GenericDatumReader[GenericRecord]())
       try (r.getSchema, r.iterator.asScala.toVector) finally r.close()
     }
-    try {
-      val decoded = paths.map(decode)
-      val schemas = decoded.map(_._1.toString).distinct
-      if (schemas.size != 1)
-        return spark.read.format(avroFmt).load(paths.toIndexedSeq: _*)
-      val avroSchema = decoded.head._1
-      val sqlType = org.apache.spark.sql.avro.SchemaConverters
-        .toSqlType(avroSchema).dataType.asInstanceOf[org.apache.spark.sql.types.StructType]
-      def convert(dt: org.apache.spark.sql.types.DataType, v: Any): Any = (dt, v) match {
-        case (_, null) => null
-        case (nested: org.apache.spark.sql.types.StructType, r: GenericRecord) =>
-          toRow(nested, r)
-        case (at: org.apache.spark.sql.types.ArrayType, c: java.util.Collection[_]) =>
-          c.asScala.toSeq.map(convert(at.elementType, _))
-        case (mt: org.apache.spark.sql.types.MapType, m: java.util.Map[_, _]) =>
-          m.asScala.toMap.map { case (k, x) =>
-            convert(mt.keyType, k) -> convert(mt.valueType, x) }
-        case (_, u: org.apache.avro.util.Utf8) => u.toString
-        case (_, e: org.apache.avro.generic.GenericEnumSymbol[_]) => e.toString
-        case (_, b: java.nio.ByteBuffer) =>
-          val arr = new Array[Byte](b.remaining()); b.duplicate().get(arr); arr
-        case (_, f: org.apache.avro.generic.GenericFixed) => f.bytes()
-        case (_, other) => other
-      }
-      def toRow(s: org.apache.spark.sql.types.StructType, rec: GenericRecord): org.apache.spark.sql.Row =
-        org.apache.spark.sql.Row(
-          s.fields.map(f => convert(f.dataType, rec.get(f.name))).toIndexedSeq: _*)
-      val rows = decoded.flatMap(_._2).map(toRow(sqlType, _))
-      // createDataFrame(list, schema) converts to internal rows EAGERLY,
-      // so an avro logical type this converter does not cover (date /
-      // decimal on a foreign-written manifest) fails here, inside the try
-      spark.createDataFrame(rows.asJava, sqlType)
-    } catch { case scala.util.control.NonFatal(e) =>
-      // non-local URIs, unreadable OCF, logical-type conversion gaps:
-      // the distributed source keeps spark-avro's resolution rules
-      System.err.println(s"[iceberg] driver-side avro decode of ${paths.mkString(", ")} " +
-        s"failed (${e.getClass.getName}: ${e.getMessage}); falling back to spark-avro")
-      spark.read.format(avroFmt).load(paths.toIndexedSeq: _*)
+    val decoded = paths.map(decode)
+    require(decoded.map(_._1.toString).distinct.size == 1,
+      s"metadata avro files with differing writer schemas in one load: ${paths.mkString(", ")}")
+    val avroSchema = decoded.head._1
+    val sqlType = org.apache.spark.sql.avro.SchemaConverters
+      .toSqlType(avroSchema).dataType.asInstanceOf[org.apache.spark.sql.types.StructType]
+    def convert(dt: org.apache.spark.sql.types.DataType, v: Any): Any = (dt, v) match {
+      case (_, null) => null
+      case (nested: org.apache.spark.sql.types.StructType, r: GenericRecord) =>
+        toRow(nested, r)
+      case (at: org.apache.spark.sql.types.ArrayType, c: java.util.Collection[_]) =>
+        c.asScala.toSeq.map(convert(at.elementType, _))
+      case (mt: org.apache.spark.sql.types.MapType, m: java.util.Map[_, _]) =>
+        m.asScala.toMap.map { case (k, x) =>
+          convert(mt.keyType, k) -> convert(mt.valueType, x) }
+      case (_, u: org.apache.avro.util.Utf8) => u.toString
+      case (_, e: org.apache.avro.generic.GenericEnumSymbol[_]) => e.toString
+      case (_, b: java.nio.ByteBuffer) =>
+        val arr = new Array[Byte](b.remaining()); b.duplicate().get(arr); arr
+      case (_, f: org.apache.avro.generic.GenericFixed) => f.bytes()
+      case (_, other) => other
     }
+    def toRow(s: org.apache.spark.sql.types.StructType, rec: GenericRecord): org.apache.spark.sql.Row =
+      org.apache.spark.sql.Row(
+        s.fields.map(f => convert(f.dataType, rec.get(f.name))).toIndexedSeq: _*)
+    val rows = decoded.flatMap(_._2).map(toRow(sqlType, _))
+    // createDataFrame(list, schema) converts to internal rows EAGERLY,
+    // so an avro logical type this converter does not cover (date /
+    // decimal on a foreign-written manifest) fails here, at planning
+    spark.createDataFrame(rows.asJava, sqlType)
   }
 
-  /** Walk manifest-list → manifests → live entries (status != 2
-    * DELETED), split by `data_file.content` (absent ⇒ v1, all data).
-    * `entryFilter` prunes manifest ENTRIES driver-side — a predicate
-    * over `data_file.partition` (partition pruning; it applies to
-    * delete entries too, which is spec-consistent: a position delete
-    * lives in its target's partition) or over `status` (incremental
-    * scans). */
   /** ALL manifest entries of one snapshot (every status), as the
     * avro-backed DataFrame — the change-stream source reads the raw
     * statuses; planners filter to live below. */
@@ -597,6 +576,13 @@ object IcebergReader {
       content.as("content"))
   }
 
+  /** Walk manifest-list → manifests → live entries (status != 2
+    * DELETED), split by `data_file.content` (absent ⇒ v1, all data).
+    * `entryFilter` prunes manifest ENTRIES driver-side — a predicate
+    * over `data_file.partition` (partition pruning; it applies to
+    * delete entries too, which is spec-consistent: a position delete
+    * lives in its target's partition) or over `status` (incremental
+    * scans). */
   def planSnapshot(spark: SparkSession, base: String, snapshotId: Long,
                    entryFilter: Column = lit(true)): SnapshotScan =
     planSnapshotBySpec(spark, base, snapshotId, _ => entryFilter)

@@ -67,7 +67,6 @@ object IcebergStream {
   }
 }
 
-/** `format("graft.sources.IcebergStreamProvider")` entry point. */
 /** The exactly-once Iceberg STREAMING SINK commit protocol: each
   * micro-batch's (appId, batchId) marker rides the committed
   * snapshot's `summary` string map — INSIDE the metadata JSON, so the
@@ -109,6 +108,7 @@ object IcebergStreamSink {
   }
 }
 
+/** `format("graft.sources.IcebergStreamProvider")` entry point. */
 class IcebergStreamProvider extends TableProvider
   with org.apache.spark.sql.sources.DataSourceRegister
   with org.apache.spark.sql.sources.StreamSinkProvider {

@@ -571,14 +571,6 @@ private[sources] trait DeltaSqlDml extends SupportsRowLevelOperations
     }
 }
 
-/** Mixed into the front-door Iceberg tables: pure-SQL
-  * `DELETE FROM cat.ns.t WHERE <translatable>` routes METADATA-ONLY
-  * into [[IcebergWriter.deleteWhere]] — position-delete files on a
-  * v2 table, puffin DVs on v3 (the writer picks per format-version);
-  * no data file is rewritten either way. Non-translatable predicates
-  * refuse (Spark reports the unsupported delete) rather than
-  * silently rewriting — UPDATE/MERGE stay with the Scala entry
-  * points (`upsertEq` is the CDC shape). */
 /** Mixed into the front-door MERGE-ON-READ Hudi tables: pure-SQL
   * `DELETE FROM cat.ns.t WHERE <translatable>` tombstones the matched
   * keys in one delta commit ([[HudiWriter.deleteWhere]]) — the MOR
@@ -600,6 +592,14 @@ private[sources] trait HudiSqlDelete extends SupportsDelete {
   }
 }
 
+/** Mixed into the front-door Iceberg tables: pure-SQL
+  * `DELETE FROM cat.ns.t WHERE <translatable>` routes METADATA-ONLY
+  * into [[IcebergWriter.deleteWhere]] — position-delete files on a
+  * v2 table, puffin DVs on v3 (the writer picks per format-version);
+  * no data file is rewritten either way. Non-translatable predicates
+  * refuse (Spark reports the unsupported delete) rather than
+  * silently rewriting — UPDATE/MERGE stay with the Scala entry
+  * points (`upsertEq` is the CDC shape). */
 private[sources] trait IcebergSqlDelete extends SupportsDelete {
 
   /** The Iceberg table base path. */

@@ -8,7 +8,6 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.parquet.column.statistics.{IntStatistics, LongStatistics}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 
 /** Footer-only statistics for freshly staged part files.
   *
@@ -32,72 +31,53 @@ import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
   *     ignore NULLs exactly like Spark's min/max aggregates. A column
   *     whose values are all NULL reports no bounds — matching the old
   *     aggregate's NULL result, which callers skipped.
-  *   - Any file/column where footer stats are unavailable or the type
-  *     is not a plain INT32/INT64 makes [[statsOf]] return None, and the
-  *     caller falls back to the original read-back aggregation — the
-  *     footer path is an optimization with a guaranteed-identical
-  *     fallback, never a new source of truth for odd types.
+  *   - A requested column whose footer stats are missing or whose type
+  *     is not a plain INT32/INT64 gets no bounds either — the same
+  *     outcome as the all-NULL rule, and data skipping keeps a file
+  *     without bounds. A requested column the file does not contain is a
+  *     caller error (misnamed `statsFor` entry, logical vs physical
+  *     spelling) and throws instead of silently dropping the stats.
   */
 object ParquetFooters {
 
   private val conf = new Configuration()
 
   /** (rows, bounds) for one file: bounds maps column name -> (min, max)
-    * as Long, only for requested columns that have at least one non-NULL
-    * value. None when any requested column exists but its stats are
-    * unusable (missing stats, non-integral type) — caller must fall back. */
-  def statsOf(file: Path, statsCols: Seq[String]): Option[(Long, Map[String, (Long, Long)])] = {
+    * as Long, only for requested columns with integral footer stats and
+    * at least one non-NULL value. Throws when a requested column is not
+    * in the file's schema. */
+  def statsOf(file: Path, statsCols: Seq[String]): (Long, Map[String, (Long, Long)]) = {
     val in = HadoopInputFile.fromPath(
       new org.apache.hadoop.fs.Path(file.toUri), conf)
     val reader = ParquetFileReader.open(in)
     try {
       val blocks = reader.getFooter.getBlocks.asScala.toSeq
       val rows = blocks.map(_.getRowCount).sum
-      if (statsCols.isEmpty) return Some((rows, Map.empty))
-      val wanted = statsCols.toSet
-      // per column: (min, max, sawNonNull) merged across row groups
-      val acc = scala.collection.mutable.Map.empty[String, (Long, Long)]
-      // a wanted column absent from the file schema entirely (misnamed
-      // statsFor entry, logical vs physical spelling) must return None —
-      // the read-back fallback then fails LOUDLY with an unresolved
-      // column instead of silently dropping data-skipping stats
-      val seen = scala.collection.mutable.Set.empty[String]
-      var usable = true
-      for (b <- blocks; c <- b.getColumns.asScala) {
-        val name = c.getPath.toDotString
-        if (wanted.contains(name)) {
-          seen += name
-          val st: org.apache.parquet.column.statistics.Statistics[_] = c.getStatistics
-          if (st == null || st.isEmpty) usable = false
-          else if (st.hasNonNullValue) {
-            val mnmx: Option[(Long, Long)] =
-              (c.getPrimitiveType.getPrimitiveTypeName, st) match {
-                case (PrimitiveTypeName.INT64, s: LongStatistics) =>
-                  Some((s.getMin, s.getMax))
-                case (PrimitiveTypeName.INT32, s: IntStatistics) =>
-                  Some((s.getMin.toLong, s.getMax.toLong))
-                case _ => None
-              }
-            mnmx match {
-              case None => usable = false
-              case Some((mn, mx)) =>
-                val (m0, m1) = acc.getOrElse(name, (Long.MaxValue, Long.MinValue))
-                acc(name) = (math.min(m0, mn), math.max(m1, mx))
-            }
-          } // all-NULL chunk: contributes nothing, like the aggregate
+      lazy val inFile = reader.getFooter.getFileMetaData.getSchema.getColumns.asScala
+        .map(_.getPath.mkString(".")).toSet
+      for (c <- statsCols)
+        require(inFile.contains(c), s"stats column $c is not in $file")
+      val chunks = blocks.flatMap(_.getColumns.asScala).groupBy(_.getPath.toDotString)
+      val bounds = statsCols.distinct.flatMap { name =>
+        val stats = chunks.getOrElse(name, Nil).map(_.getStatistics)
+        // exact only when every chunk carries integral stats (INT64 /
+        // INT32 physical types); all-NULL chunks contribute nothing
+        val integral = stats.forall {
+          case s: LongStatistics => !s.isEmpty
+          case s: IntStatistics  => !s.isEmpty
+          case _                 => false
         }
+        val ranges = if (!integral) Nil else stats.filter(_.hasNonNullValue).map {
+          case s: LongStatistics => (s.getMin, s.getMax)
+          case s: IntStatistics  => (s.getMin.toLong, s.getMax.toLong)
+        }
+        if (ranges.isEmpty) None
+        else Some(name -> ((ranges.map(_._1).min, ranges.map(_._2).max)))
       }
-      if (blocks.nonEmpty && !wanted.subsetOf(seen)) usable = false
-      if (usable) Some((rows, acc.toMap)) else None
+      (rows, bounds.toMap)
     } finally reader.close()
   }
 
   /** Row count only — always answerable from block metadata. */
-  def rowCount(file: Path): Long = {
-    val in = HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(file.toUri), conf)
-    val reader = ParquetFileReader.open(in)
-    try reader.getFooter.getBlocks.asScala.map(_.getRowCount).sum
-    finally reader.close()
-  }
+  def rowCount(file: Path): Long = statsOf(file, Nil)._1
 }

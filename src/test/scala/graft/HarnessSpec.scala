@@ -40,4 +40,26 @@ class HarnessSpec extends SparkSpec {
       assert(counts("q_delta_roundtrip")._1 > counts("q_agg_pricing")._1, s"$counts")
     } finally sc.removeSparkListener(census)
   }
+
+  test("the stdout queries map fits its cap and keeps headline, then slowest, queries") {
+    def names(map: String): Seq[String] =
+      "\"([a-z0-9_]+)\":".r.findAllMatchIn(map).map(_.group(1)).toSeq
+    // a lake-only selection: no headline query ran, and the full map
+    // is far over the cap
+    val lake = (1 to 94).map(i => f"q_lake_fixture_$i%03d" -> (i * 0.37 % 9.0))
+    val qs = Bench.stdoutQueries(lake)
+    assert(qs.length <= 1500 && names(qs).nonEmpty, qs)
+    val kept = names(qs).toSet
+    val slowest = lake.sortBy(-_._2).map(_._1)
+    assert(slowest.take(kept.size).toSet == kept, qs)
+    // the full suite's 391 entries: every headline query stays, first
+    val all = Bench.headline.map(_ -> 0.01) ++
+      (1 to 379).map(i => f"q_other_query_$i%03d" -> (i % 50 + 1.0))
+    val full = Bench.stdoutQueries(all)
+    assert(full.length <= 1500, full)
+    assert(names(full).take(Bench.headline.size).toSet == Bench.headline.toSet, full)
+    assert(names(full).size > Bench.headline.size, full)
+    // a map that fits is printed whole
+    assert(names(Bench.stdoutQueries(lake.take(3))).size == 3)
+  }
 }

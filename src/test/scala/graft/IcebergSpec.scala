@@ -99,6 +99,78 @@ class IcebergSpec extends SparkSpec {
     Files.writeString(Paths.get(base, "metadata", "version-hint.text"), v.toString)
   }
 
+  private def avroRecords(path: String)
+      : (org.apache.avro.Schema, Seq[org.apache.avro.generic.GenericRecord]) = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
+    val in = new org.apache.avro.file.DataFileReader[GenericRecord](new java.io.File(path),
+      new GenericDatumReader[GenericRecord]())
+    try (in.getSchema, in.iterator.asScala.toVector) finally in.close()
+  }
+
+  /** Rewrite one of a written table's metadata avro files (a manifest
+    * list or a manifest) in place through the Avro API: `schemaOf` maps
+    * the writer schema (fields it adds start NULL) and `edit` changes
+    * each copied record. */
+  private def rewriteAvro(path: String,
+                          schemaOf: org.apache.avro.Schema => org.apache.avro.Schema = identity)(
+                          edit: org.apache.avro.generic.GenericData.Record => Unit): Unit = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
+    val (old, recs) = avroRecords(path)
+    val schema = schemaOf(old)
+    val w = new org.apache.avro.file.DataFileWriter[GenericRecord](
+      new GenericDatumWriter[GenericRecord](schema))
+    w.create(schema, new java.io.File(path))
+    try recs.foreach { r =>
+      val c = new GenericData.Record(schema)
+      old.getFields.asScala.foreach(f => c.put(f.name, r.get(f.name)))
+      edit(c)
+      w.append(c)
+    } finally w.close()
+  }
+
+  /** A table whose snapshot 1 lists two manifests by relative path:
+    * (base, manifest-list path, resolved manifest paths). */
+  private def twoManifestTable(name: String): (String, String, Seq[String]) = {
+    val base = mkTable(name)
+    writeData(base, "data/a.parquet", Seq(1L, 2L))
+    writeData(base, "data/b.parquet", Seq(3L))
+    writeManifest(base, "metadata/m1.avro", Seq((1, "data/a.parquet", 2L)))
+    writeManifest(base, "metadata/m2.avro", Seq((1, "data/b.parquet", 1L)))
+    writeManifestList(base, "metadata/snap-1.avro", Seq("metadata/m1.avro", "metadata/m2.avro"))
+    writeMeta(base, 1, current = 1L, snaps = Seq(1L))
+    (base, s"$base/metadata/snap-1.avro",
+      Seq(s"$base/metadata/m1.avro", s"$base/metadata/m2.avro"))
+  }
+
+  test("absolute file:// manifest paths plan the same files as relative ones") {
+    val (base, list, _) = twoManifestTable("absmanifests")
+    def files() = IcebergReader.filesTable(spark, base, 1L).collect().map(_.toString).sorted.toSeq
+    val before = files()
+    assert(before.size == 2, before)
+    rewriteAvro(list) { r =>
+      r.put("manifest_path", "file://" + Paths.get(base).resolve(r.get("manifest_path").toString))
+    }
+    assert(avroRecords(list)._2.forall(_.get("manifest_path").toString.startsWith("file:///")))
+    assert(files() == before)
+    assert(IcebergReader.read(spark, base).agg(sum("id")).collect().head.getLong(0) == 6L)
+  }
+
+  test("manifests with differing writer schemas fail, naming the files") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.avro.Schema
+    val (base, _, manifests) = twoManifestTable("mixedmanifests")
+    // one manifest gains an optional field the other lacks
+    rewriteAvro(manifests.last, s => Schema.createRecord(s.getName, s.getDoc, s.getNamespace,
+      false, (s.getFields.asScala.map(f => new Schema.Field(f, f.schema())) :+
+        new Schema.Field("note", Schema.createUnion(Schema.create(Schema.Type.NULL),
+          Schema.create(Schema.Type.STRING)), null, Schema.Field.NULL_DEFAULT_VALUE)).asJava))(_ => ())
+    val e = intercept[IllegalArgumentException](IcebergReader.filesTable(spark, base, 1L))
+    assert(e.getMessage.contains("differing writer schemas"), e.getMessage)
+    manifests.foreach(m => assert(e.getMessage.contains(m), e.getMessage))
+  }
+
   test("status filter and snapshot time travel over the manifest tree") {
     val base = mkTable("walk")
     writeData(base, "data/a.parquet", Seq(1L, 2L))

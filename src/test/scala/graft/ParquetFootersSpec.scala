@@ -31,14 +31,14 @@ class ParquetFootersSpec extends SparkSpec {
     df.coalesce(1).write.parquet(s"$base/t")
     val file = graft.sources.Fs.list(Paths.get(base, "t")).iterator
       .find(_.getFileName.toString.endsWith(".parquet")).get
-    val Some((rows, bounds)) = ParquetFooters.statsOf(file, Seq("k", "i32", "optl"))
+    val (rows, bounds) = ParquetFooters.statsOf(file, Seq("k", "i32", "optl"))
     assert(rows == 4L)
     assert(bounds("k") == (1L, 4L))
     assert(bounds("i32") == (-3L, 42L), "int32 bounds widen to long")
     assert(bounds("optl") == (-5L, 100L), "nulls are skipped, not zero")
   }
 
-  test("statsOf: all-NULL column reports no bounds; string column falls back") {
+  test("statsOf: all-NULL/string columns get no bounds; a missing column throws") {
     val base = stage("nulls")
     import spark.implicits._
     Seq((1L, Option.empty[Long], "a"), (2L, Option.empty[Long], "b"))
@@ -46,13 +46,30 @@ class ParquetFootersSpec extends SparkSpec {
       .coalesce(1).write.parquet(s"$base/t")
     val file = graft.sources.Fs.list(Paths.get(base, "t")).iterator
       .find(_.getFileName.toString.endsWith(".parquet")).get
-    val Some((rows, bounds)) = ParquetFooters.statsOf(file, Seq("k", "allnull"))
+    val (rows, bounds) = ParquetFooters.statsOf(file, Seq("k", "allnull", "s"))
     assert(rows == 2L)
     assert(bounds.get("allnull").isEmpty, "all-NULL column has no bounds")
+    assert(bounds.get("s").isEmpty, "a string column has no integral bounds")
     assert(bounds("k") == (1L, 2L))
-    // a string stats column is not footer-answerable -> None (callers
-    // fall back to the read-back aggregation)
-    assert(ParquetFooters.statsOf(file, Seq("s")).isEmpty)
+    assert(ParquetFooters.rowCount(file) == 2L)
+    // a column the file does not hold is a caller error, named loudly
+    val e = intercept[IllegalArgumentException](ParquetFooters.statsOf(file, Seq("k", "nope")))
+    assert(e.getMessage.contains("nope") && e.getMessage.contains(file.getFileName.toString),
+      e.getMessage)
+  }
+
+  test("Delta create with a string stats column keeps counts and integral bounds") {
+    val base = "/tmp/graft_footers_test/strstats"
+    import spark.implicits._
+    val df = Seq((3L, "x"), (1L, "y"), (2L, "z")).toDF("k", "s").coalesce(1)
+    graft.sources.DeltaLogWriter.create(spark, df, base, "footers-strstats",
+      statsFor = Seq("k", "s"))
+    val adds = graft.sources.DeltaLogReader.snapshotFiles(Some(spark), base, 0L)
+    assert(adds.size == 1)
+    assert(adds.head.numRecords == 3L)
+    assert(adds.head.minValues == Map("k" -> 1L) && adds.head.maxValues == Map("k" -> 3L),
+      s"${adds.head}")
+    assert(graft.sources.DeltaLogReader.read(spark, base).count() == 3L)
   }
 
   test("row-tracked partitioned create: same-basename staged files keep distinct counts") {
