@@ -30,9 +30,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * The JSON is parsed line-by-line on the driver with a tiny
   * field-extractor (the log is KB-scale metadata; the DATA path stays
-  * fully distributed). At real scale the same replay runs over the log
-  * via Spark — shape-identical, and the spec's checkpoint mechanism
-  * bounds the replayed tail.
+  * fully distributed), and the spec's checkpoint mechanism bounds the
+  * replayed tail. A checkpoint parquet is decoded ONCE: one Spark read
+  * (plus one of its v2 sidecars) yields every fact it seeds — protocol,
+  * metaData, txn watermarks, domains and live adds — memoized by the
+  * file's identity (absolute path, size, full-precision mtime and
+  * filesystem key, stat'ed afresh on every lookup; see
+  * [[checkpointState]]). Checks on those facts, such as the protocol
+  * guard, still run on every read.
   */
 object DeltaLogReader {
 
@@ -176,16 +181,14 @@ object DeltaLogReader {
     partitionColumns(None, base, version)
 
   def partitionColumns(spark: Option[SparkSession], base: String, version: Long): Seq[String] = {
-    val ckpt = spark.flatMap(s => checkpointAt(base, version).map((s, _)))
-    var cols: Seq[String] = ckpt.map { case (s, cv) =>
-      checkpointMeta(s, base, cv).map(_._3).getOrElse(Seq.empty)
-    }.getOrElse {
+    val ckpt = seedAt(spark, base, version)
+    var cols: Seq[String] = ckpt.map(_._2.meta.map(_._3).getOrElse(Seq.empty)).getOrElse {
       require(versions(base).headOption.contains(0L) || version < 0,
         s"vacuumed _delta_log under $base: table metadata needs the " +
           "checkpoint — pass a SparkSession to partitionColumns")
       Seq.empty
     }
-    val from = ckpt.map(_._2 + 1).getOrElse(0L)
+    val from = ckpt.map(_._1 + 1).getOrElse(0L)
     (from to version).foreach { v =>
       val f = logDir(base).resolve(f"$v%020d.json")
       if (Files.exists(f))
@@ -195,57 +198,6 @@ object DeltaLogReader {
         }
     }
     cols
-  }
-
-  /** The checkpoint's folded metaData row, if the checkpoint carries
-    * one: (id, schemaString, partitionColumns, configuration). Older
-    * checkpoints without the column return None; ones folded before
-    * configuration was carried surface an empty map. */
-  private[sources] def checkpointMeta(spark: SparkSession, base: String,
-                                      cv: Long): Option[(String, String, Seq[String], Map[String, String])] = {
-    import org.apache.spark.sql.functions.col
-    val cp = checkpointFile(base, cv)
-    val cdf = spark.read.parquet(cp.toString)
-    if (!cdf.columns.contains("metaData")) return None
-    val fields = cdf.schema("metaData").dataType
-      .asInstanceOf[org.apache.spark.sql.types.StructType].fieldNames
-    if (!fields.contains("partitionColumns")) return None
-    val confCol =
-      if (fields.contains("configuration")) col("metaData.configuration")
-      else org.apache.spark.sql.functions.lit(null)
-        .cast("map<string,string>")
-    cdf.filter(col("metaData").isNotNull)
-      .select(col("metaData.id"), col("metaData.schemaString"),
-        col("metaData.partitionColumns"), confCol)
-      .collect().headOption
-      .map(r => (r.getString(0), r.getString(1), r.getSeq[String](2),
-        if (r.isNullAt(3)) Map.empty[String, String]
-        else r.getMap[String, String](3).toMap))
-  }
-
-  /** The checkpoint's folded protocol row, if present:
-    * (minReaderVersion, minWriterVersion, readerFeatures,
-    * writerFeatures). Checkpoints folded before the feature arrays
-    * were carried surface them empty. */
-  private[sources] def checkpointProtocol(spark: SparkSession, base: String, cv: Long)
-  : Option[(Int, Int, Seq[String], Seq[String])] = {
-    import org.apache.spark.sql.functions.col
-    val cp = checkpointFile(base, cv)
-    val cdf = spark.read.parquet(cp.toString)
-    if (!cdf.columns.contains("protocol")) return None
-    val fields = cdf.schema("protocol").dataType
-      .asInstanceOf[org.apache.spark.sql.types.StructType].fieldNames
-    if (!fields.contains("minReaderVersion")) return None
-    def opt(name: String, tpe: String) =
-      if (fields.contains(name)) col(s"protocol.$name").cast(tpe)
-      else org.apache.spark.sql.functions.lit(null).cast(tpe)
-    cdf.filter(col("protocol.minReaderVersion").isNotNull)
-      .select(col("protocol.minReaderVersion").cast("int"), opt("minWriterVersion", "int"),
-        opt("readerFeatures", "array<string>"), opt("writerFeatures", "array<string>"))
-      .collect().headOption
-      .map(r => (r.getInt(0), if (r.isNullAt(1)) 2 else r.getInt(1),
-        if (r.isNullAt(2)) Seq.empty[String] else r.getSeq[String](2),
-        if (r.isNullAt(3)) Seq.empty[String] else r.getSeq[String](3)))
   }
 
   /** The table's protocol in force at `version`: the LAST protocol
@@ -261,8 +213,7 @@ object DeltaLogReader {
     val vs = versions(base).filter(_ <= version)
     var proto: (Int, Int, Seq[String], Seq[String]) =
       if (vs.headOption.contains(0L)) (1, 2, Seq.empty, Seq.empty)
-      else spark.flatMap(s => checkpointAt(base, version)
-          .flatMap(cv => checkpointProtocol(s, base, cv)))
+      else seedAt(spark, base, version).flatMap(_._2.protocol)
         .getOrElse((1, 2, Seq.empty, Seq.empty))
     vs.foreach { v =>
       val f = logDir(base).resolve(f"$v%020d.json")
@@ -381,8 +332,7 @@ object DeltaLogReader {
     val vs = versions(base).filter(_ <= version)
     var found: Option[(String, Map[String, String])] =
       if (vs.headOption.contains(0L)) None
-      else spark.flatMap(s => checkpointAt(base, version)
-        .flatMap(cv => checkpointMeta(s, base, cv)).map(m => (m._2, m._4)))
+      else seedAt(spark, base, version).flatMap(_._2.meta).map(m => (m._2, m._4))
     vs.foreach { v =>
       val f = logDir(base).resolve(f"$v%020d.json")
       if (Files.exists(f))
@@ -421,8 +371,7 @@ object DeltaLogReader {
     val vs = versions(base).filter(_ <= version)
     var found: Option[String] =
       if (vs.headOption.contains(0L)) None
-      else spark.flatMap(s => checkpointAt(base, version)
-        .flatMap(cv => checkpointMeta(s, base, cv)).map(_._1))
+      else seedAt(spark, base, version).flatMap(_._2.meta).map(_._1)
     vs.foreach { v =>
       val f = logDir(base).resolve(f"$v%020d.json")
       if (Files.exists(f))
@@ -524,12 +473,157 @@ object DeltaLogReader {
     checkpointFileOpt(base, cv).getOrElse(throw new IllegalStateException(
       s"_last_checkpoint points at version $cv but no checkpoint parquet exists"))
 
+  /** Everything one checkpoint file folds, decoded together: the
+    * protocol (minReaderVersion, minWriterVersion, readerFeatures,
+    * writerFeatures), the metaData (id, schemaString,
+    * partitionColumns, configuration), every appId's txn watermark,
+    * the (domain, configuration) rows in file order, and the live add
+    * rows — inline ones first, then the v2 sidecars'; `adds` is None
+    * when the file carries neither add rows nor sidecar pointers.
+    * Columns an older checkpoint lacks surface empty (a protocol
+    * without feature arrays, a metaData without configuration). */
+  private[sources] final case class CheckpointState(
+      protocol: Option[(Int, Int, Seq[String], Seq[String])],
+      meta: Option[(String, String, Seq[String], Map[String, String])],
+      txns: Map[String, Long],
+      domains: Seq[(String, String)],
+      adds: Option[Seq[DeltaAdd]]) {
+    def domain(name: String): Option[String] = domains.collectFirst { case (`name`, c) => c }
+  }
+
+  /** A file as it is on disk now: a deleted, rebuilt or replaced file
+    * differs in at least one field (mtime at full precision, `key` the
+    * filesystem's inode identity where it has one). */
+  private final case class FileId(path: String, size: Long,
+                                  mtime: java.nio.file.attribute.FileTime, key: Any)
+
+  private val DecodedCheckpointsMax = 32
+
+  /** Decoded checkpoints by file identity, least recently used evicted. */
+  private val decodedCheckpoints = java.util.Collections.synchronizedMap(
+    new java.util.LinkedHashMap[FileId, CheckpointState](16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[FileId, CheckpointState]): Boolean =
+        size > DecodedCheckpointsMax
+    })
+
+  /** The checkpoint at `cp`, decoded once per file identity. The key
+    * comes from a fresh stat on every call, so a checkpoint deleted,
+    * rebuilt or replaced since its decode is decoded again, never
+    * served from memory. Sidecars are covered by their top-level
+    * file: a writer names and writes them before it, so new sidecars
+    * mean a new top-level file. The Spark decode runs outside the
+    * map's lock; concurrent first readers may decode twice and the
+    * first to publish wins. */
+  private def checkpointState(spark: SparkSession, cp: Path): CheckpointState = {
+    val a = Files.readAttributes(cp, classOf[java.nio.file.attribute.BasicFileAttributes])
+    val id = FileId(cp.toAbsolutePath.normalize.toString, a.size, a.lastModifiedTime, a.fileKey)
+    Option(decodedCheckpoints.get(id)).getOrElse {
+      val decoded = decodeCheckpoint(spark, cp)
+      Option(decodedCheckpoints.putIfAbsent(id, decoded)).getOrElse(decoded)
+    }
+  }
+
+  /** The checkpoint `_last_checkpoint` names, with its version, when it
+    * is usable for `version` and a session is given to decode it. */
+  private[sources] def seedAt(spark: Option[SparkSession], base: String,
+                     version: Long): Option[(Long, CheckpointState)] =
+    for (s <- spark; cv <- checkpointAt(base, version))
+      yield (cv, checkpointState(s, checkpointFile(base, cv)))
+
+  /** One read of the checkpoint file and one action over every non-null
+    * protocol, metaData, txn, domainMetadata, sidecar and add row; v2
+    * sidecars' add rows follow in one more read when the file points at
+    * any (their paths are only known from the first). */
+  private def decodeCheckpoint(spark: SparkSession, cp: Path): CheckpointState = {
+    import org.apache.spark.sql.{Column, Row}
+    import org.apache.spark.sql.functions.{col, lit, struct, to_json, when}
+    def fieldsOf(df: DataFrame, s: String): Set[String] =
+      if (!df.columns.contains(s)) Set.empty
+      else df.schema(s).dataType
+        .asInstanceOf[org.apache.spark.sql.types.StructType].fieldNames.toSet
+    def opt(df: DataFrame, s: String, f: String, tpe: String): Column =
+      if (fieldsOf(df, s).contains(f)) col(s"$s.$f").cast(tpe) else lit(null).cast(tpe)
+    // row-tracking fields must SURVIVE checkpointing: after expireLog a
+    // baseRowId dropped here would shift every row id
+    def addCols(df: DataFrame): Seq[Column] = Seq(
+      opt(df, "add", "path", "string"), opt(df, "add", "size", "long"),
+      opt(df, "add", "stats", "string"),
+      if (fieldsOf(df, "add").contains("deletionVector")) to_json(col("add.deletionVector"))
+      else lit(null).cast("string"),
+      opt(df, "add", "baseRowId", "long"), opt(df, "add", "defaultRowCommitVersion", "long"))
+    def addOf(r: Row): DeltaAdd = {
+      val path = Option(r.getString(0)).getOrElse(
+        throw new IllegalStateException(s"add row without path in checkpoint $cp"))
+      val stats = if (r.isNullAt(2)) "" else r.getString(2)
+      DeltaAdd(path, if (r.isNullAt(1)) 0L else r.getLong(1), dataChange = true,
+        minValues = statBounds(stats, "minValues"),
+        maxValues = statBounds(stats, "maxValues"),
+        numRecords = DeltaStream.numRecords(stats),
+        dv = if (r.isNullAt(3)) None else dvOf("\"deletionVector\":" + r.getString(3)),
+        baseRowId = if (r.isNullAt(4)) None else Some(r.getLong(4)),
+        defaultRowCommitVersion = if (r.isNullAt(5)) None else Some(r.getLong(5)))
+    }
+    def seqOf(r: Row, i: Int): Seq[String] = if (r.isNullAt(i)) Nil else r.getSeq[String](i)
+    val cdf = spark.read.parquet(cp.toString)
+    def present(s: String, needs: String): Column =
+      if (fieldsOf(cdf, s).contains(needs)) col(s).isNotNull else lit(false)
+    // one (row kind present, its fields) pair per action kind; the
+    // protocol row counts only with a minReaderVersion, the metaData
+    // row only when the checkpoint carries partitionColumns
+    val kinds: Seq[(Column, Seq[Column])] = Seq(
+      (if (fieldsOf(cdf, "protocol").contains("minReaderVersion"))
+         col("protocol.minReaderVersion").isNotNull else lit(false),
+       Seq(opt(cdf, "protocol", "minReaderVersion", "int"),
+         opt(cdf, "protocol", "minWriterVersion", "int"),
+         opt(cdf, "protocol", "readerFeatures", "array<string>"),
+         opt(cdf, "protocol", "writerFeatures", "array<string>"))),
+      (present("metaData", "partitionColumns"),
+       Seq(opt(cdf, "metaData", "id", "string"), opt(cdf, "metaData", "schemaString", "string"),
+         opt(cdf, "metaData", "partitionColumns", "array<string>"),
+         opt(cdf, "metaData", "configuration", "map<string,string>"))),
+      (present("txn", "appId"),
+       Seq(opt(cdf, "txn", "appId", "string"), opt(cdf, "txn", "version", "long"))),
+      (present("domainMetadata", "domain"),
+       Seq(opt(cdf, "domainMetadata", "domain", "string"),
+         opt(cdf, "domainMetadata", "configuration", "string"))),
+      (present("sidecar", "path"), Seq(opt(cdf, "sidecar", "path", "string"))),
+      (present("add", "path"), addCols(cdf)))
+    val rows = cdf.filter(kinds.map(_._1).reduce(_ || _))
+      .select(kinds.map { case (p, cs) => when(p, struct(cs: _*)) }: _*)
+      .collect().toSeq
+    def kind(i: Int): Seq[Row] = rows.filterNot(_.isNullAt(i)).map(_.getStruct(i))
+    // V2 checkpoints (checkpointPolicy=v2): the top-level file holds
+    // only non-file actions plus `sidecar` pointers; the add rows live
+    // in sidecar parquet under _delta_log/_sidecars/ — read the union
+    // (a classic checkpoint carries adds inline instead)
+    val sidecars = kind(4).map(_.getString(0))
+      .map(p => if (p.startsWith("/") || p.contains("://")) p
+        else cp.getParent.resolve("_sidecars").resolve(p).toString)
+    val sidecarAdds =
+      if (sidecars.isEmpty) Nil
+      else {
+        val sdf = spark.read.parquet(sidecars: _*)
+        sdf.filter(col("add").isNotNull).select(addCols(sdf): _*).collect().toSeq.map(addOf)
+      }
+    CheckpointState(
+      protocol = kind(0).headOption.map(r =>
+        (r.getInt(0), if (r.isNullAt(1)) 2 else r.getInt(1), seqOf(r, 2), seqOf(r, 3))),
+      meta = kind(1).headOption.map(r => (r.getString(0), r.getString(1), seqOf(r, 2),
+        if (r.isNullAt(3)) Map.empty[String, String] else r.getMap[String, String](3).toMap)),
+      txns = kind(2).filterNot(_.isNullAt(1)).map(r => r.getString(0) -> r.getLong(1)).toMap,
+      domains = kind(3).map(r => (r.getString(0), r.getString(1))),
+      adds =
+        if (!cdf.columns.contains("add") && sidecars.isEmpty) None
+        else Some(kind(5).map(addOf) ++ sidecarAdds))
+  }
+
   /** Live file set at `version`.
     *
     * With a usable checkpoint (the spec's replay-bounding mechanism —
     * `_last_checkpoint` → `<v>.checkpoint.parquet`, one row per live
-    * action): seed the live set from the checkpoint's `add` rows via a
-    * regular Spark parquet read, then replay ONLY the JSON commits
+    * action): seed the live set from the checkpoint's decoded `add`
+    * rows ([[checkpointState]]), then replay ONLY the JSON commits
     * after it. Without one: full action replay from 0. Either path
     * applies the same add/remove algebra; on a long-lived table the
     * checkpoint turns O(history) replay into O(tail). */
@@ -538,67 +632,21 @@ object DeltaLogReader {
 
   def snapshotFiles(spark: Option[SparkSession], base: String, version: Long): Seq[DeltaAdd] = {
     val live = scala.collection.mutable.LinkedHashMap.empty[String, DeltaAdd]
-    val ckpt = spark.flatMap(s => checkpointAt(base, version).map((s, _)))
-    ckpt.foreach { case (s, cv) =>
-      val cp = checkpointFile(base, cv)
-      import org.apache.spark.sql.functions.col
-      val cdf = s.read.parquet(cp.toString)
+    val ckpt = seedAt(spark, base, version)
+    ckpt.foreach { case (cv, st) =>
       // the checkpoint carries the protocol action too — honor the
       // guard WITH its feature list (a v3 protocol reconstructed
       // featureless would skip the unsupported-feature check entirely)
-      checkpointProtocol(s, base, cv).foreach { case (mr, _, rf, _) =>
+      st.protocol.foreach { case (mr, _, rf, _) =>
         val feats = rf.map(f => s""""$f"""").mkString("[", ",", "]")
         assertReadable(
           s"""{"protocol":{"minReaderVersion":$mr,"readerFeatures":$feats}}""")
       }
-      // V2 checkpoints (checkpointPolicy=v2): the top-level file holds
-      // only non-file actions plus `sidecar` pointers; the add rows
-      // live in sidecar parquet under _delta_log/_sidecars/ — read the
-      // union (a classic checkpoint carries adds inline instead)
-      val addSources: Seq[DataFrame] =
-        (if (cdf.columns.contains("add")) Seq(cdf) else Nil) ++
-          (if (!cdf.columns.contains("sidecar")) Nil
-           else {
-             val sidecars = cdf.filter(col("sidecar").isNotNull)
-               .select(col("sidecar.path")).collect().map(_.getString(0))
-               .map(p => if (p.startsWith("/") || p.contains("://")) p
-                 else logDir(base).resolve("_sidecars").resolve(p).toString)
-             if (sidecars.isEmpty) Nil else Seq(s.read.parquet(sidecars.toIndexedSeq: _*))
-           })
-      require(addSources.nonEmpty,
-        s"checkpoint $cp carries neither add rows nor sidecar pointers")
-      addSources.foreach { src =>
-        val addFields = src.schema("add").dataType
-          .asInstanceOf[org.apache.spark.sql.types.StructType].fieldNames
-        val statsCol = if (addFields.contains("stats")) col("add.stats")
-                       else org.apache.spark.sql.functions.lit(null).cast("string")
-        val dvCol = if (addFields.contains("deletionVector"))
-          org.apache.spark.sql.functions.to_json(col("add.deletionVector"))
-        else org.apache.spark.sql.functions.lit(null).cast("string")
-        // row-tracking fields must SURVIVE checkpointing: after
-        // expireLog a baseRowId dropped here would shift every row id
-        def optL(f: String) = if (addFields.contains(f)) col(s"add.$f")
-          else org.apache.spark.sql.functions.lit(null).cast("long")
-        src.filter(col("add").isNotNull)
-          .select(col("add.path"), col("add.size"), statsCol, dvCol,
-            optL("baseRowId"), optL("defaultRowCommitVersion"))
-          .collect()
-          .foreach { r =>
-            val stats = if (r.isNullAt(2)) "" else r.getString(2)
-            val dv = if (r.isNullAt(3)) None
-                     else dvOf("\"deletionVector\":" + r.getString(3))
-            live(r.getString(0)) = DeltaAdd(r.getString(0),
-              if (r.isNullAt(1)) 0L else r.getLong(1), dataChange = true,
-              minValues = statBounds(stats, "minValues"),
-              maxValues = statBounds(stats, "maxValues"),
-              numRecords = DeltaStream.numRecords(stats),
-              dv = dv,
-              baseRowId = if (r.isNullAt(4)) None else Some(r.getLong(4)),
-              defaultRowCommitVersion = if (r.isNullAt(5)) None else Some(r.getLong(5)))
-          }
-      }
+      st.adds.getOrElse(throw new IllegalArgumentException(
+          s"checkpoint ${checkpointFile(base, cv)} carries neither add rows nor sidecar pointers"))
+        .foreach(a => live(a.path) = a)
     }
-    val from = ckpt.map(_._2 + 1).getOrElse(0L)
+    val from = ckpt.map(_._1 + 1).getOrElse(0L)
     (from to version).foreach { v =>
       val f = logDir(base).resolve(f"$v%020d.json")
       require(Files.exists(f), s"missing Delta commit $v under $base")
@@ -738,20 +786,8 @@ object DeltaLogReader {
     val hwmRe = """rowIdHighWaterMark\\?"\s*:\s*(-?\d+)""".r
     var found: Option[Long] =
       if (vs.headOption.contains(0L)) None
-      else spark.flatMap { s =>
-        checkpointAt(base, version).flatMap { cv =>
-          val cdf = s.read.parquet(checkpointFile(base, cv).toString)
-          if (!cdf.columns.contains("domainMetadata")) None
-          else {
-            import org.apache.spark.sql.functions.col
-            cdf.filter(col("domainMetadata").isNotNull &&
-                col("domainMetadata.domain") === "delta.rowTracking")
-              .select(col("domainMetadata.configuration"))
-              .collect().headOption
-              .flatMap(r => hwmRe.findFirstMatchIn(r.getString(0)).map(_.group(1).toLong))
-          }
-        }
-      }
+      else seedAt(spark, base, version).flatMap(_._2.domain("delta.rowTracking"))
+        .flatMap(c => hwmRe.findFirstMatchIn(c).map(_.group(1).toLong))
     vs.foreach { v =>
       val f = logDir(base).resolve(f"$v%020d.json")
       if (Files.exists(f))
@@ -775,19 +811,8 @@ object DeltaLogReader {
     val vs = versions(base).filter(_ <= version)
     var found: Seq[String] =
       if (vs.headOption.contains(0L)) Nil
-      else spark.flatMap { s =>
-        checkpointAt(base, version).flatMap { cv =>
-          val cdf = s.read.parquet(checkpointFile(base, cv).toString)
-          if (!cdf.columns.contains("domainMetadata")) None
-          else {
-            import org.apache.spark.sql.functions.col
-            cdf.filter(col("domainMetadata").isNotNull &&
-                col("domainMetadata.domain") === "delta.clustering")
-              .select(col("domainMetadata.configuration"))
-              .collect().headOption.map(r => parse(r.getString(0)))
-          }
-        }
-      }.getOrElse(Nil)
+      else seedAt(spark, base, version).flatMap(_._2.domain("delta.clustering"))
+        .map(parse).getOrElse(Nil)
     vs.foreach { v =>
       val f = logDir(base).resolve(f"$v%020d.json")
       if (Files.exists(f))
@@ -890,8 +915,7 @@ object DeltaLogReader {
         }
     }
     if (json.isEmpty && !vs.headOption.contains(0L))
-      json = spark.flatMap(s => checkpointAt(base, version)
-        .flatMap(cv => checkpointMeta(s, base, cv)).map(_._2))
+      json = seedAt(spark, base, version).flatMap(_._2.meta).map(_._2)
     json.flatMap(j =>
       scala.util.Try(org.apache.spark.sql.types.DataType.fromJson(j)
         .asInstanceOf[org.apache.spark.sql.types.StructType]).toOption)
@@ -1084,9 +1108,12 @@ object DeltaLogReader {
 
   def lastTxnVersion(spark: Option[SparkSession], base: String, appId: String): Option[Long] = {
     val quoted = "\"appId\":\"" + appId + "\""
-    val fromCkpt = spark.flatMap { s =>
-      checkpointAt(base, Long.MaxValue).flatMap(cv => checkpointTxn(s, base, cv, appId))
-    }
+    val fromCkpt = for {
+      s <- spark
+      cv <- checkpointAt(base, Long.MaxValue)
+      cp <- checkpointFileOpt(base, cv)
+      tv <- checkpointState(s, cp).txns.get(appId)
+    } yield tv
     val fromJson = versions(base).flatMap { v =>
       Files.readAllLines(logDir(base).resolve(f"$v%020d.json"), StandardCharsets.UTF_8)
         .asScala.collect {
@@ -1096,31 +1123,6 @@ object DeltaLogReader {
         }
     }.maxOption
     (fromCkpt.toSeq ++ fromJson.toSeq).maxOption
-  }
-
-  /** The checkpoint's folded txn watermark for `appId`, if present. */
-  private def checkpointTxn(spark: SparkSession, base: String,
-                            cv: Long, appId: String): Option[Long] = {
-    import org.apache.spark.sql.functions.col
-    val cp = checkpointFileOpt(base, cv).getOrElse(return None)
-    val cdf = spark.read.parquet(cp.toString)
-    if (!cdf.columns.contains("txn")) return None
-    cdf.filter(col("txn").isNotNull && col("txn.appId") === appId)
-      .select(col("txn.version")).collect().headOption
-      .flatMap(r => if (r.isNullAt(0)) None else Some(r.getLong(0)))
-  }
-
-  /** Every folded (appId, version) txn watermark in the checkpoint —
-    * the writer re-folds them when it takes the NEXT checkpoint. */
-  private[sources] def checkpointTxns(spark: SparkSession, base: String,
-                                      cv: Long): Map[String, Long] = {
-    import org.apache.spark.sql.functions.col
-    val cp = checkpointFileOpt(base, cv).getOrElse(return Map.empty)
-    val cdf = spark.read.parquet(cp.toString)
-    if (!cdf.columns.contains("txn")) return Map.empty
-    cdf.filter(col("txn").isNotNull)
-      .select(col("txn.appId"), col("txn.version")).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
   }
 
   /** Change Data Feed over versions [fromVersion, toVersion] — the

@@ -2409,8 +2409,9 @@ object DeltaLogWriter {
   }
 
   /** Latest metaData action at or before `version`: (id, schemaString,
-    * partitionColumns, configuration). Seeds from a prior checkpoint's
-    * folded metaData when the early commits are already expired, then
+    * partitionColumns, configuration). Seeds from the folded metaData
+    * of the checkpoint `_last_checkpoint` names (the one snapshot reads
+    * seed from) when the early commits are already expired, then
     * overlays any later JSON metaData (Delta replaces table metadata
     * wholesale). */
   private def latestMetaData(spark: SparkSession, base: String,
@@ -2418,7 +2419,7 @@ object DeltaLogWriter {
     val vs = DeltaLogReader.versions(base).filter(_ <= version)
     var found: Option[(String, String, Seq[String], Map[String, String])] =
       if (vs.headOption.contains(0L)) None
-      else DeltaLogReader.checkpointMeta(spark, base, vs.head)
+      else DeltaLogReader.seedAt(Some(spark), base, version).flatMap(_._2.meta)
     vs.foreach { v =>
       Files.readAllLines(Paths.get(base, "_delta_log", f"$v%020d.json"),
           StandardCharsets.UTF_8).asScala.foreach { line =>
@@ -2438,13 +2439,15 @@ object DeltaLogWriter {
   }
 
   /** Every appId's highest txn watermark at or before `version`,
-    * seeded from a prior checkpoint's folded txn rows. */
+    * seeded from the folded txn rows of the checkpoint
+    * `_last_checkpoint` names. */
   private def foldedTxns(spark: SparkSession, base: String,
                          version: Long): Map[String, Long] = {
     val vs = DeltaLogReader.versions(base).filter(_ <= version)
     val seed =
       if (vs.headOption.contains(0L)) Map.empty[String, Long]
-      else DeltaLogReader.checkpointTxns(spark, base, vs.head)
+      else DeltaLogReader.seedAt(Some(spark), base, version).map(_._2.txns)
+        .getOrElse(Map.empty[String, Long])
     vs.foldLeft(seed) { (acc, v) =>
       Files.readAllLines(Paths.get(base, "_delta_log", f"$v%020d.json"),
           StandardCharsets.UTF_8).asScala.foldLeft(acc) { (m, line) =>

@@ -1096,4 +1096,56 @@ class DeltaLogSpec extends SparkSpec {
       }
     } finally pool.shutdown()
   }
+
+  test("a checkpoint rebuilt at the same path and version is decoded afresh") {
+    import graft.sources.{DeltaLogWriter => W}
+    val base = "/tmp/graft_delta_test/ckpt_identity"
+    def one(ids: Long*) = spark.createDataFrame(ids.map(Tuple1(_))).toDF("id").coalesce(1)
+    // checkpoint at v1 and expire v0: every later read seeds from it
+    def build(first: Seq[Long], second: Seq[Long]): Long = {
+      graft.sources.TxnLog.rmrf(base)
+      W.create(spark, one(first: _*), base, "t-ckid")
+      W.append(spark, one(second: _*), base)
+      val cv = W.checkpoint(spark, base)
+      W.expireLog(base)
+      cv
+    }
+    def state(v: Long) = {
+      val adds = DeltaLogReader.snapshotFiles(Some(spark), base, v)
+      val ids = DeltaLogReader.read(spark, base, v).collect().map(_.getLong(0)).sorted.toSeq
+      (adds.map(_.numRecords).sum, ids)
+    }
+    val v = build(Seq(1L, 2L), Seq(3L))
+    assert(state(v) == ((3L, Seq(1L, 2L, 3L))))
+    assert(build(Seq(10L, 20L, 30L, 40L), Seq(50L, 60L)) == v)
+    assert(state(v) == ((6L, Seq(10L, 20L, 30L, 40L, 50L, 60L))))
+  }
+
+  test("checkpoint-seeded snapshots and reads from 8 threads agree with the sequential ones") {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration.Duration
+    import graft.sources.{DeltaLogWriter => W}
+    val base = "/tmp/graft_delta_test/ckpt_threads"
+    graft.sources.TxnLog.rmrf(base)
+    W.create(spark, spark.range(0, 40).toDF("id").repartition(4), base, "t-ck-mt")
+    W.append(spark, spark.range(40, 60).toDF("id").coalesce(1), base)
+    W.checkpoint(spark, base)
+    W.append(spark, spark.range(60, 70).toDF("id").coalesce(1), base)
+    val v = DeltaLogReader.latestVersion(base)
+    def resolve() = (DeltaLogReader.snapshotFiles(Some(spark), base, v),
+      DeltaLogReader.read(spark, base, v).collect().map(_.getLong(0)).sorted.toSeq)
+    // the threads race the checkpoint's first decode; the sequential
+    // resolution runs after them
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+    try {
+      val racing = (1 to 8).map(_ => Future { start.await(); resolve() })
+      start.countDown()
+      val got = racing.map(Await.result(_, Duration(300, "s")))
+      val expected = resolve()
+      assert(expected._2 == (0L until 70L))
+      got.foreach(g => assert(g == expected))
+    } finally pool.shutdown()
+  }
 }

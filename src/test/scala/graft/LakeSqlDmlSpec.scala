@@ -308,4 +308,45 @@ class LakeSqlDmlSpec extends SparkSpec {
     spark.sql("DELETE FROM sqldml_g.db.it WHERE id < 10")
     assert(DeltaLogReader.read(spark, base).count() == 90L)
   }
+
+  test("job budget: after a checkpoint, SQL MERGE, UPDATE and DELETE schedule no more jobs") {
+    val root = freshRoot("budget")
+    val base = s"$root/db/t"
+    DeltaLogWriter.create(spark, plane().repartition(2), base, "t")
+    cat("sqldml_budget", root)
+    val census = new QueryCensus
+    val sc = spark.sparkContext
+    // one MERGE upsert, UPDATE and DELETE per round, each tagged
+    // `<round>.<statement>` for the census
+    def round(tag: String, lo: Long): Unit = {
+      spark.range(lo, lo + 10).select(col("id"), lit(9L).as("x"), lit("src").as("p"))
+        .createOrReplaceTempView("budget_src")
+      Seq(
+        "merge" -> """MERGE INTO sqldml_budget.db.t AS t USING budget_src AS s ON t.id = s.id
+                     |WHEN MATCHED THEN UPDATE SET x = s.x
+                     |WHEN NOT MATCHED THEN INSERT (id, x, p) VALUES (s.id, s.x, s.p)""".stripMargin,
+        "update" -> s"UPDATE sqldml_budget.db.t SET x = x + 1 WHERE id % 10 = ${lo % 10}",
+        "delete" -> s"DELETE FROM sqldml_budget.db.t WHERE id >= $lo AND id < ${lo + 2}"
+      ).foreach { case (name, sql) =>
+        sc.setLocalProperty(QueryCensus.Key, s"$tag.$name")
+        try spark.sql(sql) finally sc.setLocalProperty(QueryCensus.Key, null)
+      }
+    }
+    sc.addSparkListener(census)
+    try {
+      // the first round lays down the deletion vectors the counted
+      // rounds then scan under, so the two differ only by the checkpoint
+      round("warm", 95L)
+      round("before", 105L)
+      DeltaLogWriter.checkpoint(spark, base)
+      assert(DeltaLogReader.read(spark, base).count() == 111L) // warm read
+      round("after", 115L)
+      assert(DeltaLogReader.read(spark, base).count() == 119L)
+      val jobs = census.drained(spark).map { case (k, c) => k -> c._1 }
+      info(s"jobs per statement: ${jobs.toSeq.sorted.mkString(", ")}")
+      Seq("merge", "update", "delete").foreach { s =>
+        assert(jobs(s"after.$s") <= jobs(s"before.$s"), s"$s: $jobs")
+      }
+    } finally sc.removeSparkListener(census)
+  }
 }
