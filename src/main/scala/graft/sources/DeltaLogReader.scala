@@ -565,7 +565,7 @@ object DeltaLogReader {
         defaultRowCommitVersion = if (r.isNullAt(5)) None else Some(r.getLong(5)))
     }
     def seqOf(r: Row, i: Int): Seq[String] = if (r.isNullAt(i)) Nil else r.getSeq[String](i)
-    val cdf = spark.read.parquet(cp.toString)
+    val cdf = ParquetFooters.read(spark, Seq(cp.toString))
     def present(s: String, needs: String): Column =
       if (fieldsOf(cdf, s).contains(needs)) col(s).isNotNull else lit(false)
     // one (row kind present, its fields) pair per action kind; the
@@ -603,7 +603,7 @@ object DeltaLogReader {
     val sidecarAdds =
       if (sidecars.isEmpty) Nil
       else {
-        val sdf = spark.read.parquet(sidecars: _*)
+        val sdf = ParquetFooters.read(spark, sidecars)
         sdf.filter(col("add").isNotNull).select(addCols(sdf): _*).collect().toSeq.map(addOf)
       }
     CheckpointState(

@@ -3,7 +3,7 @@ package graft.sources
 import java.nio.file.{Files, Paths}
 import java.nio.charset.StandardCharsets
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col, lit, regexp_replace}
 
 /** Read-only interop with the PUBLIC Apache Iceberg table layout (the
@@ -627,24 +627,26 @@ object IcebergReader {
       // triple and the row-lineage first_row_id
       def opt(f: String): Column =
         if (dataFileFields.contains(f)) col(s"data_file.$f") else lit(null)
-      val withSeq = entries.withColumn("__seq", seqCol)
-      def sel(content: Int) = withSeq
-        .filter(col("data_file.content") === content && entryFilter)
-        .select(col("data_file.file_path"), col("data_file.record_count"), col("__seq"),
+      // one collect over the KB-scale entries; the rows split by
+      // content on the driver
+      val byContent = entries.filter(entryFilter)
+        .select(col("data_file.file_path"), col("data_file.record_count"), seqCol,
           opt("referenced_data_file"), opt("content_offset"),
-          opt("content_size_in_bytes"), opt("first_row_id"))
-        .collect()
+          opt("content_size_in_bytes"), opt("first_row_id"),
+          col("data_file.content").cast("int"))
+        .collect().toSeq.filterNot(_.isNullAt(7)).groupBy(_.getInt(7))
+      def sel(content: Int): Seq[Row] = byContent.getOrElse(content, Nil)
       val files = sel(0).map(r => (resolve(base, r.getString(0)), r.getLong(1), r.getLong(2),
-        if (r.isNullAt(6)) None else Some(r.getLong(6)))).toSeq
+        if (r.isNullAt(6)) None else Some(r.getLong(6))))
       // content=1 with referenced_data_file set is a v3 DELETION VECTOR;
       // without it, a v2 position-delete parquet
-      val (dvRows, delRows) = sel(1).toSeq.partition(r => !r.isNullAt(3))
+      val (dvRows, delRows) = sel(1).partition(r => !r.isNullAt(3))
       val dels = delRows.map(r => (resolve(base, r.getString(0)), r.getLong(1), r.getLong(2)))
       val dvs = dvRows.map(r => DvRef(resolve(base, r.getString(0)),
         r.getLong(4), r.getLong(5), resolve(base, r.getString(3)),
         r.getLong(1), r.getLong(2)))
       val eqDels = sel(2).map(r =>
-        (resolve(base, r.getString(0)), r.getLong(1), r.getLong(2))).toSeq
+        (resolve(base, r.getString(0)), r.getLong(1), r.getLong(2)))
       // the window NEEDS an ordering: EQUALITY deletes in a manifest
       // that tracks no sequence numbers cannot be applied soundly —
       // treating every file as sequence 0 would silently no-op them
@@ -746,13 +748,19 @@ object IcebergReader {
     * keys its new position-delete file on them). */
   private[sources] def scanWithPositions(spark: SparkSession, scan: SnapshotScan): DataFrame = {
     require(scan.dataFiles.nonEmpty, "empty snapshot scan")
+    scanWithPositions(spark, scan, footerSchema(spark, scan))
+  }
+
+  /** The first data file's footer schema, read driver-side — the same
+    * single representative footer inference reads, minus its one-task
+    * Spark job per call. */
+  private def footerSchema(spark: SparkSession, scan: SnapshotScan) =
+    org.apache.spark.sql.GraftPlanBridge.parquetFooterSchema(spark, scan.dataFiles.head._1)
+
+  private def scanWithPositions(spark: SparkSession, scan: SnapshotScan,
+                                dataSchema: org.apache.spark.sql.types.StructType): DataFrame = {
     // stamp the file identity ONCE while the plan is still a plain
-    // file-source relation (_metadata dies at the first join); the
-    // schema comes from the first file's footer driver-side — the same
-    // single representative footer inference reads, minus its one-task
-    // Spark job per call
-    val dataSchema = org.apache.spark.sql.GraftPlanBridge
-      .parquetFooterSchema(spark, scan.dataFiles.head._1)
+    // file-source relation (_metadata dies at the first join)
     val stamped = spark.read.schema(dataSchema).parquet(scan.dataFiles.map(_._1): _*)
       .withColumn("__path", normPath(col("_metadata.file_path")))
       .withColumn("__pos", col("_metadata.row_index"))
@@ -803,13 +811,12 @@ object IcebergReader {
         val masked = if (hasDels) applyDeletes(spark, scan, stamped) else stamped
         masked.select(proj: _*)
       case None =>
-        val raw = spark.read.schema(org.apache.spark.sql.GraftPlanBridge
-            .parquetFooterSchema(spark, scan.dataFiles.head._1))
-          .parquet(scan.dataFiles.map(_._1): _*)
-          .drop(LineageCols: _*)
-        val cols = raw.columns.map(col)
-        if (!hasDels) raw
-        else scanWithPositions(spark, scan).select(cols.toIndexedSeq: _*)
+        val dataSchema = footerSchema(spark, scan)
+        if (!hasDels)
+          spark.read.schema(dataSchema).parquet(scan.dataFiles.map(_._1): _*)
+            .drop(LineageCols: _*)
+        else scanWithPositions(spark, scan, dataSchema).select(dataSchema.fieldNames
+          .filterNot(n => LineageCols.exists(_.equalsIgnoreCase(n))).map(col).toIndexedSeq: _*)
     }
   }
 

@@ -6,7 +6,7 @@ import java.nio.charset.StandardCharsets
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.{col, count, lit}
+import org.apache.spark.sql.functions.{col, collect_set, count, lit}
 import org.apache.spark.sql.types._
 
 /** Write-side twin of [[IcebergReader]]: emit a PUBLIC-spec Apache
@@ -1214,13 +1214,14 @@ object IcebergWriter {
     * write shape row-level deletes exist for (a CDC ingest cannot
     * afford the CoW rewrite): find the live (file_path, pos) pairs
     * matching `predicate` via the scan's own parquet row positions,
-    * write ONE position-delete parquet (`content=1`, the spec's
-    * (file_path, pos) schema, sorted by file then pos), and commit
+    * write position-delete parquet (`content=1`, the spec's
+    * (file_path, pos) schema, sorted by file then pos; each touched
+    * data file's positions in exactly one delete file), and commit
     * snapshot N+1 whose v2 manifest carries every previous live entry
     * as EXISTING — data files keep their original sequence numbers,
     * the delete file commits at the new snapshot's sequence, and NO
-    * data file is rewritten. Stacks: a second delete adds a second
-    * delete file; already-masked rows never re-match (the match scan
+    * data file is rewritten. Stacks: a second delete adds its own
+    * delete files; already-masked rows never re-match (the match scan
     * applies the existing deletes first). Returns
     * (affectedDataFiles, newlyDeletedRows). */
   def deleteWhere(spark: SparkSession, base: String,
@@ -1241,31 +1242,30 @@ object IcebergWriter {
     // the position-delete parquet files (spec schema (file_path, pos),
     // sorted by file then pos) are staged STRAIGHT from the distributed
     // scan — matched positions never visit the driver AND never funnel
-    // through one task: the stage range-partitions by file_path, so a
-    // wide DELETE at 100 TB writes one spec-legal delete file per
-    // shuffle partition (the manifest lists them all); the commit
-    // census is one KB-scale read-back over the staged files
-    val (nFiles, delRels) = Stage(base)(data.filter(predicate.eqNullSafe(true))
+    // through one task: the stage hash-partitions by file_path, so each
+    // touched data file lands in exactly one delete file and a wide
+    // DELETE at 100 TB writes one spec-legal delete file per non-empty
+    // partition (the manifest lists them all), at most 4× the
+    // parallelism; the touched-file count rides the staging write as an
+    // observed metric, and the per-file row counts come from the staged
+    // footers, so the commit adds no job of its own
+    val parts = math.max(1, math.min(scan.dataFiles.size,
+      4 * spark.sparkContext.defaultParallelism))
+    val touched = org.apache.spark.sql.Observation()
+    val delRels = Stage(base)(data.filter(predicate.eqNullSafe(true))
       .select(col("__path").as("file_path"), col("__pos").as("pos"))
-      .repartitionByRange(math.max(1, scan.dataFiles.size),
-        col("file_path"), col("pos"))
+      .observe(touched,
+        org.apache.spark.sql.functions.size(collect_set(col("file_path"))).as("files"))
+      .repartition(parts, col("file_path"))
       .sortWithinPartitions("file_path", "pos")
       .write.parquet(_)) { staged =>
       require(staged.nonEmpty, "no delete file staged")
-      // per-part census (drops the empty parts Spark writes for empty
-      // range partitions) before the move assigns final names — counts
-      // come from the staged files' footers, no read-back data pass
-      val nonEmpty = staged.map(l => l -> ParquetFooters.rowCount(l.path)).filter(_._2 > 0)
-      if (nonEmpty.isEmpty) (0L, Nil)
-      else {
-        // global distinct: a data file whose positions straddle a range
-        // boundary appears in two delete files but counts once
-        val nFiles = spark.read.parquet(staged.map(_.path.toString): _*)
-          .select("file_path").distinct().count()
-        (nFiles, nonEmpty.zipWithIndex.map { case ((l, n), i) =>
+      // drops the empty parts Spark writes for empty partitions before
+      // the move assigns final names
+      staged.map(l => l -> ParquetFooters.rowCount(l.path)).filter(_._2 > 0)
+        .zipWithIndex.map { case ((l, n), i) =>
           (Stage.move(l, base, s"data/del-s$snap-$i.parquet"), n)
-        })
-      }
+        }
     }
     val nDel = delRels.map(_._2).sum
     if (nDel == 0L) return (0, 0L)
@@ -1277,7 +1277,7 @@ object IcebergWriter {
       snaps = IcebergReader.snapshots(base, v).map(_.id).sorted :+ snap,
       refs = IcebergReader.refs(base, v), formatVersion = 2,
       statistics = carriedStats(base, v))
-    (nFiles.toInt, nDel)
+    (touched.get("files").asInstanceOf[Int], nDel)
   }
 
   /** Iceberg v2 UPSERT the streaming-CDC way (the Flink shape): ONE

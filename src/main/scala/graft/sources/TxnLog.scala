@@ -297,7 +297,7 @@ final class TxnLog(spark: SparkSession, base: String, statCol: Option[String] = 
       // otherwise pay the scan and strand an orphan sidecar no manifest
       // points at; they degrade to always-planned instead.
       if (withBloom) bloomCol.foreach { c =>
-        val bloom = spark.read.parquet(s"$base/$rel")
+        val bloom = ParquetFooters.read(spark, Seq(s"$base/$rel"))
           .stat.bloomFilter(c, math.max(n, 1L), 0.01)
         val out = Files.newOutputStream(Paths.get(base, s"$rel.bloom"))
         try bloom.writeTo(out) finally out.close()
@@ -324,8 +324,7 @@ final class TxnLog(spark: SparkSession, base: String, statCol: Option[String] = 
       .map(_.getString(0)).toSeq
     val touched = files.filter(f => touchedDirs.exists(_.contains(s"/${f.path}/")))
     if (touched.isEmpty) return ver
-    val keep = spark.read
-      .parquet(touched.map(f => s"$base/${f.path}"): _*)
+    val keep = ParquetFooters.read(spark, touched.map(f => s"$base/${f.path}"))
       .filter(!pred)
     commit(writeGroup(keep).toSeq, touched.map(_.path))
   }
@@ -353,7 +352,7 @@ final class TxnLog(spark: SparkSession, base: String, statCol: Option[String] = 
     val touched = files.filter(f => touchedDirs.exists(_.contains(s"/${f.path}/")))
     val merged =
       if (touched.isEmpty) updates
-      else spark.read.parquet(touched.map(f => s"$base/${f.path}"): _*)
+      else ParquetFooters.read(spark, touched.map(f => s"$base/${f.path}"))
         .join(broadcast(keys), Seq(keyCol), "left_anti")
         .unionByName(updates)
     commit(writeGroup(merged).toSeq, touched.map(_.path))
@@ -370,7 +369,7 @@ final class TxnLog(spark: SparkSession, base: String, statCol: Option[String] = 
     val ver = latestVersion()
     val small = snapshotFiles(ver).filter(_.rows < maxRows)
     if (small.size < 2) return ver
-    val merged = spark.read.parquet(small.map(f => s"$base/${f.path}"): _*)
+    val merged = ParquetFooters.read(spark, small.map(f => s"$base/${f.path}"))
     commit(writeGroup(merged.coalesce(1)).toSeq, small.map(_.path))
   }
 
@@ -473,7 +472,7 @@ final class TxnLog(spark: SparkSession, base: String, statCol: Option[String] = 
   private def readFiles(files: Seq[AddFile]): DataFrame = {
     if (files.isEmpty)
       throw new IllegalStateException("empty snapshot read")
-    spark.read.parquet(files.map(f => s"$base/${f.path}"): _*)
+    ParquetFooters.read(spark, files.map(f => s"$base/${f.path}"))
   }
 }
 

@@ -456,7 +456,7 @@ class IcebergSpec extends SparkSpec {
     // the DATA file set is byte-identical — only a delete file landed
     val scan2 = IcebergReader.planSnapshot(spark, base, 2L)
     assert(scan2.dataFiles.map(_._1).sorted == files1, "DELETE rewrote data files")
-    // staging range-partitions by file_path: up to one delete file per
+    // staging hash-partitions by file_path: at most one delete file per
     // affected data file (never a single-task funnel)
     assert(scan2.posDeleteFiles.nonEmpty && scan2.posDeleteFiles.size <= 2,
       scan2.posDeleteFiles.toString)
@@ -585,8 +585,8 @@ class IcebergSpec extends SparkSpec {
     assert(scan1.dataFiles.size == 4, scan1.dataFiles.toString)
     // a DELETE matching every file must NOT funnel its (path, pos) rows
     // through one task — the r11 verdict's last weak row: the staging
-    // range-partitions by file_path, one spec-legal delete file per
-    // occupied range partition, and the manifest lists them all
+    // hash-partitions by file_path, one spec-legal delete file per
+    // occupied partition, and the manifest lists them all
     val (nf, nd) = IcebergWriter.deleteWhere(spark, base, col("k") % 2L === 0L)
     assert(nf == 4 && nd == 200L, s"($nf, $nd)")
     val scan2 = IcebergReader.planSnapshot(spark, base, 2L)
@@ -594,6 +594,37 @@ class IcebergSpec extends SparkSpec {
       s"wide DELETE serialized into ${scan2.posDeleteFiles} — single-task staging is back")
     assert(IcebergReader.read(spark, base, 2L).select("k")
       .collect().map(_.getLong(0)).sorted.toSeq == (1L to 399L by 2L))
+  }
+
+  test("position DELETE: each touched data file in one delete file, no read-back or sampling job") {
+    import org.apache.spark.sql.functions.col
+    import graft.sources.IcebergWriter
+    val base = "/tmp/graft_iceberg_test/dml_layout"
+    graft.sources.TxnLog.rmrf(base)
+    val df = spark.createDataFrame((1L to 400L).map(i => (i, i * 2L))).toDF("k", "v")
+      .repartition(4)
+    IcebergWriter.create(spark, df, base)
+    val census = new QueryCensus
+    val sc = spark.sparkContext
+    sc.addSparkListener(census)
+    val (nf, nd) =
+      try {
+        sc.setLocalProperty(QueryCensus.Key, "delete")
+        try IcebergWriter.deleteWhere(spark, base, col("k") % 3L === 0L)
+        finally sc.setLocalProperty(QueryCensus.Key, null)
+      } finally sc.removeSparkListener(census)
+    assert(nf == 4 && nd == 133L, s"($nf, $nd)")
+    // the staging shuffle's map stage and the write: no range-sampling
+    // job, no read-back of the staged files to count the touched ones
+    val (jobs, _, _) = census.drained(spark)("delete")
+    info(s"DELETE jobs: $jobs")
+    assert(jobs <= 2L, s"DELETE ran $jobs jobs")
+    val dels = IcebergReader.planSnapshot(spark, base, 2L).posDeleteFiles
+    val targets = dels.map(d => spark.read.parquet(d).select("file_path").distinct()
+      .collect().map(_.getString(0)).toSet)
+    assert(dels.size <= nf, dels.toString)
+    assert(targets.map(_.size).sum == nf, s"a data file spans delete files: $targets")
+    assert(IcebergReader.read(spark, base, 2L).count() == 267L)
   }
 
   test("equality-delete writer: upsert windows, stacking, appends carry delete files") {

@@ -49,6 +49,27 @@ class TxnLogSpec extends SparkSpec {
     assert(log.read(1).count() == 3)
   }
 
+  test("a snapshot read takes its schema from one footer: no inference job, same schema") {
+    val base = freshBase("footer")
+    val log = new TxnLog(spark, base, statCol = Some("k"))
+    log.init()
+    log.append(Seq((1L, "a", 1.5), (2L, "b", 2.5)).toDF("k", "v", "x").repartition(2))
+    log.append(Seq((3L, "c", 3.5)).toDF("k", "v", "x"))
+    val census = new QueryCensus
+    val sc = spark.sparkContext
+    sc.addSparkListener(census)
+    val df =
+      try {
+        sc.setLocalProperty(QueryCensus.Key, "read")
+        try log.read() finally sc.setLocalProperty(QueryCensus.Key, null)
+      } finally sc.removeSparkListener(census)
+    assert(!census.drained(spark).contains("read"), "building the read ran a Spark job")
+    // the schema Spark's own inference gives the same files
+    val groups = log.snapshotFiles(log.latestVersion()).map(f => s"$base/${f.path}")
+    assert(df.schema == spark.read.parquet(groups: _*).schema)
+    assert(df.count() == 3L)
+  }
+
   test("delete with no matching rows is a no-op commit-wise") {
     val base = freshBase("noop")
     val log = new TxnLog(spark, base, statCol = Some("k"))
