@@ -15,6 +15,7 @@ itself has no Python dependency.
 import glob
 import os
 import sys
+import time
 
 from pyspark.sql import SparkSession
 
@@ -24,9 +25,19 @@ SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
 
 def classpath():
     jars = glob.glob(f"{REPO}/target/scala-2.13/*.jar")
-    if jars:
-        return jars[0]
     classes = f"{REPO}/target/scala-2.13/classes"
+    if jars:
+        # a jar older than the compiled classes would smoke-test stale code
+        jar = max(jars, key=os.path.getmtime)
+        newest = max((os.path.getmtime(os.path.join(d, f))
+                      for d, _, fs in os.walk(classes) for f in fs), default=0.0)
+        if os.path.getmtime(jar) < newest:
+            def stamp(t):
+                return time.strftime("%Y-%m-%d %H:%M:%S", time.gmtime(t))
+            sys.exit(f"{jar} (mtime {stamp(os.path.getmtime(jar))} UTC) is older than "
+                     f"the newest file under {classes} (mtime {stamp(newest)} UTC) — "
+                     "run `sbt package` first")
+        return jar
     if os.path.isdir(classes):
         return classes
     sys.exit("no graft jar/classes found — run `sbt package` first")

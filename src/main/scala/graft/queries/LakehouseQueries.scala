@@ -284,7 +284,7 @@ object LakehouseQueries extends QueryGroup {
         o.filter(col("o_orderpriority") =!= "1-URGENT").repartition(4), base)
       graft.sources.DeltaLogWriter.optimize(s, base)
       Seq(1L, 2L).map { v =>
-        val nFiles = graft.sources.DeltaLogReader.snapshotFiles(Some(s), base, v).size.toLong
+        val nFiles = graft.sources.DeltaLogReader.snapshot(Some(s), base, v).adds.size.toLong
         census(graft.sources.DeltaLogReader.read(s, base, v), "version" -> v, "n_files" -> nFiles)
       }.reduce(_ unionAll _).orderBy("version")
     }),
@@ -413,7 +413,7 @@ object LakehouseQueries extends QueryGroup {
       val p2 = phase(2L, "o_year", 1996L, 1997L)
       val p3 = phase(3L, "pb", 0L, 9L)
       val vEnd = DeltaLogReader.latestVersion(base)
-      val nLive = DeltaLogReader.snapshotFiles(Some(s), base, vEnd).size.toLong
+      val nLive = DeltaLogReader.snapshot(Some(s), base, vEnd).adds.size.toLong
       val p4 = census(DeltaLogReader.read(s, base, vEnd),
         "phase" -> 4L, "n_files_planned" -> nLive)
       Seq(p1, p2, p3, p4).reduce(_ unionAll _).orderBy("phase")
@@ -577,7 +577,7 @@ object LakehouseQueries extends QueryGroup {
       graft.sources.DeltaLogWriter.optimize(s, base)
       graft.sources.DeltaLogWriter.restore(s, base, 0L)
       (0L to 2L).map { v =>
-        val nFiles = graft.sources.DeltaLogReader.snapshotFiles(Some(s), base, v).size.toLong
+        val nFiles = graft.sources.DeltaLogReader.snapshot(Some(s), base, v).adds.size.toLong
         census(graft.sources.DeltaLogReader.read(s, base, v), "version" -> v, "n_files" -> nFiles)
       }.reduce(_ unionAll _).orderBy("version")
     }),

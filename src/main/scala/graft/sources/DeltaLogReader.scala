@@ -6,6 +6,7 @@ import java.nio.charset.StandardCharsets
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Read-only interop with the PUBLIC Delta Lake transaction-log layout
   * (the open delta-io protocol spec: `_delta_log/<v padded to 20>.json`,
@@ -28,16 +29,23 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * outside [[SupportedReaderFeatures]] are rejected rather than
   * silently misread.
   *
-  * The JSON is parsed line-by-line on the driver with a tiny
-  * field-extractor (the log is KB-scale metadata; the DATA path stays
-  * fully distributed), and the spec's checkpoint mechanism bounds the
-  * replayed tail. A checkpoint parquet is decoded ONCE: one Spark read
-  * (plus one of its v2 sidecars) yields every fact it seeds — protocol,
-  * metaData, txn watermarks, domains and live adds — memoized by the
-  * file's identity (absolute path, size, full-precision mtime and
+  * ONE FOLD: a table version is one state, the [[Snapshot]] — protocol,
+  * metaData, txn watermarks, domains and live adds, with the schema,
+  * column mapping, constraints, row-id high-water mark and clustering
+  * columns derived from them. [[snapshot]] builds it from a seed plus
+  * one pass over the JSON commits after the seed, and every table fact
+  * is a field of the result: a statement resolves its snapshot once
+  * and passes it along.
+  *
+  * SEED RULE: when a session is given and `_last_checkpoint` names a
+  * version at or below the requested one, the seed is that checkpoint
+  * and the fold covers only the JSON tail after it; otherwise the fold
+  * starts from version 0 (without a session a vacuumed log fails and
+  * asks for one). A checkpoint parquet is decoded ONCE: one Spark read
+  * (plus one of its v2 sidecars) yields its whole snapshot, memoized by
+  * the file's identity (absolute path, size, full-precision mtime and
   * filesystem key, stat'ed afresh on every lookup; see
-  * [[checkpointState]]). Checks on those facts, such as the protocol
-  * guard, still run on every read.
+  * [[checkpointState]]). The protocol guard runs on every fold.
   */
 object DeltaLogReader {
 
@@ -54,7 +62,7 @@ object DeltaLogReader {
   final case class DvDescriptor(storageType: String, pathOrInlineDv: String,
                                 offset: Long, sizeInBytes: Int, cardinality: Long)
 
-  final case class DeltaAdd(path: String, size: Long, dataChange: Boolean,
+  final case class DeltaAdd(path: String, size: Long,
                             minValues: Map[String, Long] = Map.empty,
                             maxValues: Map[String, Long] = Map.empty,
                             numRecords: Long = -1L,
@@ -62,30 +70,144 @@ object DeltaLogReader {
                             baseRowId: Option[Long] = None,
                             defaultRowCommitVersion: Option[Long] = None)
 
-  /** Parse the `deletionVector` sub-object out of an add action line.
-    * The closing brace is found with a quote-aware scan: the z85
-    * alphabet puts `{`/`}` INSIDE pathOrInlineDv strings, so a naive
-    * indexOf('}') truncates the object mid-field. */
+  private[sources] def esc(s: String): String =
+    s.replace("\\", "\\\\").replace("\"", "\\\"")
+
+  private def jsonList(xs: Seq[String]): String =
+    xs.map(x => s""""${esc(x)}"""").mkString("[", ",", "]")
+
+  /** The `protocol` action. A feature list is written when its version
+    * is the table-features one (reader 3, writer 7) or it is non-empty. */
+  final case class Protocol(minReaderVersion: Int, minWriterVersion: Int,
+                            readerFeatures: Seq[String] = Nil,
+                            writerFeatures: Seq[String] = Nil) {
+    def json: String = {
+      def feats(name: String, fs: Seq[String], listed: Boolean) =
+        if (listed || fs.nonEmpty) s""","$name":${jsonList(fs)}""" else ""
+      s"""{"protocol":{"minReaderVersion":$minReaderVersion,"minWriterVersion":$minWriterVersion""" +
+        feats("readerFeatures", readerFeatures, minReaderVersion >= 3) +
+        feats("writerFeatures", writerFeatures, minWriterVersion >= 7) + "}}"
+    }
+
+    /** Raised to the table-features protocol (3, 7) with `features` on
+      * both lists, carrying every feature the legacy versions implied
+      * (the spec's mapping) — dropping, say, an implied invariants
+      * feature would let feature-blind writers append unvalidated rows.
+      * Legacy implication holds only BELOW the table-features versions. */
+    def withFeatures(features: Seq[String]): Protocol = {
+      val legacyReader = if (minReaderVersion >= 3) Nil else (2 to minReaderVersion).flatMap {
+        case 2 => Seq("columnMapping")
+        case _ => Nil
+      }
+      val legacyWriter = if (minWriterVersion >= 7) Nil else (2 to minWriterVersion).flatMap {
+        case 2 => Seq("appendOnly", "invariants")
+        case 3 => Seq("checkConstraints")
+        case 4 => Seq("generatedColumns", "changeDataFeed")
+        case 5 => Seq("columnMapping")
+        case 6 => Seq("identityColumns")
+        case _ => Nil
+      }
+      Protocol(3, 7, (readerFeatures ++ legacyReader ++ features).distinct.sorted,
+        (writerFeatures ++ legacyWriter ++ features).distinct.sorted)
+    }
+  }
+
+  /** The `metaData` action. Delta replaces table metadata wholesale, so
+    * a metadata-replacing commit writes `copy(...)` of the current one:
+    * the id is a STABLE table GUID (external readers take an id change
+    * for table replacement), and the configuration carries column
+    * mapping, row tracking and constraints. */
+  final case class MetaData(id: String, schemaString: String,
+                            partitionColumns: Seq[String] = Nil,
+                            configuration: Map[String, String] = Map.empty) {
+    def json: String = {
+      val conf = configuration.toSeq.sortBy(_._1)
+        .map { case (k, v) => s""""${esc(k)}":"${esc(v)}"""" }.mkString("{", ",", "}")
+      s"""{"metaData":{"id":"${esc(id)}","format":{"provider":"parquet","options":{}},""" +
+        s""""schemaString":"${esc(schemaString)}","partitionColumns":${jsonList(partitionColumns)},""" +
+        s""""configuration":$conf,"createdTime":0}}"""
+    }
+  }
+
+  /** The table at one version: everything the log folds to, and every
+    * fact derived from it. `domains` maps each live domainMetadata
+    * domain to its configuration string; `adds` are the live files in
+    * first-add order. */
+  final case class Snapshot(base: String, version: Long, protocol: Protocol,
+                            meta: Option[MetaData], txns: Map[String, Long],
+                            domains: Map[String, String], adds: Seq[DeltaAdd]) {
+    def metaData: MetaData = meta.getOrElse(throw new IllegalStateException(
+      s"no metaData action in $base's log or checkpoint at version $version"))
+    def partitionColumns: Seq[String] = meta.map(_.partitionColumns).getOrElse(Nil)
+    def configuration: Map[String, String] = meta.map(_.configuration).getOrElse(Map.empty)
+
+    /** The LOGICAL schema — what makes the log the source of truth over
+      * the parquet footers: files written before an ADD COLUMN lack the
+      * column, and reading them under the declared schema surfaces it
+      * as NULL (the spec's schema evolution). None when the metaData
+      * carries no parseable schema (hand-composed fixtures write "{}"). */
+    lazy val schema: Option[StructType] = meta.flatMap(m =>
+      scala.util.Try(DataType.fromJson(m.schemaString).asInstanceOf[StructType]).toOption)
+
+    /** The declared column-mapping mode ("name" | "id"), if any. */
+    def columnMappingMode: Option[String] = configuration.get("delta.columnMapping.mode")
+
+    /** Column-mapped tables (tables that ever RENAMED a column) address
+      * parquet columns by each field's `delta.columnMapping.physicalName`
+      * metadata — the logical schema is log-only, so a mapping-blind
+      * reader sees the physical names (or misses renamed columns). This
+      * is the LOGICAL schema whose field metadata carries them. */
+    lazy val mappedSchema: Option[StructType] = columnMappingMode.map { mode =>
+      require(mode == "name" || mode == "id",
+        s"delta.columnMapping.mode=$mode — only 'name' and 'id' are supported")
+      DataType.fromJson(metaData.schemaString).asInstanceOf[StructType]
+    }
+
+    /** (logical, physical) column pairs when the table is mapped. */
+    def physicalNames: Option[Seq[(String, String)]] = mappedSchema.map(_.fields.toSeq
+      .map(f => f.name -> f.metadata.getString("delta.columnMapping.physicalName")))
+
+    /** GENERATED columns: fields carrying `delta.generationExpression`. */
+    def generatedColumns: Seq[org.apache.spark.sql.types.StructField] =
+      schema.toSeq.flatMap(_.fields).filter(_.metadata.contains("delta.generationExpression"))
+
+    /** The IDENTITY column (`delta.identity.start` field metadata), if any. */
+    def identityColumn: Option[org.apache.spark.sql.types.StructField] =
+      schema.toSeq.flatMap(_.fields).find(_.metadata.contains("delta.identity.start"))
+
+    /** CHECK constraints — the `delta.constraints.<name>` configuration
+      * entries (writers MUST validate every append against them). */
+    def constraints: Map[String, String] = configuration.collect {
+      case (k, v) if k.startsWith("delta.constraints.") => k.stripPrefix("delta.constraints.") -> v
+    }
+
+    /** The MATERIALIZED (row id, row commit version) column names when
+      * row tracking is enabled — what rewrites write so ids survive. */
+    def rowTrackingCols: Option[(String, String)] =
+      if (!configuration.get("delta.enableRowTracking").contains("true")) None
+      else Some((
+        configuration.getOrElse("delta.rowTracking.materializedRowIdColumnName", "_row_id_mat"),
+        configuration.getOrElse("delta.rowTracking.materializedRowCommitVersionColumnName",
+          "_row_commit_mat")))
+
+    /** ROW TRACKING's id high-water mark from the `delta.rowTracking`
+      * domain — the highest row id any commit has assigned (ids are
+      * NEVER reused even after the carrying files are removed, which is
+      * why the mark lives in its own action). */
+    def rowIdHighWaterMark: Option[Long] = domains.get("delta.rowTracking").flatMap(c =>
+      """rowIdHighWaterMark"\s*:\s*(-?\d+)""".r.findFirstMatchIn(c).map(_.group(1).toLong))
+
+    /** LIQUID CLUSTERING columns from the `delta.clustering` domain;
+      * empty when the table declares no clustering. */
+    def clusteringColumns: Seq[String] = domains.get("delta.clustering").toSeq
+      .flatMap(c => """\["([^"]+)"\]""".r.findAllMatchIn(c).map(_.group(1)))
+  }
+
+  /** Parse the `deletionVector` sub-object out of an add action line. */
   private[sources] def dvOf(line: String): Option[DvDescriptor] = {
     val i = line.indexOf("\"deletionVector\"")
     if (i < 0) return None
-    var j = line.indexOf('{', i)
-    var depth = 0
-    var inStr = false
-    var end = -1
-    while (end < 0 && j < line.length) {
-      val c = line.charAt(j)
-      if (inStr) {
-        if (c == '\\') j += 1
-        else if (c == '"') inStr = false
-      } else c match {
-        case '"' => inStr = true
-        case '{' => depth += 1
-        case '}' => depth -= 1; if (depth == 0) end = j
-        case _ =>
-      }
-      j += 1
-    }
+    val end = objectEnd(line, line.indexOf('{', i))
     val obj = line.substring(i, if (end < 0) line.length else end + 1)
     Some(DvDescriptor(
       strField(obj, "storageType").getOrElse(
@@ -96,6 +218,31 @@ object DeltaLogReader {
       longField(obj, "sizeInBytes").getOrElse(
         throw new IllegalStateException(s"deletionVector without sizeInBytes: $line")).toInt,
       longField(obj, "cardinality").getOrElse(-1L)))
+  }
+
+  /** Index of the `}` closing the JSON object whose `{` is at `from`,
+    * found with a quote-aware scan (the z85 alphabet puts `{`/`}`
+    * inside pathOrInlineDv strings, CHECK expressions inside
+    * configuration values, so a naive indexOf('}') truncates the
+    * object); -1 when unterminated. */
+  private def objectEnd(s: String, from: Int): Int = {
+    var j = math.max(from, 0)
+    var depth = 0
+    var inStr = false
+    while (j < s.length) {
+      val c = s.charAt(j)
+      if (inStr) {
+        if (c == '\\') j += 1
+        else if (c == '"') inStr = false
+      } else c match {
+        case '"' => inStr = true
+        case '{' => depth += 1
+        case '}' => depth -= 1; if (depth == 0) return j
+        case _ =>
+      }
+      j += 1
+    }
+    -1
   }
 
   /** Integral `minValues`/`maxValues` out of an add action's embedded
@@ -110,6 +257,13 @@ object DeltaLogReader {
   }
 
   private def logDir(base: String): Path = Paths.get(base, "_delta_log")
+
+  /** The action lines of commit `v` — the one place a commit file is read. */
+  private[sources] def commitLines(base: String, v: Long): Seq[String] = {
+    val f = logDir(base).resolve(f"$v%020d.json")
+    require(Files.exists(f), s"missing Delta commit $v under $base")
+    Files.readAllLines(f, StandardCharsets.UTF_8).asScala.toSeq
+  }
 
   /** Committed JSON versions, ascending. The chain must be gap-free —
     * but it may START above 0 on a vacuumed table (pre-checkpoint
@@ -140,24 +294,7 @@ object DeltaLogReader {
   private[graft] def strField(json: String, name: String): Option[String] = {
     val key = "\"" + name + "\":\""
     val i = json.indexOf(key)
-    if (i < 0) return None
-    val sb = new StringBuilder
-    var j = i + key.length
-    while (j < json.length && json.charAt(j) != '"') {
-      val c = json.charAt(j)
-      if (c == '\\' && j + 1 < json.length) {
-        json.charAt(j + 1) match {
-          case 'u' =>
-            sb.append(Integer.parseInt(json.substring(j + 2, j + 6), 16).toChar)
-            j += 6
-          case 'n' => sb.append('\n'); j += 2
-          case 't' => sb.append('\t'); j += 2
-          case 'r' => sb.append('\r'); j += 2
-          case e => sb.append(e); j += 2
-        }
-      } else { sb.append(c); j += 1 }
-    }
-    Some(sb.toString)
+    if (i < 0) None else Some(scanString(json, i + key.length - 1)._1)
   }
 
   private[graft] def longField(json: String, name: String): Option[Long] = {
@@ -165,99 +302,33 @@ object DeltaLogReader {
     m.findFirstMatchIn(json).map(_.group(1).toLong)
   }
 
-  private def partitionColsOfLine(line: String): Option[Seq[String]] = {
-    val m = """"partitionColumns":\[([^\]]*)\]""".r
-    m.findFirstMatchIn(line).map { g =>
-      """"([^"]*)"""".r.findAllMatchIn(g.group(1)).map(_.group(1)).toSeq
-    }
-  }
-
-  /** Partition columns from the LAST metaData action at or before
-    * `version` (Delta replaces table metadata wholesale per commit).
-    * On a vacuumed table (pre-checkpoint commits deleted) the v0
-    * metaData JSON is gone — the checkpoint's folded metaData row
-    * supplies it instead, then any later JSON metaData overrides. */
-  def partitionColumns(base: String, version: Long): Seq[String] =
-    partitionColumns(None, base, version)
-
-  def partitionColumns(spark: Option[SparkSession], base: String, version: Long): Seq[String] = {
-    val ckpt = seedAt(spark, base, version)
-    var cols: Seq[String] = ckpt.map(_._2.meta.map(_._3).getOrElse(Seq.empty)).getOrElse {
-      require(versions(base).headOption.contains(0L) || version < 0,
-        s"vacuumed _delta_log under $base: table metadata needs the " +
-          "checkpoint — pass a SparkSession to partitionColumns")
-      Seq.empty
-    }
-    val from = ckpt.map(_._1 + 1).getOrElse(0L)
-    (from to version).foreach { v =>
-      val f = logDir(base).resolve(f"$v%020d.json")
-      if (Files.exists(f))
-        Files.readAllLines(f, StandardCharsets.UTF_8).asScala.foreach { line =>
-          if (line.contains("\"metaData\""))
-            partitionColsOfLine(line).foreach(cols = _)
-        }
-    }
-    cols
-  }
-
-  /** The table's protocol in force at `version`: the LAST protocol
-    * action at or before it, seeded from the checkpoint when the early
-    * commits are expired. Defaults to the base (1, 2) protocol a table
-    * created without one implies. */
-  private[graft] def latestProtocol(spark: Option[SparkSession], base: String,
-                                    version: Long): (Int, Int, Seq[String], Seq[String]) = {
-    def featsOf(line: String, name: String): Seq[String] =
-      ("\"" + name + "\":\\[([^\\]]*)\\]").r.findFirstMatchIn(line)
-        .map(m => """"([^"]*)"""".r.findAllMatchIn(m.group(1)).map(_.group(1)).toSeq)
-        .getOrElse(Seq.empty)
-    val vs = versions(base).filter(_ <= version)
-    var proto: (Int, Int, Seq[String], Seq[String]) =
-      if (vs.headOption.contains(0L)) (1, 2, Seq.empty, Seq.empty)
-      else seedAt(spark, base, version).flatMap(_._2.protocol)
-        .getOrElse((1, 2, Seq.empty, Seq.empty))
-    vs.foreach { v =>
-      val f = logDir(base).resolve(f"$v%020d.json")
-      if (Files.exists(f))
-        Files.readAllLines(f, StandardCharsets.UTF_8).asScala.foreach { line =>
-          if (line.contains("\"protocol\""))
-            longField(line, "minReaderVersion").foreach { mr =>
-              proto = (mr.toInt,
-                longField(line, "minWriterVersion").map(_.toInt).getOrElse(proto._2),
-                featsOf(line, "readerFeatures"), featsOf(line, "writerFeatures"))
-            }
-        }
-    }
-    proto
-  }
+  /** The quoted strings of the JSON array field `name`, if present. */
+  private def listField(line: String, name: String): Option[Seq[String]] =
+    ("\"" + name + "\":\\[([^\\]]*)\\]").r.findFirstMatchIn(line)
+      .map(m => """"([^"]*)"""".r.findAllMatchIn(m.group(1)).map(_.group(1)).toSeq)
 
   /** Reader features this engine honors (the table-features protocol:
     * minReaderVersion=3 lists the features a reader MUST implement). */
   private val SupportedReaderFeatures =
     // typeWidening/timestampNtz are honored because every scan enforces
-    // the LOG schema (tableSchema → spark.read.schema) and Spark's
+    // the LOG schema (Snapshot.schema → spark.read.schema) and Spark's
     // parquet reader upcasts narrow physical types natively
     Set("deletionVectors", "columnMapping", "v2Checkpoint",
       "typeWidening", "timestampNtz")
 
   /** Fail fast on tables this minimal reader cannot honor. Version 1
     * needs nothing; version 2 is column mapping by protocol version
-    * (implemented — see [[columnMappingSchema]]); version 3 is
+    * (implemented — see [[Snapshot.mappedSchema]]); version 3 is
     * readable iff every listed readerFeature is implemented here. */
-  private def assertReadable(line: String): Unit =
-    longField(line, "minReaderVersion").foreach { v =>
-      if (v == 3L) {
-        val feats = """"readerFeatures":\[([^\]]*)\]""".r
-          .findFirstMatchIn(line)
-          .map(m => """"([^"]*)"""".r.findAllMatchIn(m.group(1)).map(_.group(1)).toSet)
-          .getOrElse(Set.empty[String])
-        val unsupported = feats -- SupportedReaderFeatures
-        require(unsupported.isEmpty,
-          s"Delta readerFeatures ${unsupported.mkString(",")} not implemented " +
-            s"by this reader (supported: ${SupportedReaderFeatures.mkString(",")})")
-      } else require(v <= 2L,
-        s"Delta protocol minReaderVersion=$v requires reader features " +
-          "outside this minimal reader")
-    }
+  private def assertReadable(p: Protocol): Unit =
+    if (p.minReaderVersion == 3) {
+      val unsupported = p.readerFeatures.toSet -- SupportedReaderFeatures
+      require(unsupported.isEmpty,
+        s"Delta readerFeatures ${unsupported.mkString(",")} not implemented " +
+          s"by this reader (supported: ${SupportedReaderFeatures.mkString(",")})")
+    } else require(p.minReaderVersion <= 2,
+      s"Delta protocol minReaderVersion=${p.minReaderVersion} requires reader features " +
+        "outside this minimal reader")
 
   /** Scan one JSON string token starting at its opening quote; returns
     * (unescaped value, index past the closing quote). */
@@ -289,22 +360,7 @@ object DeltaLogReader {
     val i = line.indexOf(key)
     if (i < 0) return Map.empty
     val start = i + key.length - 1 // at '{'
-    var j = start
-    var depth = 0
-    var inStr = false
-    var end = -1
-    while (j < line.length && end < 0) {
-      val c = line.charAt(j)
-      if (inStr) {
-        if (c == '\\') j += 1
-        else if (c == '"') inStr = false
-      } else {
-        if (c == '"') inStr = true
-        else if (c == '{') depth += 1
-        else if (c == '}') { depth -= 1; if (depth == 0) end = j }
-      }
-      j += 1
-    }
+    val end = objectEnd(line, start)
     require(end > start, s"unterminated configuration object in: $line")
     val out = Map.newBuilder[String, String]
     var p = start + 1
@@ -320,28 +376,6 @@ object DeltaLogReader {
       } else p += 1
     }
     out.result()
-  }
-
-  /** The LAST metaData's (schemaString, configuration) at or before
-    * `version` — the JSON tail overriding, the checkpoint's folded
-    * metaData seeding when the early commits are already expired
-    * (without the seed, a checkpointed+expired column-mapped or
-    * constrained table would silently lose its mapping/constraints). */
-  private[sources] def latestMetaConfig(spark: Option[SparkSession], base: String,
-                                        version: Long): Option[(String, Map[String, String])] = {
-    val vs = versions(base).filter(_ <= version)
-    var found: Option[(String, Map[String, String])] =
-      if (vs.headOption.contains(0L)) None
-      else seedAt(spark, base, version).flatMap(_._2.meta).map(m => (m._2, m._4))
-    vs.foreach { v =>
-      val f = logDir(base).resolve(f"$v%020d.json")
-      if (Files.exists(f))
-        Files.readAllLines(f, StandardCharsets.UTF_8).asScala.foreach { line =>
-          if (line.contains("\"metaData\""))
-            found = Some((strField(line, "schemaString").getOrElse("{}"), configOf(line)))
-        }
-    }
-    found
   }
 
   /** Sampled loudness check for id-bound reads: the given data file's
@@ -362,57 +396,6 @@ object DeltaLogReader {
     } finally r.close()
   }
 
-  /** The table's `metaData.id` at `version` — the spec treats it as a
-    * STABLE table GUID (external readers interpret an id change as
-    * table replacement), so every metadata-replacing commit must carry
-    * the original id forward. */
-  private[sources] def latestMetaId(spark: Option[SparkSession], base: String,
-                                    version: Long): Option[String] = {
-    val vs = versions(base).filter(_ <= version)
-    var found: Option[String] =
-      if (vs.headOption.contains(0L)) None
-      else seedAt(spark, base, version).flatMap(_._2.meta).map(_._1)
-    vs.foreach { v =>
-      val f = logDir(base).resolve(f"$v%020d.json")
-      if (Files.exists(f))
-        Files.readAllLines(f, StandardCharsets.UTF_8).asScala.foreach { line =>
-          if (line.contains("\"metaData\""))
-            found = strField(line, "id").orElse(found)
-        }
-    }
-    found
-  }
-
-  /** Column-mapping (mode=name) schema of the table at `version`, if
-    * the latest metaData declares it: tables that ever RENAMED a
-    * column write `delta.columnMapping.mode=name` and address parquet
-    * columns by each field's `delta.columnMapping.physicalName`
-    * metadata — the logical schema is log-only, so a mapping-blind
-    * reader sees the physical uuid names (or misses renamed columns
-    * entirely). Returns the LOGICAL schema whose field metadata
-    * carries the physical names. */
-  private[sources] def columnMappingSchema(base: String, version: Long)
-  : Option[org.apache.spark.sql.types.StructType] =
-    columnMappingSchema(None, base, version)
-
-  private[sources] def columnMappingSchema(spark: Option[SparkSession], base: String,
-                                           version: Long)
-  : Option[org.apache.spark.sql.types.StructType] =
-    latestMetaConfig(spark, base, version)
-      .filter(_._2.contains("delta.columnMapping.mode"))
-      .map { case (schemaJson, conf) =>
-        val mode = conf("delta.columnMapping.mode")
-        require(mode == "name" || mode == "id",
-          s"delta.columnMapping.mode=$mode — only 'name' and 'id' are supported")
-        org.apache.spark.sql.types.DataType.fromJson(schemaJson)
-          .asInstanceOf[org.apache.spark.sql.types.StructType]
-      }
-
-  /** The declared column-mapping mode ("name" | "id"), if any. */
-  private[sources] def columnMappingMode(spark: Option[SparkSession], base: String,
-                                         version: Long): Option[String] =
-    latestMetaConfig(spark, base, version).flatMap(_._2.get("delta.columnMapping.mode"))
-
   /** TIMESTAMP AS OF resolution: the latest version whose commit
     * timestamp is at or before `tsMillis` — the spec reads the
     * commitInfo `timestamp` (the in-commit-provenance field; real
@@ -422,14 +405,13 @@ object DeltaLogReader {
     * commit carries no timestamp. */
   def versionAtTimestamp(base: String, tsMillis: Long): Long = {
     val stamped = versions(base).map { v =>
-      val ts = Files.readAllLines(logDir(base).resolve(f"$v%020d.json"), StandardCharsets.UTF_8)
-        .asScala.collectFirst {
-          case line if line.contains("\"commitInfo\"") =>
-            longField(line, "timestamp").getOrElse(
-              throw new IllegalStateException(s"commitInfo without timestamp at version $v"))
-        }.getOrElse(throw new IllegalArgumentException(
-          s"version $v of $base has no commitInfo timestamp — " +
-            "timestamp travel needs in-commit provenance, not file mtimes"))
+      val ts = commitLines(base, v).collectFirst {
+        case line if line.contains("\"commitInfo\"") =>
+          longField(line, "timestamp").getOrElse(
+            throw new IllegalStateException(s"commitInfo without timestamp at version $v"))
+      }.getOrElse(throw new IllegalArgumentException(
+        s"version $v of $base has no commitInfo timestamp — " +
+          "timestamp travel needs in-commit provenance, not file mtimes"))
       (v, ts)
     }
     stamped.zip(stamped.drop(1)).foreach { case ((va, a), (vb, b)) =>
@@ -454,41 +436,21 @@ object DeltaLogReader {
     * `<v>.checkpoint.parquet`, else the V2 spelling
     * `<v>.checkpoint.<uniqueStr>.parquet` (UUID-named, what
     * checkpointPolicy=v2 writers emit). */
-  private def checkpointFileOpt(base: String, cv: Long): Option[Path] = {
+  private def checkpointFile(base: String, cv: Long): Path = {
     val d = logDir(base)
     val classic = d.resolve(f"$cv%020d.checkpoint.parquet")
-    if (Files.exists(classic)) return Some(classic)
-    if (!Files.isDirectory(d)) return None
+    if (Files.exists(classic)) return classic
     val prefix = f"$cv%020d.checkpoint."
-    val matches = Fs.list(d).iterator.filter { p =>
-      val n = p.getFileName.toString
-      n.startsWith(prefix) && n.endsWith(".parquet")
-    }.toSeq
+    val matches =
+      if (!Files.isDirectory(d)) Nil
+      else Fs.list(d).iterator.filter { p =>
+        val n = p.getFileName.toString
+        n.startsWith(prefix) && n.endsWith(".parquet")
+      }.toSeq
     require(matches.size <= 1,
       s"ambiguous checkpoint for version $cv under $d: $matches")
-    matches.headOption
-  }
-
-  private def checkpointFile(base: String, cv: Long): Path =
-    checkpointFileOpt(base, cv).getOrElse(throw new IllegalStateException(
+    matches.headOption.getOrElse(throw new IllegalStateException(
       s"_last_checkpoint points at version $cv but no checkpoint parquet exists"))
-
-  /** Everything one checkpoint file folds, decoded together: the
-    * protocol (minReaderVersion, minWriterVersion, readerFeatures,
-    * writerFeatures), the metaData (id, schemaString,
-    * partitionColumns, configuration), every appId's txn watermark,
-    * the (domain, configuration) rows in file order, and the live add
-    * rows — inline ones first, then the v2 sidecars'; `adds` is None
-    * when the file carries neither add rows nor sidecar pointers.
-    * Columns an older checkpoint lacks surface empty (a protocol
-    * without feature arrays, a metaData without configuration). */
-  private[sources] final case class CheckpointState(
-      protocol: Option[(Int, Int, Seq[String], Seq[String])],
-      meta: Option[(String, String, Seq[String], Map[String, String])],
-      txns: Map[String, Long],
-      domains: Seq[(String, String)],
-      adds: Option[Seq[DeltaAdd]]) {
-    def domain(name: String): Option[String] = domains.collectFirst { case (`name`, c) => c }
   }
 
   /** A file as it is on disk now: a deleted, rebuilt or replaced file
@@ -501,9 +463,8 @@ object DeltaLogReader {
 
   /** Decoded checkpoints by file identity, least recently used evicted. */
   private val decodedCheckpoints = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[FileId, CheckpointState](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[FileId, CheckpointState]): Boolean =
+    new java.util.LinkedHashMap[FileId, Snapshot](16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[FileId, Snapshot]): Boolean =
         size > DecodedCheckpointsMax
     })
 
@@ -515,7 +476,7 @@ object DeltaLogReader {
     * mean a new top-level file. The Spark decode runs outside the
     * map's lock; concurrent first readers may decode twice and the
     * first to publish wins. */
-  private def checkpointState(spark: SparkSession, cp: Path): CheckpointState = {
+  private def checkpointState(spark: SparkSession, cp: Path): Snapshot = {
     val a = Files.readAttributes(cp, classOf[java.nio.file.attribute.BasicFileAttributes])
     val id = FileId(cp.toAbsolutePath.normalize.toString, a.size, a.lastModifiedTime, a.fileKey)
     Option(decodedCheckpoints.get(id)).getOrElse {
@@ -524,24 +485,19 @@ object DeltaLogReader {
     }
   }
 
-  /** The checkpoint `_last_checkpoint` names, with its version, when it
-    * is usable for `version` and a session is given to decode it. */
-  private[sources] def seedAt(spark: Option[SparkSession], base: String,
-                     version: Long): Option[(Long, CheckpointState)] =
-    for (s <- spark; cv <- checkpointAt(base, version))
-      yield (cv, checkpointState(s, checkpointFile(base, cv)))
-
   /** One read of the checkpoint file and one action over every non-null
     * protocol, metaData, txn, domainMetadata, sidecar and add row; v2
     * sidecars' add rows follow in one more read when the file points at
-    * any (their paths are only known from the first). */
-  private def decodeCheckpoint(spark: SparkSession, cp: Path): CheckpointState = {
+    * any (their paths are only known from the first). Columns an older
+    * checkpoint lacks surface empty (a protocol without feature arrays,
+    * a metaData without configuration); a file with neither add rows
+    * nor sidecar pointers is refused. */
+  private def decodeCheckpoint(spark: SparkSession, cp: Path): Snapshot = {
     import org.apache.spark.sql.{Column, Row}
     import org.apache.spark.sql.functions.{col, lit, struct, to_json, when}
     def fieldsOf(df: DataFrame, s: String): Set[String] =
       if (!df.columns.contains(s)) Set.empty
-      else df.schema(s).dataType
-        .asInstanceOf[org.apache.spark.sql.types.StructType].fieldNames.toSet
+      else df.schema(s).dataType.asInstanceOf[StructType].fieldNames.toSet
     def opt(df: DataFrame, s: String, f: String, tpe: String): Column =
       if (fieldsOf(df, s).contains(f)) col(s"$s.$f").cast(tpe) else lit(null).cast(tpe)
     // row-tracking fields must SURVIVE checkpointing: after expireLog a
@@ -556,7 +512,7 @@ object DeltaLogReader {
       val path = Option(r.getString(0)).getOrElse(
         throw new IllegalStateException(s"add row without path in checkpoint $cp"))
       val stats = if (r.isNullAt(2)) "" else r.getString(2)
-      DeltaAdd(path, if (r.isNullAt(1)) 0L else r.getLong(1), dataChange = true,
+      DeltaAdd(path, if (r.isNullAt(1)) 0L else r.getLong(1),
         minValues = statBounds(stats, "minValues"),
         maxValues = statBounds(stats, "maxValues"),
         numRecords = DeltaStream.numRecords(stats),
@@ -600,68 +556,52 @@ object DeltaLogReader {
     val sidecars = kind(4).map(_.getString(0))
       .map(p => if (p.startsWith("/") || p.contains("://")) p
         else cp.getParent.resolve("_sidecars").resolve(p).toString)
+    require(cdf.columns.contains("add") || sidecars.nonEmpty,
+      s"checkpoint $cp carries neither add rows nor sidecar pointers")
     val sidecarAdds =
       if (sidecars.isEmpty) Nil
       else {
         val sdf = ParquetFooters.read(spark, sidecars)
         sdf.filter(col("add").isNotNull).select(addCols(sdf): _*).collect().toSeq.map(addOf)
       }
-    CheckpointState(
-      protocol = kind(0).headOption.map(r =>
-        (r.getInt(0), if (r.isNullAt(1)) 2 else r.getInt(1), seqOf(r, 2), seqOf(r, 3))),
-      meta = kind(1).headOption.map(r => (r.getString(0), r.getString(1), seqOf(r, 2),
+    Snapshot(cp.getParent.getParent.toString, cp.getFileName.toString.take(20).toLong,
+      protocol = kind(0).headOption.map(r => Protocol(r.getInt(0),
+        if (r.isNullAt(1)) 2 else r.getInt(1), seqOf(r, 2), seqOf(r, 3))).getOrElse(Protocol(1, 2)),
+      meta = kind(1).headOption.map(r => MetaData(
+        Option(r.getString(0)).getOrElse("graft"), Option(r.getString(1)).getOrElse("{}"),
+        seqOf(r, 2),
         if (r.isNullAt(3)) Map.empty[String, String] else r.getMap[String, String](3).toMap)),
       txns = kind(2).filterNot(_.isNullAt(1)).map(r => r.getString(0) -> r.getLong(1)).toMap,
-      domains = kind(3).map(r => (r.getString(0), r.getString(1))),
-      adds =
-        if (!cdf.columns.contains("add") && sidecars.isEmpty) None
-        else Some(kind(5).map(addOf) ++ sidecarAdds))
+      domains = kind(3).map(r => r.getString(0) -> Option(r.getString(1)).getOrElse("")).toMap,
+      adds = kind(5).map(addOf) ++ sidecarAdds)
   }
 
-  /** Live file set at `version`.
-    *
-    * With a usable checkpoint (the spec's replay-bounding mechanism —
-    * `_last_checkpoint` → `<v>.checkpoint.parquet`, one row per live
-    * action): seed the live set from the checkpoint's decoded `add`
-    * rows ([[checkpointState]]), then replay ONLY the JSON commits
-    * after it. Without one: full action replay from 0. Either path
-    * applies the same add/remove algebra; on a long-lived table the
-    * checkpoint turns O(history) replay into O(tail). */
-  def snapshotFiles(base: String, version: Long): Seq[DeltaAdd] =
-    snapshotFiles(None, base, version)
-
-  def snapshotFiles(spark: Option[SparkSession], base: String, version: Long): Seq[DeltaAdd] = {
-    val live = scala.collection.mutable.LinkedHashMap.empty[String, DeltaAdd]
-    val ckpt = seedAt(spark, base, version)
-    ckpt.foreach { case (cv, st) =>
-      // the checkpoint carries the protocol action too — honor the
-      // guard WITH its feature list (a v3 protocol reconstructed
-      // featureless would skip the unsupported-feature check entirely)
-      st.protocol.foreach { case (mr, _, rf, _) =>
-        val feats = rf.map(f => s""""$f"""").mkString("[", ",", "]")
-        assertReadable(
-          s"""{"protocol":{"minReaderVersion":$mr,"readerFeatures":$feats}}""")
-      }
-      st.adds.getOrElse(throw new IllegalArgumentException(
-          s"checkpoint ${checkpointFile(base, cv)} carries neither add rows nor sidecar pointers"))
-        .foreach(a => live(a.path) = a)
-    }
-    val from = ckpt.map(_._1 + 1).getOrElse(0L)
-    (from to version).foreach { v =>
-      val f = logDir(base).resolve(f"$v%020d.json")
-      require(Files.exists(f), s"missing Delta commit $v under $base")
-      // removes apply BEFORE adds within one commit: a DV-writing DML
-      // legally removes a path and re-adds it with a new deletionVector
-      // in the same commit (the only same-path add+remove the spec
-      // allows); for ordinary commits the order is immaterial
+  /** The table at `version`: the seed (see the object doc's seed rule)
+    * folded forward over every JSON commit after it. One fold applies
+    * every action kind: removes before adds within a commit (a
+    * DV-writing DML legally removes a path and re-adds it with a new
+    * deletionVector in the same commit; for ordinary commits the order
+    * is immaterial), the last protocol and metaData win, txn watermarks
+    * keep each appId's maximum, domains replace by name. */
+  def snapshot(spark: Option[SparkSession], base: String, version: Long): Snapshot = {
+    val seed = for (s <- spark; cv <- checkpointAt(base, version))
+      yield checkpointState(s, checkpointFile(base, cv))
+    require(seed.nonEmpty || spark.nonEmpty || !versions(base).headOption.exists(_ > 0),
+      s"vacuumed _delta_log under $base: table state needs the checkpoint — pass a SparkSession")
+    val st = seed.getOrElse(Snapshot(base, -1L, Protocol(1, 2), None, Map.empty, Map.empty, Nil))
+    var protocol = st.protocol
+    var meta = st.meta
+    val txns = scala.collection.mutable.Map.empty[String, Long] ++= st.txns
+    val domains = scala.collection.mutable.Map.empty[String, String] ++= st.domains
+    val live = scala.collection.mutable.LinkedHashMap.empty[String, DeltaAdd] ++=
+      st.adds.map(a => a.path -> a)
+    (st.version + 1 to version).foreach { v =>
       val adds = Seq.newBuilder[DeltaAdd]
-      Files.readAllLines(f, StandardCharsets.UTF_8).asScala.foreach { line =>
-        if (line.contains("\"protocol\"")) assertReadable(line)
+      commitLines(base, v).foreach { line =>
         if (line.contains("\"add\"")) {
-          val p = strField(line, "path").getOrElse(
-            throw new IllegalStateException(s"add action without path: $line"))
-          adds += DeltaAdd(p, longField(line, "size").getOrElse(0L),
-            dataChange = !line.contains("\"dataChange\":false"),
+          adds += DeltaAdd(strField(line, "path").getOrElse(
+              throw new IllegalStateException(s"add action without path: $line")),
+            longField(line, "size").getOrElse(0L),
             minValues = statBounds(line, "minValues"),
             maxValues = statBounds(line, "maxValues"),
             numRecords = DeltaStream.numRecords(line),
@@ -670,12 +610,43 @@ object DeltaLogReader {
             defaultRowCommitVersion = longField(line, "defaultRowCommitVersion"))
         } else if (line.contains("\"remove\"")) {
           strField(line, "path").foreach(live.remove)
+        } else if (line.contains("\"metaData\"")) {
+          meta = Some(MetaData(strField(line, "id").getOrElse("graft"),
+            strField(line, "schemaString").getOrElse("{}"),
+            listField(line, "partitionColumns").getOrElse(Nil), configOf(line)))
+        } else if (line.contains("\"protocol\"")) {
+          longField(line, "minReaderVersion").foreach { mr =>
+            protocol = Protocol(mr.toInt,
+              longField(line, "minWriterVersion").map(_.toInt).getOrElse(protocol.minWriterVersion),
+              listField(line, "readerFeatures").getOrElse(Nil),
+              listField(line, "writerFeatures").getOrElse(Nil))
+          }
+        } else if (line.contains("\"txn\"")) {
+          val app = strField(line, "appId").getOrElse(
+            throw new IllegalStateException(s"txn action without appId: $line"))
+          val tv = longField(line, "version").getOrElse(
+            throw new IllegalStateException(s"txn action without version: $line"))
+          txns(app) = math.max(tv, txns.getOrElse(app, Long.MinValue))
+        } else if (line.contains("\"domainMetadata\"")) {
+          strField(line, "domain").foreach { d =>
+            if (line.contains("\"removed\":true")) domains.remove(d)
+            else domains(d) = strField(line, "configuration").getOrElse("")
+          }
         }
       }
       adds.result().foreach(a => live(a.path) = a)
     }
-    live.values.toSeq
+    assertReadable(protocol)
+    Snapshot(base, version, protocol, meta, txns.toMap, domains.toMap, live.values.toSeq)
   }
+
+  /** The latest version's snapshot. */
+  def snapshot(spark: SparkSession, base: String): Snapshot =
+    snapshot(Some(spark), base, latestVersion(base))
+
+  /** Live file set at `version`, folded from version 0. */
+  def snapshotFiles(base: String, version: Long): Seq[DeltaAdd] =
+    snapshot(None, base, version).adds
 
   /** The spelling `_metadata.file_path` uses for an absolute path —
     * URI-ENCODED (space → %20 etc.) with the `file:` scheme stripped to
@@ -731,20 +702,6 @@ object DeltaLogReader {
       .select(cols.toIndexedSeq: _*)
   }
 
-  /** Read a SUBSET of a snapshot's files with their deletion vectors
-    * applied (partition values recovered via basePath on partitioned
-    * tables) — the writer's REORG/purge path reads exactly the
-    * DV-carrying files this way. */
-  private[sources] def readAddsWithDvs(spark: SparkSession, base: String,
-                                       adds: Seq[DeltaAdd],
-                                       pcols: Seq[String]): DataFrame = {
-    val files = adds.map(a => Paths.get(base).resolve(a.path).toString)
-    val data =
-      if (pcols.isEmpty) spark.read.parquet(files: _*)
-      else spark.read.option("basePath", base).parquet(files: _*)
-    applyDvs(spark, base, adds, data)
-  }
-
   /** DV anti-join that KEEPS every column of `stamped` (which must
     * already carry normalized `__path` + `__pos`) — the shared mask for
     * writer paths that need positions or materialized row ids to
@@ -772,60 +729,6 @@ object DeltaLogReader {
       "left_anti")
   }
 
-  /** ROW TRACKING's id high-water mark: the LAST
-    * `domainMetadata(domain=delta.rowTracking)` action's
-    * `rowIdHighWaterMark` at or before `version` — the highest row id
-    * any commit has assigned (fresh ids start above it, and ids are
-    * NEVER reused even after the carrying files are removed, which is
-    * exactly why the mark lives in its own action rather than being
-    * derived from live adds). Seeds from a checkpoint's folded
-    * domainMetadata row when the early commits are expired. */
-  def rowIdHighWaterMark(spark: Option[SparkSession], base: String,
-                         version: Long): Option[Long] = {
-    val vs = versions(base).filter(_ <= version)
-    val hwmRe = """rowIdHighWaterMark\\?"\s*:\s*(-?\d+)""".r
-    var found: Option[Long] =
-      if (vs.headOption.contains(0L)) None
-      else seedAt(spark, base, version).flatMap(_._2.domain("delta.rowTracking"))
-        .flatMap(c => hwmRe.findFirstMatchIn(c).map(_.group(1).toLong))
-    vs.foreach { v =>
-      val f = logDir(base).resolve(f"$v%020d.json")
-      if (Files.exists(f))
-        Files.readAllLines(f, StandardCharsets.UTF_8).asScala.foreach { line =>
-          if (line.contains("\"domainMetadata\"") && line.contains("delta.rowTracking"))
-            found = hwmRe.findFirstMatchIn(line).map(_.group(1).toLong).orElse(found)
-        }
-    }
-    found
-  }
-
-  /** LIQUID CLUSTERING columns: the LAST `delta.clustering` domain's
-    * `clusteringColumns` at or before `version` (seeded from a
-    * checkpoint's folded domain rows when the early commits are
-    * expired). Empty when the table declares no clustering. */
-  def clusteringColumns(spark: Option[SparkSession], base: String,
-                        version: Long): Seq[String] = {
-    val colRe = """\[\\?"([^"\\]+)\\?"\]""".r
-    def parse(conf: String): Seq[String] =
-      colRe.findAllMatchIn(conf).map(_.group(1)).toSeq
-    val vs = versions(base).filter(_ <= version)
-    var found: Seq[String] =
-      if (vs.headOption.contains(0L)) Nil
-      else seedAt(spark, base, version).flatMap(_._2.domain("delta.clustering"))
-        .map(parse).getOrElse(Nil)
-    vs.foreach { v =>
-      val f = logDir(base).resolve(f"$v%020d.json")
-      if (Files.exists(f))
-        Files.readAllLines(f, StandardCharsets.UTF_8).asScala.foreach { line =>
-          if (line.contains("\"domainMetadata\"") && line.contains("delta.clustering")) {
-            val got = parse(line)
-            if (got.nonEmpty) found = got
-          }
-        }
-    }
-    found
-  }
-
   /** ROW-TRACKING read: the snapshot's live rows plus `_row_id` and
     * `_row_commit_version` — each file's MATERIALIZED columns when
     * present (what OPTIMIZE writes so rewrites preserve ids), else
@@ -835,23 +738,17 @@ object DeltaLogReader {
     * via ONE broadcast join over a files-sized frame. */
   def readRowIds(spark: SparkSession, base: String, version: Long): DataFrame = {
     import org.apache.spark.sql.functions.{broadcast, coalesce, col, lit, regexp_replace}
-    import org.apache.spark.sql.Encoders
-    val conf = latestMetaConfig(Some(spark), base, version).map(_._2).getOrElse(Map.empty)
-    require(conf.get("delta.enableRowTracking").contains("true"),
-      s"$base does not enable row tracking")
-    val matId = conf.getOrElse("delta.rowTracking.materializedRowIdColumnName",
-      "_row_id_mat")
-    val matVer = conf.getOrElse("delta.rowTracking.materializedRowCommitVersionColumnName",
-      "_row_commit_mat")
-    val adds = snapshotFiles(Some(spark), base, version)
+    val snap = snapshot(Some(spark), base, version)
+    val (matId, matVer) = snap.rowTrackingCols.getOrElse(
+      throw new IllegalArgumentException(s"$base does not enable row tracking"))
+    val adds = snap.adds
     require(adds.nonEmpty, s"empty snapshot $version of $base")
     val absBase = Paths.get(base).toAbsolutePath.normalize
     def absOf(rel: String) = absBase.resolve(rel).normalize.toString
     def keyOf(rel: String) = scanSpelling(absBase.resolve(rel))
-    val pcols = partitionColumns(Some(spark), base, version)
     val reader = spark.read.option("mergeSchema", "true")
     val raw =
-      (if (pcols.isEmpty) reader else reader.option("basePath", base))
+      (if (snap.partitionColumns.isEmpty) reader else reader.option("basePath", base))
         .parquet(adds.map(a => absOf(a.path)): _*)
     val stamped = raw
       .withColumn("__path", regexp_replace(col("_metadata.file_path"), "^file:/*", "/"))
@@ -866,59 +763,15 @@ object DeltaLogReader {
     // on a column-mapped table the files carry PHYSICAL names — surface
     // the logical spelling like read() does (mat columns stay physical;
     // they are config-named, not schema fields)
-    val colMap = columnMappingSchema(Some(spark), base, version).map(_.fields.toSeq
-      .map(f => f.metadata.getString("delta.columnMapping.physicalName") -> f.name))
-    val userCols = raw.columns.filterNot(c => c == matId || c == matVer).map { c =>
-      colMap.flatMap(_.collectFirst { case (p, l) if p == c => l }) match {
-        case Some(l) => col(c).as(l)
-        case None    => col(c)
-      }
-    }.toSeq
+    val logicalOf = snap.physicalNames.getOrElse(Nil).map(_.swap).toMap
+    val userCols = raw.columns.filterNot(c => c == matId || c == matVer)
+      .map(c => logicalOf.get(c).fold(col(c))(col(c).as(_))).toSeq
     masked.join(broadcast(metaDf), col("__path") === col("__rt_path"))
       .select(userCols ++ Seq(
         coalesce(matCol(matId), col("__rt_base") + col("__pos"))
           .cast("long").as("_row_id"),
         coalesce(matCol(matVer), col("__rt_ver"))
           .cast("long").as("_row_commit_version")): _*)
-  }
-
-  /** Table CHECK constraints at `version` — the last metaData's
-    * `delta.constraints.<name>` configuration entries (the spec's
-    * constraint storage; writers MUST validate every append against
-    * them, which is why declaring one bumps minWriterVersion to 3). */
-  def constraintsOf(base: String, version: Long): Map[String, String] =
-    constraintsOf(None, base, version)
-
-  def constraintsOf(spark: Option[SparkSession], base: String,
-                    version: Long): Map[String, String] =
-    latestMetaConfig(spark, base, version).map(_._2.collect {
-      case (k, v) if k.startsWith("delta.constraints.") =>
-        k.stripPrefix("delta.constraints.") -> v
-    }).getOrElse(Map.empty)
-
-  /** The table's LOGICAL schema at `version` — the last metaData's
-    * schemaString (from the JSON tail, else the checkpoint's folded
-    * metaData). None when the metaData carries no parseable schema
-    * (hand-composed probe fixtures write "{}"). This is what makes the
-    * log the source of truth over the parquet footers: files written
-    * before an ADD COLUMN lack the column, and reading them under the
-    * declared schema surfaces it as NULL — the spec's schema
-    * evolution. */
-  private[sources] def tableSchema(spark: Option[SparkSession], base: String,
-                                   version: Long): Option[org.apache.spark.sql.types.StructType] = {
-    var json: Option[String] = None
-    val vs = versions(base).filter(_ <= version)
-    vs.foreach { v =>
-      Files.readAllLines(logDir(base).resolve(f"$v%020d.json"), StandardCharsets.UTF_8)
-        .asScala.foreach { line =>
-          if (line.contains("\"metaData\"")) json = strField(line, "schemaString")
-        }
-    }
-    if (json.isEmpty && !vs.headOption.contains(0L))
-      json = seedAt(spark, base, version).flatMap(_._2.meta).map(_._2)
-    json.flatMap(j =>
-      scala.util.Try(org.apache.spark.sql.types.DataType.fromJson(j)
-        .asInstanceOf[org.apache.spark.sql.types.StructType]).toOption)
   }
 
   /** Snapshot read at an explicit version (time travel). The live list
@@ -931,12 +784,20 @@ object DeltaLogReader {
     * and partition pruning keeps working. A partitioned table with
     * non-hive paths would need per-file literal stitching — rejected
     * fast rather than silently dropping columns. */
-  def read(spark: SparkSession, base: String, version: Long): DataFrame = {
-    val adds = snapshotFiles(Some(spark), base, version)
+  def read(spark: SparkSession, base: String, version: Long): DataFrame =
+    read(spark, snapshot(Some(spark), base, version))
+
+  /** Latest-snapshot read. */
+  def read(spark: SparkSession, base: String): DataFrame =
+    read(spark, base, latestVersion(base))
+
+  /** Read of a resolved snapshot. */
+  def read(spark: SparkSession, snap: Snapshot): DataFrame = {
+    val (base, version, adds) = (snap.base, snap.version, snap.adds)
     require(adds.nonEmpty, s"empty snapshot at version $version of $base")
     val files = adds.map(a => Paths.get(base).resolve(a.path).toString)
-    val pcols = partitionColumns(Some(spark), base, version)
-    columnMappingSchema(Some(spark), base, version).foreach { logical =>
+    val pcols = snap.partitionColumns
+    snap.mappedSchema.foreach { logical =>
       // mode=id: columns bind by the PARQUET FIELD ID each file embeds
       // — names are immaterial (the variant that survives engines that
       // rewrite physical names). Spark's own field-id resolution does
@@ -945,8 +806,8 @@ object DeltaLogReader {
       // pass is needed and a metaData-only RENAME just changes the
       // requested spelling. Files without embedded ids fail loudly
       // (ignoreMissing stays false) rather than mis-bind.
-      if (columnMappingMode(Some(spark), base, version).contains("id")) {
-        import org.apache.spark.sql.types.{MetadataBuilder, StructField, StructType}
+      if (snap.columnMappingMode.contains("id")) {
+        import org.apache.spark.sql.types.{MetadataBuilder, StructField}
         val readSchema = StructType(logical.fields.map(f =>
           StructField(f.name, f.dataType, f.nullable, new MetadataBuilder()
             .putLong("parquet.field.id", f.metadata.getLong("delta.columnMapping.id"))
@@ -988,7 +849,7 @@ object DeltaLogReader {
       // files narrower than a WIDENED type upcast natively in the
       // parquet reader (int32→int64 etc.) — both halves of schema
       // evolution on a mapped table, with zero data movement
-      val physSchema = org.apache.spark.sql.types.StructType(
+      val physSchema = StructType(
         logical.fields.map(f => org.apache.spark.sql.types.StructField(
           physByLogical(f.name), f.dataType, nullable = true)))
       val physical =
@@ -1007,53 +868,37 @@ object DeltaLogReader {
       }
       return physical.select(renames.toIndexedSeq: _*)
     }
-    val data = if (pcols.isEmpty) {
-      // enforce the LOG's schema over the footers (non-partitioned,
-      // non-mapped tables): pre-ADD-COLUMN files surface the new
-      // column as NULL instead of the scan schema depending on which
-      // footer Spark sampled — the spec's schema evolution
-      tableSchema(Some(spark), base, version) match {
-        case Some(logical) => spark.read.schema(logical).parquet(files: _*)
-        case None          => spark.read.parquet(files: _*)
-      }
-    } else {
-      val hive = adds.forall(a => pcols.forall(c => a.path.contains(c + "=")))
-      require(hive,
+    if (pcols.nonEmpty)
+      require(adds.forall(a => pcols.forall(c => a.path.contains(c + "="))),
         s"partitioned Delta table (${pcols.mkString(",")}) with non-hive " +
           "data paths — partition values live only in the log; this " +
           "minimal reader supports hive-style layouts only")
-      // enforce the LOG's schema here too: partition columns keep their
-      // DECLARED types (no dir-name inference drift) and pre-ADD-COLUMN
-      // files surface evolved columns as NULL
-      val reader = spark.read.option("basePath", base)
-      tableSchema(Some(spark), base, version) match {
-        case Some(logical) => reader.schema(logical).parquet(files: _*)
-        case None          => reader.parquet(files: _*)
-      }
-    }
-    applyDvs(spark, base, adds, data)
+    // enforce the LOG's schema over the footers (non-mapped tables):
+    // pre-ADD-COLUMN files surface the new column as NULL instead of the
+    // scan schema depending on which footer Spark sampled — the spec's
+    // schema evolution — and partition columns keep their DECLARED
+    // types (no dir-name inference drift)
+    val reader = if (pcols.isEmpty) spark.read else spark.read.option("basePath", base)
+    applyDvs(spark, base, adds,
+      snap.schema.fold(reader)(reader.schema).parquet(files: _*))
   }
-
-  /** Latest-snapshot read. */
-  def read(spark: SparkSession, base: String): DataFrame =
-    read(spark, base, latestVersion(base))
 
   /** The live files a `[lo, hi]` range read on `column` must open —
     * Delta data skipping: files whose `minValues`/`maxValues` for the
     * column miss the range never reach the parquet source. Files
     * without bounds for the column are KEPT (can't prune what isn't
-    * tracked — also what makes checkpoint-seeded adds, which carry no
-    * stats, safe). */
+    * tracked). */
   def filesWhere(spark: SparkSession, base: String, version: Long,
-                 column: String, lo: Long, hi: Long): Seq[DeltaAdd] = {
+                 column: String, lo: Long, hi: Long): Seq[DeltaAdd] =
+    filesWhere(snapshot(Some(spark), base, version), column, lo, hi)
+
+  private def filesWhere(snap: Snapshot, column: String, lo: Long, hi: Long): Seq[DeltaAdd] = {
     require(lo <= hi, s"empty range [$lo, $hi]")
     // stats keys are PHYSICAL column names on a mapped table — accept
     // the logical spelling and translate
-    val key = columnMappingSchema(Some(spark), base, version)
-      .flatMap(_.fields.collectFirst { case f if f.name == column =>
-        f.metadata.getString("delta.columnMapping.physicalName") })
+    val key = snap.physicalNames.flatMap(_.collectFirst { case (`column`, p) => p })
       .getOrElse(column)
-    snapshotFiles(Some(spark), base, version).filter { a =>
+    snap.adds.filter { a =>
       (a.minValues.get(key), a.maxValues.get(key)) match {
         case (Some(mn), Some(mx)) => mn <= hi && mx >= lo
         case _                    => true
@@ -1066,20 +911,21 @@ object DeltaLogReader {
     * keeps the engine honest inside partially-overlapping files. */
   def readWhere(spark: SparkSession, base: String, version: Long,
                 column: String, lo: Long, hi: Long): DataFrame = {
-    val files = filesWhere(spark, base, version, column, lo, hi)
+    val snap = snapshot(Some(spark), base, version)
+    val files = filesWhere(snap, column, lo, hi)
     require(files.nonEmpty, s"no file of $base@$version overlaps $column in [$lo, $hi]")
     val paths = files.map(a => Paths.get(base).resolve(a.path).toString)
     // enforce the LOG's schema like read() does: without it, a
     // row-tracked table's materialized physical columns
     // (_row_id_mat/_row_commit_mat) leak into results after OPTIMIZE
     // and mixed-schema file sets read inconsistently
-    val pcols = partitionColumns(Some(spark), base, version)
-    val reader = if (pcols.isEmpty) spark.read else spark.read.option("basePath", base)
-    columnMappingSchema(Some(spark), base, version) match {
+    val reader =
+      if (snap.partitionColumns.isEmpty) spark.read else spark.read.option("basePath", base)
+    snap.mappedSchema match {
       case Some(logical) =>
         // mapped table: files carry PHYSICAL names — enforce the schema
         // under its physical spelling, then alias back to logical
-        import org.apache.spark.sql.types.{StructField, StructType}
+        import org.apache.spark.sql.types.StructField
         val phys = StructType(logical.fields.map(f => StructField(
           f.metadata.getString("delta.columnMapping.physicalName"),
           f.dataType, f.nullable)))
@@ -1088,41 +934,8 @@ object DeltaLogReader {
           .col(f.metadata.getString("delta.columnMapping.physicalName"))
           .as(f.name)).toIndexedSeq: _*)
       case None =>
-        val data = tableSchema(Some(spark), base, version) match {
-          case Some(logical) => reader.schema(logical).parquet(paths: _*)
-          case None          => reader.parquet(paths: _*)
-        }
-        applyDvs(spark, base, files, data)
+        applyDvs(spark, base, files, snap.schema.fold(reader)(reader.schema).parquet(paths: _*))
     }
-  }
-
-  /** Highest `txn` (SetTransaction) version recorded for `appId` — the
-    * spec's idempotent-writer watermark. A streaming sink consults it
-    * to skip redelivered micro-batches ([[DeltaLogWriter.appendIfAbsent]]).
-    * Scans the KB-scale commit JSON; on a vacuumed table the
-    * checkpoint's folded txn rows supply the watermark the expired
-    * commits carried (pass a SparkSession to read them), so an
-    * expireLog never re-opens the exactly-once window. */
-  def lastTxnVersion(base: String, appId: String): Option[Long] =
-    lastTxnVersion(None, base, appId)
-
-  def lastTxnVersion(spark: Option[SparkSession], base: String, appId: String): Option[Long] = {
-    val quoted = "\"appId\":\"" + appId + "\""
-    val fromCkpt = for {
-      s <- spark
-      cv <- checkpointAt(base, Long.MaxValue)
-      cp <- checkpointFileOpt(base, cv)
-      tv <- checkpointState(s, cp).txns.get(appId)
-    } yield tv
-    val fromJson = versions(base).flatMap { v =>
-      Files.readAllLines(logDir(base).resolve(f"$v%020d.json"), StandardCharsets.UTF_8)
-        .asScala.collect {
-          case line if line.contains("\"txn\"") && line.contains(quoted) =>
-            longField(line, "version").getOrElse(
-              throw new IllegalStateException(s"txn action without version: $line"))
-        }
-    }.maxOption
-    (fromCkpt.toSeq ++ fromJson.toSeq).maxOption
   }
 
   /** Change Data Feed over versions [fromVersion, toVersion] — the
@@ -1149,10 +962,10 @@ object DeltaLogReader {
     import org.apache.spark.sql.functions.{col, lit}
     require(fromVersion <= toVersion, s"empty CDF range [$fromVersion, $toVersion]")
     val parts = (fromVersion to toVersion).flatMap { v =>
-      val f = logDir(base).resolve(f"$v%020d.json")
-      require(Files.exists(f), s"missing Delta commit $v under $base")
-      val lines = Files.readAllLines(f, StandardCharsets.UTF_8).asScala.toSeq
-      lines.filter(_.contains("\"protocol\"")).foreach(assertReadable)
+      val lines = commitLines(base, v)
+      // the snapshot at v carries the version's protocol guard and its
+      // column mapping
+      val snap = snapshot(Some(spark), base, v)
       // cdc actions are declared with dataChange=false by the spec (the
       // data change is what they DESCRIBE) — the no-change exclusion
       // applies only to add/remove
@@ -1170,8 +983,7 @@ object DeltaLogReader {
       // mapped tables: data and _change_data files carry PHYSICAL
       // names — surface each commit's rows under ITS version's logical
       // schema (a rename commit changes the spelling going forward)
-      val colMap = columnMappingSchema(Some(spark), base, v).map(_.fields.toSeq
-        .map(f => f.metadata.getString("delta.columnMapping.physicalName") -> f.name))
+      val colMap = snap.physicalNames
       reads.collect { case (files, tag) if files.nonEmpty =>
         val abs = files.map(p => Paths.get(base).resolve(p).toString)
         // derived DELETE pre-images from removed files must be read
@@ -1181,7 +993,7 @@ object DeltaLogReader {
         val df0 =
           if (tag.contains("delete")) {
             val fileSet = files.toSet
-            val removedAdds = snapshotFiles(Some(spark), base, v - 1)
+            val removedAdds = snapshot(Some(spark), base, v - 1).adds
               .filter(a => fileSet.contains(a.path))
             if (removedAdds.exists(_.dv.nonEmpty)) {
               import org.apache.spark.sql.functions.regexp_replace
@@ -1192,7 +1004,7 @@ object DeltaLogReader {
               dvMaskKeep(spark, base, removedAdds, stamped).drop("__path", "__pos")
             } else spark.read.parquet(abs: _*)
           } else spark.read.parquet(abs: _*)
-        val df = colMap.fold(df0)(_.foldLeft(df0) { case (d, (p, l)) =>
+        val df = colMap.fold(df0)(_.foldLeft(df0) { case (d, (l, p)) =>
           if (p != l && d.columns.contains(p)) d.withColumnRenamed(p, l) else d })
         tag.fold(df)(t => df.withColumn("_change_type", lit(t)))
           .withColumn("_commit_version", lit(v))

@@ -58,7 +58,6 @@ object DeltaStream {
     * instead of with 'missing Delta commit 0'. */
   def actionRowsRange(base: String, from: Long, to: Long)
   : Map[Long, Seq[(String, String, Long, Long)]] = {
-    import scala.jdk.CollectionConverters._
     val vs = DeltaLogReader.versions(base)
     require(vs.nonEmpty, s"no Delta commits under $base")
     val head = vs.head
@@ -68,10 +67,10 @@ object DeltaStream {
     if (head > 0) {
       require(from <= to, s"empty range [$from, $to]") // clarity before the ckpt work
       val spark = org.apache.spark.sql.SparkSession.active
-      // seed from the checkpoint (snapshotFiles at the checkpoint
+      // seed from the checkpoint (the snapshot at the checkpoint
       // version reads it without touching any expired commit)
       val seeded =
-        try DeltaLogReader.snapshotFiles(Some(spark), base, head)
+        try DeltaLogReader.snapshot(Some(spark), base, head).adds
         catch {
           case e: IllegalArgumentException => throw new IllegalStateException(
             s"vacuumed Delta log under $base (first commit $head) is not " +
@@ -85,10 +84,8 @@ object DeltaStream {
       replayFrom = head + 1
     }
     (replayFrom to to).foreach { v =>
-      val f = java.nio.file.Paths.get(base, "_delta_log", f"$v%020d.json")
-      require(java.nio.file.Files.exists(f), s"missing Delta commit $v under $base")
       val rows = Seq.newBuilder[(String, String, Long, Long)]
-      java.nio.file.Files.readAllLines(f).asScala.foreach { line =>
+      DeltaLogReader.commitLines(base, v).foreach { line =>
         if (line.contains("\"add\"")) {
           val p = DeltaLogReader.strField(line, "path").getOrElse(
             throw new IllegalStateException(s"add without path: $line"))

@@ -245,12 +245,12 @@ private[sources] object LakeBatchSources {
     val base = pathOf(options, "graft-delta")
     val version = Option(options.get("versionAsOf")).map(_.toLong)
       .getOrElse(DeltaLogReader.latestVersion(base))
-    val adds = DeltaLogReader.snapshotFiles(Some(spark), base, version)
+    val snap = DeltaLogReader.snapshot(Some(spark), base, version)
+    val adds = snap.adds
     // an EMPTY snapshot is legal when the log declares a schema — the
     // catalog's freshly-created table before its first append (CTAS
     // loads the empty table to write into it)
-    require(adds.nonEmpty ||
-      DeltaLogReader.tableSchema(Some(spark), base, version).isDefined,
+    require(adds.nonEmpty || snap.schema.isDefined,
       s"empty snapshot $version of $base with no declared schema")
     // writes always land on the LATEST version — a time-travel write
     // would fork history, which the log cannot represent
@@ -267,8 +267,8 @@ private[sources] object LakeBatchSources {
       // scans through the full reader's mask-applying plan (broadcast
       // anti-join on _metadata.row_index) via the V1-read fallback
       val tname = s"graft_delta($base@$version)"
-      val tschema = DeltaLogReader.read(spark, base, version).schema
-      val planRead = () => DeltaLogReader.read(SparkSession.active, base, version)
+      val tschema = DeltaLogReader.read(spark, snap).schema
+      val planRead = () => DeltaLogReader.read(SparkSession.active, snap)
       // live-size estimate from the log: file bytes scaled by the
       // surviving-row fraction (numRecords stays physical under a DV)
       val physRows = adds.map(_.numRecords).sum
@@ -283,7 +283,7 @@ private[sources] object LakeBatchSources {
         }
       else new GraftMaskedTable(tname, tschema, planRead, doInsert, hint)
     }
-    val pcols = DeltaLogReader.partitionColumns(Some(spark), base, version)
+    val pcols = snap.partitionColumns
     val paths = adds.map(a =>
       java.nio.file.Paths.get(base).resolve(a.path).toString)
     // column-mapped tables (either mode) bind by PARQUET FIELD ID: the
@@ -291,7 +291,7 @@ private[sources] object LakeBatchSources {
     // under the LOGICAL names, so the delegate's scan surfaces logical
     // names with zero rename pass — and a foreign file without embedded
     // ids fails loudly (ignoreMissing stays false), never mis-binds
-    val colMapped = DeltaLogReader.columnMappingSchema(Some(spark), base, version)
+    val colMapped = snap.mappedSchema
     val schema = colMapped match {
       case Some(logical) =>
         require(pcols.isEmpty,
@@ -302,7 +302,7 @@ private[sources] object LakeBatchSources {
           StructField(f.name, f.dataType, f.nullable, new MetadataBuilder()
             .putLong("parquet.field.id", f.metadata.getLong("delta.columnMapping.id"))
             .build()))))
-      case None => DeltaLogReader.tableSchema(Some(spark), base, version)
+      case None => snap.schema
     }
     // field-id binding is a SCAN option (merged into the scan's
     // hadoopConf), never a session-global conf flip. ignoreMissing

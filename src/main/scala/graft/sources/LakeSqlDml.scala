@@ -120,7 +120,7 @@ private[sources] object LakeSqlDml {
     // the staged file's materialized column
     override def requiredMetadataAttributes(): Array[NamedReference] =
       Array[NamedReference](Expressions.column("__pre")) ++
-        DeltaLogWriter.sqlDmlRowTracking(SparkSession.active, base)
+        DeltaLogReader.snapshot(SparkSession.active, base).rowTrackingCols
           .map(_ => Expressions.column("__rid")).toArray[NamedReference]
 
     // the scan: V1-read fallback over the DV-masked live scan with the
@@ -185,15 +185,16 @@ private[sources] object LakeSqlDml {
     override def toBatch: DeltaBatchWrite = {
       val spark = SparkSession.active
       val dataSchema = info.schema
+      val snap = DeltaLogReader.snapshot(Some(spark), base, expectVersion)
       // (logical, physical dir spelling) partition columns; on a
       // MAPPED table the staged file schema renames to PHYSICAL names
       // and embeds the parquet field ids (the spec's writer rule in
       // both modes — the id-bound and physical-name scan paths read
       // these files like any other writer's)
-      val pcols = DeltaLogWriter.sqlDmlPartCols(spark, base)
-      val colMap = DeltaLogWriter.sqlDmlColMap(spark, base)
-      val physOf: Map[String, String] = colMap.map(t => t._1 -> t._2).toMap
-      val idOf: Map[String, Long] = colMap.map(t => t._1 -> t._3).toMap
+      val physOf: Map[String, String] = snap.physicalNames.getOrElse(Nil).toMap
+      val idOf: Map[String, Long] = snap.mappedSchema.toSeq.flatMap(_.fields)
+        .map(f => f.name -> f.metadata.getLong("delta.columnMapping.id")).toMap
+      val pcols = snap.partitionColumns.map(c => c -> physOf.getOrElse(c, c))
       val partSpec: Seq[(Int, DataType)] = pcols.map { case (c, _) =>
         val i = dataSchema.fieldIndex(c)
         val dt = dataSchema.fields(i).dataType
@@ -216,7 +217,7 @@ private[sources] object LakeSqlDml {
       // stage NULL and fall back to the add's fresh baseRowId range.
       // Every staged row takes THIS commit as its version.
       val rtCols: Seq[StructField] =
-        DeltaLogWriter.sqlDmlRowTracking(spark, base).toSeq.flatMap {
+        snap.rowTrackingCols.toSeq.flatMap {
           case (matId, matVer) => Seq(
             StructField(matId, LongType, nullable = true),
             StructField(matVer, LongType, nullable = true))
@@ -227,7 +228,7 @@ private[sources] object LakeSqlDml {
           .map(toFileField) ++ rtCols)
       val keepIdx = dataSchema.fields.zipWithIndex
         .filterNot { case (f, _) => partLogical.contains(f.name) }.map(_._2)
-      val cdfOn = DeltaLogWriter.cdfEnabled(spark, base)
+      val cdfOn = snap.configuration.get("delta.enableChangeDataFeed").contains("true")
       // cdc files carry PHYSICAL names on a mapped table (the same
       // convention as the Scala DML's _change_data; readChanges renames
       // back per version)
@@ -240,19 +241,20 @@ private[sources] object LakeSqlDml {
       // field-id embedding needs the session flag ON while the sink's
       // write support is PREPARED (driver side, scoped + restored)
       def mkSink(schema: StructType) =
-        if (colMap.isEmpty) org.apache.spark.sql.GraftWriteBridge.parquetSink(spark, schema)
+        if (idOf.isEmpty) org.apache.spark.sql.GraftWriteBridge.parquetSink(spark, schema)
         else DeltaLogWriter.withFieldIdWrites(spark)(
           org.apache.spark.sql.GraftWriteBridge.parquetSink(spark, schema))
       // identity contract: the writer validates per row — updates may
-      // not change the value, inserts cannot mint one
-      val identity = DeltaLogWriter.sqlDmlIdentity(spark, base)
+      // not change the value, inserts cannot mint one (the
+      // high-water-mark coordination lives in appendIdentity)
+      val identity = snap.identityColumn.map(_.name)
       val factory = new GraftDmlWriterFactory(base, writeId,
         mkSink(fileSchema),
         if (cdfOn) Some(mkSink(cdcSchema)) else None,
         dataSchema.fields.map(_.dataType),
         pcols.map(_._2).toIndexedSeq, partSpec.toIndexedSeq, keepIdx.toIndexedSeq,
         rowTracked = rtCols.nonEmpty, commitVersion = expectVersion + 1,
-        identity = identity.map { case (nm, _) => (nm, dataSchema.fieldIndex(nm)) })
+        identity = identity.map(nm => (nm, dataSchema.fieldIndex(nm))))
 
       new DeltaBatchWrite {
         override def createBatchWriterFactory(i: PhysicalWriteInfo): DeltaWriterFactory =
@@ -545,11 +547,12 @@ private[sources] trait DeltaSqlDml extends SupportsRowLevelOperations
     true
   }
 
-  override def metadataColumns(): Array[MetadataColumn] =
+  override def metadataColumns(): Array[MetadataColumn] = {
+    val snap = DeltaLogReader.snapshot(SparkSession.active, dmlBase)
     LakeSqlDml.metadataColumnsFor(
-      DeltaLogWriter.sqlDmlSchema(SparkSession.active, dmlBase),
-      rowTracked = DeltaLogWriter
-        .sqlDmlRowTracking(SparkSession.active, dmlBase).isDefined)
+      snap.schema.getOrElse(throw new IllegalStateException(s"$dmlBase declares no schema")),
+      rowTracked = snap.rowTrackingCols.isDefined)
+  }
 
   override def canDeleteWhere(filters: Array[Filter]): Boolean =
     filters.forall(LakeBatchSources.translateFilter(_).isDefined)
@@ -558,8 +561,7 @@ private[sources] trait DeltaSqlDml extends SupportsRowLevelOperations
     val spark = SparkSession.active
     val cond = filters.toSeq.flatMap(LakeBatchSources.translateFilter)
       .reduceOption(_ && _).getOrElse(lit(true))
-    if (DeltaLogReader.snapshotFiles(Some(spark), dmlBase,
-        DeltaLogReader.latestVersion(dmlBase)).nonEmpty)
+    if (DeltaLogReader.snapshot(spark, dmlBase).adds.nonEmpty)
       DeltaLogWriter.deleteWhereDv(spark, dmlBase, cond)
   }
 

@@ -23,12 +23,12 @@ class DeltaClusteringSpec extends SparkSpec {
   test("clustering domain declared at create, readable, survives checkpoint+expiry") {
     val base = mkBase("cl_domain")
     DeltaLogWriter.createClustered(spark, plane(500), base, "cl", Seq("x", "y"))
-    assert(DeltaLogReader.clusteringColumns(Some(spark), base, 0L) == Seq("x", "y"))
+    assert(DeltaLogReader.snapshot(Some(spark), base, 0L).clusteringColumns == Seq("x", "y"))
     DeltaLogWriter.append(spark, plane(100), base, statsFor = Seq("x", "y"))
     DeltaLogWriter.checkpoint(spark, base)
     DeltaLogWriter.expireLog(base)
     val v = DeltaLogReader.latestVersion(base)
-    assert(DeltaLogReader.clusteringColumns(Some(spark), base, v) == Seq("x", "y"),
+    assert(DeltaLogReader.snapshot(Some(spark), base, v).clusteringColumns == Seq("x", "y"),
       "clustering domain lost across checkpoint + expiry")
   }
 
@@ -75,7 +75,7 @@ class DeltaClusteringSpec extends SparkSpec {
     val (before, after) = DeltaLogWriter.optimizeClustered(spark, base)
     assert(before >= 1 && after >= 1)
     val v = DeltaLogReader.latestVersion(base)
-    assert(DeltaLogReader.snapshotFiles(Some(spark), base, v).forall(_.dv.isEmpty),
+    assert(DeltaLogReader.snapshot(Some(spark), base, v).adds.forall(_.dv.isEmpty),
       "clustered OPTIMIZE carried DV descriptors into the packed files")
     assert(DeltaLogReader.read(spark, base, v)
       .agg(sum(col("id"))).head().getLong(0) == sumBefore,

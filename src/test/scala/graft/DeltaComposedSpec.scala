@@ -71,8 +71,8 @@ class DeltaComposedSpec extends SparkSpec {
 
     // untouched-partition economics: the DML predicate k%10==4 hits only
     // EVEN ids, so the odd partition's files must survive by IDENTITY
-    val files1 = DeltaLogReader.snapshotFiles(Some(spark), base, 1L).map(_.path).toSet
-    val files2 = DeltaLogReader.snapshotFiles(Some(spark), base, 2L).map(_.path).toSet
+    val files1 = DeltaLogReader.snapshot(Some(spark), base, 1L).adds.map(_.path).toSet
+    val files2 = DeltaLogReader.snapshot(Some(spark), base, 2L).adds.map(_.path).toSet
     val oddFiles1 = files1.filter(_.contains("col-2=odd"))
     assert(oddFiles1.nonEmpty && oddFiles1.subsetOf(files2),
       s"untouched partition rewritten: ${oddFiles1 -- files2}")
@@ -94,7 +94,7 @@ class DeltaComposedSpec extends SparkSpec {
     val (ob, oa) = DeltaLogWriter.optimizeClustered(spark, base)
     assert(ob >= 1 && oa >= 1)
     assert(content(base, 4L) == expect3)
-    assert(DeltaLogReader.snapshotFiles(Some(spark), base, 4L).forall(_.dv.isEmpty),
+    assert(DeltaLogReader.snapshot(Some(spark), base, 4L).adds.forall(_.dv.isEmpty),
       "clustered OPTIMIZE carried DVs forward")
     assert(rowIds(base, 4L).view.filterKeys(_ != 900L).forall {
       case (k, (id, _)) => birth.get(k).forall(_._1 == id) },
@@ -103,7 +103,7 @@ class DeltaComposedSpec extends SparkSpec {
       base, "_delta_log", f"${4L}%020d.json"))
     assert(!commit4.contains("\"dataChange\":true"), "clustered OPTIMIZE not dataChange=false")
     // every packed file sits under its hive partition dir and is z-named
-    DeltaLogReader.snapshotFiles(Some(spark), base, 4L).foreach(a =>
+    DeltaLogReader.snapshot(Some(spark), base, 4L).adds.foreach(a =>
       assert(a.path.contains("col-2=") && a.path.contains("-zb"), a.path))
 
     // v5: RESTORE to v2 — re-adds carry their DV descriptors (the DV
@@ -120,9 +120,10 @@ class DeltaComposedSpec extends SparkSpec {
     assert(renamed.columns.toSet == Set("id", "p", "x", "y", "val"))
     assert(renamed.select("id", "val").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap == expect2)
-    assert(DeltaLogReader.partitionColumns(Some(spark), base, 6L) == Seq("p"))
-    assert(DeltaLogReader.clusteringColumns(Some(spark), base, 6L) == Seq("x", "y"))
-    assert(DeltaLogReader.rowIdHighWaterMark(Some(spark), base, 6L).isDefined)
+    val snap6 = DeltaLogReader.snapshot(Some(spark), base, 6L)
+    assert(snap6.partitionColumns == Seq("p"))
+    assert(snap6.clusteringColumns == Seq("x", "y"))
+    assert(snap6.rowIdHighWaterMark.isDefined)
 
     // checkpoint + expiry: the composed state survives — mapping,
     // domains, DVs, row ids all fold
@@ -159,8 +160,7 @@ class DeltaComposedSpec extends SparkSpec {
     assert(planned.nonEmpty)
     // constraints validate over the logical view and survive in config
     DeltaLogWriter.addConstraint(spark, base, "v_nonneg", "v >= 0")
-    assert(DeltaLogReader.constraintsOf(Some(spark), base,
-      DeltaLogReader.latestVersion(base)).contains("v_nonneg"))
+    assert(DeltaLogReader.snapshot(spark, base).constraints.contains("v_nonneg"))
     // the constraint commit preserved the column mapping + row tracking
     assert(DeltaLogReader.read(spark, base).columns.contains("v"))
     intercept[IllegalArgumentException] {

@@ -76,7 +76,7 @@ class DeltaLogSpec extends SparkSpec {
       """{"metaData":{"id":"t","format":{"provider":"parquet","options":{}},"schemaString":"{}","partitionColumns":["p"],"configuration":{},"createdTime":0}}""",
       """{"add":{"path":"p=a/f1.parquet","partitionValues":{"p":"a"},"size":1,"modificationTime":0,"dataChange":true}}""",
       """{"add":{"path":"p=b/f2.parquet","partitionValues":{"p":"b"},"size":1,"modificationTime":0,"dataChange":true}}""")
-    assert(DeltaLogReader.partitionColumns(base, 0) == Seq("p"))
+    assert(DeltaLogReader.snapshot(Some(spark), base, 0).partitionColumns == Seq("p"))
     val df = DeltaLogReader.read(spark, base)
     assert(df.columns.toSet == Set("id", "p"), s"partition column lost: ${df.columns.toSeq}")
     assert(df.filter(col("p") === "b").agg(sum("id")).collect().head.getLong(0) == 10L)
@@ -126,10 +126,10 @@ class DeltaLogSpec extends SparkSpec {
     Files.writeString(Paths.get(base, "_delta_log", "_last_checkpoint"),
       """{"version":1,"size":2}""")
     // checkpoint + tail equals full replay
-    assert(DeltaLogReader.snapshotFiles(Some(spark), base, 2).map(_.path).sorted
+    assert(DeltaLogReader.snapshot(Some(spark), base, 2).adds.map(_.path).sorted
       == Seq("b.parquet", "c.parquet"))
     // time travel BELOW the checkpoint ignores it (full replay of 0..0)
-    assert(DeltaLogReader.snapshotFiles(Some(spark), base, 0).map(_.path).sorted
+    assert(DeltaLogReader.snapshot(Some(spark), base, 0).adds.map(_.path).sorted
       == Seq("a.parquet", "b.parquet"))
     assert(DeltaLogReader.read(spark, base, 2).agg(sum("id")).collect().head.getLong(0) == 7L)
     // vacuum the pre-checkpoint commits: checkpointed reads keep working,
@@ -137,7 +137,7 @@ class DeltaLogSpec extends SparkSpec {
     Files.delete(Paths.get(base, "_delta_log", f"${0L}%020d.json"))
     assert(DeltaLogReader.read(spark, base, 2).agg(sum("id")).collect().head.getLong(0) == 7L)
     intercept[IllegalArgumentException](
-      DeltaLogReader.snapshotFiles(Some(spark), base, 0))
+      DeltaLogReader.snapshot(Some(spark), base, 0).adds)
   }
 
   test("non-contiguous log fails fast") {
@@ -255,14 +255,14 @@ class DeltaLogSpec extends SparkSpec {
     assert(W.appendIfAbsent(spark, one(3L), base, "app", 1L))       // v1
     assert(!W.appendIfAbsent(spark, one(99L), base, "app", 1L))     // redelivery: skipped
     assert(!W.appendIfAbsent(spark, one(99L), base, "app", 0L))
-    assert(DeltaLogReader.lastTxnVersion(base, "app").contains(1L))
-    assert(DeltaLogReader.lastTxnVersion(base, "other").isEmpty)
+    assert(DeltaLogReader.snapshot(spark, base).txns.get("app").contains(1L))
+    assert(DeltaLogReader.snapshot(spark, base).txns.get("other").isEmpty)
     // a DIFFERENT app's batches are independent
     assert(W.appendIfAbsent(spark, one(10L), base, "app2", 0L))
     // empty batch: txn-only commit, no data change, watermark advances
     val empty = spark.createDataFrame(Seq.empty[Tuple1[Long]]).toDF("id")
     assert(W.appendIfAbsent(spark, empty, base, "app", 2L))
-    assert(DeltaLogReader.lastTxnVersion(base, "app").contains(2L))
+    assert(DeltaLogReader.snapshot(spark, base).txns.get("app").contains(2L))
     assert(!W.appendIfAbsent(spark, one(99L), base, "app", 2L))
     assert(DeltaLogReader.read(spark, base)
       .agg(sum("id")).collect().head.getLong(0) == 16L)
@@ -468,7 +468,7 @@ class DeltaLogSpec extends SparkSpec {
     graft.sources.DeltaLogWriter.checkpoint(spark, base)
     assert(graft.sources.DeltaLogWriter.expireLog(base) == 1)
     // the watermark survived the expiry: a redelivered batch is skipped
-    assert(DeltaLogReader.lastTxnVersion(Some(spark), base, "app").contains(1L))
+    assert(DeltaLogReader.snapshot(spark, base).txns.get("app").contains(1L))
     assert(!graft.sources.DeltaLogWriter.appendIfAbsent(spark, one(3L), base, "app", 1L))
     assert(DeltaLogReader.read(spark, base).count() == 3L)
     // partitioned table: partitionColumns survive the expiry via the
@@ -480,7 +480,7 @@ class DeltaLogSpec extends SparkSpec {
       spark.createDataFrame(Seq((3L, "a"))).toDF("id", "p"), pbase)
     graft.sources.DeltaLogWriter.checkpoint(spark, pbase)
     graft.sources.DeltaLogWriter.expireLog(pbase)
-    assert(DeltaLogReader.partitionColumns(Some(spark), pbase, 1L) == Seq("p"))
+    assert(DeltaLogReader.snapshot(Some(spark), pbase, 1L).partitionColumns == Seq("p"))
     val got = DeltaLogReader.read(spark, pbase)
     assert(got.columns.contains("p"), s"partition column lost after expiry: ${got.columns.toSeq}")
     assert(got.filter(col("p") === "a").count() == 2L)
@@ -522,7 +522,7 @@ class DeltaLogSpec extends SparkSpec {
     val got = DeltaLogReader.read(spark, base)
       .collect().map(r => (r.getAs[Long]("id"), r.getAs[String]("p"))).toSet
     assert(got == Set((1L, "a"), (3L, "b"), (4L, "b"), (5L, "c")))
-    assert(DeltaLogReader.lastTxnVersion(Some(spark), base, "appV2").contains(7L))
+    assert(DeltaLogReader.snapshot(spark, base).txns.get("appV2").contains(7L))
     assert(!W.appendIfAbsent(spark, kv(9L -> "z"), base, "appV2", 7L),
       "redelivered batch re-applied after expiry — exactly-once window re-opened")
     // the tail still replays on top of the sidecar seed
@@ -540,7 +540,7 @@ class DeltaLogSpec extends SparkSpec {
       .toDF("id", "v").coalesce(1)
     // an all-NULL file gets NO bounds (kept by every range read) — not an NPE
     graft.sources.DeltaLogWriter.append(spark, allNull, base, statsFor = Seq("v"))
-    val adds = DeltaLogReader.snapshotFiles(Some(spark), base, 1L)
+    val adds = DeltaLogReader.snapshot(Some(spark), base, 1L).adds
     assert(adds.exists(a => a.minValues.get("v").contains(5L)))
     assert(adds.exists(a => a.minValues.isEmpty))
     assert(DeltaLogReader.filesWhere(spark, base, 1L, "v", 100L, 200L).size == 1)
@@ -707,8 +707,8 @@ class DeltaLogSpec extends SparkSpec {
     // OPTIMIZE packs the live set, materializing any remaining masks —
     // no descriptor survives the rewrite, content identical
     graft.sources.DeltaLogWriter.optimize(spark, base)
-    assert(DeltaLogReader.snapshotFiles(Some(spark), base,
-      DeltaLogReader.latestVersion(base)).forall(_.dv.isEmpty),
+    assert(DeltaLogReader.snapshot(Some(spark), base,
+      DeltaLogReader.latestVersion(base)).adds.forall(_.dv.isEmpty),
       "OPTIMIZE carried DV descriptors into the packed files")
     // checkpoints FOLD the DV descriptors: a read seeded from the
     // checkpoint still applies the masks after the log is expired
@@ -752,7 +752,7 @@ class DeltaLogSpec extends SparkSpec {
     assert(pp == 3L && pf >= 1, s"($pf, $pp)")
     def ids(v: Long) = DeltaLogReader.read(spark, base, v)
       .collect().map(_.getLong(0)).sorted.toSeq
-    assert(DeltaLogReader.snapshotFiles(Some(spark), base, 2L).forall(_.dv.isEmpty),
+    assert(DeltaLogReader.snapshot(Some(spark), base, 2L).adds.forall(_.dv.isEmpty),
       "purge left DV descriptors live")
     assert(ids(2L) == (4L to 10L))
     assert(ids(1L) == (4L to 10L) && ids(0L) == (1L to 10L), "time travel broke")
@@ -793,7 +793,7 @@ class DeltaLogSpec extends SparkSpec {
     val df = spark.createDataFrame(Seq((1L, "a"), (2L, "b"))).toDF("id", "tag")
     graft.sources.DeltaLogWriter.createColumnMapped(spark, df.coalesce(1), base, "t-cm")
     // the parquet files really carry physical names
-    val adds = DeltaLogReader.snapshotFiles(spark = Some(spark), base, 0L)
+    val adds = DeltaLogReader.snapshot(Some(spark), base, 0L).adds
     val raw = spark.read.parquet(s"$base/${adds.head.path}")
     assert(raw.columns.toSet == Set("col-1", "col-2"), raw.columns.toSeq.toString)
     // the mapped read surfaces logical names
@@ -801,9 +801,9 @@ class DeltaLogSpec extends SparkSpec {
     assert(v0.columns.toSeq == Seq("id", "tag"))
     assert(v0.filter(col("tag") === "b").head().getLong(0) == 2L)
     // rename: metaData-only commit, no new data files
-    val filesBefore = DeltaLogReader.snapshotFiles(spark = Some(spark), base, 0L).map(_.path)
+    val filesBefore = DeltaLogReader.snapshot(Some(spark), base, 0L).adds.map(_.path)
     graft.sources.DeltaLogWriter.renameColumn(spark, base, "tag", "label")
-    assert(DeltaLogReader.snapshotFiles(spark = Some(spark), base, 1L).map(_.path) == filesBefore)
+    assert(DeltaLogReader.snapshot(Some(spark), base, 1L).adds.map(_.path) == filesBefore)
     val v1 = DeltaLogReader.read(spark, base, 1L)
     assert(v1.columns.toSeq == Seq("id", "label"))
     // time travel still answers with the OLD logical name
@@ -875,8 +875,7 @@ class DeltaLogSpec extends SparkSpec {
     W.append(spark, spark.createDataFrame(Seq((3L, 9L))).toDF("id", "v").coalesce(1), base)
     W.checkpoint(spark, base)
     W.expireLog(base)
-    assert(DeltaLogReader.constraintsOf(Some(spark), base,
-      DeltaLogReader.latestVersion(base)) == Map("v_pos" -> "v > 0"),
+    assert(DeltaLogReader.snapshot(spark, base).constraints == Map("v_pos" -> "v > 0"),
       "constraint lost across checkpoint+expiry")
     intercept[IllegalArgumentException](W.append(spark,
       spark.createDataFrame(Seq((4L, -1L))).toDF("id", "v").coalesce(1), base))
@@ -1003,9 +1002,9 @@ class DeltaLogSpec extends SparkSpec {
     intercept[IllegalArgumentException](W.widenColumnType(spark, base, "q", "INT"))
     intercept[IllegalArgumentException](W.widenColumnType(spark, base, "r", "STRING"))
     // a feature-blind reader would mis-type old files — the protocol says so
-    val proto = DeltaLogReader.latestProtocol(Some(spark), base,
-      DeltaLogReader.latestVersion(base))
-    assert(proto._3.contains("typeWidening") && proto._4.contains("typeWidening"))
+    val proto = DeltaLogReader.snapshot(spark, base).protocol
+    assert(proto.readerFeatures.contains("typeWidening") &&
+      proto.writerFeatures.contains("typeWidening"))
   }
 
   test("overwrite: one remove-all+add commit, time travel intact, CDF derives delete+insert") {
@@ -1111,7 +1110,7 @@ class DeltaLogSpec extends SparkSpec {
       cv
     }
     def state(v: Long) = {
-      val adds = DeltaLogReader.snapshotFiles(Some(spark), base, v)
+      val adds = DeltaLogReader.snapshot(Some(spark), base, v).adds
       val ids = DeltaLogReader.read(spark, base, v).collect().map(_.getLong(0)).sorted.toSeq
       (adds.map(_.numRecords).sum, ids)
     }
@@ -1132,7 +1131,7 @@ class DeltaLogSpec extends SparkSpec {
     W.checkpoint(spark, base)
     W.append(spark, spark.range(60, 70).toDF("id").coalesce(1), base)
     val v = DeltaLogReader.latestVersion(base)
-    def resolve() = (DeltaLogReader.snapshotFiles(Some(spark), base, v),
+    def resolve() = (DeltaLogReader.snapshot(Some(spark), base, v).adds,
       DeltaLogReader.read(spark, base, v).collect().map(_.getLong(0)).sorted.toSeq)
     // the threads race the checkpoint's first decode; the sequential
     // resolution runs after them
@@ -1147,5 +1146,54 @@ class DeltaLogSpec extends SparkSpec {
       assert(expected._2 == (0L until 70L))
       got.foreach(g => assert(g == expected))
     } finally pool.shutdown()
+  }
+
+  test("the checkpoint seed and the fold from v0 give the same snapshot at every version, also after expireLog") {
+    import graft.sources.{DeltaLogWriter => W}
+    val base = "/tmp/graft_delta_test/seed_diff"
+    graft.sources.TxnLog.rmrf(base)
+    def rows(lo: Long, hi: Long) = spark.range(lo, hi).select(col("id"),
+      when(col("id") % 2 === 0, "even").otherwise("odd").as("p"),
+      (col("id") % 7).as("x"), (col("id") % 5).as("y"), (col("id") * 10).as("v"))
+    // every fact the fold carries: partition column, clustering domain,
+    // column mapping and row tracking (v0), a CHECK constraint (v1), a
+    // txn watermark (v2), a DV delete and its protocol upgrade (v3)
+    W.createComposed(spark, rows(0, 40).repartition(2), base, "seed-diff",
+      partitionBy = Seq("p"), clusterCols = Seq("x", "y"),
+      columnMapped = true, rowTracked = true, statsFor = Seq("x", "y"))
+    W.addConstraint(spark, base, "v_nonneg", "v >= 0")
+    assert(W.appendIfAbsent(spark, rows(40, 50).coalesce(1), base, "app", 0L))
+    W.deleteWhereDv(spark, base, col("id") % 10 === 3)
+    val ckpt = W.checkpoint(spark, base)
+    // the JSON tail after the checkpoint moves the same facts again
+    assert(W.appendIfAbsent(spark, rows(50, 60).coalesce(1), base, "app", 1L))
+    W.deleteWhereDv(spark, base, col("id") % 10 === 4)
+    W.append(spark, rows(60, 70).coalesce(1), base)
+    val latest = DeltaLogReader.latestVersion(base)
+    // without a session the same fold starts from v0 (the empty seed)
+    val fromV0 = (ckpt to latest).map(v => v -> DeltaLogReader.snapshot(None, base, v)).toMap
+    val last = fromV0(latest)
+    assert(last.partitionColumns == Seq("p") && last.clusteringColumns == Seq("x", "y"))
+    assert(last.mappedSchema.isDefined && last.rowTrackingCols.isDefined)
+    assert(last.rowIdHighWaterMark.contains(69L))
+    assert(last.constraints == Map("v_nonneg" -> "v >= 0") && last.txns == Map("app" -> 1L))
+    assert(last.protocol.readerFeatures.contains("deletionVectors"))
+    assert(last.adds.count(_.dv.isDefined) >= 2)
+    def assertSeededEqual(): Unit = (ckpt to latest).foreach { v =>
+      val seeded = DeltaLogReader.snapshot(Some(spark), base, v)
+      val full = fromV0(v)
+      assert(seeded.protocol == full.protocol, s"v$v protocol")
+      assert(seeded.meta == full.meta, s"v$v metaData")
+      assert(seeded.txns == full.txns, s"v$v txns")
+      assert(seeded.domains == full.domains, s"v$v domains")
+      assert(seeded.adds == full.adds, s"v$v adds")
+      assert(seeded == full, s"v$v snapshot")
+    }
+    assertSeededEqual()
+    assert(W.expireLog(base) == ckpt.toInt)
+    assertSeededEqual()
+    // a session-less fold of the vacuumed log asks for the checkpoint
+    val e = intercept[IllegalArgumentException](DeltaLogReader.snapshot(None, base, latest))
+    assert(e.getMessage.contains("pass a SparkSession"))
   }
 }

@@ -24,7 +24,7 @@ class DeltaRowTrackingSpec extends SparkSpec {
     val base = mkBase("rt_create")
     DeltaLogWriter.createRowTracked(spark, spark.range(0, 20).toDF("id")
       .repartition(2), base, "rt")
-    val adds = DeltaLogReader.snapshotFiles(Some(spark), base, 0L)
+    val adds = DeltaLogReader.snapshot(Some(spark), base, 0L).adds
       .sortBy(_.baseRowId.get)
     assert(adds.forall(a => a.baseRowId.isDefined &&
       a.defaultRowCommitVersion.contains(0L)))
@@ -32,7 +32,7 @@ class DeltaRowTrackingSpec extends SparkSpec {
     val ranges = adds.map(a => (a.baseRowId.get, a.numRecords))
     assert(ranges.head._1 == 0L)
     ranges.zip(ranges.drop(1)).foreach { case ((b, n), (b2, _)) => assert(b2 == b + n) }
-    assert(DeltaLogReader.rowIdHighWaterMark(Some(spark), base, 0L).contains(19L))
+    assert(DeltaLogReader.snapshot(Some(spark), base, 0L).rowIdHighWaterMark.contains(19L))
     val ids = DeltaLogReader.readRowIds(spark, base, 0L)
       .select("_row_id").collect().map(_.getLong(0)).sorted
     assert(ids.toSeq == (0L to 19L))
@@ -42,7 +42,7 @@ class DeltaRowTrackingSpec extends SparkSpec {
     val base = mkBase("rt_dml")
     DeltaLogWriter.createRowTracked(spark, sorted(10), base, "rt")
     DeltaLogWriter.append(spark, sorted(5, off = 100), base)
-    assert(DeltaLogReader.rowIdHighWaterMark(Some(spark), base, 1L).contains(14L))
+    assert(DeltaLogReader.snapshot(Some(spark), base, 1L).rowIdHighWaterMark.contains(14L))
     val byId = DeltaLogReader.readRowIds(spark, base, 1L)
       .collect().map(r => r.getAs[Long]("id") ->
         (r.getAs[Long]("_row_id"), r.getAs[Long]("_row_commit_version"))).toMap
@@ -55,7 +55,7 @@ class DeltaRowTrackingSpec extends SparkSpec {
     assert(after(1L) == 1L && after(9L) == 9L && after(101L) == 11L)
     assert(!after.contains(0L) && !after.contains(100L))
     // the mark did not move (a DELETE assigns no ids)
-    assert(DeltaLogReader.rowIdHighWaterMark(Some(spark), base, 2L).contains(14L))
+    assert(DeltaLogReader.snapshot(Some(spark), base, 2L).rowIdHighWaterMark.contains(14L))
   }
 
   test("OPTIMIZE materializes row ids — identical lineage across the rewrite") {
@@ -67,11 +67,11 @@ class DeltaRowTrackingSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val (nb, na) = DeltaLogWriter.optimize(spark, base)
     assert(nb == 2 && na == 1)
-    val adds = DeltaLogReader.snapshotFiles(Some(spark), base, 2L)
+    val adds = DeltaLogReader.snapshot(Some(spark), base, 2L).adds
     // fresh baseRowId on the packed file, and the mark bumped past it
     assert(adds.forall(_.baseRowId.isDefined))
     assert(adds.head.baseRowId.get == 18L)
-    assert(DeltaLogReader.rowIdHighWaterMark(Some(spark), base, 2L).contains(35L))
+    assert(DeltaLogReader.snapshot(Some(spark), base, 2L).rowIdHighWaterMark.contains(35L))
     val after = DeltaLogReader.readRowIds(spark, base, 2L)
       .select("id", "_row_id", "_row_commit_version")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
@@ -98,7 +98,7 @@ class DeltaRowTrackingSpec extends SparkSpec {
       val after = DeltaLogReader.readRowIds(spark, base, v)
         .collect().map(r => r.getAs[Long]("id") -> r.getAs[Long]("_row_id")).toMap
       assert(after == before, s"$name: lineage drifted across checkpoint+expiry")
-      assert(DeltaLogReader.rowIdHighWaterMark(Some(spark), base, v).contains(11L),
+      assert(DeltaLogReader.snapshot(Some(spark), base, v).rowIdHighWaterMark.contains(11L),
         s"$name: high-water mark lost")
       // the next append still assigns FRESH ids (the mark survived)
       DeltaLogWriter.append(spark, sorted(2, off = 90), base)

@@ -37,8 +37,8 @@ class LakeSqlDmlSpec extends SparkSpec {
     assert(after.count() == 90L)
     assert(after.agg(min("id")).head().getLong(0) == 10L)
     // metadata-only: the delete staged NO new data files, only DV sidecars
-    val adds = DeltaLogReader.snapshotFiles(Some(spark), base,
-      DeltaLogReader.latestVersion(base))
+    val adds = DeltaLogReader.snapshot(Some(spark), base,
+      DeltaLogReader.latestVersion(base)).adds
     assert(adds.forall(_.path.startsWith("v0-")), adds.map(_.path))
     assert(adds.exists(_.dv.nonEmpty))
     // CDF reports exactly the 10 deleted rows
@@ -70,8 +70,8 @@ class LakeSqlDmlSpec extends SparkSpec {
         max(when(col("_change_type") === "update_preimage", col("x")))).as("dx"))
     assert(delta.filter(col("dx") =!= 100).count() == 0L)
     // untouched rows were NOT rewritten: original files still live
-    val adds = DeltaLogReader.snapshotFiles(Some(spark), base,
-      DeltaLogReader.latestVersion(base))
+    val adds = DeltaLogReader.snapshot(Some(spark), base,
+      DeltaLogReader.latestVersion(base)).adds
     assert(adds.count(_.path.startsWith("v0-")) == 2, adds.map(_.path))
   }
 
@@ -124,8 +124,8 @@ class LakeSqlDmlSpec extends SparkSpec {
       plane().agg(sum("x")).head().getLong(0) + 500L)
     // staged files live in their hive dirs and carry partitionValues —
     // a partition-pruned read sees the updated rows
-    val adds = DeltaLogReader.snapshotFiles(Some(spark), base,
-      DeltaLogReader.latestVersion(base))
+    val adds = DeltaLogReader.snapshot(Some(spark), base,
+      DeltaLogReader.latestVersion(base)).adds
     val staged = adds.filter(_.path.contains("dml-"))
     assert(staged.nonEmpty && staged.forall(a =>
       a.path.startsWith("p=even/") || a.path.startsWith("p=odd/")), staged.map(_.path))
@@ -160,8 +160,8 @@ class LakeSqlDmlSpec extends SparkSpec {
       plane().agg(sum("x")).head().getLong(0) + 500L)
     // the staged file carries PHYSICAL columns with embedded field ids
     // (the id-bound reader can bind it), not the logical spellings
-    val staged = DeltaLogReader.snapshotFiles(Some(spark), base,
-      DeltaLogReader.latestVersion(base)).filter(_.path.contains("dml-"))
+    val staged = DeltaLogReader.snapshot(Some(spark), base,
+      DeltaLogReader.latestVersion(base)).adds.filter(_.path.contains("dml-"))
     assert(staged.nonEmpty)
     val cols = spark.read.parquet(s"$base/${staged.head.path}").columns.toSeq
     assert(cols.forall(_.startsWith("col-")), cols)

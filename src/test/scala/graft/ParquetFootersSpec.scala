@@ -64,7 +64,7 @@ class ParquetFootersSpec extends SparkSpec {
     val df = Seq((3L, "x"), (1L, "y"), (2L, "z")).toDF("k", "s").coalesce(1)
     graft.sources.DeltaLogWriter.create(spark, df, base, "footers-strstats",
       statsFor = Seq("k", "s"))
-    val adds = graft.sources.DeltaLogReader.snapshotFiles(Some(spark), base, 0L)
+    val adds = graft.sources.DeltaLogReader.snapshot(Some(spark), base, 0L).adds
     assert(adds.size == 1)
     assert(adds.head.numRecords == 3L)
     assert(adds.head.minValues == Map("k" -> 1L) && adds.head.maxValues == Map("k" -> 3L),
