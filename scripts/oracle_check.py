@@ -6,9 +6,11 @@ Usage: python3 scripts/oracle_check.py <sfDir> <verifyOutDir> [query ...]
 Reads each Spark result parquet written by graft.Verify, runs the matching
 oracle SQL from oracle_sql.json in DuckDB (tables registered as views over
 the same sfDir parquet files), sorts columns by name, and compares
-row-by-row values exactly. Prints per-query PASS/FAIL with first diffs.
+row-by-row values exactly. Prints per-query PASS/FAIL with first diffs,
+and an `RSS <query> +<MB>` line after each query that raised this
+process's peak resident set by 256 MB or more since the last such line.
 """
-import sys, json, glob, math
+import sys, json, glob, math, resource
 
 import duckdb
 
@@ -29,6 +31,26 @@ def norm(v):
     return v
 
 
+RSS_STEP_MB = 256
+
+
+def peak_rss_mb():
+    # ru_maxrss is in kilobytes on Linux
+    return resource.getrusage(resource.RUSAGE_SELF).ru_maxrss // 1024
+
+
+def reporting_rss(names):
+    """Yield each name; once the loop body for it is done, print one RSS
+    line if the peak resident set rose by RSS_STEP_MB since the last one."""
+    last = peak_rss_mb()
+    for name in names:
+        yield name
+        now = peak_rss_mb()
+        if now - last >= RSS_STEP_MB:
+            print(f"RSS {name} +{now - last}")
+            last = now
+
+
 def main():
     sfdir, outdir = sys.argv[1], sys.argv[2]
     only = set(sys.argv[3:])
@@ -38,7 +60,7 @@ def main():
     with open(f"{outdir}/oracle_sql.json") as f:
         oracle = json.load(f)
     n_pass = n_fail = 0
-    for name in sorted(oracle):
+    for name in reporting_rss(sorted(oracle)):
         if only and name not in only:
             continue
         sql = oracle[name]

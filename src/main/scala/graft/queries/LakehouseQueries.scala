@@ -260,8 +260,7 @@ object LakehouseQueries extends QueryGroup {
         o.filter(col("o_orderpriority") === "2-HIGH").repartition(2), base)
       graft.sources.IcebergWriter.rewrite(s, base)
       val orphans = graft.sources.IcebergWriter.expireSnapshots(s, base, keepFrom = 3L)
-      val nSnaps = graft.sources.IcebergReader.snapshots(base,
-        graft.sources.IcebergReader.currentMetadataVersion(base)).size.toLong
+      val nSnaps = graft.sources.IcebergReader.load(base).snapshots.size.toLong
       census(graft.sources.IcebergReader.read(s, base),
         "n_orphans" -> orphans.size.toLong, "n_snapshots" -> nSnaps)
     }),
@@ -1905,10 +1904,10 @@ object LakehouseQueries extends QueryGroup {
       IcebergWriter.append(s,
         o.filter(pmod(col("o_orderkey"), lit(7)) === 0)
           .withColumn("cents", col("cents") + 1), base)
-      val v = IcebergReader.currentMetadataVersion(base)
-      val ndv = IcebergReader.statsNdv(base, 1L)
-      val statsPath = IcebergReader.statisticsEntries(base, v)
-        .collectFirst { case (1L, p) => s"$base/$p" }
+      val meta = IcebergReader.load(base)
+      val ndv = IcebergReader.statsNdv(meta, 1L)
+      val statsPath = meta.statistics
+        .collectFirst { case e if e.snapshotId == 1L => s"$base/${e.path}" }
         .getOrElse(throw new IllegalStateException("stats entry lost by append"))
       val (blobs, _) = Puffin.readFooter(statsPath)
       val names = Map(1 -> "o_orderkey", 2 -> "o_orderpriority", 3 -> "cents")
@@ -1990,21 +1989,22 @@ object LakehouseQueries extends QueryGroup {
       W.evolveSpec(s, base, "o_month", "month", 3)
       W.appendSpec(s, o.filter(col("o_orderdate") >= "1998-01-01"),
         base, "o_orderdate")
-      val snap = R.currentSnapshotId(base, R.currentMetadataVersion(base))
+      val meta = R.load(base)
+      val snap = meta.currentSnapshotId
       def probe(phase: Long, scan: R.SnapshotScan, residual: org.apache.spark.sql.Column) =
         census(s.read.parquet(scan.dataFiles.map(_._1): _*).filter(residual),
           "phase" -> phase, "n_files_planned" -> scan.dataFiles.size.toLong)
-      val p1 = probe(1L, R.planSnapshotBySpec(s, base, snap, {
+      val p1 = probe(1L, R.plan(s, meta, snap, {
         case 0 => col("data_file.partition.o_orderpriority") === "2-HIGH"
         case _ => lit(true)
       }), col("o_orderpriority") === "2-HIGH")
       val mLo = graft.sources.IcebergTransforms.monthOf("1999-03-01")
       val mHi = graft.sources.IcebergTransforms.monthOf("1999-06-30")
-      val p2 = probe(2L, R.planSnapshotBySpec(s, base, snap, {
+      val p2 = probe(2L, R.plan(s, meta, snap, {
         case 1 => col("data_file.partition.o_month").between(mLo, mHi)
         case _ => lit(true)
       }), col("o_orderdate").between("1999-03-01", "1999-06-30"))
-      val p3 = probe(3L, R.planSnapshot(s, base, snap), lit(true))
+      val p3 = probe(3L, R.plan(s, meta, snap), lit(true))
       Seq(p1, p2, p3).reduce(_ unionAll _).orderBy("phase")
     }),
 

@@ -1270,9 +1270,10 @@ object DeltaLogWriter {
     * stable id (dmlScanAll's materialized coalesce), which the update
     * callback threads into the staged file so ids survive the DML.
     * Empty tables surface an empty frame of the declared schema. */
-  private[sources] def sqlDmlScan(spark: SparkSession, base: String): DataFrame = {
+  private[sources] def sqlDmlScan(spark: SparkSession, snap: Snapshot): DataFrame = {
     import org.apache.spark.sql.functions.struct
-    val ctx = dmlCtx(spark, base)
+    val ctx = DmlCtx(snap, snap.adds)
+    val base = snap.base
     if (ctx.live.isEmpty) {
       val schema = ctx.snap.schema.getOrElse(
         throw new IllegalStateException(s"$base declares no schema"))

@@ -119,7 +119,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
   /** SQL time travel, `... TIMESTAMP AS OF ts` (`ts` arrives in
     * MICROseconds): Delta resolves through commitInfo timestamps
     * ([[DeltaLogReader.versionAtTimestamp]]), Iceberg through snapshot
-    * `timestamp-ms` ([[IcebergReader.snapshotAtTimestamp]]). Hudi
+    * `timestamp-ms` ([[IcebergReader.TableMetadata.snapshotAtTimestamp]]). Hudi
     * refuses — this writer's instants are synthetic ordinals, not
     * clock values, so a wall-clock bound has nothing sound to bind to
     * (VERSION AS OF an instant works). */
@@ -130,8 +130,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
       case Some("delta") =>
         DeltaLogReader.versionAtTimestamp(dir.toString, tsMillis).toString
       case Some("iceberg") =>
-        IcebergReader.snapshotAtTimestamp(dir.toString,
-          IcebergReader.currentMetadataVersion(dir.toString), tsMillis).toString
+        IcebergReader.load(dir.toString).snapshotAtTimestamp(tsMillis).toString
       case Some("hudi") => throw new UnsupportedOperationException(
         s"TIMESTAMP AS OF on Hudi table $ident: this writer's instants are " +
           "ordinals, not timestamps — use VERSION AS OF <instant>")

@@ -3,6 +3,14 @@ package graft.sources
 import java.nio.file.{Files, Paths}
 import java.nio.charset.StandardCharsets
 
+import scala.collection.immutable.ListMap
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.{DeserializationFeature, JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.cfg.JsonNodeFeature
+import com.fasterxml.jackson.databind.node.ObjectNode
+import com.fasterxml.jackson.databind.util.RawValue
+
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col, lit, regexp_replace}
 
@@ -20,6 +28,19 @@ import org.apache.spark.sql.functions.{broadcast, col, lit, regexp_replace}
   *                                            record_count, …}} entries
   *   data files (parquet)
   * }}}
+  *
+  * ONE TABLE STATE PER STATEMENT: [[load]] reads the hint and parses
+  * `v<N>.metadata.json` once into an immutable [[TableMetadata]] —
+  * format version, uuid and location, schemas, partition specs,
+  * snapshots (summary, first-row-id, manifest list, and any field a
+  * foreign writer put there), refs, statistics and next-row-id. Every
+  * read, plan and commit of a statement takes that one state; a commit
+  * is `meta.copy(...)` published as the next version
+  * ([[TableMetadata.json]], create-new). The parse is Jackson's tree
+  * model (Spark ships jackson-databind): key order, whitespace and
+  * unknown fields are free, object keys keep their file order, and
+  * floats parse as exact decimals with their trailing zeros, so a v3
+  * `initial-default` of `2.50` re-emits as written.
   *
   * Scope (minimal, spec-conformant): version-hint + metadata parsing,
   * snapshot selection (current or explicit id — time travel), manifest
@@ -66,8 +87,6 @@ import org.apache.spark.sql.functions.{broadcast, col, lit, regexp_replace}
   */
 object IcebergReader {
 
-  final case class IcebergSnapshot(id: Long, manifestList: String)
-
   private def metaDir(base: String) = Paths.get(base, "metadata")
 
   /** Current metadata version from `version-hint.text` (the file-system
@@ -78,55 +97,50 @@ object IcebergReader {
     Files.readString(hint, StandardCharsets.UTF_8).trim.toInt
   }
 
+  /** `v<N>.metadata.json` reads so far — each statement makes one. */
+  private[graft] val metadataLoads = new java.util.concurrent.atomic.AtomicLong
+
   private def metadataJson(base: String, v: Int): String = {
     val p = metaDir(base).resolve(s"v$v.metadata.json")
     require(Files.exists(p), s"missing metadata/v$v.metadata.json under $base")
+    metadataLoads.incrementAndGet()
     Files.readString(p, StandardCharsets.UTF_8)
   }
 
-  /** All snapshots declared by metadata version `v` — parsed from the
-    * BALANCED snapshot objects (a snapshot may carry nested objects
-    * like the `summary` string map between its fields). */
-  def snapshots(base: String, v: Int): Seq[IcebergSnapshot] = {
-    val json = metadataJson(base, v)
-    DeltaLogReader.longField(json, "format-version").foreach { fv =>
-      require(fv <= 3L, s"Iceberg format-version=$fv beyond this minimal reader")
-    }
-    val ml = "\"manifest-list\"\\s*:\\s*\"([^\"]+)\"".r
-    val sid = "\"snapshot-id\"\\s*:\\s*(-?\\d+)".r
-    snapshotObjects(json).flatMap { o =>
-      for {
-        i <- sid.findFirstMatchIn(o).map(_.group(1).toLong)
-        m <- ml.findFirstMatchIn(o).map(_.group(1))
-      } yield IcebergSnapshot(i, m)
+  /** Floats parse as exact decimals that keep their trailing zeros, so
+    * a raw `initial-default` re-emits as written. */
+  private[sources] val mapper: ObjectMapper = new ObjectMapper()
+    .enable(DeserializationFeature.USE_BIG_DECIMAL_FOR_FLOATS)
+    .configure(JsonNodeFeature.STRIP_TRAILING_BIGDECIMAL_ZEROES, false)
+
+  /** One snapshot of the `snapshots` list. `other` keeps every field
+    * this engine does not model (a foreign writer's
+    * `parent-snapshot-id`, say), in file order, re-emitted as-is. */
+  final case class Snapshot(id: Long, timestampMs: Long, manifestList: String,
+                            summary: Option[Map[String, String]] = None,
+                            firstRowId: Option[Long] = None,
+                            sequenceNumber: Option[Long] = None,
+                            schemaId: Option[Int] = None,
+                            other: Seq[(String, JsonNode)] = Nil) {
+    private[IcebergReader] def node: ObjectNode = {
+      val o = mapper.createObjectNode()
+      o.put("snapshot-id", id)
+      firstRowId.foreach(f => o.put("first-row-id", f))
+      summary.foreach { m =>
+        val s = o.putObject("summary")
+        m.foreach { case (k, v) => s.put(k, v) }
+      }
+      o.put("timestamp-ms", timestampMs)
+      o.put("manifest-list", manifestList)
+      sequenceNumber.foreach(n => o.put("sequence-number", n))
+      schemaId.foreach(n => o.put("schema-id", n))
+      other.foreach { case (k, v) => o.set[JsonNode](k, v) }
+      o
     }
   }
 
-  def currentSnapshotId(base: String, v: Int): Long =
-    DeltaLogReader.longField(metadataJson(base, v), "current-snapshot-id")
-      .getOrElse(throw new IllegalStateException(s"no current-snapshot-id in v$v"))
-
-  /** TIMESTAMP AS OF resolution: the snapshot whose `timestamp-ms` is
-    * the latest at or before `tsMillis` (the spec stamps every
-    * snapshot; travel to a time before the first snapshot fails). */
-  def snapshotAtTimestamp(base: String, v: Int, tsMillis: Long): Long = {
-    val sid = "\"snapshot-id\"\\s*:\\s*(-?\\d+)".r
-    val tms = "\"timestamp-ms\"\\s*:\\s*(-?\\d+)".r
-    val stamped = arrayObjects(metadataJson(base, v), "snapshots").flatMap { o =>
-      for {
-        i <- sid.findFirstMatchIn(o).map(_.group(1).toLong)
-        t <- tms.findFirstMatchIn(o).map(_.group(1).toLong)
-      } yield (i, t)
-    }
-    require(stamped.nonEmpty, s"no timestamped snapshots in $base v$v")
-    val at = stamped.zipWithIndex.filter(_._1._2 <= tsMillis)
-    require(at.nonEmpty,
-      s"no snapshot of $base at or before timestamp $tsMillis " +
-        s"(first is ${stamped.map(_._2).min})")
-    // max by timestamp, commit (declaration) order breaking ties —
-    // spec writers append to the snapshots array
-    at.maxBy { case ((_, t), i) => (t, i) }._1._1
-  }
+  /** A registered Puffin statistics file (the spec's `statistics`). */
+  final case class StatisticsFile(snapshotId: Long, path: String, fileSizeInBytes: Long)
 
   /** One snapshot in COMMIT order: public-spec snapshot ids are random
     * longs (only this writer's are sequential), so commit order comes
@@ -135,86 +149,194 @@ object IcebergReader {
     * array (spec writers append) for v1 tables that carry none. */
   final case class OrderedSnapshot(id: Long, seq: Long, idx: Int)
 
-  /** Split the metadata's top-level `"snapshots":[...]` array into its
-    * balanced JSON objects (field order inside each is free — external
-    * writers put `sequence-number` wherever they like). */
-  private def snapshotObjects(json: String): Seq[String] =
-    arrayObjects(json, "snapshots")
+  /** One `v<N>.metadata.json`, parsed once. `version` is the N it was
+    * read at (0 for a table not yet published); `base` is where it was
+    * read, which relative paths resolve against. `refs` maps a branch
+    * or tag name to (snapshot id, type); a tag pins an auditable
+    * snapshot against expiry. */
+  final case class TableMetadata(base: String, version: Int, formatVersion: Int,
+                                 uuid: Option[String], location: String,
+                                 currentSchemaId: Option[Int], schemas: Seq[IceSchema],
+                                 defaultSpecId: Option[Int], specs: Seq[IceSpec],
+                                 currentSnapshotId: Long, snapshots: Seq[Snapshot],
+                                 nextRowId: Option[Long] = None,
+                                 statistics: Seq[StatisticsFile] = Nil,
+                                 refs: Map[String, (Long, String)] = Map.empty) {
 
-  /** Split a named top-level `"key":[{...},{...}]` array into its
-    * balanced JSON objects. */
-  private[sources] def arrayObjects(json: String, key: String): Seq[String] = {
-    val i = json.indexOf("\"" + key + "\"")
-    if (i < 0) return Nil
-    var j = json.indexOf('[', i)
-    require(j >= 0, "malformed snapshots array")
-    j += 1
-    var depth = 0
-    var inStr = false
-    var objStart = -1
-    val out = Seq.newBuilder[String]
-    var done = false
-    while (!done && j < json.length) {
-      val c = json.charAt(j)
-      if (inStr) {
-        if (c == '\\') j += 1 else if (c == '"') inStr = false
-      } else c match {
-        case '"' => inStr = true
-        case '{' => if (depth == 0) objStart = j; depth += 1
-        case '}' => depth -= 1; if (depth == 0) { out += json.substring(objStart, j + 1) }
-        case ']' => if (depth == 0) done = true
-        case _ =>
-      }
-      j += 1
+    def snapshot(id: Long): Snapshot = snapshots.find(_.id == id).getOrElse(
+      throw new IllegalArgumentException(s"snapshot $id not in ${base}'s metadata"))
+
+    /** `s` appended as the table's new current snapshot. */
+    def withSnapshot(s: Snapshot): TableMetadata =
+      copy(currentSnapshotId = s.id, snapshots = snapshots :+ s)
+
+    /** None for legacy tables that track no schema. */
+    def currentSchema: Option[IceSchema] = currentSchemaId.map(cid =>
+      schemas.find(_.schemaId == cid).getOrElse(throw new IllegalStateException(
+        s"current-schema-id $cid not in ${base}'s schemas list")))
+
+    /** The declared default spec; a specs list without one (this
+      * writer's transform tables) defaults to the lowest spec id. */
+    def defaultSpec: Option[IceSpec] =
+      defaultSpecId.orElse(specs.map(_.specId).minOption)
+        .flatMap(id => specs.find(_.specId == id))
+
+    /** All snapshots in COMMIT order — what a change stream iterates
+      * (iterating by raw id would skip or reorder commits on
+      * externally-written tables). */
+    def history: Seq[OrderedSnapshot] =
+      snapshots.zipWithIndex.map { case (s, i) =>
+        OrderedSnapshot(s.id, s.sequenceNumber.getOrElse(i + 1L), i)
+      }.sortBy(s => (s.seq, s.idx))
+
+    /** TIMESTAMP AS OF resolution: the snapshot whose `timestamp-ms` is
+      * the latest at or before `tsMillis` (travel to a time before the
+      * first snapshot fails). */
+    def snapshotAtTimestamp(tsMillis: Long): Long = {
+      require(snapshots.nonEmpty, s"no timestamped snapshots in $base v$version")
+      val at = snapshots.zipWithIndex.filter(_._1.timestampMs <= tsMillis)
+      require(at.nonEmpty,
+        s"no snapshot of $base at or before timestamp $tsMillis " +
+          s"(first is ${snapshots.map(_.timestampMs).min})")
+      // max by timestamp, commit (declaration) order breaking ties —
+      // spec writers append to the snapshots array
+      at.maxBy { case (s, i) => (s.timestampMs, i) }._1.id
     }
-    out.result()
+
+    /** The data sequence number at which `fieldId` first belonged to a
+      * COMMITTED snapshot's schema — the spec's per-file default cutoff
+      * (initial-default applies to files written under a schema that
+      * predates the field, i.e. data sequence < this). Evidence comes
+      * from snapshots that declare BOTH `schema-id` and
+      * `sequence-number` (spec v2+ writers); None when no snapshot does
+      * (this engine's own writer — whose append refuses NULLs in
+      * defaulted columns, making the per-VALUE fallback sound). */
+    def fieldIntroSeq(fieldId: Int): Option[Long] = {
+      val withField = schemas.filter(_.fields.exists(_.id == fieldId)).map(_.schemaId).toSet
+      snapshots.collect {
+        case s if s.schemaId.exists(withField) && s.sequenceNumber.isDefined => s.sequenceNumber.get
+      }.minOption
+    }
+
+    /** The metadata file's text: compact, keys in this writer's order,
+      * optional keys omitted when absent (a file this writer published
+      * re-emits byte for byte). Schemas and specs sort by id, statistics
+      * by snapshot, refs by name. A field with a v3 `initial-default`
+      * serializes as REQUIRED with a matching `write-default` (the
+      * spec's pairing; also the writer obligation the merged-scan
+      * default resolution rests on). */
+    def json: String = {
+      val o = mapper.createObjectNode()
+      o.put("format-version", formatVersion)
+      uuid.foreach(u => o.put("table-uuid", u))
+      o.put("location", location)
+      currentSchemaId.foreach { cid =>
+        val arr = o.putArray("schemas")
+        schemas.sortBy(_.schemaId).foreach { s =>
+          val so = arr.addObject().put("type", "struct").put("schema-id", s.schemaId)
+          val fs = so.putArray("fields")
+          s.fields.foreach { f =>
+            val fo = fs.addObject().put("id", f.id).put("name", f.name)
+              .put("required", f.initialDefault.isDefined)
+            if (f.tpe.startsWith("{")) fo.putRawValue("type", new RawValue(f.tpe))
+            else fo.put("type", f.tpe)
+            f.initialDefault.foreach { raw =>
+              fo.putRawValue("initial-default", new RawValue(raw))
+              fo.putRawValue("write-default", new RawValue(raw))
+            }
+          }
+        }
+        o.put("current-schema-id", cid)
+      }
+      if (specs.nonEmpty) {
+        val arr = o.putArray("partition-specs")
+        specs.sortBy(_.specId).foreach { s =>
+          val fs = arr.addObject().put("spec-id", s.specId).putArray("fields")
+          s.fields.zipWithIndex.foreach { case (f, i) =>
+            fs.addObject().put("name", f.name).put("transform", f.transform)
+              .put("source-id", f.sourceId).put("field-id", 1000 + i)
+          }
+        }
+        defaultSpecId.foreach(d => o.put("default-spec-id", d))
+      }
+      o.put("current-snapshot-id", currentSnapshotId)
+      val ss = o.putArray("snapshots")
+      snapshots.foreach(s => ss.add(s.node))
+      nextRowId.foreach(n => o.put("next-row-id", n))
+      if (statistics.nonEmpty) {
+        val arr = o.putArray("statistics")
+        statistics.sortBy(_.snapshotId).foreach { s =>
+          arr.addObject().put("snapshot-id", s.snapshotId).put("statistics-path", s.path)
+            .put("file-size-in-bytes", s.fileSizeInBytes)
+        }
+      }
+      if (refs.nonEmpty) {
+        val ro = o.putObject("refs")
+        refs.toSeq.sortBy(_._1).foreach { case (n, (id, t)) =>
+          ro.putObject(n).put("snapshot-id", id).put("type", t)
+        }
+      }
+      mapper.writeValueAsString(o)
+    }
   }
 
-  /** Balanced `{...}` object value of `"key"` inside `json`. */
-  private def objectField(json: String, key: String): Option[String] = {
-    val i = json.indexOf("\"" + key + "\"")
-    if (i < 0) return None
-    var j = json.indexOf('{', i)
-    if (j < 0) return None
-    val start = j
-    var depth = 0
-    var inStr = false
-    while (j < json.length) {
-      val c = json.charAt(j)
-      if (inStr) { if (c == '\\') j += 1 else if (c == '"') inStr = false }
-      else c match {
-        case '"' => inStr = true
-        case '{' => depth += 1
-        case '}' => depth -= 1; if (depth == 0) return Some(json.substring(start, j + 1))
-        case _ =>
-      }
-      j += 1
-    }
-    None
+  private[sources] def field(n: JsonNode, k: String): Option[JsonNode] =
+    Option(n.get(k)).filterNot(_.isNull)
+  private def longOf(n: JsonNode, k: String): Option[Long] = field(n, k).map(_.asLong)
+  private def intOf(n: JsonNode, k: String): Option[Int] = field(n, k).map(_.asInt)
+  private def textOf(n: JsonNode, k: String): Option[String] = field(n, k).map(_.asText)
+  private[sources] def elems(n: JsonNode, k: String): Seq[JsonNode] =
+    field(n, k).toSeq.flatMap(_.iterator.asScala)
+  private[sources] def props(n: JsonNode): Seq[(String, JsonNode)] =
+    n.properties.asScala.toSeq.map(e => e.getKey -> e.getValue)
+
+  private val modeledSnapshotKeys = Set("snapshot-id", "timestamp-ms", "manifest-list",
+    "summary", "first-row-id", "sequence-number", "schema-id")
+
+  /** The table state at the current version (hint, then one parse). */
+  def load(base: String): TableMetadata = load(base, currentMetadataVersion(base))
+
+  /** The table state at metadata version `v`. */
+  def load(base: String, v: Int): TableMetadata = {
+    val o = mapper.readTree(metadataJson(base, v))
+    val fv = intOf(o, "format-version").getOrElse(1)
+    require(fv <= 3, s"Iceberg format-version=$fv beyond this minimal reader")
+    def need[T](x: Option[T], what: String, in: JsonNode): T =
+      x.getOrElse(throw new IllegalArgumentException(s"$base v$v: no $what in $in"))
+    TableMetadata(base, v, fv, textOf(o, "table-uuid"), textOf(o, "location").getOrElse(base),
+      intOf(o, "current-schema-id"),
+      elems(o, "schemas").map(s => IceSchema(intOf(s, "schema-id").getOrElse(0),
+        elems(s, "fields").map { f =>
+          val t = need(field(f, "type"), "type", f)
+          IceField(need(intOf(f, "id"), "id", f), need(textOf(f, "name"), "name", f),
+            if (t.isTextual) t.asText else t.toString,
+            field(f, "initial-default").map(_.toString))
+        })),
+      intOf(o, "default-spec-id"),
+      elems(o, "partition-specs").map(s => IceSpec(intOf(s, "spec-id").getOrElse(0),
+        elems(s, "fields").map(f => IceSpecField(need(textOf(f, "name"), "name", f),
+          need(textOf(f, "transform"), "transform", f),
+          need(intOf(f, "source-id"), "source-id", f))))),
+      longOf(o, "current-snapshot-id").getOrElse(-1L),
+      elems(o, "snapshots").map { s =>
+        Snapshot(need(longOf(s, "snapshot-id"), "snapshot-id", s),
+          need(longOf(s, "timestamp-ms"), "timestamp-ms", s),
+          need(textOf(s, "manifest-list"), "manifest-list", s),
+          field(s, "summary").map(m => ListMap(props(m).map(e => e._1 -> e._2.asText): _*)),
+          longOf(s, "first-row-id"), longOf(s, "sequence-number"), intOf(s, "schema-id"),
+          props(s).filterNot(e => modeledSnapshotKeys(e._1)))
+      },
+      longOf(o, "next-row-id"),
+      elems(o, "statistics").map(e => StatisticsFile(
+        need(longOf(e, "snapshot-id"), "snapshot-id", e),
+        need(textOf(e, "statistics-path"), "statistics-path", e),
+        longOf(e, "file-size-in-bytes").getOrElse(0L))),
+      field(o, "refs").toSeq.flatMap(props).map { case (n, r) =>
+        n -> (need(longOf(r, "snapshot-id"), "snapshot-id", r), textOf(r, "type").getOrElse("branch"))
+      }.toMap)
   }
 
-  /** Per-snapshot `summary` objects (raw JSON), keyed by snapshot id —
-    * the spec's string map; streaming commits stash their idempotence
-    * markers here, atomic with the metadata flip. */
-  def snapshotSummaries(base: String, v: Int): Map[Long, String] =
-    snapshotObjects(metadataJson(base, v)).flatMap { o =>
-      for {
-        id <- DeltaLogReader.longField(o, "snapshot-id")
-        sm <- objectField(o, "summary")
-      } yield id -> sm
-    }.toMap
-
-  /** All snapshots of metadata version `v` in COMMIT order — what a
-    * change stream must iterate (iterating by raw id would skip or
-    * reorder commits on externally-written tables). */
-  def snapshotHistory(base: String, v: Int): Seq[OrderedSnapshot] =
-    snapshotObjects(metadataJson(base, v)).zipWithIndex.map { case (o, i) =>
-      OrderedSnapshot(
-        DeltaLogReader.longField(o, "snapshot-id").getOrElse(
-          throw new IllegalStateException(s"snapshot object without snapshot-id: $o")),
-        DeltaLogReader.longField(o, "sequence-number").getOrElse(i + 1L),
-        i)
-    }.sortBy(s => (s.seq, s.idx))
+  def currentSnapshotId(base: String, v: Int): Long = load(base, v).currentSnapshotId
 
   // ---- SCHEMA EVOLUTION (field-id-based projection) ------------------------
   // The spec's `schemas` list + `current-schema-id`: every column is a
@@ -233,38 +355,16 @@ object IcebergReader {
                             initialDefault: Option[String] = None)
   final case class IceSchema(schemaId: Int, fields: Seq[IceField])
 
-  /** (current-schema-id, declared schemas) of metadata version `v` —
-    * (None, Nil) for legacy tables that track no schema. */
-  def schemas(base: String, v: Int): (Option[Int], Seq[IceSchema]) = {
-    val json = metadataJson(base, v)
-    val cur = DeltaLogReader.longField(json, "current-schema-id").map(_.toInt)
-    val fieldRe = ("""\{"id":(\d+),"name":"([^"]+)","required":(?:true|false),""" +
-      """"type":"([^"]+)"""" +
-      """(?:,"initial-default":("(?:[^"\\]|\\.)*"|-?[0-9.]+|true|false))?""" +
-      """(?:,"write-default":(?:"(?:[^"\\]|\\.)*"|-?[0-9.]+|true|false))?\}""").r
-    val all = arrayObjects(json, "schemas").map { o =>
-      IceSchema(
-        DeltaLogReader.longField(o, "schema-id").map(_.toInt).getOrElse(0),
-        fieldRe.findAllMatchIn(o).map(m =>
-          IceField(m.group(1).toInt, m.group(2), m.group(3),
-            Option(m.group(4)))).toSeq)
-    }
-    (cur, all)
-  }
-
   /** A field's default as a typed Column (JSON scalar → literal) — the
     * writer's `write-default` fill and the reader's `initial-default`
     * resolution share it. */
-  private[sources] def defaultColumn(f: IceField): Column = defaultLit(f)
-
-  private def defaultLit(f: IceField): Column = {
-    val raw = f.initialDefault.get
+  private[sources] def defaultColumn(f: IceField): Column = {
+    val n = mapper.readTree(f.initialDefault.get)
     val v: Any =
-      if (raw.startsWith("\"")) raw.substring(1, raw.length - 1)
-        .replace("\\\"", "\"").replace("\\\\", "\\")
-      else if (raw == "true" || raw == "false") raw.toBoolean
-      else if (raw.contains('.')) raw.toDouble
-      else raw.toLong
+      if (n.isTextual) n.asText
+      else if (n.isBoolean) n.asBoolean
+      else if (n.isIntegralNumber) n.asLong
+      else n.asDouble
     lit(v).cast(sparkTypeOf(f.tpe))
   }
 
@@ -287,34 +387,10 @@ object IcebergReader {
     * spelling a file has), added fields missing everywhere surface as
     * typed NULL, dropped fields are simply not selected. None when the
     * table tracks no schemas (legacy — name-based read unchanged). */
-  /** The data sequence number at which `fieldId` first belonged to a
-    * COMMITTED snapshot's schema — the spec's per-file default cutoff
-    * (initial-default applies to files written under a schema that
-    * predates the field, i.e. data sequence < this). Evidence comes
-    * from snapshots that declare BOTH `schema-id` and
-    * `sequence-number` (spec v2+ writers); None when no snapshot does
-    * (this engine's own writer — whose append refuses NULLs in
-    * defaulted columns, making the per-VALUE fallback sound). */
-  private def fieldIntroSeq(base: String, v: Int, fieldId: Int): Option[Long] = {
-    val (_, all) = schemas(base, v)
-    val withField = all.filter(_.fields.exists(_.id == fieldId)).map(_.schemaId).toSet
-    if (withField.isEmpty) return None
-    val seqs = arrayObjects(metadataJson(base, v), "snapshots").flatMap { o =>
-      for {
-        sid <- DeltaLogReader.longField(o, "schema-id")
-        seq <- DeltaLogReader.longField(o, "sequence-number")
-        if withField(sid.toInt)
-      } yield seq
-    }
-    if (seqs.isEmpty) None else Some(seqs.min)
-  }
-
-  private def schemaProjection(base: String, v: Int,
+  private def schemaProjection(meta: TableMetadata,
                                rawCols: Seq[String]): Option[Seq[Column]] = {
-    val (curOpt, all) = schemas(base, v)
-    curOpt.map { cid =>
-      val cur = all.find(_.schemaId == cid).getOrElse(throw new IllegalStateException(
-        s"current-schema-id $cid not in ${base}'s schemas list"))
+    val all = meta.schemas
+    meta.currentSchema.map { cur =>
       // ambiguity guard: a name that ever labeled TWO different field
       // ids cannot be resolved from a merged scan (the writer refuses
       // to create such reuse; externally-written reuse fails loudly)
@@ -344,13 +420,13 @@ object IcebergReader {
         // append refuses NULLs in defaulted columns, so NULL ⟺ the
         // file predates the column.
         val cd = f.initialDefault.fold(c) { _ =>
-          fieldIntroSeq(base, v, f.id) match {
+          meta.fieldIntroSeq(f.id) match {
             case Some(intro) =>
               org.apache.spark.sql.functions
-                .when(c.isNull && col("__fseq") < lit(intro), defaultLit(f))
+                .when(c.isNull && col("__fseq") < lit(intro), defaultColumn(f))
                 .otherwise(c)
             case None =>
-              org.apache.spark.sql.functions.coalesce(c, defaultLit(f))
+              org.apache.spark.sql.functions.coalesce(c, defaultColumn(f))
           }
         }
         cd.as(f.name)
@@ -368,68 +444,16 @@ object IcebergReader {
   final case class IceSpecField(name: String, transform: String, sourceId: Int)
   final case class IceSpec(specId: Int, fields: Seq[IceSpecField])
 
-  /** (default-spec-id, declared partition specs) — (None, Nil) when the
-    * table tracks none. A specs list without a declared default (this
-    * writer's old transform tables) defaults to the lowest spec id. */
-  def partitionSpecs(base: String, v: Int): (Option[Int], Seq[IceSpec]) = {
-    val json = metadataJson(base, v)
-    val fieldRe = ("""\{"name":"([^"]+)","transform":"([^"]+)",""" +
-      """"source-id":(\d+),"field-id":\d+\}""").r
-    val all = arrayObjects(json, "partition-specs").map { o =>
-      IceSpec(
-        DeltaLogReader.longField(o, "spec-id").map(_.toInt).getOrElse(0),
-        fieldRe.findAllMatchIn(o).map(m =>
-          IceSpecField(m.group(1), m.group(2), m.group(3).toInt)).toSeq)
-    }
-    val default = DeltaLogReader.longField(json, "default-spec-id").map(_.toInt)
-      .orElse(if (all.isEmpty) None else Some(all.map(_.specId).min))
-    (default, all)
-  }
-
-  /** The table's declared format-version at metadata version `v`
-    * (1 when absent). Writers must THREAD this through every metadata
-    * rewrite: re-stamping a v2 table (live delete files) as v1 would
-    * tell spec-conforming external readers to ignore the deletes. */
-  def formatVersion(base: String, v: Int): Int =
-    DeltaLogReader.longField(metadataJson(base, v), "format-version")
-      .map(_.toInt).getOrElse(1)
-
-  /** Named refs (the spec's `refs` map: branches + tags → snapshot
-    * ids) declared by metadata version `v`. A tag pins an auditable
-    * snapshot against expiry-by-default; a branch is a movable head. */
-  def refs(base: String, v: Int): Map[String, (Long, String)] = {
-    val json = metadataJson(base, v)
-    val block = """"refs"\s*:\s*\{(.*)$""".r
-    block.findFirstMatchIn(json).map { m =>
-      val one = """"([^"]+)"\s*:\s*\{\s*"snapshot-id"\s*:\s*(\d+)\s*,\s*"type"\s*:\s*"([^"]+)"\s*\}""".r
-      one.findAllMatchIn(m.group(1))
-        .map(r => r.group(1) -> (r.group(2).toLong, r.group(3))).toMap
-    }.getOrElse(Map.empty)
-  }
-
-  /** TABLE STATISTICS entries declared by metadata version `v`: the
-    * spec's `statistics` list — (snapshot-id, statistics-path) of each
-    * registered Puffin stats file. Writers thread the list through
-    * every metadata rewrite (like refs); expiry drops entries whose
-    * snapshot is gone. */
-  def statisticsEntries(base: String, v: Int): Seq[(Long, String)] = {
-    val re = (""""snapshot-id"\s*:\s*(\d+)\s*,\s*""" +
-      """"statistics-path"\s*:\s*"([^"]+)"""").r
-    re.findAllMatchIn(metadataJson(base, v))
-      .map(m => m.group(1).toLong -> m.group(2)).toSeq
-  }
-
   /** Column NDV estimates from the registered stats Puffin of
     * `snapshotId` — the blob properties' `ndv` keyed by the blob's
     * first source field id. READS ONLY the puffin FOOTER: table-stats
     * consumers (CBO, dataset cards) get cardinalities without touching
     * a single data file. */
-  def statsNdv(base: String, snapshotId: Long): Map[Int, Long] = {
-    val v = currentMetadataVersion(base)
-    val path = statisticsEntries(base, v).collectFirst {
-      case (id, p) if id == snapshotId => resolve(base, p)
+  def statsNdv(meta: TableMetadata, snapshotId: Long): Map[Int, Long] = {
+    val path = meta.statistics.collectFirst {
+      case s if s.snapshotId == snapshotId => resolve(meta.base, s.path)
     }.getOrElse(throw new IllegalArgumentException(
-      s"no statistics registered for snapshot $snapshotId of $base"))
+      s"no statistics registered for snapshot $snapshotId of ${meta.base}"))
     val (blobs, _) = Puffin.readFooter(path)
     blobs.flatMap(b => b.fields.headOption.flatMap(f =>
       b.properties.get("ndv").map(n => f -> n.toLong))).toMap
@@ -437,13 +461,13 @@ object IcebergReader {
 
   /** Snapshot read by REF name (`SELECT ... VERSION AS OF 'tag'`). */
   def readRef(spark: SparkSession, base: String, ref: String): DataFrame = {
-    val v = currentMetadataVersion(base)
-    val (id, _) = refs(base, v).getOrElse(ref,
+    val meta = load(base)
+    val (id, _) = meta.refs.getOrElse(ref,
       throw new IllegalArgumentException(s"no ref '$ref' in ${base}'s metadata"))
-    read(spark, base, id)
+    read(spark, meta, id)
   }
 
-  private def resolve(base: String, p: String): String =
+  private[sources] def resolve(base: String, p: String): String =
     if (p.startsWith("/") || p.contains("://")) p
     else Paths.get(base).resolve(p).toString
 
@@ -526,47 +550,36 @@ object IcebergReader {
   /** ALL manifest entries of one snapshot (every status), as the
     * avro-backed DataFrame — the change-stream source reads the raw
     * statuses; planners filter to live below. */
-  private[sources] def manifestEntries(spark: SparkSession, base: String,
-                                       snapshotId: Long): DataFrame = {
-    val manifests = manifestsWithSpecs(spark, base, snapshotId).map(_._1)
-    readMetaAvro(spark, manifests)
-  }
+  private[sources] def manifestEntries(spark: SparkSession, meta: TableMetadata,
+                                       snapshotId: Long): DataFrame =
+    readMetaAvro(spark, manifestsWithSpecs(spark, meta, snapshotId).map(_._1))
 
   /** The snapshot's manifests WITH each one's partition-spec id (the
     * manifest list's `partition_spec_id`; lists written before spec
     * tracking carry none — every manifest is spec 0). */
-  private[sources] def manifestsWithSpecs(spark: SparkSession, base: String,
+  private[sources] def manifestsWithSpecs(spark: SparkSession, meta: TableMetadata,
                                           snapshotId: Long): Seq[(String, Int)] = {
-    val snap = snapshots(base, currentMetadataVersion(base))
-      .find(_.id == snapshotId)
-      .getOrElse(throw new IllegalArgumentException(
-        s"snapshot $snapshotId not in ${base}'s metadata"))
-    val ml = readMetaAvro(spark, Seq(resolve(base, snap.manifestList)))
+    val ml = readMetaAvro(spark,
+      Seq(resolve(meta.base, meta.snapshot(snapshotId).manifestList)))
     val specCol =
       if (ml.columns.contains("partition_spec_id")) col("partition_spec_id").cast("int")
       else lit(0)
     val out = ml.select(col("manifest_path"), specCol)
-      .collect().map(r => resolve(base, r.getString(0)) -> r.getInt(1)).toSeq
+      .collect().map(r => resolve(meta.base, r.getString(0)) -> r.getInt(1)).toSeq
     require(out.nonEmpty, s"snapshot $snapshotId has no manifests")
     out
   }
-
-  /** Live manifest entries of one snapshot (status != 2 DELETED), as
-    * the avro-backed DataFrame the planners and the `files` metadata
-    * relation share. */
-  private def liveEntries(spark: SparkSession, base: String, snapshotId: Long): DataFrame =
-    manifestEntries(spark, base, snapshotId).filter(col("status") =!= 2)
 
   private def dataFileFieldsOf(entries: DataFrame): Array[String] =
     entries.schema("data_file").dataType
       .asInstanceOf[org.apache.spark.sql.types.StructType].fieldNames
 
   /** The `files` metadata relation of one snapshot: the live entries
-    * themselves — a census over it (file counts, row counts from
-    * `record_count`) never opens a data file, so lakehouse ops
-    * queries run at metadata cost. */
+    * (status != 2 DELETED) themselves — a census over it (file counts,
+    * row counts from `record_count`) never opens a data file, so
+    * lakehouse ops queries run at metadata cost. */
   def filesTable(spark: SparkSession, base: String, snapshotId: Long): DataFrame = {
-    val entries = liveEntries(spark, base, snapshotId)
+    val entries = manifestEntries(spark, load(base), snapshotId).filter(col("status") =!= 2)
     val content =
       if (dataFileFieldsOf(entries).contains("content")) col("data_file.content")
       else lit(0)
@@ -585,7 +598,7 @@ object IcebergReader {
     * scans). */
   def planSnapshot(spark: SparkSession, base: String, snapshotId: Long,
                    entryFilter: Column = lit(true)): SnapshotScan =
-    planSnapshotBySpec(spark, base, snapshotId, _ => entryFilter)
+    plan(spark, load(base), snapshotId, _ => entryFilter)
 
   /** Scan planning under PARTITION-SPEC EVOLUTION: manifests group by
     * their spec-id (each era's `data_file.partition` struct follows its
@@ -594,14 +607,14 @@ object IcebergReader {
     * versa — a spec with no useful filter keeps all entries, the
     * residual row filter stays exact), and the per-era scans merge.
     * Single-spec tables take exactly the old one-load path. */
-  def planSnapshotBySpec(spark: SparkSession, base: String, snapshotId: Long,
-                         filterFor: Int => Column): SnapshotScan = {
-    val groups = manifestsWithSpecs(spark, base, snapshotId)
+  def plan(spark: SparkSession, meta: TableMetadata, snapshotId: Long,
+           filterFor: Int => Column = _ => lit(true)): SnapshotScan = {
+    val groups = manifestsWithSpecs(spark, meta, snapshotId)
       .groupBy(_._2).toSeq.sortBy(_._1)
     groups.map { case (specId, ms) =>
       val entries = readMetaAvro(spark, ms.map(_._1))
         .filter(col("status") =!= 2)
-      scanOfEntries(base, entries, filterFor(specId))
+      scanOfEntries(meta.base, entries, filterFor(specId))
     }.reduce { (a, b) =>
       SnapshotScan(a.dataFiles ++ b.dataFiles, a.posDeleteFiles ++ b.posDeleteFiles,
         a.eqDeleteFiles ++ b.eqDeleteFiles, a.dataSeq ++ b.dataSeq,
@@ -772,22 +785,20 @@ object IcebergReader {
     * lineage-preserving compaction materialized them into parquet. */
   private val LineageCols = Seq("_row_id", "_last_updated_sequence_number")
 
-  private def readScan(spark: SparkSession, base: String, snapshotId: Long,
-                       scan: SnapshotScan): DataFrame = {
-    require(scan.dataFiles.nonEmpty, s"empty snapshot $snapshotId of $base")
-    val v = currentMetadataVersion(base)
+  private[sources] def readScan(spark: SparkSession, meta: TableMetadata, snapshotId: Long,
+                                scan: SnapshotScan): DataFrame = {
+    require(scan.dataFiles.nonEmpty, s"empty snapshot $snapshotId of ${meta.base}")
     val hasDels = scan.posDeleteFiles.nonEmpty || scan.eqDeleteFiles.nonEmpty ||
       scan.dvs.nonEmpty
     // evolution-tracking tables read MERGED (files written under
     // different schemas carry different column sets) and project the
     // CURRENT schema by field id; legacy tables keep the plain read —
     // and skip the all-footers merge pass entirely
-    val tracksSchemas = schemas(base, v)._1.isDefined
     val mergedCols =
-      if (!tracksSchemas) Seq.empty[String]
+      if (meta.currentSchemaId.isEmpty) Seq.empty[String]
       else spark.read.option("mergeSchema", "true")
         .parquet(scan.dataFiles.map(_._1): _*).columns.toSeq
-    (if (tracksSchemas) schemaProjection(base, v, mergedCols) else None) match {
+    schemaProjection(meta, mergedCols) match {
       case Some(proj) =>
         var stamped = spark.read.option("mergeSchema", "true")
           .parquet(scan.dataFiles.map(_._1): _*)
@@ -795,10 +806,8 @@ object IcebergReader {
           .withColumn("__pos", col("_metadata.row_index"))
         // per-file default gating needs each row's file data sequence:
         // a files-sized broadcast join (metadata-scale next to the data)
-        val needsSeq = schemas(base, v)._2
-          .find(s => schemas(base, v)._1.contains(s.schemaId))
-          .exists(_.fields.exists(f =>
-            f.initialDefault.isDefined && fieldIntroSeq(base, v, f.id).isDefined))
+        val needsSeq = meta.currentSchema.exists(_.fields.exists(f =>
+          f.initialDefault.isDefined && meta.fieldIntroSeq(f.id).isDefined))
         if (needsSeq) {
           val seqRows = scan.dataSeq.toSeq.map { case (p, sq) =>
             (p.replaceFirst("^file:/*", "/"), sq)
@@ -820,13 +829,19 @@ object IcebergReader {
     }
   }
 
-  /** Snapshot read (explicit id = time travel), position deletes applied. */
+  /** Snapshot read (explicit id = time travel) of one table state:
+    * deletes applied, the state's CURRENT schema projected. */
+  def read(spark: SparkSession, meta: TableMetadata, snapshotId: Long): DataFrame =
+    readScan(spark, meta, snapshotId, plan(spark, meta, snapshotId))
+
   def read(spark: SparkSession, base: String, snapshotId: Long): DataFrame =
-    readScan(spark, base, snapshotId, planSnapshot(spark, base, snapshotId))
+    read(spark, load(base), snapshotId)
 
   /** Current-snapshot read. */
-  def read(spark: SparkSession, base: String): DataFrame =
-    read(spark, base, currentSnapshotId(base, currentMetadataVersion(base)))
+  def read(spark: SparkSession, base: String): DataFrame = {
+    val meta = load(base)
+    read(spark, meta, meta.currentSnapshotId)
+  }
 
   /** Incremental append read: only the rows `snapshotId` itself ADDED
     * (status=1 data entries of its manifest list) — the spec's
@@ -876,21 +891,9 @@ object IcebergReader {
     * filter — identity-partitioned data files carry the source column,
     * making the residual exact. */
   def readWhere(spark: SparkSession, base: String, snapshotId: Long,
-                partitionFilter: Column): DataFrame =
-    readScan(spark, base, snapshotId,
-      planSnapshot(spark, base, snapshotId, partitionFilter))
-
-  /** The v3 row-lineage high-water mark: the metadata's `next-row-id`
-    * (the first id the NEXT commit may assign). */
-  def nextRowId(base: String, v: Int): Option[Long] =
-    DeltaLogReader.longField(metadataJson(base, v), "next-row-id")
-
-  /** Each snapshot's `first-row-id` (v3 row lineage) — writers carry
-    * these through every metadata rewrite. */
-  def snapshotFirstRowIds(base: String, v: Int): Map[Long, Long] = {
-    val re = """"snapshot-id"\s*:\s*(\d+)\s*,\s*"first-row-id"\s*:\s*(\d+)""".r
-    re.findAllMatchIn(metadataJson(base, v))
-      .map(m => m.group(1).toLong -> m.group(2).toLong).toMap
+                partitionFilter: Column): DataFrame = {
+    val meta = load(base)
+    readScan(spark, meta, snapshotId, plan(spark, meta, snapshotId, _ => partitionFilter))
   }
 
   /** v3 ROW-LINEAGE read: the snapshot's live rows plus the spec's two
@@ -908,9 +911,13 @@ object IcebergReader {
     * a files-sized frame; `mergeSchema` makes mixed sets (some files
     * materialize lineage, some inherit) read uniformly. */
   def readLineage(spark: SparkSession, base: String, snapshotId: Long): DataFrame = {
-    import org.apache.spark.sql.functions.coalesce
     val scan = planSnapshot(spark, base, snapshotId)
     require(scan.dataFiles.nonEmpty, s"empty snapshot $snapshotId of $base")
+    readLineage(spark, scan)
+  }
+
+  private[sources] def readLineage(spark: SparkSession, scan: SnapshotScan): DataFrame = {
+    import org.apache.spark.sql.functions.coalesce
     val raw = spark.read.option("mergeSchema", "true")
       .parquet(scan.dataFiles.map(_._1): _*)
     val stamped = raw

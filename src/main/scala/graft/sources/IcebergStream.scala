@@ -49,9 +49,9 @@ object IcebergStream {
     StructField("content", IntegerType, nullable = false)))
 
   /** One snapshot's changed entries: (action, path, records, content). */
-  def actionRows(spark: SparkSession, base: String,
+  def actionRows(spark: SparkSession, meta: IcebergReader.TableMetadata,
                  snapshotId: Long): Seq[(String, String, Long, Int)] = {
-    val entries = IcebergReader.manifestEntries(spark, base, snapshotId)
+    val entries = IcebergReader.manifestEntries(spark, meta, snapshotId)
     val hasContent = entries.schema("data_file").dataType
       .asInstanceOf[StructType].fieldNames.contains("content")
     val contentCol =
@@ -81,16 +81,11 @@ object IcebergStreamSink {
     java.nio.file.Files.exists(
       java.nio.file.Paths.get(base, "metadata", "version-hint.text"))
 
-  /** Max committed batch id for `appId`; -1 when none. */
-  def lastBatch(base: String, appId: String): Long = {
-    if (!exists(base)) return -1L
-    val v = IcebergReader.currentMetadataVersion(base)
-    IcebergReader.snapshotSummaries(base, v).values.flatMap { j =>
-      DeltaLogReader.strField(j, "graft-app-id").filter(_ == appId)
-        .flatMap(_ => DeltaLogReader.strField(j, "graft-batch-id"))
-        .map(_.toLong)
-    }.foldLeft(-1L)(math.max)
-  }
+  /** Max committed batch id for `appId` in one table state; -1 when none. */
+  def lastBatch(meta: IcebergReader.TableMetadata, appId: String): Long =
+    meta.snapshots.flatMap(_.summary).flatMap { m =>
+      m.get("graft-app-id").filter(_ == appId).flatMap(_ => m.get("graft-batch-id"))
+    }.map(_.toLong).foldLeft(-1L)(math.max)
 
   /** Commit one micro-batch; false = absorbed redelivery. The first
     * batch CREATES the table (schema-only metadata, then the summary-
@@ -98,12 +93,11 @@ object IcebergStreamSink {
   def commit(spark: org.apache.spark.sql.SparkSession,
              df: org.apache.spark.sql.DataFrame,
              base: String, appId: String, batchId: Long): Boolean = {
-    if (exists(base) && lastBatch(base, appId) >= batchId) return false
-    def esc(x: String) = x.replace("\\", "\\\\").replace("\"", "\\\"")
-    val summary =
-      s"""{"graft-app-id":"${esc(appId)}","graft-batch-id":"$batchId"}"""
     if (!exists(base)) IcebergWriter.createEmpty(spark, df.schema, base)
-    IcebergWriter.append(spark, df, base, Some(summary))
+    val meta = IcebergReader.load(base)
+    if (lastBatch(meta, appId) >= batchId) return false
+    IcebergWriter.append(spark, df, meta,
+      Some(Map("graft-app-id" -> appId, "graft-batch-id" -> batchId.toString)))
     true
   }
 }
@@ -165,10 +159,8 @@ final case class SnapshotSeqOffset(seq: Long, idx: Long) extends Offset {
 }
 
 final class IcebergMicroBatchStream(base: String) extends MicroBatchStream {
-  private def history() =
-    IcebergReader.snapshotHistory(base, IcebergReader.currentMetadataVersion(base))
   override def initialOffset(): Offset = SnapshotSeqOffset(0L, -1L)
-  override def latestOffset(): Offset = history().lastOption
+  override def latestOffset(): Offset = IcebergReader.load(base).history.lastOption
     .map(s => SnapshotSeqOffset(s.seq, s.idx)).getOrElse(SnapshotSeqOffset(0L, -1L))
   override def deserializeOffset(json: String): Offset = json.trim.split(':') match {
     case Array(seq, idx) => SnapshotSeqOffset(seq.toLong, idx.toLong)
@@ -181,15 +173,16 @@ final class IcebergMicroBatchStream(base: String) extends MicroBatchStream {
     val s = start.asInstanceOf[SnapshotSeqOffset]
     val e = end.asInstanceOf[SnapshotSeqOffset]
     val spark = SparkSession.active
+    val meta = IcebergReader.load(base)
     // plan over the commit-ordered history in (start, end] — ids play
     // no ordering role, so random public-spec ids stream correctly
-    val snaps = history().filter { o =>
+    val snaps = meta.history.filter { o =>
       val afterStart = o.seq > s.seq || (o.seq == s.seq && o.idx > s.idx)
       val atOrBeforeEnd = o.seq < e.seq || (o.seq == e.seq && o.idx <= e.idx)
       afterStart && atOrBeforeEnd
     }
     snaps.map { o =>
-      IcebergActionsPartition(o.id, IcebergStream.actionRows(spark, base, o.id).toArray)
+      IcebergActionsPartition(o.id, IcebergStream.actionRows(spark, meta, o.id).toArray)
         : InputPartition
     }.toArray
   }

@@ -1,13 +1,15 @@
 package graft.sources
 
 import java.nio.file.{Files, Paths, StandardOpenOption}
-import java.nio.charset.StandardCharsets
+import java.util.UUID
 
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{col, collect_set, count, lit}
 import org.apache.spark.sql.types._
+
+import IcebergReader.{IceField, IceSchema, IceSpec, IceSpecField, Snapshot, StatisticsFile, TableMetadata}
 
 /** Write-side twin of [[IcebergReader]]: emit a PUBLIC-spec Apache
   * Iceberg table (Hadoop-catalog layout, format v1) so existing
@@ -58,7 +60,7 @@ object IcebergWriter {
   }
 
   /** One avro file of manifest entries at `rel`. */
-  private def writeManifest(spark: SparkSession, base: String, rel: String,
+  private def writeManifest(base: String, rel: String,
                             entries: Seq[(Int, String, Long)]): Unit = {
     val rows = entries.map { case (status, path, n) =>
       Row(status, Row(path, "PARQUET", n, Files.size(Paths.get(base, path))))
@@ -69,8 +71,7 @@ object IcebergWriter {
   /** Manifest variant whose entries carry the typed identity
     * `data_file.partition` struct ([[IcebergReader.readWhere]] prunes
     * on it). */
-  private def writePartManifest(spark: SparkSession, base: String, rel: String,
-                                partCol: String,
+  private def writePartManifest(base: String, rel: String, partCol: String,
                                 entries: Seq[(Int, String, Long, String)]): Unit = {
     val schema = StructType(Seq(
       StructField("status", IntegerType, nullable = false),
@@ -122,13 +123,13 @@ object IcebergWriter {
       // record_count from the footer — no read-back data pass
       (1, rel, ParquetFooters.rowCount(Paths.get(base, rel)), v)
     }
-    writePartManifest(spark, base, "metadata/m1.avro", partitionCol, entries)
-    writeManifestList(spark, base, 1L, Seq("metadata/m1.avro"))
+    val m = manifestName(1L)
+    writePartManifest(base, m, partitionCol, entries)
     // declare spec-0 (identity) so the table can EVOLVE its layout
     // later; source-id 1000-family field ids are informational here
-    writeMeta(base, 1, current = 1L, snaps = Seq(1L),
-      specsJson = Some(specsFragment(0, Seq(IcebergReader.IceSpec(0,
-        Seq(IcebergReader.IceSpecField(partitionCol, "identity", 1)))))))
+    publish(fresh(base).copy(defaultSpecId = Some(0),
+      specs = Seq(IceSpec(0, Seq(IceSpecField(partitionCol, "identity", 1)))))
+      .withSnapshot(snapshotOver(base, 1L, Seq(m))))
   }
 
   /** Transform-partitioned create (the prod layouts: `bucket[N]`,
@@ -175,15 +176,12 @@ object IcebergWriter {
       Row(1, Row(rel, "PARQUET", ParquetFooters.rowCount(Paths.get(base, rel)),
         Files.size(Paths.get(base, rel)), Row(v)))
     }
-    writeOneAvro(base, "metadata/m1.avro", schema, rows)
-    writeManifestList(spark, base, 1L, Seq("metadata/m1.avro"))
-    val spec = s""""partition-specs":[{"spec-id":0,"fields":[{"name":"${fieldName}",""" +
-      s""""transform":"$transform","source-id":$sourceId,"field-id":1000}]}],"""
-    val ss = s"""{"snapshot-id":1,"timestamp-ms":1,"manifest-list":"metadata/snap-1.avro"}"""
-    Files.writeString(Paths.get(base, "metadata", "v1.metadata.json"),
-      s"""{"format-version":1,"table-uuid":"graft-export","location":"$base",$spec""" +
-        s""""current-snapshot-id":1,"snapshots":[$ss]}""")
-    Files.writeString(Paths.get(base, "metadata", "version-hint.text"), "1")
+    val m = manifestName(1L)
+    writeOneAvro(base, m, schema, rows)
+    // no default-spec-id: the lone spec is the default (v1 allows it)
+    publish(fresh(base).copy(specs = Seq(IceSpec(0,
+      Seq(IceSpecField(fieldName, transform, sourceId)))))
+      .withSnapshot(snapshotOver(base, 1L, Seq(m))))
   }
 
   /** One avro file at `rel` from driver-local rows. Manifests are
@@ -228,9 +226,15 @@ object IcebergWriter {
     } finally w.close()
   }
 
-  private def writeManifestList(spark: SparkSession, base: String,
-                                snapshot: Long, manifests: Seq[String],
-                                specIds: Option[Seq[Int]] = None): Unit = {
+  /** Snapshot `snap` over `manifests`: its manifest list is written
+    * under a per-attempt name (the spec's UUID rule — a writer that
+    * loses the publish race never overwrites the winner's list) and
+    * recorded in the snapshot. `timestamp-ms` is the (sequential)
+    * snapshot id: DETERMINISTIC yet monotone in commit order, so
+    * TIMESTAMP AS OF resolves real boundaries on this writer's own
+    * tables (a wall clock would break fixture reproducibility). */
+  private def snapshotOver(base: String, snap: Long, manifests: Seq[String],
+                           specIds: Option[Seq[Int]] = None): Snapshot = {
     // spec-tracking lists tag each manifest with its partition-spec id
     // (the spec's partition_spec_id field) so planners prune each era
     // under ITS spec; legacy lists keep the 2-column shape byte-stable
@@ -244,124 +248,36 @@ object IcebergWriter {
         require(ids.size == manifests.size, "specIds must align with manifests")
         manifests.zip(ids).map { case (m, id) => Row(m, sizeOrAbs(base, m), id) }
     }
-    writeOneAvro(base, s"metadata/snap-$snapshot.avro", schema, rows)
+    val list = s"metadata/snap-$snap-${UUID.randomUUID}.avro"
+    writeOneAvro(base, list, schema, rows)
+    Snapshot(snap, snap, list)
   }
+
+  /** A new manifest's per-attempt name. */
+  private def manifestName(snap: Long): String = s"metadata/m$snap-${UUID.randomUUID}.avro"
 
   /** Manifest paths in a list may be table-relative (this writer's) or
     * absolute (carried from a reader resolve) — size either. */
   private def sizeOrAbs(base: String, m: String): Long =
     if (m.startsWith("/")) Files.size(Paths.get(m)) else Files.size(Paths.get(base, m))
 
-  /** metadata JSON + version hint; the hint write is the commit point.
-    * `formatVersion` 2 marks tables carrying row-level delete files;
-    * 3 adds ROW LINEAGE: each snapshot's `first-row-id` and the table's
-    * `next-row-id` high-water mark must be THREADED through every
-    * metadata rewrite or id assignment would fork. */
-  private def writeMeta(base: String, v: Int, current: Long, snaps: Seq[Long],
-                        refs: Map[String, (Long, String)] = Map.empty,
-                        formatVersion: Int = 1,
-                        firstRowIds: Map[Long, Long] = Map.empty,
-                        nextRowId: Option[Long] = None,
-                        statistics: Seq[(Long, String)] = Nil,
-                        schemasJson: Option[String] = None,
-                        specsJson: Option[String] = None,
-                        summaries: Map[Long, String] = Map.empty): Unit = {
-    // SNAPSHOT SUMMARIES (the spec's per-snapshot string map — what
-    // streaming commits stash their app/batch idempotence markers in)
-    // carry like schemas/specs: previous declarations re-emit unless
-    // this commit adds its own. Being INSIDE the metadata JSON makes
-    // them atomic with the version-hint flip — the whole point.
-    val allSummaries: Map[Long, String] =
-      (if (v > 1 && Files.exists(Paths.get(base, "metadata", s"v${v - 1}.metadata.json")))
-        IcebergReader.snapshotSummaries(base, v - 1)
-      else Map.empty[Long, String]) ++ summaries
-    // SCHEMA TRACKING is carried like refs and statistics: unless the
-    // caller rewrites it (the evolve ops), the previous version's
-    // schemas + current-schema-id re-emit verbatim — a metadata rewrite
-    // that dropped them would sever every field-id binding
-    val schemasFrag = schemasJson.getOrElse(
-      if (v > 1 && Files.exists(Paths.get(base, "metadata", s"v${v - 1}.metadata.json")))
-        carriedSchemasFragment(base, v - 1)
-      else "")
-    // PARTITION SPECS carry the same way (a rewrite that dropped the
-    // list would orphan every manifest's spec-id tag)
-    val specsFrag = specsJson.getOrElse(
-      if (v > 1 && Files.exists(Paths.get(base, "metadata", s"v${v - 1}.metadata.json")))
-        carriedSpecsFragment(base, v - 1)
-      else "")
-    val ss = snaps.map { i =>
-      val fr = firstRowIds.get(i).map(f => s""""first-row-id":$f,""").getOrElse("")
-      val sm = allSummaries.get(i).map(j => s""""summary":$j,""").getOrElse("")
-      // timestamp-ms = the (sequential) snapshot id: DETERMINISTIC yet
-      // monotone in commit order, so TIMESTAMP AS OF resolves real
-      // boundaries on this writer's own tables (a wall clock would
-      // break fixture reproducibility)
-      s"""{"snapshot-id":$i,$fr$sm"timestamp-ms":$i,"manifest-list":"metadata/snap-$i.avro"}"""
-    }
-    val nri = nextRowId.map(n => s""","next-row-id":$n""").getOrElse("")
-    val statsJson =
-      if (statistics.isEmpty) ""
-      else statistics.sortBy(_._1).map { case (id, p) =>
-        s"""{"snapshot-id":$id,"statistics-path":"$p",""" +
-          s""""file-size-in-bytes":${Files.size(Paths.get(base, p))}}"""
-      }.mkString(""","statistics":[""", ",", "]")
-    val refsJson =
-      if (refs.isEmpty) ""
-      else refs.toSeq.sortBy(_._1).map { case (n, (id, t)) =>
-        s""""$n":{"snapshot-id":$id,"type":"$t"}"""
-      }.mkString(""","refs":{""", ",", "}")
-    // CREATE_NEW: a second writer at the same metadata version must
-    // fail, not replace the first — the catalog's mutual-exclusion point
-    Files.writeString(Paths.get(base, "metadata", s"v$v.metadata.json"),
-      s"""{"format-version":$formatVersion,"table-uuid":"graft-export","location":"$base"$schemasFrag$specsFrag,""" +
-        s""""current-snapshot-id":$current,"snapshots":[${ss.mkString(",")}]$nri$statsJson$refsJson}""",
-      StandardOpenOption.CREATE_NEW)
-    Files.writeString(Paths.get(base, "metadata", "version-hint.text"), v.toString)
+  /** A new table's state before its first publish (version 0). */
+  private def fresh(base: String, formatVersion: Int = 1): TableMetadata =
+    TableMetadata(base, 0, formatVersion, Some("graft-export"), base,
+      None, Nil, None, Nil, -1L, Nil)
+
+  /** The one publish: `m` as the version after the one it was read at,
+    * then the version hint. CREATE_NEW: a second writer at the same
+    * metadata version fails, not replaces the first — the catalog's
+    * mutual-exclusion point. Every commit is `meta.copy(...)` through
+    * here, so whatever it does not change (schemas, specs, summaries,
+    * refs, statistics, row lineage, foreign snapshot fields) carries. */
+  private def publish(m: TableMetadata): Unit = {
+    val v = m.version + 1
+    Files.writeString(Paths.get(m.base, "metadata", s"v$v.metadata.json"),
+      m.json, StandardOpenOption.CREATE_NEW)
+    Files.writeString(Paths.get(m.base, "metadata", "version-hint.text"), v.toString)
   }
-
-  // ---- SCHEMA EVOLUTION (metadata-only column ops) --------------------------
-
-  /** Re-emittable `,"schemas":[...],"current-schema-id":N` fragment.
-    * A field with a v3 `initial-default` serializes as REQUIRED with
-    * matching `write-default` (the spec's pairing; also the writer
-    * obligation the merged-scan default resolution rests on). */
-  private def schemasFragment(cur: Int, all: Seq[IcebergReader.IceSchema]): String = {
-    val arr = all.sortBy(_.schemaId).map { s =>
-      val fs = s.fields.map { f =>
-        val d = f.initialDefault.fold("")(raw =>
-          s""","initial-default":$raw,"write-default":$raw""")
-        s"""{"id":${f.id},"name":"${f.name}","required":${f.initialDefault.isDefined},""" +
-          s""""type":"${f.tpe}"$d}"""
-      }.mkString("[", ",", "]")
-      s"""{"type":"struct","schema-id":${s.schemaId},"fields":$fs}"""
-    }.mkString("[", ",", "]")
-    s""","schemas":$arr,"current-schema-id":$cur"""
-  }
-
-  private def carriedSchemasFragment(base: String, v: Int): String =
-    IcebergReader.schemas(base, v) match {
-      case (Some(cur), all) => schemasFragment(cur, all)
-      case _                => ""
-    }
-
-  /** Re-emittable `,"partition-specs":[...],"default-spec-id":N`. */
-  private def specsFragment(default: Int,
-                            all: Seq[IcebergReader.IceSpec]): String = {
-    val arr = all.sortBy(_.specId).map { s =>
-      val fs = s.fields.zipWithIndex.map { case (f, i) =>
-        s"""{"name":"${f.name}","transform":"${f.transform}",""" +
-          s""""source-id":${f.sourceId},"field-id":${1000 + i}}"""
-      }.mkString("[", ",", "]")
-      s"""{"spec-id":${s.specId},"fields":$fs}"""
-    }.mkString("[", ",", "]")
-    s""","partition-specs":$arr,"default-spec-id":$default"""
-  }
-
-  private def carriedSpecsFragment(base: String, v: Int): String =
-    IcebergReader.partitionSpecs(base, v) match {
-      case (Some(default), all) if all.nonEmpty => specsFragment(default, all)
-      case _                                    => ""
-    }
 
   /** EVOLVE THE PARTITION SPEC — metadata-only (the spec's layout
     * change, e.g. identity → day as a table's scale grows): a NEW spec
@@ -371,22 +287,12 @@ object IcebergWriter {
     * new layout. */
   def evolveSpec(spark: SparkSession, base: String, fieldName: String,
                  transform: String, sourceId: Int): Unit = {
-    val v = IcebergReader.currentMetadataVersion(base)
-    val (_, specs) = IcebergReader.partitionSpecs(base, v)
-    require(specs.nonEmpty,
+    val meta = IcebergReader.load(base)
+    require(meta.specs.nonEmpty,
       s"$base declares no partition-specs — only spec-tracking tables evolve")
-    val newId = specs.map(_.specId).max + 1
-    val fv = IcebergReader.formatVersion(base, v)
-    writeMeta(base, v + 1,
-      current = IcebergReader.currentSnapshotId(base, v),
-      snaps = IcebergReader.snapshots(base, v).map(_.id).sorted,
-      refs = IcebergReader.refs(base, v),
-      formatVersion = fv,
-      firstRowIds = if (fv == 3) IcebergReader.snapshotFirstRowIds(base, v) else Map.empty,
-      nextRowId = if (fv == 3) IcebergReader.nextRowId(base, v) else None,
-      statistics = carriedStats(base, v),
-      specsJson = Some(specsFragment(newId, specs :+ IcebergReader.IceSpec(newId,
-        Seq(IcebergReader.IceSpecField(fieldName, transform, sourceId))))))
+    val newId = meta.specs.map(_.specId).max + 1
+    publish(meta.copy(defaultSpecId = Some(newId), specs = meta.specs :+
+      IceSpec(newId, Seq(IceSpecField(fieldName, transform, sourceId)))))
   }
 
   /** Append routed by the CURRENT DEFAULT SPEC — the write shape after
@@ -399,9 +305,8 @@ object IcebergWriter {
   def appendSpec(spark: SparkSession, df: DataFrame, base: String,
                  sourceCol: String): Unit = {
     import org.apache.spark.sql.Row
-    val v = IcebergReader.currentMetadataVersion(base)
-    val (defOpt, specs) = IcebergReader.partitionSpecs(base, v)
-    val spec = specs.find(s => defOpt.contains(s.specId)).getOrElse(
+    val meta = IcebergReader.load(base)
+    val spec = meta.defaultSpec.getOrElse(
       throw new IllegalArgumentException(s"$base declares no default partition spec"))
     require(spec.fields.size == 1, "appendSpec supports single-field specs")
     val f = spec.fields.head
@@ -421,9 +326,8 @@ object IcebergWriter {
       case other => throw new IllegalArgumentException(
         s"transform $other beyond appendSpec (long-valued transforms only)")
     }
-    val prev = IcebergReader.currentSnapshotId(base, v)
-    val prevManifests = IcebergReader.manifestsWithSpecs(spark, base, prev)
-    val snap = prev + 1
+    val prevManifests = IcebergReader.manifestsWithSpecs(spark, meta, meta.currentSnapshotId)
+    val snap = meta.currentSnapshotId + 1
     // stage one write task per transformed value (the parallel shape)
     val rels = Stage(base)(df.withColumn("__g", partExpr.cast("string"))
       .repartition(col("__g")).write.partitionBy("__g").parquet(_)) { leaves =>
@@ -446,64 +350,42 @@ object IcebergWriter {
       Row(1, Row(rel, "PARQUET", ParquetFooters.rowCount(Paths.get(base, rel)),
         Files.size(Paths.get(base, rel)), Row(g)))
     }
-    writeOneAvro(base, s"metadata/m$snap.avro", schema, rows)
+    val m = manifestName(snap)
+    writeOneAvro(base, m, schema, rows)
     // manifest REUSE: the previous manifests ride with their own spec
     // ids; the new manifest is tagged with the default spec
-    val allManifests = prevManifests :+ (s"metadata/m$snap.avro" -> spec.specId)
-    writeManifestList(spark, base, snap, allManifests.map(_._1),
-      specIds = Some(allManifests.map(_._2)))
-    writeMeta(base, v + 1, current = snap,
-      snaps = IcebergReader.snapshots(base, v).map(_.id).sorted :+ snap,
-      refs = IcebergReader.refs(base, v),
-      formatVersion = IcebergReader.formatVersion(base, v),
-      statistics = carriedStats(base, v))
-  }
-
-  private def iceTypeOf(t: org.apache.spark.sql.types.DataType): String = {
-    import org.apache.spark.sql.types._
-    t match {
-      case IntegerType   => "int"
-      case LongType      => "long"
-      case FloatType     => "float"
-      case DoubleType    => "double"
-      case StringType    => "string"
-      case BooleanType   => "boolean"
-      case DateType      => "date"
-      case _: TimestampType => "timestamp"
-      case other => throw new IllegalArgumentException(
-        s"column type $other beyond this minimal writer's evolution support")
-    }
+    val allManifests = prevManifests :+ (m -> spec.specId)
+    publish(meta.withSnapshot(snapshotOver(base, snap, allManifests.map(_._1),
+      specIds = Some(allManifests.map(_._2)))))
   }
 
   /** The table's schema history, BOOTSTRAPPED from the current data
     * footers when the metadata tracks none yet (schema-0: field ids by
     * column order — the assignment this writer has always implied). */
-  private def currentSchemas(spark: SparkSession, base: String,
-                             v: Int): (Int, Seq[IcebergReader.IceSchema]) =
-    IcebergReader.schemas(base, v) match {
-      case (Some(cur), all) => (cur, all)
-      case _ =>
-        val scan = IcebergReader.planSnapshot(spark, base,
-          IcebergReader.currentSnapshotId(base, v))
-        require(scan.dataFiles.nonEmpty, s"cannot bootstrap a schema for empty $base")
+  private def currentSchemas(spark: SparkSession,
+                             meta: TableMetadata): (Int, Seq[IceSchema]) =
+    meta.currentSchemaId match {
+      case Some(cur) => (cur, meta.schemas)
+      case None =>
+        val scan = IcebergReader.plan(spark, meta, meta.currentSnapshotId)
+        require(scan.dataFiles.nonEmpty, s"cannot bootstrap a schema for empty ${meta.base}")
         val st = spark.read.option("mergeSchema", "true")
           .parquet(scan.dataFiles.map(_._1): _*).schema
-        (0, Seq(IcebergReader.IceSchema(0, st.fields.toSeq.zipWithIndex.map {
-          case (f, i) => IcebergReader.IceField(i + 1, f.name, iceTypeOf(f.dataType))
+        (0, Seq(IceSchema(0, st.fields.toSeq.zipWithIndex.map {
+          case (f, i) => IceField(i + 1, f.name, icebergTypeOf(f.dataType))
         })))
     }
 
   /** Commit a NEW schema (metadata-only — zero data bytes move): the
     * edited field list joins the `schemas` history under a fresh
     * schema-id and becomes current. Snapshots, refs, row lineage and
-    * statistics carry through untouched. */
-  private def commitSchema(spark: SparkSession, base: String,
-                           edit: Seq[IcebergReader.IceField] => Seq[IcebergReader.IceField])
-  : Unit = {
-    val v = IcebergReader.currentMetadataVersion(base)
-    val (cur, all) = currentSchemas(spark, base, v)
+    * statistics carry through untouched. `edit` also gets the next
+    * unused field id. */
+  private def commitSchema(spark: SparkSession, meta: TableMetadata,
+                           edit: (Seq[IceField], Int) => Seq[IceField]): Unit = {
+    val (cur, all) = currentSchemas(spark, meta)
     val curFields = all.find(_.schemaId == cur).get.fields
-    val newFields = edit(curFields)
+    val newFields = edit(curFields, all.flatMap(_.fields).map(_.id).max + 1)
     // ambiguity guard: a name may only ever label ONE field id across
     // the whole history — the merged-scan coalesce resolution (and any
     // name-mapping external reader) depends on it
@@ -516,31 +398,16 @@ object IcebergWriter {
           "files unreadable by name resolution")
     }
     val newId = all.map(_.schemaId).max + 1
-    val fv = IcebergReader.formatVersion(base, v)
-    writeMeta(base, v + 1,
-      current = IcebergReader.currentSnapshotId(base, v),
-      snaps = IcebergReader.snapshots(base, v).map(_.id).sorted,
-      refs = IcebergReader.refs(base, v),
-      formatVersion = fv,
-      firstRowIds = if (fv == 3) IcebergReader.snapshotFirstRowIds(base, v) else Map.empty,
-      nextRowId = if (fv == 3) IcebergReader.nextRowId(base, v) else None,
-      statistics = carriedStats(base, v),
-      schemasJson = Some(schemasFragment(newId,
-        all :+ IcebergReader.IceSchema(newId, newFields))))
+    publish(meta.copy(currentSchemaId = Some(newId), schemas = all :+ IceSchema(newId, newFields)))
   }
 
   /** ALTER TABLE ADD COLUMN — metadata-only; old files surface the new
     * column as typed NULL through the field-id projection. */
   def evolveAddColumn(spark: SparkSession, base: String,
                       name: String, icebergType: String): Unit =
-    commitSchema(spark, base, { fields =>
+    commitSchema(spark, IcebergReader.load(base), { (fields, nextId) =>
       require(!fields.exists(_.name == name), s"column $name already exists")
-      val nextId = IcebergReader.schemas(base,
-        IcebergReader.currentMetadataVersion(base)) match {
-        case (Some(_), all) => all.flatMap(_.fields).map(_.id).max + 1
-        case _              => fields.map(_.id).max + 1
-      }
-      fields :+ IcebergReader.IceField(nextId, name, icebergType)
+      fields :+ IceField(nextId, name, icebergType)
     })
 
   /** ALTER TABLE ADD COLUMN ... DEFAULT — the v3 DEFAULT VALUES
@@ -557,18 +424,12 @@ object IcebergWriter {
   def evolveAddColumnDefault(spark: SparkSession, base: String,
                              name: String, icebergType: String,
                              defaultJson: String): Unit = {
-    require(IcebergReader.formatVersion(base,
-      IcebergReader.currentMetadataVersion(base)) == 3,
+    val meta = IcebergReader.load(base)
+    require(meta.formatVersion == 3,
       "default values are an Iceberg format-version 3 schema feature")
-    commitSchema(spark, base, { fields =>
+    commitSchema(spark, meta, { (fields, nextId) =>
       require(!fields.exists(_.name == name), s"column $name already exists")
-      val nextId = IcebergReader.schemas(base,
-        IcebergReader.currentMetadataVersion(base)) match {
-        case (Some(_), all) => all.flatMap(_.fields).map(_.id).max + 1
-        case _              => fields.map(_.id).max + 1
-      }
-      fields :+ IcebergReader.IceField(nextId, name, icebergType,
-        initialDefault = Some(defaultJson))
+      fields :+ IceField(nextId, name, icebergType, initialDefault = Some(defaultJson))
     })
   }
 
@@ -576,7 +437,7 @@ object IcebergWriter {
     * files written under EITHER name read through the current one. */
   def evolveRenameColumn(spark: SparkSession, base: String,
                          from: String, to: String): Unit =
-    commitSchema(spark, base, { fields =>
+    commitSchema(spark, IcebergReader.load(base), { (fields, _) =>
       require(fields.exists(_.name == from), s"no column $from to rename")
       require(!fields.exists(_.name == to), s"column $to already exists")
       fields.map(f => if (f.name == from) f.copy(name = to) else f)
@@ -590,7 +451,7 @@ object IcebergWriter {
   def evolveWidenColumn(spark: SparkSession, base: String,
                         name: String, toType: String): Unit = {
     val legal = Set("int" -> "long", "float" -> "double")
-    commitSchema(spark, base, { fields =>
+    commitSchema(spark, IcebergReader.load(base), { (fields, _) =>
       val f = fields.find(_.name == name).getOrElse(
         throw new IllegalArgumentException(s"no column $name to widen"))
       require(legal.contains(f.tpe -> toType),
@@ -603,16 +464,11 @@ object IcebergWriter {
   /** ALTER TABLE DROP COLUMN — metadata-only; the field id retires (it
     * is never reused), data files keep the bytes until a rewrite. */
   def evolveDropColumn(spark: SparkSession, base: String, name: String): Unit =
-    commitSchema(spark, base, { fields =>
+    commitSchema(spark, IcebergReader.load(base), { (fields, _) =>
       require(fields.exists(_.name == name), s"no column $name to drop")
       require(fields.size > 1, "cannot drop the last column")
       fields.filterNot(_.name == name)
     })
-
-  /** The statistics list every metadata rewrite must CARRY (like refs):
-    * a commit that drops it silently severs registered table stats. */
-  private def carriedStats(base: String, v: Int): Seq[(Long, String)] =
-    IcebergReader.statisticsEntries(base, v)
 
   /** Create or move a named REF (tag = immutable audit pin, branch =
     * movable head) — a metadata-only commit: a new metadata version
@@ -621,17 +477,9 @@ object IcebergWriter {
   def setRef(spark: SparkSession, base: String, name: String,
              snapshotId: Long, refType: String = "tag"): Unit = {
     require(refType == "tag" || refType == "branch", s"bad ref type $refType")
-    val v = IcebergReader.currentMetadataVersion(base)
-    val snaps = IcebergReader.snapshots(base, v).map(_.id).sorted
-    require(snaps.contains(snapshotId), s"ref targets unknown snapshot $snapshotId")
-    val fv = IcebergReader.formatVersion(base, v)
-    writeMeta(base, v + 1, current = IcebergReader.currentSnapshotId(base, v),
-      snaps = snaps,
-      refs = IcebergReader.refs(base, v) + (name -> (snapshotId, refType)),
-      formatVersion = fv,
-      firstRowIds = if (fv == 3) IcebergReader.snapshotFirstRowIds(base, v) else Map.empty,
-      nextRowId = if (fv == 3) IcebergReader.nextRowId(base, v) else None,
-      statistics = carriedStats(base, v))
+    val meta = IcebergReader.load(base)
+    require(meta.snapshots.exists(_.id == snapshotId), s"ref targets unknown snapshot $snapshotId")
+    publish(meta.copy(refs = meta.refs + (name -> (snapshotId, refType))))
   }
 
   /** TABLE STATISTICS (the spec's `statistics` metadata list): ONE
@@ -647,9 +495,9 @@ object IcebergWriter {
                  cols: Seq[(String, Int)]): String = {
     import org.apache.spark.sql.functions.{countDistinct, xxhash64}
     require(cols.nonEmpty, "writeStats needs at least one (column, fieldId)")
-    val v = IcebergReader.currentMetadataVersion(base)
-    val snap = IcebergReader.currentSnapshotId(base, v)
-    val df = IcebergReader.read(spark, base, snap)
+    val meta = IcebergReader.load(base)
+    val snap = meta.currentSnapshotId
+    val df = IcebergReader.read(spark, meta, snap)
     val aggs = cols.flatMap { case (c, _) =>
       Seq(graft.functions.ThetaSketchAgg.thetaSketch(xxhash64(col(c))).as(s"sk_$c"),
         countDistinct(col(c)).as(s"ndv_$c"))
@@ -663,14 +511,8 @@ object IcebergWriter {
     val rel = s"metadata/stats-s$snap.puffin"
     Puffin.writeFile(s"$base/$rel", blobs)
     // a later stats write for the SAME snapshot replaces its entry
-    writeMeta(base, v + 1,
-      current = snap,
-      snaps = IcebergReader.snapshots(base, v).map(_.id).sorted,
-      refs = IcebergReader.refs(base, v),
-      formatVersion = IcebergReader.formatVersion(base, v),
-      firstRowIds = IcebergReader.snapshotFirstRowIds(base, v),
-      nextRowId = IcebergReader.nextRowId(base, v),
-      statistics = carriedStats(base, v).filterNot(_._1 == snap) :+ (snap -> rel))
+    publish(meta.copy(statistics = meta.statistics.filterNot(_.snapshotId == snap) :+
+      StatisticsFile(snap, rel, Files.size(Paths.get(base, rel)))))
     rel
   }
 
@@ -679,9 +521,9 @@ object IcebergWriter {
     TxnLog.rmrf(base)
     Files.createDirectories(Paths.get(base, "metadata"))
     val files = writeData(spark, df, base, 1L)
-    writeManifest(spark, base, "metadata/m1.avro", files.map { case (p, n) => (1, p, n) })
-    writeManifestList(spark, base, 1L, Seq("metadata/m1.avro"))
-    writeMeta(base, 1, current = 1L, snaps = Seq(1L))
+    val m = manifestName(1L)
+    writeManifest(base, m, files.map { case (p, n) => (1, p, n) })
+    publish(fresh(base).withSnapshot(snapshotOver(base, 1L, Seq(m))))
   }
 
   /** The Spark→Iceberg primitive type mapping this writer declares in
@@ -722,11 +564,9 @@ object IcebergWriter {
         "clear a directory this writer did not stage (drop it explicitly first)")
     Files.createDirectories(Paths.get(base, "metadata"))
     val fields = schema.fields.toSeq.zipWithIndex.map { case (f, i) =>
-      IcebergReader.IceField(i + 1, f.name, icebergTypeOf(f.dataType))
+      IceField(i + 1, f.name, icebergTypeOf(f.dataType))
     }
-    writeMeta(base, 1, current = -1L, snaps = Nil,
-      schemasJson = Some(schemasFragment(0,
-        Seq(IcebergReader.IceSchema(0, fields)))))
+    publish(fresh(base).copy(currentSchemaId = Some(0), schemas = Seq(IceSchema(0, fields))))
   }
 
   /** Bin-pack compaction (the rewrite-data-files action): snapshot N+1
@@ -743,10 +583,10 @@ object IcebergWriter {
     * (filesBefore, filesAfter). */
   def rewrite(spark: SparkSession, base: String,
               targetBytes: Long = 128L << 20): (Int, Int) = {
-    val v = IcebergReader.currentMetadataVersion(base)
-    val fv = IcebergReader.formatVersion(base, v)
-    val prev = IcebergReader.currentSnapshotId(base, v)
-    val scan = IcebergReader.planSnapshot(spark, base, prev)
+    val meta = IcebergReader.load(base)
+    val fv = meta.formatVersion
+    val prev = meta.currentSnapshotId
+    val scan = IcebergReader.plan(spark, meta, prev)
     val live = scan.dataFiles
     val hasDels = scan.posDeleteFiles.nonEmpty || scan.eqDeleteFiles.nonEmpty ||
       scan.dvs.nonEmpty
@@ -758,11 +598,12 @@ object IcebergWriter {
     // `_last_updated_sequence_number` and write them as real columns
     // (the rewritten entries carry first_row_id = null — materialized)
     val rows =
-      if (fv == 3) IcebergReader.readLineage(spark, base, prev)
-      else if (hasDels) IcebergReader.read(spark, base, prev)
+      if (fv == 3) IcebergReader.readLineage(spark, scan)
+      else if (hasDels) IcebergReader.readScan(spark, meta, prev, scan)
       else spark.read.parquet(live.map(_._1): _*)
     val files = writeData(spark, rows.repartition(numOut), base, snap)
-    def relOf(abs: String) = abs.stripPrefix(Paths.get(base).toString).stripPrefix("/")
+    def relOf(abs: String) = IcebergWriter.relOf(base, abs)
+    val m = manifestName(snap)
     if (fv == 3) {
       val droppedData = live.map { case (abs, n) =>
         V3Entry(2, relOf(abs), n, 0, scan.dataSeq.getOrElse(abs, 0L),
@@ -773,20 +614,14 @@ object IcebergWriter {
           Some(relOf(dv.referenced)), Some(dv.offset), Some(dv.size))
       }
       val added = files.map { case (p, n) => V3Entry(1, p, n, 0, snap.toLong) }
-      writeV3Manifest(spark, base, s"metadata/m$snap.avro",
-        droppedData ++ droppedDvs ++ added)
-      writeManifestList(spark, base, snap, Seq(s"metadata/m$snap.avro"))
-      val v0 = IcebergReader.nextRowId(base, v).getOrElse(0L)
-      writeMeta(base, v + 1, current = snap,
-        snaps = IcebergReader.snapshots(base, v).map(_.id).sorted :+ snap,
-        refs = IcebergReader.refs(base, v), formatVersion = 3,
-        firstRowIds = IcebergReader.snapshotFirstRowIds(base, v) + (snap -> v0),
-        nextRowId = Some(v0), // compaction assigns no NEW row ids
-        statistics = carriedStats(base, v))
+      writeV3Manifest(base, m, droppedData ++ droppedDvs ++ added)
+      val v0 = meta.nextRowId.getOrElse(0L)
+      publish(meta.withSnapshot(snapshotOver(base, snap, Seq(m)).copy(firstRowId = Some(v0)))
+        .copy(nextRowId = Some(v0))) // compaction assigns no NEW row ids
       return (live.size, files.size)
     }
     if (fv == 1 && !hasDels) {
-      writeManifest(spark, base, s"metadata/m$snap.avro",
+      writeManifest(base, m,
         live.map { case (abs, n) => (2, relOf(abs), n) } ++
           files.map { case (p, n) => (1, p, n) })
     } else {
@@ -798,17 +633,10 @@ object IcebergWriter {
         val (n, seq) = scan.delMeta.getOrElse(abs, (0L, 0L))
         (2, relOf(abs), n, content, seq)
       }
-      writeV2Manifest(spark, base, s"metadata/m$snap.avro",
-        droppedData ++ droppedDels ++
-          files.map { case (p, n) => (1, p, n, 0, snap.toLong) })
+      writeV2Manifest(base, m, droppedData ++ droppedDels ++
+        files.map { case (p, n) => (1, p, n, 0, snap.toLong) })
     }
-    writeManifestList(spark, base, snap, Seq(s"metadata/m$snap.avro"))
-    // snapshot ids need not be contiguous after an expiry — carry the
-    // actual surviving list forward (and every declared ref)
-    writeMeta(base, v + 1, current = snap,
-      snaps = IcebergReader.snapshots(base, v).map(_.id).sorted :+ snap,
-      refs = IcebergReader.refs(base, v), formatVersion = fv,
-      statistics = carriedStats(base, v))
+    publish(meta.withSnapshot(snapshotOver(base, snap, Seq(m))))
     (live.size, files.size)
   }
 
@@ -819,46 +647,36 @@ object IcebergWriter {
     * snapshots fails by design; every kept snapshot keeps reading.
     * Returns the orphaned data files that were removed. */
   def expireSnapshots(spark: SparkSession, base: String, keepFrom: Long): Seq[String] = {
-    val v = IcebergReader.currentMetadataVersion(base)
-    val all = IcebergReader.snapshots(base, v).map(_.id).sorted
-    val (dropped, kept) = all.partition(_ < keepFrom)
+    val meta = IcebergReader.load(base)
+    val (dropped, kept) = meta.snapshots.partition(_.id < keepFrom)
     require(kept.nonEmpty, s"expiry would drop every snapshot of $base")
-    val current = IcebergReader.currentSnapshotId(base, v)
-    require(kept.contains(current), s"expiry would drop the CURRENT snapshot $current")
-    val refs = IcebergReader.refs(base, v)
-    refs.foreach { case (name, (id, _)) =>
-      require(kept.contains(id),
+    val current = meta.currentSnapshotId
+    require(kept.exists(_.id == current), s"expiry would drop the CURRENT snapshot $current")
+    meta.refs.foreach { case (name, (id, _)) =>
+      require(kept.exists(_.id == id),
         s"expiry would drop snapshot $id pinned by ref '$name' — drop the ref first")
     }
     if (dropped.isEmpty) return Nil
     // the reference sets must include DELETE files too: a dropped
     // snapshot's delete parquet is reclaimable disk, and a KEPT
     // snapshot's delete file must never be swept as an orphan
-    def allFiles(id: Long): Seq[String] = {
-      val sc = IcebergReader.planSnapshot(spark, base, id)
+    def allFiles(s: Snapshot): Seq[String] = {
+      val sc = IcebergReader.plan(spark, meta, s.id)
       sc.dataFiles.map(_._1) ++ sc.posDeleteFiles ++ sc.eqDeleteFiles.map(_._1) ++
         sc.dvs.map(_.puffin)
     }
     val keptFiles = kept.flatMap(allFiles).toSet
     val orphans = dropped.flatMap(allFiles).distinct.filterNot(keptFiles)
-    val fv = IcebergReader.formatVersion(base, v)
     // stats entries of DROPPED snapshots expire with them (their puffin
     // files are reclaimed below); kept snapshots keep their stats
-    val (keptStats, droppedStats) = carriedStats(base, v)
-      .partition(e => kept.contains(e._1))
-    writeMeta(base, v + 1, current = current, snaps = kept, refs = refs,
-      formatVersion = fv,
-      firstRowIds =
-        if (fv == 3) IcebergReader.snapshotFirstRowIds(base, v).filter(e => kept.contains(e._1))
-        else Map.empty,
-      nextRowId = if (fv == 3) IcebergReader.nextRowId(base, v) else None,
-      statistics = keptStats)
+    val (keptStats, droppedStats) =
+      meta.statistics.partition(e => kept.exists(_.id == e.snapshotId))
+    publish(meta.copy(snapshots = kept, statistics = keptStats))
     orphans.foreach(p => Files.deleteIfExists(Paths.get(p)))
-    droppedStats.foreach { case (_, p) =>
-      Files.deleteIfExists(Paths.get(base, p))
-    }
-    dropped.foreach(id =>
-      Files.deleteIfExists(Paths.get(base, s"metadata/snap-$id.avro")))
+    droppedStats.foreach(s => Files.deleteIfExists(Paths.get(base, s.path)))
+    // each dropped snapshot's RECORDED manifest list
+    dropped.foreach(s =>
+      Files.deleteIfExists(Paths.get(IcebergReader.resolve(base, s.manifestList))))
     orphans
   }
 
@@ -871,9 +689,9 @@ object IcebergWriter {
     * versus the `data/` listing — no data file is opened. Returns the
     * deleted relative paths. */
   def removeOrphans(spark: SparkSession, base: String): Seq[String] = {
-    val v = IcebergReader.currentMetadataVersion(base)
-    val referenced = IcebergReader.snapshots(base, v).flatMap { s =>
-      val scan = IcebergReader.planSnapshot(spark, base, s.id)
+    val meta = IcebergReader.load(base)
+    val referenced = meta.snapshots.flatMap { s =>
+      val scan = IcebergReader.plan(spark, meta, s.id)
       scan.dataFiles.map(_._1) ++ scan.posDeleteFiles ++
         scan.eqDeleteFiles.map(_._1) ++ scan.dvs.map(_.puffin)
     }.map(p => Paths.get(p).normalize.toString).toSet
@@ -891,7 +709,7 @@ object IcebergWriter {
     * 1 position deletes / 2 equality deletes) and a top-level
     * `sequence_number` — the ordering the spec's delete windows need.
     * Entries: (status, relPath, recordCount, content, sequenceNumber). */
-  private def writeV2Manifest(spark: SparkSession, base: String, rel: String,
+  private def writeV2Manifest(base: String, rel: String,
                               entries: Seq[(Int, String, Long, Int, Long)]): Unit = {
     val schema = StructType(Seq(
       StructField("status", IntegerType, nullable = false),
@@ -922,7 +740,7 @@ object IcebergWriter {
                                    contentSize: Option[Long] = None,
                                    firstRowId: Option[Long] = None)
 
-  private def writeV3Manifest(spark: SparkSession, base: String, rel: String,
+  private def writeV3Manifest(base: String, rel: String,
                               entries: Seq[V3Entry]): Unit = {
     val schema = StructType(Seq(
       StructField("status", IntegerType, nullable = false),
@@ -984,10 +802,10 @@ object IcebergWriter {
     val entries = files.map { case (p, n) =>
       val e = V3Entry(1, p, n, 0, 1L, firstRowId = Some(next)); next += n; e
     }
-    writeV3Manifest(spark, base, "metadata/m1.avro", entries)
-    writeManifestList(spark, base, 1L, Seq("metadata/m1.avro"))
-    writeMeta(base, 1, current = 1L, snaps = Seq(1L), formatVersion = 3,
-      firstRowIds = Map(1L -> 0L), nextRowId = Some(next))
+    val m = manifestName(1L)
+    writeV3Manifest(base, m, entries)
+    publish(fresh(base, formatVersion = 3).copy(nextRowId = Some(next))
+      .withSnapshot(snapshotOver(base, 1L, Seq(m)).copy(firstRowId = Some(0L))))
   }
 
   /** v3 DELETE as a DELETION-VECTOR commit (the spec FORBIDS new
@@ -999,13 +817,17 @@ object IcebergWriter {
     * status=2), the spec's monotone-growth rule. Returns
     * (affectedDataFiles, newlyDeletedRows). */
   def deleteWhereV3(spark: SparkSession, base: String,
-                    predicate: org.apache.spark.sql.Column): (Int, Long) = {
+                    predicate: org.apache.spark.sql.Column): (Int, Long) =
+    deleteWhereV3(spark, IcebergReader.load(base), predicate)
+
+  private def deleteWhereV3(spark: SparkSession, meta: TableMetadata,
+                            predicate: org.apache.spark.sql.Column): (Int, Long) = {
     import org.apache.spark.sql.Encoders
-    val v = IcebergReader.currentMetadataVersion(base)
-    require(IcebergReader.formatVersion(base, v) == 3,
+    val base = meta.base
+    require(meta.formatVersion == 3,
       s"deleteWhereV3 needs a format-version 3 table, $base is not one")
-    val prev = IcebergReader.currentSnapshotId(base, v)
-    val scan = IcebergReader.planSnapshot(spark, base, prev)
+    val prev = meta.currentSnapshotId
+    val scan = IcebergReader.plan(spark, meta, prev)
     require(scan.dataFiles.nonEmpty, s"DELETE on empty table $base")
     // live matching rows under the existing DVs (already-masked rows
     // never re-match), keyed by native row positions
@@ -1045,15 +867,11 @@ object IcebergWriter {
       V3Entry(1, puffinRel, card, 1, snap.toLong,
         Some(relOf(base, p)), Some(m.offset), Some(m.length))
     }
-    writeV3Manifest(spark, base, s"metadata/m$snap.avro", carried ++ dvEntries)
-    writeManifestList(spark, base, snap, Seq(s"metadata/m$snap.avro"))
-    val next0 = IcebergReader.nextRowId(base, v).getOrElse(0L)
-    writeMeta(base, v + 1, current = snap,
-      snaps = IcebergReader.snapshots(base, v).map(_.id).sorted :+ snap,
-      refs = IcebergReader.refs(base, v), formatVersion = 3,
-      firstRowIds = IcebergReader.snapshotFirstRowIds(base, v) + (snap -> next0),
-      nextRowId = Some(next0), // a DELETE assigns no row ids
-      statistics = carriedStats(base, v))
+    val m = manifestName(snap)
+    writeV3Manifest(base, m, carried ++ dvEntries)
+    val next0 = meta.nextRowId.getOrElse(0L)
+    publish(meta.withSnapshot(snapshotOver(base, snap, Seq(m)).copy(firstRowId = Some(next0)))
+      .copy(nextRowId = Some(next0))) // a DELETE assigns no row ids
     (perFile.length, perFile.map(_._2).sum)
   }
 
@@ -1063,15 +881,12 @@ object IcebergWriter {
     * SCHEMA-EVOLVED tables (the position-stamped raw scan binds file
     * columns by name, not field id). DELETEs are exempt — they ride
     * `SupportsDelete` → [[deleteWhere]], which handles both. */
-  private[sources] def sqlDmlGuards(spark: SparkSession, base: String): Unit = {
-    val v = IcebergReader.currentMetadataVersion(base)
-    val (_, specs) = IcebergReader.partitionSpecs(base, v)
-    require(!specs.exists(_.fields.nonEmpty),
-      s"SQL UPDATE/MERGE on partitioned Iceberg table $base — partition-aware " +
+  private[sources] def sqlDmlGuards(meta: TableMetadata): Unit = {
+    require(!meta.specs.exists(_.fields.nonEmpty),
+      s"SQL UPDATE/MERGE on partitioned Iceberg table ${meta.base} — partition-aware " +
         "staging goes through IcebergWriter.appendSpec/upsertEq")
-    val (cur, all) = IcebergReader.schemas(base, v)
-    require(cur.isEmpty || all.size <= 1,
-      s"SQL UPDATE/MERGE on schema-evolved Iceberg table $base — the " +
+    require(meta.currentSchemaId.isEmpty || meta.schemas.size <= 1,
+      s"SQL UPDATE/MERGE on schema-evolved Iceberg table ${meta.base} — the " +
         "field-id projection DML goes through the Scala entry points")
   }
 
@@ -1079,12 +894,11 @@ object IcebergWriter {
     * delete-masked live rows + (`__path`, `__pos`) row identity +
     * `__pre` (the full old row). Lineage columns a compaction may have
     * materialized are writer plumbing, not data — hidden. */
-  private[sources] def sqlDmlScan(spark: SparkSession, base: String): DataFrame = {
+  private[sources] def sqlDmlScan(spark: SparkSession, meta: TableMetadata): DataFrame = {
     import org.apache.spark.sql.functions.struct
-    val v = IcebergReader.currentMetadataVersion(base)
-    val snap = IcebergReader.currentSnapshotId(base, v)
-    require(snap >= 0, s"SQL DML on empty Iceberg table $base")
-    val scan = IcebergReader.planSnapshot(spark, base, snap)
+    val snap = meta.currentSnapshotId
+    require(snap >= 0, s"SQL DML on empty Iceberg table ${meta.base}")
+    val scan = IcebergReader.plan(spark, meta, snap)
     val df = IcebergReader.scanWithPositions(spark, scan)
       .drop("_row_id", "_last_updated_sequence_number")
     val dataCols = df.columns.filterNot(c => c == "__path" || c == "__pos")
@@ -1092,9 +906,9 @@ object IcebergWriter {
   }
 
   /** Data schema the SQL DML binds (current-table columns). */
-  private[sources] def sqlDmlSchema(spark: SparkSession, base: String)
+  private[sources] def sqlDmlSchema(spark: SparkSession, meta: TableMetadata)
   : StructType =
-    StructType(sqlDmlScan(spark, base).schema.fields
+    StructType(sqlDmlScan(spark, meta).schema.fields
       .filterNot(f => f.name.startsWith("__")))
 
   /** Commit one SQL WriteDelta batch (catalog `UPDATE` / `MERGE` —
@@ -1108,16 +922,19 @@ object IcebergWriter {
     * DML-sized driver metadata (the commit messages carried them);
     * the staged files were written by executors. */
   private[sources] def commitRowDelta(
-      spark: SparkSession, base: String, expectSnap: Long,
+      spark: SparkSession, meta: TableMetadata,
       delPosByFile: Map[String, Seq[Long]],
       dataRels: Seq[String], operation: String): Unit = {
-    val v = IcebergReader.currentMetadataVersion(base)
-    require(IcebergReader.currentSnapshotId(base, v) == expectSnap,
+    val base = meta.base
+    val expectSnap = meta.currentSnapshotId
+    require(IcebergReader.currentMetadataVersion(base) == meta.version,
       s"concurrent commit on $base: read at snapshot $expectSnap — aborted")
     if (delPosByFile.isEmpty && dataRels.isEmpty) return // no-op DML
-    val fv = IcebergReader.formatVersion(base, v)
-    val scan = IcebergReader.planSnapshot(spark, base, expectSnap)
+    val fv = meta.formatVersion
+    val scan = IcebergReader.plan(spark, meta, expectSnap)
     val snap = expectSnap + 1
+    val summary = Some(Map("operation" -> operation.toLowerCase))
+    val m = manifestName(snap)
     // staged-add censuses (counts per file) from the parquet footers —
     // metadata-plane, no read-back data pass over the staged files
     val added = dataRels.sorted.map(rel =>
@@ -1125,16 +942,13 @@ object IcebergWriter {
     if (fv == 3) {
       // v3 write-default obligation, same as append: staged rows must
       // not carry NULLs in defaulted columns (NULL ⟺ predates-column)
-      if (dataRels.nonEmpty) IcebergReader.schemas(base, v) match {
-        case (Some(cid), all) =>
-          val staged = spark.read.parquet(dataRels.map(r => s"$base/$r"): _*)
-          all.find(_.schemaId == cid).toSeq.flatMap(_.fields)
-            .filter(f => f.initialDefault.isDefined &&
-              staged.columns.contains(f.name)).foreach { f =>
-              require(staged.filter(col(f.name).isNull).count() == 0L,
-                s"SQL DML writes NULLs into required defaulted column ${f.name}")
-            }
-        case _ => ()
+      if (dataRels.nonEmpty) meta.currentSchema.foreach { cur =>
+        val staged = spark.read.parquet(dataRels.map(r => s"$base/$r"): _*)
+        cur.fields.filter(f => f.initialDefault.isDefined &&
+          staged.columns.contains(f.name)).foreach { f =>
+          require(staged.filter(col(f.name).isNull).count() == 0L,
+            s"SQL DML writes NULLs into required defaulted column ${f.name}")
+        }
       }
       val existingBytes: Map[String, Array[Byte]] = scan.dvs.map { dv =>
         dv.referenced.replaceFirst("^file:/*", "/") ->
@@ -1164,20 +978,14 @@ object IcebergWriter {
       val touched = perFile.map(p => relOf(base, p._1)).toSet
       val carried = carriedV3(scan, base).filterNot(e =>
         e.content == 1 && e.refDataFile.exists(touched.contains))
-      val next0 = IcebergReader.nextRowId(base, v).getOrElse(0L)
+      val next0 = meta.nextRowId.getOrElse(0L)
       var next = next0
       val addEntries = added.map { case (rel, n) =>
         val e = V3Entry(1, rel, n, 0, snap.toLong, firstRowId = Some(next)); next += n; e
       }
-      writeV3Manifest(spark, base, s"metadata/m$snap.avro",
-        carried ++ dvEntries ++ addEntries)
-      writeManifestList(spark, base, snap, Seq(s"metadata/m$snap.avro"))
-      writeMeta(base, v + 1, current = snap,
-        snaps = IcebergReader.snapshots(base, v).map(_.id).sorted :+ snap,
-        refs = IcebergReader.refs(base, v), formatVersion = 3,
-        firstRowIds = IcebergReader.snapshotFirstRowIds(base, v) + (snap -> next0),
-        nextRowId = Some(next), statistics = carriedStats(base, v),
-        summaries = Map(snap -> s"""{"operation":"${operation.toLowerCase}"}"""))
+      writeV3Manifest(base, m, carried ++ dvEntries ++ addEntries)
+      publish(meta.withSnapshot(snapshotOver(base, snap, Seq(m))
+        .copy(firstRowId = Some(next0), summary = summary)).copy(nextRowId = Some(next)))
     } else {
       // v2: position-delete parquet(s), spec schema (file_path, pos)
       // sorted by file then pos — built from the commit's DML-sized
@@ -1196,17 +1004,11 @@ object IcebergWriter {
             base, rel)
           Seq((1, rel, rows.size.toLong, 1, snap.toLong))
         }
-      writeV2Manifest(spark, base, s"metadata/m$snap.avro",
-        carriedEntries(scan, base) ++ delEntries ++
-          added.map { case (rel, n) => (1, rel, n, 0, snap.toLong) })
-      writeManifestList(spark, base, snap, Seq(s"metadata/m$snap.avro"))
-      writeMeta(base, v + 1, current = snap,
-        snaps = IcebergReader.snapshots(base, v).map(_.id).sorted :+ snap,
-        refs = IcebergReader.refs(base, v),
-        formatVersion = if (delEntries.nonEmpty || scan.posDeleteFiles.nonEmpty ||
-          scan.eqDeleteFiles.nonEmpty) 2 else fv,
-        statistics = carriedStats(base, v),
-        summaries = Map(snap -> s"""{"operation":"${operation.toLowerCase}"}"""))
+      writeV2Manifest(base, m, carriedEntries(scan, base) ++ delEntries ++
+        added.map { case (rel, n) => (1, rel, n, 0, snap.toLong) })
+      publish(meta.withSnapshot(snapshotOver(base, snap, Seq(m)).copy(summary = summary))
+        .copy(formatVersion = if (delEntries.nonEmpty || scan.posDeleteFiles.nonEmpty ||
+          scan.eqDeleteFiles.nonEmpty) 2 else fv))
     }
   }
 
@@ -1225,13 +1027,16 @@ object IcebergWriter {
     * applies the existing deletes first). Returns
     * (affectedDataFiles, newlyDeletedRows). */
   def deleteWhere(spark: SparkSession, base: String,
-                  predicate: org.apache.spark.sql.Column): (Int, Long) = {
-    val v = IcebergReader.currentMetadataVersion(base)
+                  predicate: org.apache.spark.sql.Column): (Int, Long) =
+    deleteWhere(spark, IcebergReader.load(base), predicate)
+
+  private[sources] def deleteWhere(spark: SparkSession, meta: TableMetadata,
+                                   predicate: org.apache.spark.sql.Column): (Int, Long) = {
     // v3 forbids NEW position-delete files — route to the DV writer
-    if (IcebergReader.formatVersion(base, v) == 3)
-      return deleteWhereV3(spark, base, predicate)
-    val prev = IcebergReader.currentSnapshotId(base, v)
-    val scan = IcebergReader.planSnapshot(spark, base, prev)
+    if (meta.formatVersion == 3) return deleteWhereV3(spark, meta, predicate)
+    val base = meta.base
+    val prev = meta.currentSnapshotId
+    val scan = IcebergReader.plan(spark, meta, prev)
     require(scan.dataFiles.nonEmpty, s"DELETE on empty table $base")
     // live matching rows under the read path's OWN delete semantics
     // (existing position AND equality deletes applied — an eq-deleted
@@ -1269,14 +1074,10 @@ object IcebergWriter {
     }
     val nDel = delRels.map(_._2).sum
     if (nDel == 0L) return (0, 0L)
-    writeV2Manifest(spark, base, s"metadata/m$snap.avro",
-      carriedEntries(scan, base) ++
-        delRels.map { case (rel, n) => (1, rel, n, 1, snap.toLong) })
-    writeManifestList(spark, base, snap, Seq(s"metadata/m$snap.avro"))
-    writeMeta(base, v + 1, current = snap,
-      snaps = IcebergReader.snapshots(base, v).map(_.id).sorted :+ snap,
-      refs = IcebergReader.refs(base, v), formatVersion = 2,
-      statistics = carriedStats(base, v))
+    val m = manifestName(snap)
+    writeV2Manifest(base, m, carriedEntries(scan, base) ++
+      delRels.map { case (rel, n) => (1, rel, n, 1, snap.toLong) })
+    publish(meta.withSnapshot(snapshotOver(base, snap, Seq(m))).copy(formatVersion = 2))
     (touched.get("files").asInstanceOf[Int], nDel)
   }
 
@@ -1292,9 +1093,9 @@ object IcebergWriter {
                eqCols: Seq[String]): (Long, Long) = {
     require(eqCols.nonEmpty && eqCols.forall(source.columns.contains),
       s"equality columns ${eqCols.mkString(",")} must all exist in the source")
-    val v = IcebergReader.currentMetadataVersion(base)
-    val prev = IcebergReader.currentSnapshotId(base, v)
-    val scan = IcebergReader.planSnapshot(spark, base, prev)
+    val meta = IcebergReader.load(base)
+    val prev = meta.currentSnapshotId
+    val scan = IcebergReader.plan(spark, meta, prev)
     require(scan.dataFiles.nonEmpty, s"upsertEq on empty table $base")
     val snap = prev + 1
     // the eq-delete file's OWN columns are the equality tuple (the
@@ -1328,15 +1129,11 @@ object IcebergWriter {
     }
     val nKeys = delRels.map(_._2).sum
     val files = writeData(spark, source, base, snap)
-    writeV2Manifest(spark, base, s"metadata/m$snap.avro",
-      carriedEntries(scan, base) ++
-        files.map { case (p, n) => (1, p, n, 0, snap.toLong) } ++
-        delRels.map { case (rel, n) => (1, rel, n, 2, snap.toLong) })
-    writeManifestList(spark, base, snap, Seq(s"metadata/m$snap.avro"))
-    writeMeta(base, v + 1, current = snap,
-      snaps = IcebergReader.snapshots(base, v).map(_.id).sorted :+ snap,
-      refs = IcebergReader.refs(base, v), formatVersion = 2,
-      statistics = carriedStats(base, v))
+    val m = manifestName(snap)
+    writeV2Manifest(base, m, carriedEntries(scan, base) ++
+      files.map { case (p, n) => (1, p, n, 0, snap.toLong) } ++
+      delRels.map { case (rel, n) => (1, rel, n, 2, snap.toLong) })
+    publish(meta.withSnapshot(snapshotOver(base, snap, Seq(m))).copy(formatVersion = 2))
     (nKeys, files.map(_._2).sum)
   }
 
@@ -1347,8 +1144,7 @@ object IcebergWriter {
     * would widen its window for external readers). */
   private def carriedEntries(scan: IcebergReader.SnapshotScan,
                              base: String): Seq[(Int, String, Long, Int, Long)] = {
-    def relOf(abs: String) =
-      abs.stripPrefix(Paths.get(base).toString).stripPrefix("/")
+    def relOf(abs: String) = IcebergWriter.relOf(base, abs)
     val data = scan.dataFiles.map { case (abs, n) =>
       (0, relOf(abs), n, 0, scan.dataSeq.getOrElse(abs, 0L))
     }
@@ -1367,64 +1163,55 @@ object IcebergWriter {
     * would DROP the delete files and silently resurrect deleted rows on
     * the next read. */
   def append(spark: SparkSession, df0: DataFrame, base: String): Unit =
-    append(spark, df0, base, summary = None)
+    append(spark, df0, IcebergReader.load(base), summary = None)
 
-  /** Append with an optional SNAPSHOT SUMMARY (raw JSON object) — the
-    * streaming sink's idempotence marker rides here, atomic with the
-    * commit. */
-  def append(spark: SparkSession, df0: DataFrame, base: String,
-             summary: Option[String]): Unit = {
-    val v = IcebergReader.currentMetadataVersion(base)
-    val prev = IcebergReader.currentSnapshotId(base, v)
+  /** Append with an optional SNAPSHOT SUMMARY — the streaming sink's
+    * idempotence marker rides here, atomic with the commit. */
+  private[sources] def append(spark: SparkSession, df0: DataFrame, meta: TableMetadata,
+                              summary: Option[Map[String, String]]): Unit = {
+    val base = meta.base
+    val prev = meta.currentSnapshotId
     // FIRST append into a schema-only table (createEmpty / catalog
-    // CTAS): no snapshot to plan — commit snapshot 1 directly, with
-    // the declared schema threading through writeMeta's carry
+    // CTAS): no snapshot to plan — commit snapshot 1 directly, the
+    // declared schema carrying with the rest of the state
     if (prev < 0) {
-      val declared = IcebergReader.schemas(base, v) match {
-        case (Some(cid), all) => all.find(_.schemaId == cid).map(_.fields.map(_.name))
-        case _                => None
-      }
-      declared.foreach(names => require(names == df0.columns.toSeq,
-        s"first append columns ${df0.columns.mkString(",")} do not match the " +
-          s"declared schema ${names.mkString(",")}"))
+      meta.currentSchema.map(_.fields.map(_.name)).foreach(names =>
+        require(names == df0.columns.toSeq,
+          s"first append columns ${df0.columns.mkString(",")} do not match the " +
+            s"declared schema ${names.mkString(",")}"))
       val files = writeData(spark, df0, base, 1L)
-      writeManifest(spark, base, "metadata/m1.avro",
-        files.map { case (p, n) => (1, p, n) })
-      writeManifestList(spark, base, 1L, Seq("metadata/m1.avro"))
-      writeMeta(base, v + 1, current = 1L, snaps = Seq(1L),
-        summaries = summary.map(1L -> _).toMap)
+      val m = manifestName(1L)
+      writeManifest(base, m, files.map { case (p, n) => (1, p, n) })
+      publish(meta.withSnapshot(snapshotOver(base, 1L, Seq(m)).copy(summary = summary)))
       return
     }
-    val fv = IcebergReader.formatVersion(base, v)
+    val fv = meta.formatVersion
     // the v3 default-value writer obligations: a batch OMITTING a
     // defaulted column takes its `write-default` (the spec's fill
     // rule), and a PROVIDED column must be non-null — together they
     // keep the reader's merged-scan resolution exact (NULL ⟺ the file
     // predates the column)
-    val df = IcebergReader.schemas(base, v) match {
-      case (Some(cid), all) =>
-        all.find(_.schemaId == cid).toSeq.flatMap(_.fields)
-          .filter(_.initialDefault.isDefined).foldLeft(df0) { (d, f) =>
-            if (!d.columns.contains(f.name))
-              d.withColumn(f.name, IcebergReader.defaultColumn(f))
-            else {
-              val bad = d.filter(col(f.name).isNull).count()
-              require(bad == 0L,
-                s"append carries $bad NULLs in required defaulted column ${f.name} — " +
-                  "the default marks rows that PREDATE the column, not new nulls")
-              d
-            }
-          }
-      case _ => df0
-    }
-    val scan = IcebergReader.planSnapshot(spark, base, prev)
+    val df = meta.currentSchema.toSeq.flatMap(_.fields)
+      .filter(_.initialDefault.isDefined).foldLeft(df0) { (d, f) =>
+        if (!d.columns.contains(f.name))
+          d.withColumn(f.name, IcebergReader.defaultColumn(f))
+        else {
+          val bad = d.filter(col(f.name).isNull).count()
+          require(bad == 0L,
+            s"append carries $bad NULLs in required defaulted column ${f.name} — " +
+              "the default marks rows that PREDATE the column, not new nulls")
+          d
+        }
+      }
+    val scan = IcebergReader.plan(spark, meta, prev)
     val hasDels = scan.posDeleteFiles.nonEmpty || scan.eqDeleteFiles.nonEmpty ||
       scan.dvs.nonEmpty
     val snap = prev + 1
     val files = writeData(spark, df, base, snap)
+    val m = manifestName(snap)
     // v3 row lineage: this commit's first-row-id is the table's
     // next-row-id; new files take contiguous id ranges in file order
-    val next0 = if (fv == 3) IcebergReader.nextRowId(base, v).getOrElse(0L) else 0L
+    val next0 = meta.nextRowId.getOrElse(0L)
     if (fv == 3) {
       var next = next0
       val added = files.map { case (p, n) =>
@@ -1432,33 +1219,20 @@ object IcebergWriter {
       }
       // live DVs (and any delete files) carry forward — a v1-shaped
       // carry here would RESURRECT soft-deleted rows silently
-      writeV3Manifest(spark, base, s"metadata/m$snap.avro",
-        carriedV3(scan, base) ++ added)
+      writeV3Manifest(base, m, carriedV3(scan, base) ++ added)
     } else if (fv == 1 && !hasDels) {
-      val carried = scan.dataFiles.map { case (abs, n) =>
-        // reader resolves relative paths against base; store them relative
-        (0, abs.stripPrefix(Paths.get(base).toString).stripPrefix("/"), n)
-      }
-      writeManifest(spark, base, s"metadata/m$snap.avro",
-        carried ++ files.map { case (p, n) => (1, p, n) })
+      // reader resolves relative paths against base; store them relative
+      val carried = scan.dataFiles.map { case (abs, n) => (0, relOf(base, abs), n) }
+      writeManifest(base, m, carried ++ files.map { case (p, n) => (1, p, n) })
     } else {
-      writeV2Manifest(spark, base, s"metadata/m$snap.avro",
-        carriedEntries(scan, base) ++
-          files.map { case (p, n) => (1, p, n, 0, snap.toLong) })
+      writeV2Manifest(base, m, carriedEntries(scan, base) ++
+        files.map { case (p, n) => (1, p, n, 0, snap.toLong) })
     }
-    writeManifestList(spark, base, snap, Seq(s"metadata/m$snap.avro"))
-    // snapshot ids need not be contiguous after an expiry — carry the
-    // actual surviving list forward (and every declared ref); the
-    // format-version is THREADED, never downgraded
-    writeMeta(base, v + 1, current = snap,
-      snaps = IcebergReader.snapshots(base, v).map(_.id).sorted :+ snap,
-      refs = IcebergReader.refs(base, v),
-      formatVersion = if (fv == 3) 3 else if (hasDels) 2 else fv,
-      firstRowIds =
-        if (fv == 3) IcebergReader.snapshotFirstRowIds(base, v) + (snap -> next0)
-        else Map.empty,
-      nextRowId = if (fv == 3) Some(next0 + files.map(_._2).sum) else None,
-      statistics = carriedStats(base, v),
-      summaries = summary.map(snap -> _).toMap)
+    // the format-version is THREADED, never downgraded
+    val lineage = if (fv == 3) Some(next0) else None
+    publish(meta.withSnapshot(snapshotOver(base, snap, Seq(m))
+      .copy(summary = summary, firstRowId = lineage))
+      .copy(formatVersion = if (fv == 3) 3 else if (hasDels) 2 else fv,
+        nextRowId = lineage.map(_ + files.map(_._2).sum).orElse(meta.nextRowId)))
   }
 }

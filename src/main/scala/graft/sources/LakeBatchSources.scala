@@ -333,9 +333,11 @@ private[sources] object LakeBatchSources {
   def icebergTable(options: CaseInsensitiveStringMap): Table = {
     val spark = SparkSession.active
     val base = pathOf(options, "graft-iceberg")
+    // one table state serves the whole statement: schema, plan, reads,
+    // and the SQL DELETE/UPDATE/MERGE commit
+    val meta = IcebergReader.load(base)
     val snap = Option(options.get("snapshotAsOf")).map(_.toLong)
-      .getOrElse(IcebergReader.currentSnapshotId(base,
-        IcebergReader.currentMetadataVersion(base)))
+      .getOrElse(meta.currentSnapshotId)
     val writable = !options.containsKey("snapshotAsOf")
     val doInsert: Option[(DataFrame, Boolean) => Unit] = Some((data, ow) => {
       require(writable,
@@ -348,30 +350,21 @@ private[sources] object LakeBatchSources {
       // schema-only table (catalog CREATE TABLE / CTAS before its first
       // append): no snapshot to plan — serve the declared schema empty;
       // the write callback commits snapshot 1
-      val v = IcebergReader.currentMetadataVersion(base)
-      val declared = IcebergReader.schemas(base, v) match {
-        case (Some(cid), all) => all.find(_.schemaId == cid).getOrElse(
-          throw new IllegalStateException(s"current-schema-id $cid missing in $base"))
-        case _ => throw new IllegalArgumentException(
-          s"empty Iceberg table $base declares no schema")
-      }
+      val declared = meta.currentSchema.getOrElse(throw new IllegalArgumentException(
+        s"empty Iceberg table $base declares no schema"))
       val schema = StructType(declared.fields.map(f =>
         org.apache.spark.sql.types.StructField(f.name,
           org.apache.spark.sql.types.DataType.fromDDL(IcebergReader.sparkTypeOf(f.tpe)))))
       val delegate = parquetTable(s"graft_iceberg($base@empty)", Nil, Some(schema), Map.empty)
       return new GraftLakeTable(delegate, delegate.name, doInsert)
     }
-    val scan = IcebergReader.planSnapshot(spark, base, snap)
+    val scan = IcebergReader.plan(spark, meta, snap)
     require(scan.dataFiles.nonEmpty, s"empty snapshot $snap of $base")
     // a table EVOLVED across schemas needs the field-id projection
     // (renamed columns resolve by id across eras, added ones surface
     // as typed NULL in old files) — a raw file scan would mis-name or
     // drop them, so it rides the full reader like the masked cases
-    val evolved = IcebergReader.schemas(base,
-      IcebergReader.currentMetadataVersion(base)) match {
-      case (Some(_), all) => all.size > 1
-      case _              => false
-    }
+    val evolved = meta.currentSchemaId.isDefined && meta.schemas.size > 1
     if (scan.posDeleteFiles.nonEmpty || scan.eqDeleteFiles.nonEmpty ||
         scan.dvs.nonEmpty || evolved) {
       // live delete files / v3 DVs (Iceberg's only DML shape) or a
@@ -379,8 +372,8 @@ private[sources] object LakeBatchSources {
       // (delete-applying anti-joins / per-era projection) via the V1
       // fallback
       val tname = s"graft_iceberg($base@$snap)"
-      val tschema = IcebergReader.read(spark, base, snap).schema
-      val planRead = () => IcebergReader.read(SparkSession.active, base, snap)
+      val tschema = IcebergReader.readScan(spark, meta, snap, scan).schema
+      val planRead = () => IcebergReader.readScan(SparkSession.active, meta, snap, scan)
       // live-size estimate: data-file bytes scaled by the surviving
       // fraction (record counts ride the manifests; DV cardinalities
       // and position-delete row counts are exact, equality deletes
@@ -398,7 +391,7 @@ private[sources] object LakeBatchSources {
         else (bytes.toDouble * math.max(0L, physRows - masked0) / physRows).toLong)))
       return if (writable)
         new GraftMaskedTable(tname, tschema, planRead, doInsert, hint) with IcebergSqlDml {
-          override val delBase: String = base
+          override val iceMeta: IcebergReader.TableMetadata = meta
         }
       else new GraftMaskedTable(tname, tschema, planRead, doInsert, hint)
     }
@@ -408,7 +401,7 @@ private[sources] object LakeBatchSources {
       s"graft_iceberg($base@$snap)", scan.dataFiles.map(_._1), None, Map.empty)
     if (writable)
       new GraftLakeTable(delegate, delegate.name, doInsert) with IcebergSqlDml {
-        override val delBase: String = base
+        override val iceMeta: IcebergReader.TableMetadata = meta
       }
     else new GraftLakeTable(delegate, delegate.name, doInsert)
   }

@@ -103,11 +103,13 @@ private[sources] object LakeSqlDml {
     })))
 
   /** The delta-based row-level operation over one Delta table, pinned
-    * to the version observed at rewrite time. */
+    * to the snapshot resolved when it is built: every DSv2 callback
+    * (metadata attributes, scan schema, scan, write) reads that one
+    * snapshot. */
   final class DeltaRowLevelOperation(base: String, cmd: Command)
     extends RowLevelOperation with org.apache.spark.sql.connector.write.SupportsDelta {
 
-    private val expectVersion = DeltaLogReader.latestVersion(base)
+    private val snap = DeltaLogReader.snapshot(SparkSession.active, base)
 
     override def command: Command = cmd
     override def description: String = s"graft-delta row-level $cmd on $base"
@@ -120,8 +122,7 @@ private[sources] object LakeSqlDml {
     // the staged file's materialized column
     override def requiredMetadataAttributes(): Array[NamedReference] =
       Array[NamedReference](Expressions.column("__pre")) ++
-        DeltaLogReader.snapshot(SparkSession.active, base).rowTrackingCols
-          .map(_ => Expressions.column("__rid")).toArray[NamedReference]
+        snap.rowTrackingCols.map(_ => Expressions.column("__rid")).toArray[NamedReference]
 
     // the scan: V1-read fallback over the DV-masked live scan with the
     // row-identity and pre-image columns attached; pushed filters are
@@ -131,7 +132,7 @@ private[sources] object LakeSqlDml {
     override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
       new ScanBuilder with SupportsPushDownFilters with SupportsPushDownRequiredColumns {
         private val fullSchema =
-          DeltaLogWriter.sqlDmlScan(SparkSession.active, base).schema
+          DeltaLogWriter.sqlDmlScan(SparkSession.active, snap).schema
         private var pushed: Array[Filter] = Array.empty
         private var required: StructType = fullSchema
         override def pushFilters(filters: Array[Filter]): Array[Filter] = {
@@ -152,9 +153,9 @@ private[sources] object LakeSqlDml {
               override def needConversion: Boolean = false
               override def buildScan(): org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = {
                 val s = SparkSession.active
-                require(DeltaLogReader.latestVersion(base) == expectVersion,
+                require(DeltaLogReader.latestVersion(base) == snap.version,
                   s"$base changed under the DML — re-run the statement")
-                var df = DeltaLogWriter.sqlDmlScan(s, base)
+                var df = DeltaLogWriter.sqlDmlScan(s, snap)
                 pf.flatMap(LakeBatchSources.translateFilter).foreach(c => df = df.filter(c))
                 df = df.select(req.fieldNames.toIndexedSeq.map(col): _*)
                 org.apache.spark.sql.GraftPlanBridge.internalRdd(df)
@@ -167,7 +168,7 @@ private[sources] object LakeSqlDml {
     override def newWriteBuilder(info: LogicalWriteInfo): DeltaWriteBuilder =
       new DeltaWriteBuilder {
         override def build(): DeltaWrite =
-          new GraftDeltaWrite(base, expectVersion, cmd.toString, info)
+          new GraftDeltaWrite(snap, cmd.toString, info)
       }
   }
 
@@ -178,14 +179,14 @@ private[sources] object LakeSqlDml {
     * file bytes, like every other writer here — values live in the
     * dirs and each add's partitionValues, which commitRowDelta's
     * addActions derive from the staged path). */
-  private final class GraftDeltaWrite(base: String, expectVersion: Long,
+  private final class GraftDeltaWrite(snap: DeltaLogReader.Snapshot,
                                       opName: String, info: LogicalWriteInfo)
     extends DeltaWrite {
+    private val (base, expectVersion) = (snap.base, snap.version)
     override def description: String = s"graft-delta $opName -> $base"
     override def toBatch: DeltaBatchWrite = {
       val spark = SparkSession.active
       val dataSchema = info.schema
-      val snap = DeltaLogReader.snapshot(Some(spark), base, expectVersion)
       // (logical, physical dir spelling) partition columns; on a
       // MAPPED table the staged file schema renames to PHYSICAL names
       // and embeds the parquet field ids (the spec's writer rule in
@@ -284,13 +285,11 @@ private[sources] object LakeSqlDml {
     * schema-evolved tables refuse toward the Scala entry points
     * ([[IcebergWriter.sqlDmlGuards]]); simple DELETEs never get here
     * (`SupportsDelete` serves them on every composition). */
-  final class IcebergRowLevelOperation(base: String, cmd: Command)
+  final class IcebergRowLevelOperation(meta: IcebergReader.TableMetadata, cmd: Command)
     extends RowLevelOperation with org.apache.spark.sql.connector.write.SupportsDelta {
 
-    private lazy val guarded: Unit =
-      IcebergWriter.sqlDmlGuards(SparkSession.active, base)
-    private val expectSnap = IcebergReader.currentSnapshotId(base,
-      IcebergReader.currentMetadataVersion(base))
+    private val base = meta.base
+    private lazy val guarded: Unit = IcebergWriter.sqlDmlGuards(meta)
 
     override def command: Command = cmd
     override def description: String = s"graft-iceberg row-level $cmd on $base"
@@ -305,7 +304,7 @@ private[sources] object LakeSqlDml {
       new ScanBuilder with SupportsPushDownFilters with SupportsPushDownRequiredColumns {
         guarded
         private val fullSchema =
-          IcebergWriter.sqlDmlScan(SparkSession.active, base).schema
+          IcebergWriter.sqlDmlScan(SparkSession.active, meta).schema
         private var pushed: Array[Filter] = Array.empty
         private var required: StructType = fullSchema
         override def pushFilters(filters: Array[Filter]): Array[Filter] = {
@@ -326,10 +325,9 @@ private[sources] object LakeSqlDml {
               override def needConversion: Boolean = false
               override def buildScan(): org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = {
                 val s = SparkSession.active
-                require(IcebergReader.currentSnapshotId(base,
-                  IcebergReader.currentMetadataVersion(base)) == expectSnap,
+                require(IcebergReader.currentMetadataVersion(base) == meta.version,
                   s"$base changed under the DML — re-run the statement")
-                var df = IcebergWriter.sqlDmlScan(s, base)
+                var df = IcebergWriter.sqlDmlScan(s, meta)
                 pf.flatMap(LakeBatchSources.translateFilter).foreach(c => df = df.filter(c))
                 df = df.select(req.fieldNames.toIndexedSeq.map(col): _*)
                 org.apache.spark.sql.GraftPlanBridge.internalRdd(df)
@@ -343,7 +341,7 @@ private[sources] object LakeSqlDml {
       new DeltaWriteBuilder {
         override def build(): DeltaWrite = {
           guarded
-          new GraftIcebergDeltaWrite(base, expectSnap, cmd.toString, info)
+          new GraftIcebergDeltaWrite(meta, cmd.toString, info)
         }
       }
   }
@@ -352,9 +350,10 @@ private[sources] object LakeSqlDml {
     * DML-sized position metadata → one [[IcebergWriter.commitRowDelta]]
     * snapshot. No partition routing (partitioned tables refused), no
     * CDC (Iceberg has no change feed). */
-  private final class GraftIcebergDeltaWrite(base: String, expectSnap: Long,
+  private final class GraftIcebergDeltaWrite(meta: IcebergReader.TableMetadata,
                                              opName: String, info: LogicalWriteInfo)
     extends DeltaWrite {
+    private val base = meta.base
     override def description: String = s"graft-iceberg $opName -> $base"
     override def toBatch: DeltaBatchWrite = {
       val spark = SparkSession.active
@@ -367,7 +366,7 @@ private[sources] object LakeSqlDml {
         dataSchema.fields.map(_.dataType),
         pcols = IndexedSeq.empty, partSpec = IndexedSeq.empty,
         keepIdx = dataSchema.fields.indices.toIndexedSeq,
-        rowTracked = false, commitVersion = expectSnap + 1,
+        rowTracked = false, commitVersion = meta.currentSnapshotId + 1,
         relPrefix = "data/")
       new DeltaBatchWrite {
         override def createBatchWriterFactory(i: PhysicalWriteInfo): DeltaWriterFactory =
@@ -376,7 +375,7 @@ private[sources] object LakeSqlDml {
           val ms = messages.toSeq.collect { case m: SqlDmlMessage => m }
           val delPos: Map[String, Seq[Long]] = ms.flatMap(_.delPos)
             .groupBy(_._1).view.mapValues(_.flatMap(_._2).toSeq).toMap
-          IcebergWriter.commitRowDelta(SparkSession.active, base, expectSnap,
+          IcebergWriter.commitRowDelta(SparkSession.active, meta,
             delPos, ms.flatMap(_.dataRels), opName)
         }
         override def abort(messages: Array[WriterCommitMessage]): Unit =
@@ -604,8 +603,8 @@ private[sources] trait HudiSqlDelete extends SupportsDelete {
   * points (`upsertEq` is the CDC shape). */
 private[sources] trait IcebergSqlDelete extends SupportsDelete {
 
-  /** The Iceberg table base path. */
-  def delBase: String
+  /** The table state the front door resolved for this statement. */
+  def iceMeta: IcebergReader.TableMetadata
 
   override def canDeleteWhere(filters: Array[Filter]): Boolean =
     filters.forall(LakeBatchSources.translateFilter(_).isDefined)
@@ -614,9 +613,7 @@ private[sources] trait IcebergSqlDelete extends SupportsDelete {
     val spark = SparkSession.active
     val cond = filters.toSeq.flatMap(LakeBatchSources.translateFilter)
       .reduceOption(_ && _).getOrElse(lit(true))
-    if (IcebergReader.currentSnapshotId(delBase,
-        IcebergReader.currentMetadataVersion(delBase)) >= 0)
-      IcebergWriter.deleteWhere(spark, delBase, cond)
+    if (iceMeta.currentSnapshotId >= 0) IcebergWriter.deleteWhere(spark, iceMeta, cond)
   }
 }
 
@@ -632,12 +629,12 @@ private[sources] trait IcebergSqlDml extends SupportsRowLevelOperations
 
   override def metadataColumns(): Array[MetadataColumn] =
     LakeSqlDml.metadataColumnsFor(
-      IcebergWriter.sqlDmlSchema(SparkSession.active, delBase))
+      IcebergWriter.sqlDmlSchema(SparkSession.active, iceMeta))
 
   override def newRowLevelOperationBuilder(
       info: RowLevelOperationInfo): RowLevelOperationBuilder =
     new RowLevelOperationBuilder {
       override def build(): RowLevelOperation =
-        new LakeSqlDml.IcebergRowLevelOperation(delBase, info.command)
+        new LakeSqlDml.IcebergRowLevelOperation(iceMeta, info.command)
     }
 }

@@ -387,7 +387,7 @@ class IcebergSpec extends SparkSpec {
     writeManifest(base, "metadata/m1.avro", Seq((1, "data/a.parquet", 1L)))
     writeManifestList(base, "metadata/snap-1.avro", Seq("metadata/m1.avro"))
     writeMeta(base, 1, current = 1L, snaps = Seq(1L), formatVersion = 4)
-    val e = intercept[IllegalArgumentException](IcebergReader.snapshots(base, 1))
+    val e = intercept[IllegalArgumentException](IcebergReader.load(base, 1))
     assert(e.getMessage.contains("format-version"))
     writeMeta(base, 1, current = 1L, snaps = Seq(1L))
     intercept[IllegalArgumentException](IcebergReader.snapshotFiles(spark, base, 99L))
@@ -423,7 +423,7 @@ class IcebergSpec extends SparkSpec {
     IW.append(spark, one(3L), base)
     IW.setRef(spark, base, "audit", 1L, "tag")
     IW.append(spark, one(4L), base) // refs must ride the metadata rewrite
-    assert(IR.refs(base, IR.currentMetadataVersion(base)) == Map("audit" -> (1L, "tag")))
+    assert(IR.load(base, IR.currentMetadataVersion(base)).refs == Map("audit" -> (1L, "tag")))
     assert(IR.readRef(spark, base, "audit").count() == 2L)
     // expiry refuses to drop the pinned snapshot
     val e = intercept[IllegalArgumentException](IW.expireSnapshots(spark, base, keepFrom = 2L))
@@ -536,6 +536,9 @@ class IcebergSpec extends SparkSpec {
     assert(meta.contains("\"schemas\"") && meta.contains("\"current-schema-id\""), meta)
   }
 
+  /** (default spec id, declared specs) of one table state. */
+  private def specsOf(m: IcebergReader.TableMetadata) = (m.defaultSpec.map(_.specId), m.specs)
+
   test("partition-spec evolution: identity era + day era, each pruned under its own spec") {
     import org.apache.spark.sql.functions.{col, lit, to_date}
     import graft.sources.IcebergWriter
@@ -547,7 +550,7 @@ class IcebergSpec extends SparkSpec {
     IcebergWriter.evolveSpec(spark, base, "k_day", "day", 3)
     IcebergWriter.appendSpec(spark, df.filter(col("k") >= 20), base, "dt")
     val v = IcebergReader.currentMetadataVersion(base)
-    val (defId, specs) = IcebergReader.partitionSpecs(base, v)
+    val (defId, specs) = specsOf(IcebergReader.load(base, v))
     assert(defId.contains(1) && specs.map(_.specId).sorted == Seq(0, 1), s"($defId, $specs)")
     val snap = IcebergReader.currentSnapshotId(base, v)
     // full read sees both eras
@@ -555,22 +558,22 @@ class IcebergSpec extends SparkSpec {
     assert(all.dataFiles.size == 2 + 4, all.dataFiles.toString) // 2 identity + 4 day files
     assert(spark.read.parquet(all.dataFiles.map(_._1): _*).count() == 40L)
     // identity-era pruning: p='a' plans 1 identity file + all 4 day files
-    val s1 = IcebergReader.planSnapshotBySpec(spark, base, snap, {
+    val s1 = IcebergReader.plan(spark, IcebergReader.load(base), snap, {
       case 0 => col("data_file.partition.p") === "a"
       case _ => lit(true)
     })
     assert(s1.dataFiles.size == 1 + 4, s1.dataFiles.toString)
     // day-era pruning: two of the four day ordinals + both identity files
     val d1 = java.time.LocalDate.parse("2024-01-01").toEpochDay
-    val s2 = IcebergReader.planSnapshotBySpec(spark, base, snap, {
+    val s2 = IcebergReader.plan(spark, IcebergReader.load(base), snap, {
       case 1 => col("data_file.partition.k_day").between(d1, d1 + 1)
       case _ => lit(true)
     })
     assert(s2.dataFiles.size == 2 + 2, s2.dataFiles.toString)
     // the spec list survives an unrelated metadata rewrite (a ref)
     IcebergWriter.setRef(spark, base, "audit", snap)
-    val (defId2, specs2) = IcebergReader.partitionSpecs(base,
-      IcebergReader.currentMetadataVersion(base))
+    val (defId2, specs2) = specsOf(IcebergReader.load(base,
+      IcebergReader.currentMetadataVersion(base)))
     assert(defId2.contains(1) && specs2.size == 2, "specs dropped by a metadata rewrite")
   }
 
@@ -817,5 +820,160 @@ class IcebergSpec extends SparkSpec {
     intercept[java.nio.file.FileAlreadyExistsException](
       IcebergWriter.deleteWhere(spark, base, col("k") <= 3))
     assert(java.util.Arrays.equals(Files.readAllBytes(v2), before))
+    // the loser wrote its manifest and manifest list under its own
+    // names: the winner's snapshot still reads all 20 of its rows
+    Files.writeString(Paths.get(base, "metadata", "version-hint.text"), "2")
+    assert(IcebergReader.read(spark, base).count() == 20L)
+  }
+
+  /** A compact foreign v2 table in the shape other Iceberg writers
+    * publish: random-looking manifest-list names, snapshots carrying
+    * `sequence-number` and `parent-snapshot-id`, a real table uuid.
+    * Snapshot 98 holds ids 1, 2; snapshot 99 adds 3. */
+  private def foreignTable(name: String): String = {
+    val base = mkTable(name)
+    writeData(base, "data/a.parquet", Seq(1L, 2L))
+    writeData(base, "data/b.parquet", Seq(3L))
+    writeManifestV2(base, "metadata/0c1d-m0.avro", Seq((1, "data/a.parquet", 2L, 0, None)))
+    writeManifestV2(base, "metadata/7f2e-m0.avro",
+      Seq((0, "data/a.parquet", 2L, 0, None), (1, "data/b.parquet", 1L, 0, None)))
+    val l98 = "metadata/snap-98-1-0c1d9a5e-4b7f-4c21-9d33-5a0b7c2e1f10.avro"
+    val l99 = "metadata/snap-99-1-7f2e6b1a-2c3d-4e5f-8a9b-0c1d2e3f4a5b.avro"
+    writeManifestList(base, l98, Seq("metadata/0c1d-m0.avro"))
+    writeManifestList(base, l99, Seq("metadata/7f2e-m0.avro"))
+    Files.writeString(Paths.get(base, "metadata", "v1.metadata.json"),
+      s"""{"format-version":2,"table-uuid":"$ForeignUuid","location":"$base",""" +
+        """"last-sequence-number":2,"last-updated-ms":1700000001000,"last-column-id":1,""" +
+        """"current-schema-id":0,"schemas":[{"type":"struct","schema-id":0,"fields":""" +
+        """[{"id":1,"name":"id","required":false,"type":"long"}]}],""" +
+        """"default-spec-id":0,"partition-specs":[{"spec-id":0,"fields":[]}],""" +
+        """"current-snapshot-id":99,"snapshots":[""" +
+        s"""{"snapshot-id":98,"sequence-number":1,"timestamp-ms":1700000000000,""" +
+        s""""manifest-list":"$l98","summary":{"operation":"append"},"schema-id":0},""" +
+        s"""{"snapshot-id":99,"parent-snapshot-id":98,"sequence-number":2,""" +
+        s""""timestamp-ms":1700000001000,"manifest-list":"$l99",""" +
+        """"summary":{"operation":"append"},"schema-id":0}]}""")
+    Files.writeString(Paths.get(base, "metadata", "version-hint.text"), "1")
+    base
+  }
+
+  private val ForeignUuid = "9c12d441-03fe-4693-9a96-a0705ddf69c1"
+
+  private def ids(df: org.apache.spark.sql.DataFrame): Seq[Long] =
+    df.select("id").collect().map(_.getLong(0)).sorted.toSeq
+
+  test("foreign metadata survives a commit: manifest lists, sequence numbers, uuid") {
+    val base = foreignTable("foreign_commit")
+    IcebergWriter.append(spark,
+      spark.createDataFrame(Seq(10L, 20L).map(Tuple1(_))).toDF("id").coalesce(1), base)
+    // the foreign snapshots still point at their own manifest lists
+    assert(ids(IcebergReader.read(spark, base, 99L)) == Seq(1L, 2L, 3L))
+    assert(ids(IcebergReader.read(spark, base, 98L)) == Seq(1L, 2L))
+    assert(ids(IcebergReader.read(spark, base)) == Seq(1L, 2L, 3L, 10L, 20L))
+    val meta = IcebergReader.load(base)
+    assert(meta.version == 2 && meta.currentSnapshotId == 100L)
+    assert(meta.uuid.contains(ForeignUuid))
+    val s99 = meta.snapshot(99L)
+    assert(s99.sequenceNumber.contains(2L) && s99.timestampMs == 1700000001000L)
+    assert(s99.other.map(_._1) == Seq("parent-snapshot-id"))
+    assert(s99.summary.contains(Map("operation" -> "append")))
+    // the stream order still follows the foreign sequence numbers
+    assert(meta.history.map(_.id) == Seq(98L, 99L, 100L))
+  }
+
+  test("pretty-printed metadata parses to the same table state and reads the same rows") {
+    val base = foreignTable("foreign_pretty")
+    val compact = IcebergReader.load(base)
+    val rows = ids(IcebergReader.read(spark, base))
+    val p = Paths.get(base, "metadata", "v1.metadata.json")
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    Files.writeString(p, mapper.writerWithDefaultPrettyPrinter()
+      .writeValueAsString(mapper.readTree(Files.readString(p))))
+    assert(Files.readString(p).contains("\"current-snapshot-id\" : 99"))
+    assert(IcebergReader.load(base) == compact)
+    assert(IcebergReader.currentSnapshotId(base, 1) == 99L)
+    assert(ids(IcebergReader.read(spark, base)) == rows)
+  }
+
+  test("every write path re-emits its metadata byte for byte from the parsed state") {
+    import graft.sources.IcebergTransforms
+    def roundTrips(base: String): Unit =
+      (1 to IcebergReader.currentMetadataVersion(base)).foreach { v =>
+        val text = Files.readString(Paths.get(base, "metadata", s"v$v.metadata.json"))
+        assert(IcebergReader.load(base, v).json == text, s"$base v$v")
+      }
+    def kv(rows: (Long, Long)*) = spark.createDataFrame(rows).toDF("k", "v").coalesce(1)
+    // v1 → v2: append, ref, stats, upsert, position delete, schema
+    // evolution, compaction, expiry
+    val b2 = "/tmp/graft_iceberg_test/rt_v2"
+    IcebergWriter.create(spark, kv((1L to 6L).map(i => (i, i * 10L)): _*), b2)
+    IcebergWriter.append(spark, kv((7L, 70L)), b2)
+    IcebergWriter.setRef(spark, b2, "audit", 1L)
+    IcebergWriter.writeStats(spark, b2, Seq(("k", 1)))
+    IcebergWriter.upsertEq(spark, kv((2L, 200L)), b2, Seq("k"))
+    IcebergWriter.deleteWhere(spark, b2, col("k") === 3L)
+    IcebergWriter.evolveAddColumn(spark, b2, "tag", "string")
+    IcebergWriter.evolveRenameColumn(spark, b2, "v", "w")
+    IcebergWriter.rewrite(spark, b2)
+    IcebergWriter.setRef(spark, b2, "audit", 5L)
+    IcebergWriter.expireSnapshots(spark, b2, keepFrom = 5L)
+    roundTrips(b2)
+    assert(IcebergReader.read(spark, b2).count() == 6L)
+    // v3: DV deletes through both entry points, a decimal default
+    // kept as written, row lineage
+    val b3 = "/tmp/graft_iceberg_test/rt_v3"
+    IcebergWriter.createV3(spark, kv((1L to 6L).map(i => (i, i)): _*), b3)
+    IcebergWriter.deleteWhere(spark, b3, col("k") === 1L)
+    IcebergWriter.deleteWhereV3(spark, b3, col("k") === 2L)
+    IcebergWriter.evolveAddColumnDefault(spark, b3, "score", "double", "2.50")
+    IcebergWriter.append(spark, kv((9L, 9L)), b3)
+    IcebergWriter.rewrite(spark, b3)
+    roundTrips(b3)
+    assert(Files.readString(Paths.get(b3, "metadata",
+      s"v${IcebergReader.currentMetadataVersion(b3)}.metadata.json"))
+      .contains("\"initial-default\":2.50"))
+    // partition specs: identity create, spec evolution, spec-routed
+    // append; transform create (no default-spec-id)
+    val bp = "/tmp/graft_iceberg_test/rt_part"
+    val parted = spark.createDataFrame((0L until 8L).map(i =>
+      (i, if (i % 2 == 0) "a" else "b"))).toDF("k", "p")
+    IcebergWriter.createPartitioned(spark, parted, bp, "p")
+    IcebergWriter.evolveSpec(spark, bp, "k_bucket", "bucket[2]", 1)
+    IcebergWriter.appendSpec(spark, parted, bp, "k")
+    roundTrips(bp)
+    val bt = "/tmp/graft_iceberg_test/rt_transform"
+    IcebergWriter.createTransformPartitioned(spark, parted, bt,
+      "k_bucket", IcebergTransforms.bucketCol(2, col("k")), "bucket[2]", 1)
+    roundTrips(bt)
+    // schema-only create, first append, streaming summary markers
+    val be = "/tmp/graft_iceberg_test/rt_empty"
+    graft.sources.TxnLog.rmrf(be)
+    IcebergWriter.createEmpty(spark, kv().schema, be)
+    graft.sources.IcebergStreamSink.commit(spark, kv((1L, 1L)), be, "app \"q\"", 0L)
+    graft.sources.IcebergStreamSink.commit(spark, kv((2L, 2L)), be, "app \"q\"", 1L)
+    roundTrips(be)
+    assert(graft.sources.IcebergStreamSink.lastBatch(IcebergReader.load(be), "app \"q\"") == 1L)
+  }
+
+  test("one metadata.json load per statement") {
+    val root = "/tmp/graft_iceberg_test/loads"
+    graft.sources.TxnLog.rmrf(root)
+    val base = s"$root/db/t"
+    def kv(rows: (Long, Long)*) = spark.createDataFrame(rows).toDF("k", "v").coalesce(1)
+    IcebergWriter.create(spark, kv((1L to 10L).map(i => (i, i)): _*), base)
+    def loads(statement: => Unit): Long = {
+      val before = IcebergReader.metadataLoads.get
+      statement
+      IcebergReader.metadataLoads.get - before
+    }
+    assert(loads(IcebergWriter.append(spark, kv((11L, 11L)), base)) == 1L)
+    assert(loads(IcebergWriter.deleteWhere(spark, base, col("k") === 1L)) == 1L)
+    assert(loads(IcebergWriter.upsertEq(spark, kv((2L, 20L)), base, Seq("k"))) == 1L)
+    assert(loads(IcebergReader.read(spark, base).collect()) == 1L)
+    assert(loads(IcebergReader.read(spark, base, 1L).collect()) == 1L)
+    spark.conf.set("spark.sql.catalog.ice_loads", "graft.sources.GraftCatalog")
+    spark.conf.set("spark.sql.catalog.ice_loads.root", root)
+    assert(loads(spark.sql("UPDATE ice_loads.db.t SET v = v + 100 WHERE k = 5")) == 1L)
+    assert(IcebergReader.read(spark, base).filter(col("v") === 105L).count() == 1L)
   }
 }

@@ -126,11 +126,11 @@ class IcebergV3Spec extends SparkSpec {
     IcebergWriter.create(spark, df.repartition(2), base)
     val rel = IcebergWriter.writeStats(spark, base, Seq(("id", 1), ("g", 2)))
     assert(Files.exists(Paths.get(base, rel)))
-    assert(IcebergReader.statsNdv(base, 1L) == Map(1 -> 100L, 2 -> 7L))
+    assert(IcebergReader.statsNdv(IcebergReader.load(base), 1L) == Map(1 -> 100L, 2 -> 7L))
     // the registered sketch is REAL datasketches theta: its estimate
     // agrees with the exact count (n < k ⇒ exact mode)
     val v0 = IcebergReader.currentMetadataVersion(base)
-    val path = IcebergReader.statisticsEntries(base, v0)
+    val path = IcebergReader.load(base, v0).statistics.map(e => e.snapshotId -> e.path)
       .collectFirst { case (1L, p) => s"$base/$p" }.get
     val (blobs, _) = Puffin.readFooter(path)
     assert(blobs.map(_.blobType).toSet == Set("apache-datasketches-theta-v1"))
@@ -143,11 +143,12 @@ class IcebergV3Spec extends SparkSpec {
     IcebergWriter.append(spark, spark.range(200, 210)
       .select(col("id"), lit(9L).as("g")), base)
     val v1 = IcebergReader.currentMetadataVersion(base)
-    assert(IcebergReader.statisticsEntries(base, v1) == Seq(1L -> rel))
+    assert(IcebergReader.load(base, v1).statistics.map(e => e.snapshotId -> e.path) ==
+      Seq(1L -> rel))
     // expiring snapshot 1 reclaims its stats entry AND puffin file
     IcebergWriter.expireSnapshots(spark, base, keepFrom = 2L)
     val v2 = IcebergReader.currentMetadataVersion(base)
-    assert(IcebergReader.statisticsEntries(base, v2).isEmpty)
+    assert(IcebergReader.load(base, v2).statistics.map(e => e.snapshotId -> e.path).isEmpty)
     assert(!Files.exists(Paths.get(base, rel)))
   }
 
@@ -174,7 +175,7 @@ class IcebergV3Spec extends SparkSpec {
     assert(IcebergReader.read(spark, base, 2L).count() == 30L)
     // time travel to snap 1 still serves every row
     assert(IcebergReader.read(spark, base, 1L).count() == 40L)
-    assert(IcebergReader.formatVersion(base, IcebergReader.currentMetadataVersion(base)) == 3)
+    assert(IcebergReader.load(base).formatVersion == 3)
     val _ = n
   }
 
@@ -231,19 +232,23 @@ class IcebergV3Spec extends SparkSpec {
 
   // ---- row lineage ----------------------------------------------------------
 
+  /** Each snapshot's `first-row-id`, by snapshot id. */
+  private def firstRowIds(m: IcebergReader.TableMetadata): Map[Long, Long] =
+    m.snapshots.flatMap(s => s.firstRowId.map(s.id -> _)).toMap
+
   test("v3 lineage: contiguous id ranges per commit, next-row-id advances, deletes keep ids") {
     val base = mkBase("rl_ids")
     val b1 = spark.range(0, 7).select(col("id"))
       .repartition(1).sortWithinPartitions("id")
     IcebergWriter.createV3(spark, b1, base)
-    assert(IcebergReader.nextRowId(base, 1).contains(7L))
-    assert(IcebergReader.snapshotFirstRowIds(base, 1) == Map(1L -> 0L))
+    assert(IcebergReader.load(base, 1).nextRowId.contains(7L))
+    assert(firstRowIds(IcebergReader.load(base, 1)) == Map(1L -> 0L))
     IcebergWriter.append(spark,
       spark.range(100, 105).select(col("id")).repartition(1).sortWithinPartitions("id"),
       base)
     val v = IcebergReader.currentMetadataVersion(base)
-    assert(IcebergReader.nextRowId(base, v).contains(12L))
-    assert(IcebergReader.snapshotFirstRowIds(base, v)(2L) == 7L)
+    assert(IcebergReader.load(base, v).nextRowId.contains(12L))
+    assert(firstRowIds(IcebergReader.load(base, v))(2L) == 7L)
     val ids = IcebergReader.readLineage(spark, base, 2L)
       .select("id", "_row_id", "_last_updated_sequence_number")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1)
@@ -254,7 +259,7 @@ class IcebergV3Spec extends SparkSpec {
     // a DELETE assigns no ids and survivors keep theirs
     IcebergWriter.deleteWhereV3(spark, base, col("id") === 3 || col("id") === 102)
     val v2 = IcebergReader.currentMetadataVersion(base)
-    assert(IcebergReader.nextRowId(base, v2).contains(12L))
+    assert(IcebergReader.load(base, v2).nextRowId.contains(12L))
     val after = IcebergReader.readLineage(spark, base, 3L)
       .select("id", "_row_id").collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(after(4L) == 4L && after(104L) == 11L && !after.contains(3L))
@@ -268,8 +273,8 @@ class IcebergV3Spec extends SparkSpec {
     // a ref commit must not drop next-row-id / first-row-id
     IcebergWriter.setRef(spark, base, "audit", 2L)
     val v = IcebergReader.currentMetadataVersion(base)
-    assert(IcebergReader.nextRowId(base, v).contains(45L))
-    assert(IcebergReader.snapshotFirstRowIds(base, v).keySet == Set(1L, 2L, 3L))
+    assert(IcebergReader.load(base, v).nextRowId.contains(45L))
+    assert(firstRowIds(IcebergReader.load(base, v)).keySet == Set(1L, 2L, 3L))
     IcebergWriter.setRef(spark, base, "audit", 3L) // move off snap 2 so expiry can drop it
     val dropped = IcebergWriter.expireSnapshots(spark, base, keepFrom = 3L)
     // the DV puffin is still referenced by snapshot 3 — must survive
@@ -282,7 +287,7 @@ class IcebergV3Spec extends SparkSpec {
     val hacked = Files.readString(meta).replace("\"format-version\":3", "\"format-version\":4")
     Files.writeString(meta, hacked)
     val e = intercept[IllegalArgumentException](
-      IcebergReader.snapshots(base, IcebergReader.currentMetadataVersion(base)))
+      IcebergReader.load(base, IcebergReader.currentMetadataVersion(base)))
     assert(e.getMessage.contains("format-version"))
   }
 }

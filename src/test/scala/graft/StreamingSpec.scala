@@ -464,7 +464,8 @@ class StreamingSpec extends SparkSpec {
     drain(ck1)
     assert(graft.sources.IcebergReader.read(spark, base).count() == 40L)
     // the committed snapshot carries the (appId, batchId) summary marker
-    assert(graft.sources.IcebergStreamSink.lastBatch(base, "ice-sink-test") == 0L)
+    assert(graft.sources.IcebergStreamSink.lastBatch(
+      graft.sources.IcebergReader.load(base), "ice-sink-test") == 0L)
     // FRESH checkpoint = full redelivery of batch 0 — the summary
     // marker absorbs it (exactly-once survives checkpoint loss)
     val ck2 = java.nio.file.Files.createTempDirectory("graft_icesink_ck_").toString
@@ -475,6 +476,7 @@ class StreamingSpec extends SparkSpec {
       .coalesce(1).write.mode("append").parquet(srcDir)
     drain(ck1)
     assert(graft.sources.IcebergReader.read(spark, base).count() == 55L)
-    assert(graft.sources.IcebergStreamSink.lastBatch(base, "ice-sink-test") == 1L)
+    assert(graft.sources.IcebergStreamSink.lastBatch(
+      graft.sources.IcebergReader.load(base), "ice-sink-test") == 1L)
   }
 }
