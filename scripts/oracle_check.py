@@ -9,6 +9,8 @@ the same sfDir parquet files), sorts columns by name, and compares
 row-by-row values exactly. Prints per-query PASS/FAIL with first diffs,
 and an `RSS <query> +<MB>` line after each query that raised this
 process's peak resident set by 256 MB or more since the last such line.
+Both results stream through their own cursor in fixed-size batches, so
+neither is held whole as Python tuples.
 """
 import sys, json, glob, math, resource
 
@@ -32,6 +34,8 @@ def norm(v):
 
 
 RSS_STEP_MB = 256
+BATCH_ROWS = 10000
+MAX_DIFFS = 5
 
 
 def peak_rss_mb():
@@ -49,6 +53,35 @@ def reporting_rss(names):
         if now - last >= RSS_STEP_MB:
             print(f"RSS {name} +{now - last}")
             last = now
+
+
+def compare(con, spark_sql, oracle_sql, sidx, oidx, scols):
+    """Stream both results in BATCH_ROWS batches through two cursors, in
+    row order: (spark rows, oracle rows, first MAX_DIFFS cell diffs as
+    (row, col, spark, oracle)). Rows are counted to the end of both."""
+    scur, ocur = con.cursor(), con.cursor()
+    scur.execute(spark_sql)
+    ocur.execute(oracle_sql)
+    n_spark = n_oracle = 0
+    bad = []
+    while True:
+        sb, ob = scur.fetchmany(BATCH_ROWS), ocur.fetchmany(BATCH_ROWS)
+        if not sb and not ob:
+            break
+        for rn, (sr, orr) in enumerate(zip(sb, ob), start=n_spark):
+            if len(bad) >= MAX_DIFFS:
+                break
+            for si, oi in zip(sidx, oidx):
+                a, b = norm(sr[si]), norm(orr[oi])
+                if a != b:
+                    bad.append((rn, scols[si], a, b))
+                    if len(bad) >= MAX_DIFFS:
+                        break
+        n_spark += len(sb)
+        n_oracle += len(ob)
+    scur.close()
+    ocur.close()
+    return n_spark, n_oracle, bad
 
 
 def main():
@@ -69,13 +102,12 @@ def main():
             print(f"FAIL {name}: no spark output")
             n_fail += 1
             continue
+        spark_sql = f"SELECT * FROM read_parquet({files!r})"
         try:
-            srel = con.sql(f"SELECT * FROM read_parquet({files!r})")
+            srel = con.sql(spark_sql)
             scols, stypes = list(srel.columns), [str(t) for t in srel.types]
-            srows = srel.fetchall()
             orel = con.sql(sql)
             ocols, otypes = list(orel.columns), [str(t) for t in orel.types]
-            orows = orel.fetchall()
         except Exception as e:
             print(f"FAIL {name}: exec error: {e}")
             n_fail += 1
@@ -100,27 +132,23 @@ def main():
             print(f"FAIL {name}: columns spark={sorted(scols)} oracle={sorted(ocols)}")
             n_fail += 1
             continue
-        if len(srows) != len(orows):
-            print(f"FAIL {name}: rows spark={len(srows)} oracle={len(orows)}")
+        try:
+            n_spark, n_oracle, bad = compare(con, spark_sql, sql, sidx, oidx, scols)
+        except Exception as e:
+            print(f"FAIL {name}: exec error: {e}")
             n_fail += 1
             continue
-        bad = []
-        for rn, (sr, orr) in enumerate(zip(srows, orows)):
-            for si, oi in zip(sidx, oidx):
-                a, b = norm(sr[si]), norm(orr[oi])
-                if a != b:
-                    bad.append((rn, scols[si], a, b))
-                    if len(bad) >= 5:
-                        break
-            if len(bad) >= 5:
-                break
+        if n_spark != n_oracle:
+            print(f"FAIL {name}: rows spark={n_spark} oracle={n_oracle}")
+            n_fail += 1
+            continue
         if bad:
             print(f"FAIL {name}: {len(bad)}+ cell diffs (row, col, spark, oracle):")
             for d in bad:
                 print(f"   {d}")
             n_fail += 1
         else:
-            print(f"PASS {name} ({len(srows)} rows)")
+            print(f"PASS {name} ({n_spark} rows)")
             n_pass += 1
     print(f"== {n_pass} pass, {n_fail} fail, {len(oracle)} oracle queries ==")
     sys.exit(1 if n_fail else 0)

@@ -22,8 +22,8 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * the parquet scan (column pruning and predicate pushdown work
   * exactly as on any parquet read), checkpoint-seeded O(tail) replay,
   * DELETION VECTORS (minReaderVersion 3 + readerFeatures, roaring
-  * sidecars applied as a broadcast anti-join on `_metadata.row_index`
-  * — see [[RoaringDv]]), and COLUMN MAPPING mode=name (physical→
+  * sidecars applied as a row-index mask inside the scan — see
+  * [[LakeScan.unmasked]]), and COLUMN MAPPING mode=name (physical→
   * logical projection per version). Unknown action types are skipped,
   * as the spec requires of readers; protocols demanding features
   * outside [[SupportedReaderFeatures]] are rejected rather than
@@ -48,13 +48,6 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * [[checkpointState]]). The protocol guard runs on every fold.
   */
 object DeltaLogReader {
-
-  /** Sessions whose DV path-spelling probe already passed (weak: a
-    * stopped session must not pin its entry; synchronized: concurrent
-    * reads on one session share it). */
-  private val probedSessions = java.util.Collections.synchronizedSet(
-    java.util.Collections.newSetFromMap(
-      new java.util.WeakHashMap[SparkSession, java.lang.Boolean]()))
 
   /** Spec deletion-vector descriptor riding an add action: which rows
     * of the file are soft-deleted, as a serialized roaring bitmap in a
@@ -311,7 +304,7 @@ object DeltaLogReader {
     * minReaderVersion=3 lists the features a reader MUST implement). */
   private val SupportedReaderFeatures =
     // typeWidening/timestampNtz are honored because every scan enforces
-    // the LOG schema (Snapshot.schema → spark.read.schema) and Spark's
+    // the LOG schema (Snapshot.schema, declared to every scan) and Spark's
     // parquet reader upcasts narrow physical types natively
     Set("deletionVectors", "columnMapping", "v2Checkpoint",
       "typeWidening", "timestampNtz")
@@ -648,86 +641,36 @@ object DeltaLogReader {
   def snapshotFiles(base: String, version: Long): Seq[DeltaAdd] =
     snapshot(None, base, version).adds
 
-  /** The spelling `_metadata.file_path` uses for an absolute path —
-    * URI-ENCODED (space → %20 etc.) with the `file:` scheme stripped to
-    * a leading `/`. Every driver-side path that equi-joins against the
-    * scan's `__path` column MUST go through this: a literal-space
-    * spelling silently mismatches on any partition value containing a
-    * space (`4-NOT SPECIFIED`), dropping rows from inner joins or
-    * no-op'ing anti-join masks. */
-  private[sources] def scanSpelling(abs: java.nio.file.Path): String = {
-    val raw = abs.toAbsolutePath.normalize.toUri.getRawPath
-    if (raw.length > 1 && raw.endsWith("/")) raw.dropRight(1) else raw
-  }
+  /** A live file's path as every scan of it spells it (relative `add`
+    * paths resolve against the table root). */
+  private[sources] def absOf(base: String, rel: String): String =
+    Paths.get(base).resolve(rel).toString
 
-  /** Apply each file's deletion vector (if any) to the scan: stamp
-    * Spark's native parquet row positions as `__path`/`__pos`, mask
-    * them through [[dvMaskKeep]] and project the scan's own columns
-    * back. Files without a DV pass through untouched; pushdown and
-    * pruning on the data side survive because the scan itself stays
-    * the ordinary parquet read. */
-  private def applyDvs(spark: SparkSession, base: String,
-                       adds: Seq[DeltaAdd], data: DataFrame): DataFrame = {
-    val withDv = adds.filter(_.dv.isDefined)
-    if (withDv.isEmpty) return data
-    import org.apache.spark.sql.functions.{col, regexp_replace}
-    // both join sides must normalize to the SAME absolute form: the
-    // driver side resolves rel paths against the ABSOLUTE table root
-    // (a relative `base` would otherwise never match and the DVs would
-    // silently no-op — soft-deleted rows resurrected with no error)
-    // while the scan side strips the scan's `file:` URI scheme
-    val absBase = Paths.get(base).toAbsolutePath.normalize
-    // sanity-pin the convention with one O(1-row) probe: a direct scan
-    // of the first DV-carrying file must yield exactly the driver-side
-    // spelling, else the anti-join keys have drifted (path encoding,
-    // scheme, symlinks) and masked rows would leak back silently.
-    // The convention is a (session, filesystem) property, not a table
-    // property — probe ONCE per session: re-probing on every DV-masked
-    // read scheduled two jobs per read (17 of each in one measured
-    // query), all confirming the same invariant
-    if (!probedSessions.contains(spark)) {
-      val probeKey = scanSpelling(absBase.resolve(withDv.head.path))
-      val probed = spark.read
-        .parquet(absBase.resolve(withDv.head.path).normalize.toString)
-        .select(regexp_replace(col("_metadata.file_path"), "^file:/*", "/"))
-        .head().getString(0)
-      require(probed == probeKey,
-        s"DV path-match convention broke: scan spells '$probed', driver '$probeKey'")
-      probedSessions.add(spark)
-    }
-    val cols = data.columns.map(col)
-    dvMaskKeep(spark, base, withDv, data
-      .withColumn("__path", regexp_replace(col("_metadata.file_path"), "^file:/*", "/"))
-      .withColumn("__pos", col("_metadata.row_index")))
-      .select(cols.toIndexedSeq: _*)
-  }
+  /** A live file as [[LakeScan]] takes it: its path and the log's size. */
+  private[sources] def scanFile(base: String, a: DeltaAdd): LakeScan.File =
+    LakeScan.File(absOf(base, a.path), a.size)
 
-  /** DV anti-join that KEEPS every column of `stamped` (which must
-    * already carry normalized `__path` + `__pos`) — the shared mask for
-    * writer paths that need positions or materialized row ids to
-    * survive the masking (DML scans, OPTIMIZE's rewrite read,
-    * readRowIds). No-op when no add carries a DV. */
-  private[sources] def dvMaskKeep(spark: SparkSession, base: String,
-                                  adds: Seq[DeltaAdd], stamped: DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, col}
-    import org.apache.spark.sql.Encoders
-    val withDv = adds.filter(_.dv.isDefined)
-    if (withDv.isEmpty) return stamped
-    val absBase = Paths.get(base).toAbsolutePath.normalize
-    val payloads: Seq[(String, Array[Byte])] = withDv.map { a =>
-      val d = a.dv.get
-      scanSpelling(absBase.resolve(a.path)) ->
-        RoaringDv.loadPayload(base, d.storageType, d.pathOrInlineDv, d.offset, d.sizeInBytes)
-    }
-    val pairEnc = Encoders.tuple(Encoders.STRING, Encoders.scalaLong)
-    val dels = spark.createDataset(payloads)(Encoders.tuple(
-        Encoders.STRING, Encoders.BINARY))
-      .flatMap { case (p, b) => RoaringDv.deserialize(b).map(pos => (p, pos)) }(pairEnc)
-      .toDF("__del_path", "__del_pos")
-    stamped.join(broadcast(dels),
-      col("__path") === col("__del_path") && col("__pos") === col("__del_pos"),
-      "left_anti")
-  }
+  /** The scan of `adds`: hive partition dirs recovered under the table
+    * root when `partitioned`, `schema` enforced over the footers. */
+  private[sources] def scan(spark: SparkSession, base: String, adds: Seq[DeltaAdd],
+                            schema: Option[StructType], partitioned: Boolean,
+                            mergeSchema: Boolean = false): DataFrame =
+    LakeScan(spark, adds.map(scanFile(base, _)), schema,
+      basePath = if (partitioned) Some(base) else None, mergeSchema = mergeSchema)
+
+  /** Each DV-carrying file's bitmap payload, keyed by the
+    * `_metadata.file_path` its scan renders ([[LakeScan.key]]). */
+  private[sources] def dvMasks(spark: SparkSession, base: String,
+                               adds: Seq[DeltaAdd]): Map[String, Array[Byte]] =
+    adds.flatMap(a => a.dv.map(d => LakeScan.key(spark, absOf(base, a.path)) ->
+      RoaringDv.loadPayload(base, d.storageType, d.pathOrInlineDv, d.offset, d.sizeInBytes)))
+      .toMap
+
+  /** The scan of `adds` with each file's deletion vector applied. */
+  private def maskedScan(spark: SparkSession, base: String, adds: Seq[DeltaAdd],
+                         schema: Option[StructType], partitioned: Boolean): DataFrame =
+    LakeScan.mask(spark, scan(spark, base, adds, schema, partitioned),
+      dvMasks(spark, base, adds))
 
   /** ROW-TRACKING read: the snapshot's live rows plus `_row_id` and
     * `_row_commit_version` — each file's MATERIALIZED columns when
@@ -737,25 +680,20 @@ object DeltaLogReader {
     * their ids. The per-file (baseRowId, commitVersion) pairs attach
     * via ONE broadcast join over a files-sized frame. */
   def readRowIds(spark: SparkSession, base: String, version: Long): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, coalesce, col, lit, regexp_replace}
+    import org.apache.spark.sql.functions.{broadcast, coalesce, col, lit}
     val snap = snapshot(Some(spark), base, version)
     val (matId, matVer) = snap.rowTrackingCols.getOrElse(
       throw new IllegalArgumentException(s"$base does not enable row tracking"))
     val adds = snap.adds
     require(adds.nonEmpty, s"empty snapshot $version of $base")
-    val absBase = Paths.get(base).toAbsolutePath.normalize
-    def absOf(rel: String) = absBase.resolve(rel).normalize.toString
-    def keyOf(rel: String) = scanSpelling(absBase.resolve(rel))
-    val reader = spark.read.option("mergeSchema", "true")
-    val raw =
-      (if (snap.partitionColumns.isEmpty) reader else reader.option("basePath", base))
-        .parquet(adds.map(a => absOf(a.path)): _*)
+    val raw = scan(spark, base, adds, None, snap.partitionColumns.nonEmpty, mergeSchema = true)
     val stamped = raw
-      .withColumn("__path", regexp_replace(col("_metadata.file_path"), "^file:/*", "/"))
+      .withColumn("__path", col("_metadata.file_path"))
       .withColumn("__pos", col("_metadata.row_index"))
-    // DVs apply with positions KEPT (payloads decode executor-side)
-    val masked = dvMaskKeep(spark, base, adds, stamped)
-    val meta = adds.map(a => (keyOf(a.path),
+    // DVs apply with positions KEPT
+    val masked = stamped.filter(
+      LakeScan.unmasked(spark, dvMasks(spark, base, adds), col("__path"), col("__pos")))
+    val meta = adds.map(a => (LakeScan.key(spark, absOf(base, a.path)),
       a.baseRowId.map(java.lang.Long.valueOf).orNull,
       a.defaultRowCommitVersion.map(java.lang.Long.valueOf).orNull))
     val metaDf = spark.createDataFrame(meta).toDF("__rt_path", "__rt_base", "__rt_ver")
@@ -795,7 +733,6 @@ object DeltaLogReader {
   def read(spark: SparkSession, snap: Snapshot): DataFrame = {
     val (base, version, adds) = (snap.base, snap.version, snap.adds)
     require(adds.nonEmpty, s"empty snapshot at version $version of $base")
-    val files = adds.map(a => Paths.get(base).resolve(a.path).toString)
     val pcols = snap.partitionColumns
     snap.mappedSchema.foreach { logical =>
       // mode=id: columns bind by the PARQUET FIELD ID each file embeds
@@ -826,11 +763,10 @@ object DeltaLogReader {
         // (the spec's schema evolution); the loudness the default
         // provided against id-LESS foreign files moves into a sampled
         // footer check.
-        assertEmbeddedIds(spark, files.head)
+        assertEmbeddedIds(spark, absOf(base, adds.head.path))
         spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
         spark.conf.set("spark.sql.parquet.fieldId.read.ignoreMissing", "true")
-        return applyDvs(spark, base, adds,
-          spark.read.schema(readSchema).parquet(files: _*))
+        return maskedScan(spark, base, adds, Some(readSchema), partitioned = false)
       }
       // column mapping mode=name: the parquet files carry PHYSICAL
       // names; rename to the version's logical schema (a metaData-only
@@ -852,17 +788,10 @@ object DeltaLogReader {
       val physSchema = StructType(
         logical.fields.map(f => org.apache.spark.sql.types.StructField(
           physByLogical(f.name), f.dataType, nullable = true)))
-      val physical =
-        if (pcols.isEmpty)
-          applyDvs(spark, base, adds, spark.read.schema(physSchema).parquet(files: _*))
-        else {
-          require(adds.forall(a => physPcols.forall(c => a.path.contains(c + "="))),
-            s"partitioned column-mapped Delta table with non-hive data paths " +
-              s"(need ${physPcols.mkString(",")} dirs)")
-          applyDvs(spark, base, adds,
-            spark.read.schema(physSchema)
-              .option("basePath", base).parquet(files: _*))
-        }
+      require(adds.forall(a => physPcols.forall(c => a.path.contains(c + "="))),
+        s"partitioned column-mapped Delta table with non-hive data paths " +
+          s"(need ${physPcols.mkString(",")} dirs)")
+      val physical = maskedScan(spark, base, adds, Some(physSchema), pcols.nonEmpty)
       val renames = logical.fields.map { f =>
         org.apache.spark.sql.functions.col(physByLogical(f.name)).as(f.name)
       }
@@ -878,9 +807,7 @@ object DeltaLogReader {
     // scan schema depending on which footer Spark sampled — the spec's
     // schema evolution — and partition columns keep their DECLARED
     // types (no dir-name inference drift)
-    val reader = if (pcols.isEmpty) spark.read else spark.read.option("basePath", base)
-    applyDvs(spark, base, adds,
-      snap.schema.fold(reader)(reader.schema).parquet(files: _*))
+    maskedScan(spark, base, adds, snap.schema, pcols.nonEmpty)
   }
 
   /** The live files a `[lo, hi]` range read on `column` must open —
@@ -914,13 +841,11 @@ object DeltaLogReader {
     val snap = snapshot(Some(spark), base, version)
     val files = filesWhere(snap, column, lo, hi)
     require(files.nonEmpty, s"no file of $base@$version overlaps $column in [$lo, $hi]")
-    val paths = files.map(a => Paths.get(base).resolve(a.path).toString)
     // enforce the LOG's schema like read() does: without it, a
     // row-tracked table's materialized physical columns
     // (_row_id_mat/_row_commit_mat) leak into results after OPTIMIZE
     // and mixed-schema file sets read inconsistently
-    val reader =
-      if (snap.partitionColumns.isEmpty) spark.read else spark.read.option("basePath", base)
+    val partitioned = snap.partitionColumns.nonEmpty
     snap.mappedSchema match {
       case Some(logical) =>
         // mapped table: files carry PHYSICAL names — enforce the schema
@@ -929,12 +854,12 @@ object DeltaLogReader {
         val phys = StructType(logical.fields.map(f => StructField(
           f.metadata.getString("delta.columnMapping.physicalName"),
           f.dataType, f.nullable)))
-        val data = applyDvs(spark, base, files, reader.schema(phys).parquet(paths: _*))
+        val data = maskedScan(spark, base, files, Some(phys), partitioned)
         data.select(logical.fields.map(f => org.apache.spark.sql.functions
           .col(f.metadata.getString("delta.columnMapping.physicalName"))
           .as(f.name)).toIndexedSeq: _*)
       case None =>
-        applyDvs(spark, base, files, snap.schema.fold(reader)(reader.schema).parquet(paths: _*))
+        maskedScan(spark, base, files, snap.schema, partitioned)
     }
   }
 
@@ -985,7 +910,7 @@ object DeltaLogReader {
       // schema (a rename commit changes the spelling going forward)
       val colMap = snap.physicalNames
       reads.collect { case (files, tag) if files.nonEmpty =>
-        val abs = files.map(p => Paths.get(base).resolve(p).toString)
+        val raw = LakeScan.paths(spark, files.map(absOf(base, _)))
         // derived DELETE pre-images from removed files must be read
         // UNDER their deletion-vector masks as of the PRIOR version —
         // an unmasked read would over-report already-soft-deleted rows
@@ -993,17 +918,9 @@ object DeltaLogReader {
         val df0 =
           if (tag.contains("delete")) {
             val fileSet = files.toSet
-            val removedAdds = snapshot(Some(spark), base, v - 1).adds
-              .filter(a => fileSet.contains(a.path))
-            if (removedAdds.exists(_.dv.nonEmpty)) {
-              import org.apache.spark.sql.functions.regexp_replace
-              val stamped = spark.read.parquet(abs: _*)
-                .withColumn("__path",
-                  regexp_replace(col("_metadata.file_path"), "^file:/*", "/"))
-                .withColumn("__pos", col("_metadata.row_index"))
-              dvMaskKeep(spark, base, removedAdds, stamped).drop("__path", "__pos")
-            } else spark.read.parquet(abs: _*)
-          } else spark.read.parquet(abs: _*)
+            LakeScan.mask(spark, raw, dvMasks(spark, base,
+              snapshot(Some(spark), base, v - 1).adds.filter(a => fileSet.contains(a.path))))
+          } else raw
         val df = colMap.fold(df0)(_.foldLeft(df0) { case (d, (l, p)) =>
           if (p != l && d.columns.contains(p)) d.withColumnRenamed(p, l) else d })
         tag.fold(df)(t => df.withColumn("_change_type", lit(t)))

@@ -206,11 +206,12 @@ object DeltaLogWriter {
     * nor survive a rewrite), row ids MATERIALIZED into the configured
     * physical columns (so a rewrite preserves them), and LOGICAL
     * column names (predicates bind the user's spelling on mapped
-    * tables). Always carries normalized `__path`; `__pos` too when
+    * tables). Always carries `__path`, the scan's own
+    * `_metadata.file_path` ([[LakeScan.key]] of the file); `__pos` too when
     * `keepPos` (the DV-delete path needs positions). */
   private def dmlScanAll(spark: SparkSession, ctx: DmlCtx,
                          keepPos: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, coalesce, regexp_replace}
+    import org.apache.spark.sql.functions.{broadcast, coalesce}
     val base = ctx.base
     require(ctx.live.nonEmpty, s"DML over an empty snapshot of $base")
     if (ctx.physPcols.nonEmpty)
@@ -218,10 +219,6 @@ object DeltaLogWriter {
         s"partitioned Delta table (${ctx.physPcols.mkString(",")}) with non-hive " +
           "data paths — partition values live only in the log; this " +
           "minimal writer supports hive-style layouts only")
-    val absBase = Paths.get(base).toAbsolutePath.normalize
-    val files = ctx.live.map(a => absBase.resolve(a.path).toString)
-    val reader0 = spark.read
-    val reader = if (ctx.physPcols.isEmpty) reader0 else reader0.option("basePath", base)
     // the LOG's schema governs (pre-ADD-COLUMN files surface evolved
     // columns as NULL); under column mapping the enforced schema uses
     // the PHYSICAL names the footers carry. Row-tracked tables append
@@ -244,16 +241,13 @@ object DeltaLogWriter {
           StructField(ctx.matVer, LongType, nullable = true))))
       }
     }
-    val raw = declared match {
-      case Some(schema) => reader.schema(schema).parquet(files: _*)
-      case None if ctx.rt.isDefined =>
-        reader.option("mergeSchema", "true").parquet(files: _*)
-      case None => reader.parquet(files: _*)
-    }
+    val raw = DeltaLogReader.scan(spark, base, ctx.live, declared, ctx.physPcols.nonEmpty,
+      mergeSchema = declared.isEmpty && ctx.rt.isDefined)
     val stamped = raw
-      .withColumn("__path", regexp_replace(col("_metadata.file_path"), "^file:/*", "/"))
+      .withColumn("__path", col("_metadata.file_path"))
       .withColumn("__pos", col("_metadata.row_index"))
-    val masked = DeltaLogReader.dvMaskKeep(spark, base, ctx.live, stamped)
+    val masked = stamped.filter(LakeScan.unmasked(spark,
+      DeltaLogReader.dvMasks(spark, base, ctx.live), col("__path"), col("__pos")))
     val materialized = ctx.rt match {
       case None => masked
       case Some(_) =>
@@ -261,7 +255,7 @@ object DeltaLogWriter {
         // MATERIALIZED physical names: a rewrite that keeps these
         // columns preserves ids by construction
         val meta = ctx.live.map(a => (
-          DeltaLogReader.scanSpelling(absBase.resolve(a.path)),
+          LakeScan.key(spark, DeltaLogReader.absOf(base, a.path)),
           a.baseRowId.map(java.lang.Long.valueOf).orNull,
           a.defaultRowCommitVersion.map(java.lang.Long.valueOf).orNull))
         val metaDf = spark.createDataFrame(meta).toDF("__rt_path", "__rt_base", "__rt_ver")
@@ -956,7 +950,7 @@ object DeltaLogWriter {
     * themselves. CDF derives
     * full-delete + full-insert from the remove/add actions themselves,
     * with removed files read UNDER their prior-version DV masks
-    * (readChanges' dvMaskKeep derivation), so live-DV + CDF overwrites
+    * (readChanges' masked pre-image derivation), so live-DV + CDF overwrites
     * never over-report. */
   def overwrite(spark: SparkSession, df0: DataFrame, base: String,
                 statsFor: Seq[String] = Nil): Unit = {
@@ -969,7 +963,7 @@ object DeltaLogWriter {
     }
     // CDF over DV-carrying files needs no refusal and no double-write:
     // readChanges derives the overwrite's delete pre-images from the
-    // removed files UNDER their prior-version DV masks (dvMaskKeep),
+    // removed files UNDER their prior-version DV masks,
     // so masked rows never over-report as deletes
     val df = applyGenerated(df0, ctx.snap)
     ctx.snap.constraints.foreach { case (name, e) =>
@@ -1148,31 +1142,26 @@ object DeltaLogWriter {
     // packed files materialize the deletes and carry no DV — content
     // identical, so dataChange=false still holds).
     def domainRead(files: Seq[DeltaAdd]): DataFrame = {
-      import org.apache.spark.sql.functions.{broadcast, coalesce, regexp_replace}
-      val paths = files.map(a => s"$base/${a.path}")
-      (snap.rowTrackingCols, files.exists(_.dv.isDefined)) match {
-        case (None, false) => spark.read.parquet(paths: _*)
-        case (None, true) =>
-          val raw = spark.read.parquet(paths: _*)
-          val stamped = raw
-            .withColumn("__path", regexp_replace(col("_metadata.file_path"), "^file:/*", "/"))
-            .withColumn("__pos", col("_metadata.row_index"))
-          DeltaLogReader.dvMaskKeep(spark, base, files, stamped)
-            .select(raw.columns.map(col).toIndexedSeq: _*)
-        case (Some((matId, matVer)), _) =>
-          val raw = spark.read.option("mergeSchema", "true").parquet(paths: _*)
+      import org.apache.spark.sql.functions.{broadcast, coalesce}
+      val masks = DeltaLogReader.dvMasks(spark, base, files)
+      snap.rowTrackingCols match {
+        case None =>
+          LakeScan.mask(spark, DeltaLogReader.scan(spark, base, files, None, partitioned = false),
+            masks)
+        case Some((matId, matVer)) =>
+          val raw = DeltaLogReader.scan(spark, base, files, None, partitioned = false,
+            mergeSchema = true)
           val meta = files.map(a => (
-            DeltaLogReader.scanSpelling(
-              Paths.get(base).toAbsolutePath.normalize.resolve(a.path)),
+            LakeScan.key(spark, DeltaLogReader.absOf(base, a.path)),
             a.baseRowId.map(java.lang.Long.valueOf).orNull,
             a.defaultRowCommitVersion.map(java.lang.Long.valueOf).orNull))
           val metaDf = spark.createDataFrame(meta).toDF("__rt_path", "__rt_base", "__rt_ver")
           def matCol(c: String) = if (raw.columns.contains(c)) col(c) else lit(null)
           val userCols = raw.columns.filterNot(c => c == matId || c == matVer).map(col).toSeq
           val stamped = raw
-            .withColumn("__path", regexp_replace(col("_metadata.file_path"), "^file:/*", "/"))
+            .withColumn("__path", col("_metadata.file_path"))
             .withColumn("__pos", col("_metadata.row_index"))
-          DeltaLogReader.dvMaskKeep(spark, base, files, stamped)
+          stamped.filter(LakeScan.unmasked(spark, masks, col("__path"), col("__pos")))
             .join(broadcast(metaDf), col("__path") === col("__rt_path"))
             .select(userCols ++ Seq(
               coalesce(matCol(matId), col("__rt_base") + col("__pos"))
@@ -1317,7 +1306,7 @@ object DeltaLogWriter {
     if (delPosByFile.isEmpty && dataRels.isEmpty) return // no-op DML
     val ctx = dmlCtx(spark, base)
     val byAbs = ctx.live.map(a =>
-      DeltaLogReader.scanSpelling(Paths.get(base).resolve(a.path)) -> a).toMap
+      LakeScan.key(spark, DeltaLogReader.absOf(base, a.path)) -> a).toMap
     val dvActions = delPosByFile.toSeq.sortBy(_._1).flatMap { case (abs, fresh) =>
       val a = byAbs.getOrElse(abs,
         throw new IllegalStateException(s"deleted-from file $abs not in the live set"))
@@ -1404,13 +1393,13 @@ object DeltaLogWriter {
     val version = ctx.version
     val live = ctx.live
     val byAbs = live.map(a =>
-      DeltaLogReader.scanSpelling(Paths.get(base).resolve(a.path)) -> a).toMap
+      LakeScan.key(spark, DeltaLogReader.absOf(base, a.path)) -> a).toMap
     // existing DV payloads as BYTES keyed by the SCAN's path spelling:
     // positions deserialize executor-side only (for the per-file merge
     // below) — the driver never holds a position list, just KB-scale
     // bitmap blobs
     val existingBytes: Map[String, Array[Byte]] = live.flatMap(a => a.dv.map { d =>
-      DeltaLogReader.scanSpelling(Paths.get(base).resolve(a.path)) ->
+      LakeScan.key(spark, DeltaLogReader.absOf(base, a.path)) ->
         RoaringDv.loadPayload(base, d.storageType, d.pathOrInlineDv, d.offset, d.sizeInBytes)
     }).toMap
     val pairEnc = Encoders.tuple(Encoders.STRING, Encoders.scalaLong)
@@ -1483,7 +1472,7 @@ object DeltaLogWriter {
         acc.withColumn(f.name, sqlExpr(f.metadata.getString("delta.generationExpression")))
       })
     val relByAbs = ctx.live.map(a =>
-      DeltaLogReader.scanSpelling(Paths.get(base).resolve(a.path)) -> a.path).toMap
+      LakeScan.key(spark, DeltaLogReader.absOf(base, a.path)) -> a.path).toMap
     // the unified scan composes every feature: DVs applied (masked rows
     // neither match nor survive), row ids materialized (survivors and
     // post-images carry them through the rewrite), logical names (the
@@ -1610,7 +1599,7 @@ object DeltaLogWriter {
           "for inserts — deleteWhere + appendIdentity keeps the id contract")
     }
     val relByAbs = ctx.live.map(a =>
-      DeltaLogReader.scanSpelling(Paths.get(base).resolve(a.path)) -> a.path).toMap
+      LakeScan.key(spark, DeltaLogReader.absOf(base, a.path)) -> a.path).toMap
     val scan = dmlScanAll(spark, ctx)
     val srcKeys = broadcast(source.select(col(keyCol)).distinct())
     val matched = scan.join(srcKeys, keyCol)
@@ -1712,7 +1701,7 @@ object DeltaLogWriter {
           "for inserts — deleteWhere + appendIdentity keeps the id contract")
     }
     val relByAbs = ctx.live.map(a =>
-      DeltaLogReader.scanSpelling(Paths.get(base).resolve(a.path)) -> a.path).toMap
+      LakeScan.key(spark, DeltaLogReader.absOf(base, a.path)) -> a.path).toMap
     val scan = dmlScanAll(spark, ctx)
     val marker = broadcast(source.select(col(keyCol)).distinct()
       .withColumn("__src", lit(1)))

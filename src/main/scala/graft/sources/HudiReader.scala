@@ -182,7 +182,7 @@ object HudiReader {
         s"(declared: ${partitionFields(base).mkString(",") match { case "" => "none"; case x => x }})")
     val files = sliceFilesWhere(base, completedCommits(base).last, partCol, value)
     require(files.nonEmpty, s"no live files in partition $partCol=$value under $base")
-    spark.read.parquet(files: _*)
+    LakeScan.paths(spark, files)
   }
 
   /** The live file slice per file group as of `asOf`: max committed
@@ -233,7 +233,7 @@ object HudiReader {
                       fromTime: String, toTime: String): DataFrame = {
     val files = incrementalFiles(base, fromTime, toTime)
     require(files.nonEmpty, s"no commits in ($fromTime, $toTime] under $base")
-    val df = spark.read.parquet(files: _*)
+    val df = LakeScan.paths(spark, files)
     require(df.columns.contains("_hoodie_commit_time"),
       s"$base carries no _hoodie_commit_time meta column — not incremental-readable")
     df.filter(org.apache.spark.sql.functions.col("_hoodie_commit_time") > fromTime &&
@@ -244,7 +244,7 @@ object HudiReader {
   def readAsOf(spark: SparkSession, base: String, asOf: String): DataFrame = {
     val files = sliceFiles(base, asOf)
     require(files.nonEmpty, s"empty snapshot at $asOf of $base")
-    spark.read.parquet(files: _*)
+    LakeScan.paths(spark, files)
   }
 
   /** Latest-committed snapshot read. */
@@ -333,9 +333,8 @@ object HudiReader {
   def readOptimized(spark: SparkSession, base: String, asOf: String): DataFrame = {
     val bases = morSlices(base, asOf).map(_._1.path)
     require(bases.nonEmpty, s"empty read-optimized snapshot at $asOf of $base")
-    spark.read.schema(org.apache.spark.sql.GraftPlanBridge
-        .parquetFooterSchema(spark, bases.head))
-      .parquet(bases: _*)
+    LakeScan.paths(spark, bases,
+      Some(org.apache.spark.sql.GraftPlanBridge.parquetFooterSchema(spark, bases.head)))
   }
 
   /** MOR snapshot view: per record key, the LAST writer wins — log
@@ -373,9 +372,8 @@ object HudiReader {
     require(slices.nonEmpty, s"empty MOR snapshot at $asOf of $base")
     val bases = slices.map(_._1.path)
     val logs = slices.flatMap(_._2)
-    val baseDf = spark.read.schema(org.apache.spark.sql.GraftPlanBridge
-        .parquetFooterSchema(spark, bases.head))
-      .parquet(bases: _*)
+    val baseDf = LakeScan.paths(spark, bases,
+      Some(org.apache.spark.sql.GraftPlanBridge.parquetFooterSchema(spark, bases.head)))
     val dataCols = baseDf.columns.filterNot(_ == "_hoodie_is_deleted")
     if (logs.isEmpty) return baseDf.select(dataCols.map(col).toIndexedSeq: _*)
     // precedence: any log beats base; later log versions beat earlier.
@@ -389,7 +387,7 @@ object HudiReader {
     val precRows = logs.map(l =>
       (Paths.get(l.path).getFileName.toString, l.instant.toLong * 1000000L + l.version))
     val prec = spark.createDataFrame(precRows).toDF("__log_name", "__prec")
-    val logDf = spark.read.format(morLogFmt).load(logs.map(_.path): _*)
+    val logDf = LakeScan.paths(spark, logs.map(_.path), format = morLogFmt)
       .withColumn("__log_name", col("_metadata.file_name"))
       .join(broadcast(prec), Seq("__log_name"))
       .drop("__log_name")

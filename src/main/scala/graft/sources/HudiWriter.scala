@@ -430,8 +430,8 @@ object HudiWriter {
       val clashCols =
         if (partCol.isDefined) Seq("_hoodie_partition_path", "_hoodie_record_key")
         else Seq("_hoodie_record_key")
-      val clashes = spark.read.format("org.apache.spark.sql.avro.AvroFileFormat")
-        .load(staged.map(_.path.toString): _*)
+      val clashes = LakeScan.paths(spark, staged.map(_.path.toString),
+          format = "org.apache.spark.sql.avro.AvroFileFormat")
         .groupBy(clashCols.map(col): _*)
         .count().filter(col("count") > 1).count()
       if (clashes > 0L) throw new IllegalArgumentException(
@@ -532,7 +532,7 @@ object HudiWriter {
     require(live.nonEmpty, s"nothing to cluster under $base")
     val key = keyField(base)
     val instant = nextInstant(base)
-    val rows = spark.read.parquet(live.map(_.path): _*)
+    val rows = LakeScan.paths(spark, live.map(_.path))
     // key-range assignment: ntile over the key order gives contiguous,
     // evenly-sized ranges (the read-optimization clustering exists
     // for); at cluster scale this is a repartitionByRange, same shape
@@ -604,14 +604,14 @@ object HudiWriter {
     // holder would leave the stale row live) — the standard upsert
     // index-lookup join, one key-column scan
     if (clustered) {
-      touched ++= spark.read.parquet(live.map(_.path): _*)
+      touched ++= LakeScan.paths(spark, live.map(_.path))
         .withColumn("__fid", fidOf)
         .join(broadcast(df.select(col(key)).distinct()), Seq(key), "left_semi")
         .select("__fid").distinct().collect().map(_.getString(0))
     }
     val slices = live.filter(f => touched.contains(f.fileId))
     require(slices.nonEmpty, s"upsert touches no existing bucket under $base")
-    val old = spark.read.parquet(slices.map(_.path): _*).withColumn("__fid", fidOf)
+    val old = LakeScan.paths(spark, slices.map(_.path)).withColumn("__fid", fidOf)
     val dataCols = old.columns.filterNot(_ == "__fid").toIndexedSeq
     // carried rows stay in their OWN group (identity, never re-routed —
     // re-routing a boundary-tied row into an untouched group would
@@ -671,7 +671,7 @@ object HudiWriter {
     val toWrite =
       if (touched.isEmpty) stamped // pure birth: nothing to carry
       else {
-        val old = spark.read.parquet(touched.map(_.path): _*)
+        val old = LakeScan.paths(spark, touched.map(_.path))
         val carried = old.join(
           df.select(col(key), col(partCol)).distinct(),
           Seq(key, partCol), "left_anti")

@@ -12,7 +12,7 @@ import com.fasterxml.jackson.databind.node.ObjectNode
 import com.fasterxml.jackson.databind.util.RawValue
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.{broadcast, col, lit, regexp_replace}
+import org.apache.spark.sql.functions.{broadcast, col, lit}
 
 /** Read-only interop with the PUBLIC Apache Iceberg table layout (the
   * open iceberg spec) — the second foreign format after
@@ -53,11 +53,12 @@ import org.apache.spark.sql.functions.{broadcast, col, lit, regexp_replace}
   *
   * Two v2 features are real, not rejected:
   *   - POSITION deletes (`data_file.content = 1`): delete files are
-  *     parquet rows of (file_path, pos); the read applies them with a
-  *     broadcast LEFT ANTI join against the scan's own
-  *     `_metadata.file_path` / `_metadata.row_index` columns — Spark's
-  *     native row-position metadata IS the spec's `pos`, so no custom
-  *     scan is needed and pushdown/pruning on the data side survive.
+  *     parquet rows of (file_path, pos); the driver folds them into one
+  *     roaring bitmap per data file and the scan keeps a row unless its
+  *     file's bitmap holds its `_metadata.row_index` ([[LakeScan]]'s
+  *     mask) — Spark's native row-position metadata IS the spec's
+  *     `pos`, so no custom scan is needed and pushdown/pruning on the
+  *     data side survive.
   *   - PARTITION pruning: manifest entries carry the typed
   *     `data_file.partition` struct; [[readWhere]] filters entries on
   *     it driver-side (KB of avro) so non-matching data files are
@@ -75,8 +76,9 @@ import org.apache.spark.sql.functions.{broadcast, col, lit, regexp_replace}
   *     `referenced_data_file` is set): roaring bitmaps in [[Puffin]]
   *     sidecar files, located straight by the manifest's
   *     `content_offset`/`content_size_in_bytes` (no footer read on the
-  *     scan path); payload BYTES ship to executors and decode in a
-  *     flatMap — positions never materialize on the driver.
+  *     scan path); the payload BYTES ship to executors as the same
+  *     scan mask and decode once per task — positions never
+  *     materialize on the driver.
   *   - ROW LINEAGE (`_row_id`, `_last_updated_sequence_number`):
   *     synthesized per the spec as `first_row_id + position` / the data
   *     file's sequence number unless the file MATERIALIZES the columns
@@ -153,7 +155,9 @@ object IcebergReader {
     * read at (0 for a table not yet published); `base` is where it was
     * read, which relative paths resolve against. `refs` maps a branch
     * or tag name to (snapshot id, type); a tag pins an auditable
-    * snapshot against expiry. */
+    * snapshot against expiry. `other` keeps every top-level key this
+    * engine does not model (a foreign writer's `last-sequence-number`,
+    * `properties`, ...), in file order, re-emitted as-is. */
   final case class TableMetadata(base: String, version: Int, formatVersion: Int,
                                  uuid: Option[String], location: String,
                                  currentSchemaId: Option[Int], schemas: Seq[IceSchema],
@@ -161,14 +165,32 @@ object IcebergReader {
                                  currentSnapshotId: Long, snapshots: Seq[Snapshot],
                                  nextRowId: Option[Long] = None,
                                  statistics: Seq[StatisticsFile] = Nil,
-                                 refs: Map[String, (Long, String)] = Map.empty) {
+                                 refs: Map[String, (Long, String)] = Map.empty,
+                                 other: Seq[(String, JsonNode)] = Nil) {
 
     def snapshot(id: Long): Snapshot = snapshots.find(_.id == id).getOrElse(
       throw new IllegalArgumentException(s"snapshot $id not in ${base}'s metadata"))
 
-    /** `s` appended as the table's new current snapshot. */
-    def withSnapshot(s: Snapshot): TableMetadata =
-      copy(currentSnapshotId = s.id, snapshots = snapshots :+ s)
+    /** `s` appended as the table's new current snapshot, ordered after
+      * every existing one the way a foreign writer's table orders them:
+      * its `timestamp-ms` is at least one past the latest, and when
+      * snapshots carry `sequence-number` it takes the last one + 1. A
+      * carried `last-sequence-number` / `last-updated-ms` advances with
+      * it. On this writer's own tables (timestamps are snapshot ids, no
+      * sequence numbers) `s` goes in unchanged. */
+    def withSnapshot(s: Snapshot): TableMetadata = {
+      val ts = (s.timestampMs +: snapshots.map(_.timestampMs + 1)).max
+      val seq = s.sequenceNumber.orElse(snapshots.flatMap(_.sequenceNumber).maxOption.map(_ + 1))
+      val carried = other.map {
+        case ("last-sequence-number", v) =>
+          "last-sequence-number" -> seq.fold(v)(n => mapper.getNodeFactory.numberNode(n))
+        case ("last-updated-ms", v) =>
+          "last-updated-ms" -> mapper.getNodeFactory.numberNode(math.max(v.asLong, ts))
+        case kv => kv
+      }
+      copy(currentSnapshotId = s.id,
+        snapshots = snapshots :+ s.copy(timestampMs = ts, sequenceNumber = seq), other = carried)
+    }
 
     /** None for legacy tables that track no schema. */
     def currentSchema: Option[IceSchema] = currentSchemaId.map(cid =>
@@ -221,7 +243,8 @@ object IcebergReader {
     /** The metadata file's text: compact, keys in this writer's order,
       * optional keys omitted when absent (a file this writer published
       * re-emits byte for byte). Schemas and specs sort by id, statistics
-      * by snapshot, refs by name. A field with a v3 `initial-default`
+      * by snapshot, refs by name; top-level keys this engine does not
+      * model (`other`) follow as read. A field with a v3 `initial-default`
       * serializes as REQUIRED with a matching `write-default` (the
       * spec's pairing; also the writer obligation the merged-scan
       * default resolution rests on). */
@@ -276,6 +299,7 @@ object IcebergReader {
           ro.putObject(n).put("snapshot-id", id).put("type", t)
         }
       }
+      other.foreach { case (k, v) => o.set[JsonNode](k, v) }
       mapper.writeValueAsString(o)
     }
   }
@@ -292,6 +316,10 @@ object IcebergReader {
 
   private val modeledSnapshotKeys = Set("snapshot-id", "timestamp-ms", "manifest-list",
     "summary", "first-row-id", "sequence-number", "schema-id")
+
+  private val modeledTableKeys = Set("format-version", "table-uuid", "location", "schemas",
+    "current-schema-id", "partition-specs", "default-spec-id", "current-snapshot-id",
+    "snapshots", "next-row-id", "statistics", "refs")
 
   /** The table state at the current version (hint, then one parse). */
   def load(base: String): TableMetadata = load(base, currentMetadataVersion(base))
@@ -333,7 +361,8 @@ object IcebergReader {
         longOf(e, "file-size-in-bytes").getOrElse(0L))),
       field(o, "refs").toSeq.flatMap(props).map { case (n, r) =>
         n -> (need(longOf(r, "snapshot-id"), "snapshot-id", r), textOf(r, "type").getOrElse("branch"))
-      }.toMap)
+      }.toMap,
+      props(o).filterNot(e => modeledTableKeys(e._1)))
   }
 
   def currentSnapshotId(base: String, v: Int): Long = load(base, v).currentSnapshotId
@@ -472,7 +501,7 @@ object IcebergReader {
     else Paths.get(base).resolve(p).toString
 
   /** One snapshot's planned scan: live data files (+ record counts),
-    * the live position-delete files to anti-join away, the live
+    * the live position-delete files to mask away, the live
     * EQUALITY-delete files (path, sequence number) — each applies only
     * to data files with a STRICTLY smaller sequence number, the spec's
     * window that keeps same-commit re-inserts alive — and the data
@@ -485,7 +514,12 @@ object IcebergReader {
                                 dataSeq: Map[String, Long] = Map.empty,
                                 delMeta: Map[String, (Long, Long)] = Map.empty,
                                 dvs: Seq[DvRef] = Nil,
-                                firstRowIds: Map[String, Long] = Map.empty)
+                                firstRowIds: Map[String, Long] = Map.empty,
+                                sizes: Map[String, Long] = Map.empty) {
+    /** The data files as [[LakeScan]] takes them: path and manifest size. */
+    def scanFiles: Seq[LakeScan.File] = dataFiles.map { case (p, _) => fileOf(p) }
+    def fileOf(p: String): LakeScan.File = LakeScan.File(p, sizes.getOrElse(p, -1L))
+  }
 
   /** One v3 DELETION VECTOR reference from a manifest: where the blob
     * lives ([[Puffin]] file + offset + size — the manifest fields that
@@ -618,18 +652,24 @@ object IcebergReader {
     }.reduce { (a, b) =>
       SnapshotScan(a.dataFiles ++ b.dataFiles, a.posDeleteFiles ++ b.posDeleteFiles,
         a.eqDeleteFiles ++ b.eqDeleteFiles, a.dataSeq ++ b.dataSeq,
-        a.delMeta ++ b.delMeta, a.dvs ++ b.dvs, a.firstRowIds ++ b.firstRowIds)
+        a.delMeta ++ b.delMeta, a.dvs ++ b.dvs, a.firstRowIds ++ b.firstRowIds,
+        a.sizes ++ b.sizes)
     }
   }
 
   private def scanOfEntries(base: String, entries: DataFrame,
                             entryFilter: Column): SnapshotScan = {
     val dataFileFields = dataFileFieldsOf(entries)
+    // the spec requires file_size_in_bytes; a hand-composed manifest
+    // without it leaves the size to one stat per file
+    val sizeCol =
+      if (dataFileFields.contains("file_size_in_bytes")) col("data_file.file_size_in_bytes")
+      else lit(-1L)
     if (!dataFileFields.contains("content")) {
-      val files = entries.filter(entryFilter)
-        .select(col("data_file.file_path"), col("data_file.record_count"))
-        .collect().map(r => (resolve(base, r.getString(0)), r.getLong(1))).toSeq
-      SnapshotScan(files, Nil)
+      val rows = entries.filter(entryFilter)
+        .select(col("data_file.file_path"), col("data_file.record_count"), sizeCol)
+        .collect().map(r => (resolve(base, r.getString(0)), r.getLong(1), r.getLong(2))).toSeq
+      SnapshotScan(rows.map(r => (r._1, r._2)), Nil, sizes = rows.map(r => r._1 -> r._3).toMap)
     } else {
       // v2: sequence numbers ride the manifest entries (inherited from
       // the committing snapshot); absent means 0
@@ -646,7 +686,7 @@ object IcebergReader {
         .select(col("data_file.file_path"), col("data_file.record_count"), seqCol,
           opt("referenced_data_file"), opt("content_offset"),
           opt("content_size_in_bytes"), opt("first_row_id"),
-          col("data_file.content").cast("int"))
+          col("data_file.content").cast("int"), sizeCol)
         .collect().toSeq.filterNot(_.isNullAt(7)).groupBy(_.getInt(7))
       def sel(content: Int): Seq[Row] = byContent.getOrElse(content, Nil)
       val files = sel(0).map(r => (resolve(base, r.getString(0)), r.getLong(1), r.getLong(2),
@@ -671,7 +711,8 @@ object IcebergReader {
         files.map(f => f._1 -> f._3).toMap,
         (dels ++ eqDels).map(d => d._1 -> (d._2, d._3)).toMap,
         dvs,
-        files.collect { case (p, _, _, Some(fr)) => p -> fr }.toMap)
+        files.collect { case (p, _, _, Some(fr)) => p -> fr }.toMap,
+        (sel(0) ++ delRows ++ sel(2)).map(r => resolve(base, r.getString(0)) -> r.getLong(8)).toMap)
     }
   }
 
@@ -679,62 +720,47 @@ object IcebergReader {
   def snapshotFiles(spark: SparkSession, base: String, snapshotId: Long): Seq[(String, Long)] =
     planSnapshot(spark, base, snapshotId).dataFiles
 
-  /** `file:///x` and `/x` spellings of the same local path compare
-    * equal: the spec stores full URIs in delete files while Spark's
-    * `_metadata.file_path` renders a scheme-qualified URI. */
-  private def normPath(c: Column): Column = regexp_replace(c, "^file:/*", "/")
+  /** How this engine's position-delete files and DV blobs name a data
+    * file (and the `__path` of [[scanWithPositions]]): the raw URI path
+    * of its scan key ([[LakeScan.key]]), `/abs/path` URI-encoded. */
+  private[graft] def deleteTarget(key: String): String = new java.net.URI(key).getRawPath
 
-  /** Apply `scan`'s live position- and equality-delete files to a
-    * frame already stamped with `__path`/`__pos`. Shared by the read
-    * path and the DML writer (whose position DELETE must match only
-    * rows still live under the existing deletes). */
-  private[sources] def applyDeletes(spark: SparkSession, scan: SnapshotScan,
-                                    stamped: DataFrame): DataFrame = {
+  /** `__path` as a column: Spark's own URI parse of the scan's
+    * `_metadata.file_path`, the same spelling as [[deleteTarget]]. */
+  private val pathOfScan: Column =
+    org.apache.spark.sql.functions.parse_url(col("_metadata.file_path"), lit("PATH"))
+
+  /** Every position-level mask of `scan` — v3 deletion vectors and v2
+    * position-delete files — as one bitmap payload per data file, keyed
+    * by its scan key. A DV names its data file by a table-relative path
+    * ([[IcebergWriter]] writes it decoded), resolved like the data
+    * files, and its payload goes as stored; a position-delete row names
+    * it by [[deleteTarget]], a URI ([[LakeScan.positionMasks]]). A file
+    * carrying both gets their union. */
+  private def positionMasks(spark: SparkSession,
+                            scan: SnapshotScan): Map[String, Array[Byte]] =
+    (scan.dvs.map(dv => LakeScan.key(spark, dv.referenced) ->
+        Puffin.readDvPayload(dv.puffin, dv.offset, dv.size)) ++
+      LakeScan.positionMasks(spark, scan.posDeleteFiles)).groupMapReduce(_._1)(_._2) { (a, b) =>
+      RoaringDv.payload(RoaringDv.union(Seq(RoaringDv.bitmaps(a), RoaringDv.bitmaps(b))))
+    }
+
+  /** Apply `scan`'s EQUALITY deletes to a frame already stamped with
+    * `__path`. Each delete file's OWN columns are the equality tuple
+    * (the spec's equality_ids resolve to exactly the columns the file
+    * carries); it erases matching rows from data files with a STRICTLY
+    * smaller sequence number — rows (re)inserted at or after the
+    * delete's sequence survive. Files sharing one sequence (one
+    * commit's staged parts) share the same window, so they apply as ONE
+    * broadcast anti-join over one combined read — per-FILE joins
+    * scheduled a read (and a one-task schema job) per part and grew the
+    * plan linearly in part count. Null-safe match per spec; schema
+    * comes from the first part's footer (driver-side), exactly what
+    * inference would read. They stay joins: they match values, not
+    * positions. */
+  private def applyEqDeletes(spark: SparkSession, scan: SnapshotScan,
+                             stamped: DataFrame): DataFrame = {
     var data = stamped
-    if (scan.dvs.nonEmpty) {
-      // v3 DELETION VECTORS: the driver loads only the KB-scale roaring
-      // payloads (straight by manifest offset/size, no puffin footer
-      // read); the position explosion happens in an executor flatMap
-      // and the apply is the same broadcast anti-join as pos deletes
-      import org.apache.spark.sql.Encoders
-      val payloads: Seq[(String, Array[Byte])] = scan.dvs.map { dv =>
-        dv.referenced.replaceFirst("^file:/*", "/") ->
-          Puffin.readDvPayload(dv.puffin, dv.offset, dv.size)
-      }
-      val pairEnc = Encoders.tuple(Encoders.STRING, Encoders.scalaLong)
-      val dels = spark.createDataset(payloads)(
-          Encoders.tuple(Encoders.STRING, Encoders.BINARY))
-        .flatMap { case (p, b) => RoaringDv.deserialize(b).map(pos => (p, pos)) }(pairEnc)
-        .toDF("__dv_path", "__dv_pos")
-      data = data.join(broadcast(dels),
-        col("__path") === col("__dv_path") && col("__pos") === col("__dv_pos"),
-        "left_anti")
-    }
-    if (scan.posDeleteFiles.nonEmpty) {
-      // Spec position-delete application as a plain anti-join: the
-      // delete side is metadata-scale next to the data (broadcast);
-      // the data side keys on Spark's native parquet row positions, so
-      // the scan itself stays the ordinary pushdown-friendly one.
-      val dels = spark.read
-        .schema(org.apache.spark.sql.GraftPlanBridge
-          .parquetFooterSchema(spark, scan.posDeleteFiles.head))
-        .parquet(scan.posDeleteFiles: _*)
-        .select(normPath(col("file_path")).as("__del_path"), col("pos").as("__del_pos"))
-      data = data.join(broadcast(dels),
-        col("__path") === col("__del_path") && col("__pos") === col("__del_pos"),
-        "left_anti")
-    }
-    // EQUALITY deletes (the Flink-CDC shape): each delete file's OWN
-    // columns are the equality tuple (the spec's equality_ids resolve
-    // to exactly the columns the file carries); it erases matching
-    // rows from data files with a STRICTLY smaller sequence number —
-    // rows (re)inserted at or after the delete's sequence survive.
-    // Files sharing one sequence (one commit's staged parts) share the
-    // same window, so they apply as ONE broadcast anti-join over one
-    // combined read — per-FILE joins scheduled a read (and a one-task
-    // schema job) per part and grew the plan linearly in part count.
-    // Null-safe match per spec; schema comes from the first part's
-    // footer (driver-side), exactly what inference would read.
     val eqWithSchema = scan.eqDeleteFiles.map { case (p, seq) =>
       (p, seq, org.apache.spark.sql.GraftPlanBridge.parquetFooterSchema(spark, p))
     }
@@ -742,10 +768,9 @@ object IcebergReader {
       case ((delSeq, delSchema), group) =>
       val older = scan.dataFiles.map(_._1)
         .filter(p => scan.dataSeq.getOrElse(p, 0L) < delSeq)
-        .map(p => p.replaceFirst("^file:/*", "/"))
+        .map(p => deleteTarget(LakeScan.key(spark, p)))
       if (older.nonEmpty) {
-        val paths = group.map(_._1).sorted
-        val dels = spark.read.schema(delSchema).parquet(paths: _*)
+        val dels = LakeScan(spark, group.map(_._1).sorted.map(scan.fileOf), Some(delSchema))
         val eqCols = dels.columns.toSeq
         val renamed = eqCols.foldLeft(dels)((d, c) => d.withColumnRenamed(c, s"__del_$c"))
         val cond = eqCols.map(c => col(c) <=> col(s"__del_$c")).reduce(_ && _) &&
@@ -761,7 +786,7 @@ object IcebergReader {
     * keys its new position-delete file on them). */
   private[sources] def scanWithPositions(spark: SparkSession, scan: SnapshotScan): DataFrame = {
     require(scan.dataFiles.nonEmpty, "empty snapshot scan")
-    scanWithPositions(spark, scan, footerSchema(spark, scan))
+    applyEqDeletes(spark, scan, positioned(spark, scan, Some(footerSchema(spark, scan))))
   }
 
   /** The first data file's footer schema, read driver-side — the same
@@ -770,15 +795,16 @@ object IcebergReader {
   private def footerSchema(spark: SparkSession, scan: SnapshotScan) =
     org.apache.spark.sql.GraftPlanBridge.parquetFooterSchema(spark, scan.dataFiles.head._1)
 
-  private def scanWithPositions(spark: SparkSession, scan: SnapshotScan,
-                                dataSchema: org.apache.spark.sql.types.StructType): DataFrame = {
-    // stamp the file identity ONCE while the plan is still a plain
-    // file-source relation (_metadata dies at the first join)
-    val stamped = spark.read.schema(dataSchema).parquet(scan.dataFiles.map(_._1): _*)
-      .withColumn("__path", normPath(col("_metadata.file_path")))
+  /** The data files' scan under the position masks, stamped with
+    * (`__path`, `__pos`) while the plan is still a plain file-source
+    * relation (`_metadata` dies at the first join). */
+  private def positioned(spark: SparkSession, scan: SnapshotScan,
+                         schema: Option[org.apache.spark.sql.types.StructType],
+                         mergeSchema: Boolean = false): DataFrame =
+    LakeScan.mask(spark, LakeScan(spark, scan.scanFiles, schema, mergeSchema = mergeSchema),
+        positionMasks(spark, scan))
+      .withColumn("__path", pathOfScan)
       .withColumn("__pos", col("_metadata.row_index"))
-    applyDeletes(spark, scan, stamped)
-  }
 
   /** The spec's reserved row-lineage identifiers: metadata columns on a
     * v3 table, never user data — a plain read hides them even when a
@@ -794,38 +820,29 @@ object IcebergReader {
     // different schemas carry different column sets) and project the
     // CURRENT schema by field id; legacy tables keep the plain read —
     // and skip the all-footers merge pass entirely
-    val mergedCols =
-      if (meta.currentSchemaId.isEmpty) Seq.empty[String]
-      else spark.read.option("mergeSchema", "true")
-        .parquet(scan.dataFiles.map(_._1): _*).columns.toSeq
-    schemaProjection(meta, mergedCols) match {
-      case Some(proj) =>
-        var stamped = spark.read.option("mergeSchema", "true")
-          .parquet(scan.dataFiles.map(_._1): _*)
-          .withColumn("__path", normPath(col("_metadata.file_path")))
-          .withColumn("__pos", col("_metadata.row_index"))
-        // per-file default gating needs each row's file data sequence:
-        // a files-sized broadcast join (metadata-scale next to the data)
-        val needsSeq = meta.currentSchema.exists(_.fields.exists(f =>
-          f.initialDefault.isDefined && meta.fieldIntroSeq(f.id).isDefined))
-        if (needsSeq) {
-          val seqRows = scan.dataSeq.toSeq.map { case (p, sq) =>
-            (p.replaceFirst("^file:/*", "/"), sq)
-          }
-          import spark.implicits._
-          val seqDf = seqRows.toDF("__fseq_path", "__fseq")
-          stamped = stamped.join(broadcast(seqDf),
-            col("__path") === col("__fseq_path"), "left").drop("__fseq_path")
+    if (meta.currentSchemaId.isDefined) {
+      var stamped = positioned(spark, scan, None, mergeSchema = true)
+      val proj = schemaProjection(meta, stamped.columns.toSeq).get
+      // per-file default gating needs each row's file data sequence:
+      // a files-sized broadcast join (metadata-scale next to the data)
+      val needsSeq = meta.currentSchema.exists(_.fields.exists(f =>
+        f.initialDefault.isDefined && meta.fieldIntroSeq(f.id).isDefined))
+      if (needsSeq) {
+        val seqRows = scan.dataSeq.toSeq.map { case (p, sq) =>
+          (deleteTarget(LakeScan.key(spark, p)), sq)
         }
-        val masked = if (hasDels) applyDeletes(spark, scan, stamped) else stamped
-        masked.select(proj: _*)
-      case None =>
-        val dataSchema = footerSchema(spark, scan)
-        if (!hasDels)
-          spark.read.schema(dataSchema).parquet(scan.dataFiles.map(_._1): _*)
-            .drop(LineageCols: _*)
-        else scanWithPositions(spark, scan, dataSchema).select(dataSchema.fieldNames
-          .filterNot(n => LineageCols.exists(_.equalsIgnoreCase(n))).map(col).toIndexedSeq: _*)
+        import spark.implicits._
+        val seqDf = seqRows.toDF("__fseq_path", "__fseq")
+        stamped = stamped.join(broadcast(seqDf),
+          col("__path") === col("__fseq_path"), "left").drop("__fseq_path")
+      }
+      applyEqDeletes(spark, scan, stamped).select(proj: _*)
+    } else {
+      val dataSchema = footerSchema(spark, scan)
+      if (!hasDels)
+        LakeScan(spark, scan.scanFiles, Some(dataSchema)).drop(LineageCols: _*)
+      else scanWithPositions(spark, scan).select(dataSchema.fieldNames
+        .filterNot(n => LineageCols.exists(_.equalsIgnoreCase(n))).map(col).toIndexedSeq: _*)
     }
   }
 
@@ -854,7 +871,7 @@ object IcebergReader {
     require(scan.posDeleteFiles.isEmpty && scan.eqDeleteFiles.isEmpty,
       s"snapshot $snapshotId adds delete files — not an append-only snapshot")
     require(scan.dataFiles.nonEmpty, s"snapshot $snapshotId appended no data files")
-    spark.read.parquet(scan.dataFiles.map(_._1): _*)
+    LakeScan(spark, scan.scanFiles)
   }
 
   /** Manifest-entry filter for the spec's column-stats file skipping:
@@ -918,21 +935,17 @@ object IcebergReader {
 
   private[sources] def readLineage(spark: SparkSession, scan: SnapshotScan): DataFrame = {
     import org.apache.spark.sql.functions.coalesce
-    val raw = spark.read.option("mergeSchema", "true")
-      .parquet(scan.dataFiles.map(_._1): _*)
-    val stamped = raw
-      .withColumn("__path", normPath(col("_metadata.file_path")))
-      .withColumn("__pos", col("_metadata.row_index"))
-    val masked = applyDeletes(spark, scan, stamped)
+    val stamped = positioned(spark, scan, None, mergeSchema = true)
+    val rawCols = stamped.columns.filterNot(c => c == "__path" || c == "__pos")
+    val masked = applyEqDeletes(spark, scan, stamped)
     val meta = scan.dataFiles.map { case (p, _) =>
-      val norm = p.replaceFirst("^file:/*", "/")
-      (norm,
+      (deleteTarget(LakeScan.key(spark, p)),
         scan.firstRowIds.get(p).map(java.lang.Long.valueOf).orNull,
         scan.dataSeq.getOrElse(p, 0L))
     }
     val metaDf = spark.createDataFrame(meta).toDF("__lm_path", "__lm_first", "__lm_seq")
-    val matCol = (c: String) => if (raw.columns.contains(c)) col(c) else lit(null)
-    val userCols = raw.columns.filterNot(c =>
+    val matCol = (c: String) => if (rawCols.contains(c)) col(c) else lit(null)
+    val userCols = rawCols.filterNot(c =>
       LineageCols.contains(c) || c.startsWith("__")).map(col).toSeq
     masked.join(broadcast(metaDf), col("__path") === col("__lm_path"))
       .select(userCols ++ Seq(

@@ -87,9 +87,11 @@ object IcebergStreamSink {
       m.get("graft-app-id").filter(_ == appId).flatMap(_ => m.get("graft-batch-id"))
     }.map(_.toLong).foldLeft(-1L)(math.max)
 
-  /** Commit one micro-batch; false = absorbed redelivery. The first
-    * batch CREATES the table (schema-only metadata, then the summary-
-    * carrying snapshot 1). */
+  /** Commit one micro-batch; false = absorbed redelivery or a batch of
+    * no rows (known from the staged write's footers, so emptiness costs
+    * no job of its own; nothing is committed, not even the marker). The
+    * first batch CREATES the table (schema-only metadata, then the
+    * summary-carrying snapshot 1). */
   def commit(spark: org.apache.spark.sql.SparkSession,
              df: org.apache.spark.sql.DataFrame,
              base: String, appId: String, batchId: Long): Boolean = {
@@ -97,8 +99,8 @@ object IcebergStreamSink {
     val meta = IcebergReader.load(base)
     if (lastBatch(meta, appId) >= batchId) return false
     IcebergWriter.append(spark, df, meta,
-      Some(Map("graft-app-id" -> appId, "graft-batch-id" -> batchId.toString)))
-    true
+      Some(Map("graft-app-id" -> appId, "graft-batch-id" -> batchId.toString)),
+      skipEmpty = true)
   }
 }
 

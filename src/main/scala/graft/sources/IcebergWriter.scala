@@ -49,15 +49,18 @@ object IcebergWriter {
   /** Stage-write `df` and move its part files to deterministic
     * `data/s<snapshot>-<i>.parquet` names; returns (relPath, rows). */
   private def writeData(spark: SparkSession, df: DataFrame, base: String,
-                        snapshot: Long): Seq[(String, Long)] = {
-    val moved = Stage(base)(df.write.parquet(_)) { leaves =>
+                        snapshot: Long, keepEmpty: Boolean = true): Seq[(String, Long)] =
+    Stage(base)(df.write.parquet(_)) { leaves =>
       require(leaves.nonEmpty, s"writeData produced no part files for $base")
-      leaves.zipWithIndex.map { case (l, i) => Stage.move(l, base, s"data/s$snapshot-$i.parquet") }
+      // record_count per staged file from the parquet FOOTERS (metadata
+      // plane) — the old read-back job re-scanned every byte just
+      // written; a write of no rows publishes nothing unless kept
+      val counted = leaves.map(l => l -> ParquetFooters.rowCount(l.path))
+      if (!keepEmpty && counted.forall(_._2 == 0L)) Nil
+      else counted.zipWithIndex.map { case ((l, n), i) =>
+        Stage.move(l, base, s"data/s$snapshot-$i.parquet") -> n
+      }
     }
-    // record_count per staged file from the parquet FOOTERS (metadata
-    // plane) — the old read-back job re-scanned every byte just written
-    moved.map(rel => rel -> ParquetFooters.rowCount(Paths.get(base, rel)))
-  }
 
   /** One avro file of manifest entries at `rel`. */
   private def writeManifest(base: String, rel: String,
@@ -369,8 +372,7 @@ object IcebergWriter {
       case None =>
         val scan = IcebergReader.plan(spark, meta, meta.currentSnapshotId)
         require(scan.dataFiles.nonEmpty, s"cannot bootstrap a schema for empty ${meta.base}")
-        val st = spark.read.option("mergeSchema", "true")
-          .parquet(scan.dataFiles.map(_._1): _*).schema
+        val st = LakeScan(spark, scan.scanFiles, mergeSchema = true).schema
         (0, Seq(IceSchema(0, st.fields.toSeq.zipWithIndex.map {
           case (f, i) => IceField(i + 1, f.name, icebergTypeOf(f.dataType))
         })))
@@ -600,7 +602,7 @@ object IcebergWriter {
     val rows =
       if (fv == 3) IcebergReader.readLineage(spark, scan)
       else if (hasDels) IcebergReader.readScan(spark, meta, prev, scan)
-      else spark.read.parquet(live.map(_._1): _*)
+      else LakeScan(spark, scan.scanFiles)
     val files = writeData(spark, rows.repartition(numOut), base, snap)
     def relOf(abs: String) = IcebergWriter.relOf(base, abs)
     val m = manifestName(snap)
@@ -769,6 +771,12 @@ object IcebergWriter {
   private def relOf(base: String, abs: String): String =
     abs.stripPrefix(Paths.get(base).toString).stripPrefix("/")
 
+  /** [[relOf]] of a data file named by its delete target
+    * ([[IcebergReader.deleteTarget]], URI-encoded): the table-relative
+    * path a DV's `referenced-data-file` records. */
+  private def targetRel(base: String, target: String): String =
+    relOf(base, new java.net.URI(target).getPath)
+
   /** Every live entry of a v3 scan as EXISTING rows — data files keep
     * their `first_row_id` (or its absence: materialized lineage), DVs
     * keep their blob locator and original sequence. */
@@ -834,7 +842,7 @@ object IcebergWriter {
     val matched = IcebergReader.scanWithPositions(spark, scan)
       .filter(predicate.eqNullSafe(true))
     val existingBytes: Map[String, Array[Byte]] = scan.dvs.map { dv =>
-      dv.referenced.replaceFirst("^file:/*", "/") ->
+      IcebergReader.deleteTarget(LakeScan.key(spark, dv.referenced)) ->
         Puffin.readDvPayload(dv.puffin, dv.offset, dv.size)
     }.toMap
     val exBc = spark.sparkContext.broadcast(existingBytes)
@@ -856,16 +864,16 @@ object IcebergWriter {
     val puffinRel = s"data/dv-s$snap.puffin"
     val blobs = perFile.toSeq.map { case (p, _, card, payload) =>
       Puffin.Blob(Puffin.dvBlobBytes(payload), "deletion-vector-v1", snap, snap,
-        Map("referenced-data-file" -> relOf(base, p), "cardinality" -> card.toString))
+        Map("referenced-data-file" -> targetRel(base, p), "cardinality" -> card.toString))
     }
     val metas = Puffin.writeFile(s"$base/$puffinRel", blobs)
     // carried entries MINUS the replaced DVs of re-masked files
-    val touched = perFile.map(p => relOf(base, p._1)).toSet
+    val touched = perFile.map(p => targetRel(base, p._1)).toSet
     val carried = carriedV3(scan, base).filterNot(e =>
       e.content == 1 && e.refDataFile.exists(touched.contains))
     val dvEntries = perFile.toSeq.zip(metas).map { case ((p, _, card, _), m) =>
       V3Entry(1, puffinRel, card, 1, snap.toLong,
-        Some(relOf(base, p)), Some(m.offset), Some(m.length))
+        Some(targetRel(base, p)), Some(m.offset), Some(m.length))
     }
     val m = manifestName(snap)
     writeV3Manifest(base, m, carried ++ dvEntries)
@@ -943,7 +951,7 @@ object IcebergWriter {
       // v3 write-default obligation, same as append: staged rows must
       // not carry NULLs in defaulted columns (NULL ⟺ predates-column)
       if (dataRels.nonEmpty) meta.currentSchema.foreach { cur =>
-        val staged = spark.read.parquet(dataRels.map(r => s"$base/$r"): _*)
+        val staged = LakeScan.paths(spark, dataRels.map(r => s"$base/$r"))
         cur.fields.filter(f => f.initialDefault.isDefined &&
           staged.columns.contains(f.name)).foreach { f =>
           require(staged.filter(col(f.name).isNull).count() == 0L,
@@ -951,7 +959,7 @@ object IcebergWriter {
         }
       }
       val existingBytes: Map[String, Array[Byte]] = scan.dvs.map { dv =>
-        dv.referenced.replaceFirst("^file:/*", "/") ->
+        IcebergReader.deleteTarget(LakeScan.key(spark, dv.referenced)) ->
           Puffin.readDvPayload(dv.puffin, dv.offset, dv.size)
       }.toMap
       val perFile = delPosByFile.toSeq.sortBy(_._1).map { case (p, fresh) =>
@@ -966,16 +974,16 @@ object IcebergWriter {
           val puffinRel = s"data/dv-s$snap.puffin"
           val blobs = perFile.map { case (p, card, payload) =>
             Puffin.Blob(Puffin.dvBlobBytes(payload), "deletion-vector-v1", snap, snap,
-              Map("referenced-data-file" -> relOf(base, p),
+              Map("referenced-data-file" -> targetRel(base, p),
                 "cardinality" -> card.toString))
           }
           val metas = Puffin.writeFile(s"$base/$puffinRel", blobs)
           perFile.zip(metas).map { case ((p, card, _), m) =>
             V3Entry(1, puffinRel, card, 1, snap.toLong,
-              Some(relOf(base, p)), Some(m.offset), Some(m.length))
+              Some(targetRel(base, p)), Some(m.offset), Some(m.length))
           }
         }
-      val touched = perFile.map(p => relOf(base, p._1)).toSet
+      val touched = perFile.map(p => targetRel(base, p._1)).toSet
       val carried = carriedV3(scan, base).filterNot(e =>
         e.content == 1 && e.refDataFile.exists(touched.contains))
       val next0 = meta.nextRowId.getOrElse(0L)
@@ -1107,10 +1115,13 @@ object IcebergWriter {
     // 32 cpus — manifest bloat AND one read+join per file downstream)
     // and would under-split a TB CDC batch on a small driver. ~64 MB of
     // key tuples per range partition, capped at 4× the parallelism.
+    // Size estimates inflate through joins and aggregates, so a known
+    // row count (~1M key tuples per partition) clamps them too.
     val keyTuples = source.select(eqCols.map(col): _*).distinct()
-    val estBytes = org.apache.spark.sql.GraftPlanBridge.planStats(keyTuples)._2
-    val parts = math.max(1L, math.min(
-      (estBytes / (64L << 20)).toLong + 1L,
+    val (estRows, estBytes) = org.apache.spark.sql.GraftPlanBridge.planStats(keyTuples)
+    val byBytes = (estBytes / (64L << 20)).toLong + 1L
+    val byRows = estRows.map(r => (r / (1L << 20)).toLong + 1L).getOrElse(byBytes)
+    val parts = math.max(1L, math.min(math.min(byBytes, byRows),
       spark.sparkContext.defaultParallelism * 4L)).toInt
     // same staging discipline as deleteWhere: one spec-legal eq-delete
     // file per non-empty range partition (the manifest lists them
@@ -1163,12 +1174,15 @@ object IcebergWriter {
     * would DROP the delete files and silently resurrect deleted rows on
     * the next read. */
   def append(spark: SparkSession, df0: DataFrame, base: String): Unit =
-    append(spark, df0, IcebergReader.load(base), summary = None)
+    append(spark, df0, IcebergReader.load(base), summary = None): Unit
 
   /** Append with an optional SNAPSHOT SUMMARY — the streaming sink's
-    * idempotence marker rides here, atomic with the commit. */
+    * idempotence marker rides here, atomic with the commit. Under
+    * `skipEmpty` a write that staged no rows (its footers' row counts)
+    * publishes nothing; returns whether a snapshot was committed. */
   private[sources] def append(spark: SparkSession, df0: DataFrame, meta: TableMetadata,
-                              summary: Option[Map[String, String]]): Unit = {
+                              summary: Option[Map[String, String]],
+                              skipEmpty: Boolean = false): Boolean = {
     val base = meta.base
     val prev = meta.currentSnapshotId
     // FIRST append into a schema-only table (createEmpty / catalog
@@ -1179,11 +1193,12 @@ object IcebergWriter {
         require(names == df0.columns.toSeq,
           s"first append columns ${df0.columns.mkString(",")} do not match the " +
             s"declared schema ${names.mkString(",")}"))
-      val files = writeData(spark, df0, base, 1L)
+      val files = writeData(spark, df0, base, 1L, keepEmpty = !skipEmpty)
+      if (files.isEmpty) return false
       val m = manifestName(1L)
       writeManifest(base, m, files.map { case (p, n) => (1, p, n) })
       publish(meta.withSnapshot(snapshotOver(base, 1L, Seq(m)).copy(summary = summary)))
-      return
+      return true
     }
     val fv = meta.formatVersion
     // the v3 default-value writer obligations: a batch OMITTING a
@@ -1207,7 +1222,8 @@ object IcebergWriter {
     val hasDels = scan.posDeleteFiles.nonEmpty || scan.eqDeleteFiles.nonEmpty ||
       scan.dvs.nonEmpty
     val snap = prev + 1
-    val files = writeData(spark, df, base, snap)
+    val files = writeData(spark, df, base, snap, keepEmpty = !skipEmpty)
+    if (files.isEmpty) return false
     val m = manifestName(snap)
     // v3 row lineage: this commit's first-row-id is the table's
     // next-row-id; new files take contiguous id ranges in file order
@@ -1234,5 +1250,6 @@ object IcebergWriter {
       .copy(summary = summary, firstRowId = lineage))
       .copy(formatVersion = if (fv == 3) 3 else if (hasDels) 2 else fv,
         nextRowId = lineage.map(_ + files.map(_._2).sum).orElse(meta.nextRowId)))
+    true
   }
 }

@@ -9,7 +9,6 @@ import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Tabl
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns, V1Scan}
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsTruncate, V1Write, Write, WriteBuilder}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.sources
@@ -69,15 +68,6 @@ private[sources] object LakeBatchSources {
     Option(options.get("path")).getOrElse(throw new IllegalArgumentException(
       s"$who needs .option(\"path\", <table base>) / OPTIONS (path '<table base>')"))
 
-  def parquetTable(name: String, paths: Seq[String],
-                   schema: Option[StructType],
-                   extraOpts: Map[String, String]): ParquetTable = {
-    val spark = SparkSession.active
-    ParquetTable(name, spark,
-      new CaseInsensitiveStringMap(extraOpts.asJava),
-      paths, schema, classOf[ParquetFileFormat])
-  }
-
   /** A DSv2 table that SCANS through the delegate's ordinary parquet
     * scan (pushdown/pruning/codegen intact) and WRITES through the
     * format's full log writer via the V1-fallback write surface. */
@@ -130,7 +120,7 @@ private[sources] object LakeBatchSources {
 
   /** DSv2 `sources.Filter` → `Column`, for re-stating pushed filters
     * against the full reader's DataFrame plan (Catalyst then pushes
-    * them through the mask anti-joins down to the parquet scans).
+    * them through the masks down to the parquet scans).
     * None = not translatable; the filter still runs upstream (every
     * filter stays residual on the DSv2 side), so a gap here costs
     * pruning, never correctness. */
@@ -163,7 +153,7 @@ private[sources] object LakeBatchSources {
     * mask-applying DataFrame plan with the pushed filters and pruned
     * columns applied to it. The parquet scans INSIDE that plan keep
     * predicate pushdown, column pruning and codegen — Catalyst pushes
-    * the re-stated predicates through the broadcast anti-join masks —
+    * the re-stated predicates through the row-index masks —
     * while the DSv2 node reports the pushed set on its
     * RowDataSourceScan. Every filter also stays residual upstream
     * (pushFilters returns them all), so translation gaps can never
@@ -264,8 +254,8 @@ private[sources] object LakeBatchSources {
     if (adds.exists(_.dv.nonEmpty)) {
       // live DELETION VECTORS — the modern Delta default DML shape: a
       // raw file-list scan would resurrect masked rows, so this table
-      // scans through the full reader's mask-applying plan (broadcast
-      // anti-join on _metadata.row_index) via the V1-read fallback
+      // scans through the full reader's mask-applying plan (a filter
+      // on _metadata.row_index inside the scan) via the V1-read fallback
       val tname = s"graft_delta($base@$version)"
       val tschema = DeltaLogReader.read(spark, snap).schema
       val planRead = () => DeltaLogReader.read(SparkSession.active, snap)
@@ -284,8 +274,7 @@ private[sources] object LakeBatchSources {
       else new GraftMaskedTable(tname, tschema, planRead, doInsert, hint)
     }
     val pcols = snap.partitionColumns
-    val paths = adds.map(a =>
-      java.nio.file.Paths.get(base).resolve(a.path).toString)
+    val files = adds.map(DeltaLogReader.scanFile(base, _))
     // column-mapped tables (either mode) bind by PARQUET FIELD ID: the
     // requested schema carries parquet.field.id = delta.columnMapping.id
     // under the LOGICAL names, so the delegate's scan surfaces logical
@@ -311,11 +300,11 @@ private[sources] object LakeBatchSources {
     // sampled footer check (fail at resolution, not silent NULLs).
     val fieldIdOpt: Map[String, String] =
       if (colMapped.isDefined) {
-        paths.headOption.foreach(DeltaLogReader.assertEmbeddedIds(spark, _))
+        files.headOption.foreach(f => DeltaLogReader.assertEmbeddedIds(spark, f.path))
         Map("spark.sql.parquet.fieldId.read.enabled" -> "true",
           "spark.sql.parquet.fieldId.read.ignoreMissing" -> "true")
       } else Map.empty
-    val delegate = parquetTable(s"graft_delta($base@$version)", paths, schema,
+    val delegate = LakeScan.table(spark, s"graft_delta($base@$version)", files, schema,
       (if (pcols.isEmpty) Map.empty[String, String]
        else Map("basePath" -> base)) ++ fieldIdOpt)
     // doInsert always present rather than dropped when read-only: a
@@ -355,7 +344,8 @@ private[sources] object LakeBatchSources {
       val schema = StructType(declared.fields.map(f =>
         org.apache.spark.sql.types.StructField(f.name,
           org.apache.spark.sql.types.DataType.fromDDL(IcebergReader.sparkTypeOf(f.tpe)))))
-      val delegate = parquetTable(s"graft_iceberg($base@empty)", Nil, Some(schema), Map.empty)
+      val delegate = LakeScan.table(spark, s"graft_iceberg($base@empty)", Nil, Some(schema),
+        Map.empty)
       return new GraftLakeTable(delegate, delegate.name, doInsert)
     }
     val scan = IcebergReader.plan(spark, meta, snap)
@@ -397,8 +387,8 @@ private[sources] object LakeBatchSources {
     }
     // identity/transform-partitioned tables keep the source column IN
     // the data files (this writer's layout), so no dir recovery needed
-    val delegate = parquetTable(
-      s"graft_iceberg($base@$snap)", scan.dataFiles.map(_._1), None, Map.empty)
+    val delegate = LakeScan.table(spark, s"graft_iceberg($base@$snap)", scan.scanFiles,
+      None, Map.empty)
     if (writable)
       new GraftLakeTable(delegate, delegate.name, doInsert) with IcebergSqlDml {
         override val iceMeta: IcebergReader.TableMetadata = meta
@@ -444,7 +434,7 @@ private[sources] object LakeBatchSources {
     HudiReader.assertReadable(base)
     val paths = HudiReader.liveSlices(base, asOf).map(_.path)
     require(paths.nonEmpty, s"no live slices at instant $asOf of $base")
-    parquetTable(s"graft_hudi($base@$asOf)", paths, None, Map.empty)
+    LakeScan.table(spark, s"graft_hudi($base@$asOf)", LakeScan.leaves(spark, paths), None, Map.empty)
   }
 }
 

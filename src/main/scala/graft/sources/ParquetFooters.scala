@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.Path
 
 import scala.jdk.CollectionConverters._
 
@@ -8,7 +8,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.parquet.column.statistics.{IntStatistics, LongStatistics}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{DataFrame, GraftPlanBridge, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Footer-only statistics for freshly staged part files.
   *
@@ -82,24 +82,17 @@ object ParquetFooters {
   /** Row count only — always answerable from block metadata. */
   def rowCount(file: Path): Long = statsOf(file, Nil)._1
 
-  /** `spark.read.parquet(paths: _*)` without its one-task
-    * schema-inference job: the schema is read on the driver from the
-    * footer Spark's own (non-merging) inference reads — the first data
-    * file in path order, where a directory stands for the part files
-    * directly in it (names starting with `_` or `.` are not data) — so
-    * the relation's schema is the same. A path that does not exist
-    * fails here instead of at Spark's listing. */
+  /** `spark.read.parquet(paths: _*)` without its listing and its
+    * one-task schema-inference job: a [[LakeScan]] whose schema is read
+    * on the driver from the footer Spark's own (non-merging) inference
+    * reads — the first data file in path order, where a directory
+    * stands for the part files directly in it (names starting with `_`
+    * or `.` are not data) — so the relation's schema is the same. A
+    * path that does not exist fails here. */
   def read(spark: SparkSession, paths: Seq[String]): DataFrame = {
     require(paths.nonEmpty, "no parquet path to read")
-    val leaves = paths.flatMap { p =>
-      val f = Paths.get(p)
-      if (!Files.isDirectory(f)) Seq(p)
-      else Fs.list(f).filter(Files.isRegularFile(_)).map(_.getFileName.toString)
-        .filterNot(n => n.startsWith("_") || n.startsWith("."))
-        .minOption.map(n => s"$p/$n")
-    }
-    require(leaves.nonEmpty, s"no parquet data file under ${paths.mkString(", ")}")
-    spark.read.schema(GraftPlanBridge.parquetFooterSchema(spark, leaves.min))
-      .parquet(paths: _*)
+    val files = LakeScan.leaves(spark, paths)
+    require(files.nonEmpty, s"no parquet data file under ${paths.mkString(", ")}")
+    LakeScan(spark, files)
   }
 }

@@ -4,6 +4,8 @@ import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.file.{Files, Paths}
 import java.util.zip.CRC32
 
+import org.roaringbitmap.RoaringBitmap
+
 /** PUBLIC-spec Delta Lake deletion-vector plumbing, from scratch:
   *
   *   - the Z85 codec (the ZeroMQ RFC 32 alphabet) Delta uses to spell
@@ -11,21 +13,19 @@ import java.util.zip.CRC32
   *   - the 64-bit "RoaringBitmapArray" portable serialization the spec
   *     mandates for the bitmap payload (4-byte magic 1681511377 LE +
   *     8-byte bitmap count + one standard 32-bit roaring bitmap per
-  *     high word), with ALL THREE container flavors readable — array,
-  *     8 KiB bitset, and RUN containers (cookie 12347 + run bitset;
-  *     the offset section is omitted below the spec's 4-container
-  *     threshold, where containers decode sequentially). The writer
-  *     emits array/bitset only (it never has run-friendly inputs);
-  *     the reader accepts what real DV writers emit after optimize
-  *     on dense deletes,
+  *     high word). The writer emits array/bitset containers only (it
+  *     never has run-friendly inputs); the reader decodes each 32-bit
+  *     bitmap with `org.roaringbitmap` (Spark's own dependency), so it
+  *     also takes the RUN containers real DV writers emit after
+  *     optimize on dense deletes,
   *   - the on-disk DV file frame: a 1-byte format version, then each
   *     DV at its descriptor's `offset` as
   *     `<4-byte BE size><payload><4-byte BE CRC32(payload)>`.
   *
   * Everything here is KB-scale metadata plumbing; the positions a DV
-  * masks are applied to data by an ordinary broadcast anti-join on
-  * Spark's native parquet `_metadata.row_index` (see
-  * [[DeltaLogReader.read]]), so the data path stays the
+  * masks are applied to data by one filter inside the scan that tests
+  * Spark's native parquet `_metadata.row_index` against the file's
+  * bitmap ([[LakeScan.unmasked]]), so the data path stays the
   * pushdown-friendly scan.
   */
 object RoaringDv {
@@ -83,8 +83,9 @@ object RoaringDv {
 
   private val MAGIC = 1681511377
   // Public RoaringBitmap portable-format cookies: SERIAL_COOKIE_NO_RUNCONTAINER
-  // = 12346 (followed by a 4-byte container count), SERIAL_COOKIE = 12347
-  // (run-capable; container count - 1 lives in the cookie's high 16 bits).
+  // = 12346 (followed by a 4-byte container count; what the writer emits),
+  // SERIAL_COOKIE = 12347 (run-capable; container count - 1 lives in the
+  // cookie's high 16 bits).
   private val COOKIE_NO_RUN = 12346
   private val COOKIE_RUN = 12347
   private val ARRAY_MAX = 4096
@@ -142,74 +143,83 @@ object RoaringDv {
     buf.array
   }
 
-  /** Deserialize back to sorted row indexes. */
-  def deserialize(bytes: Array[Byte]): Seq[Long] = {
+  /** The payload's 32-bit bitmaps, indexed by high word (the spec's
+    * dense array), decoded by `org.roaringbitmap` — array, bitset and
+    * run containers, with or without the offset header. */
+  def bitmaps(bytes: Array[Byte]): Array[RoaringBitmap] = {
     val buf = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
     require(buf.getInt == MAGIC, "not a RoaringBitmapArray payload (bad magic)")
     val nMaps = buf.getLong
     require(nMaps >= 0 && nMaps < (1L << 31), s"implausible bitmap count $nMaps")
-    (0L until nMaps).flatMap { high =>
-      deserialize32(buf).map(low => (high << 32) | (low & 0xffffffffL))
+    Array.fill(nMaps.toInt) {
+      val declared = declaredCardinality(buf.slice().order(ByteOrder.LITTLE_ENDIAN))
+      val bm = new RoaringBitmap
+      bm.deserialize(buf.slice().order(ByteOrder.LITTLE_ENDIAN))
+      require(bm.getLongCardinality == declared,
+        s"roaring bitmap declares $declared values but its containers hold " +
+          bm.getLongCardinality)
+      buf.position(buf.position() + bm.serializedSizeInBytes)
+      bm
     }
   }
 
-  /** The spec's offset-header threshold: a run-cookie bitmap with
-    * fewer containers omits the offset section entirely and readers
-    * must decode containers SEQUENTIALLY in header order. */
-  private val NO_OFFSET_THRESHOLD = 4
-
-  private def deserialize32(buf: ByteBuffer): Seq[Int] = {
-    val start = buf.position()
+  /** The sum of a 32-bit bitmap's per-container header cardinalities —
+    * checked against what its containers decode to, so a corrupt
+    * payload fails instead of masking the wrong rows. */
+  private def declaredCardinality(buf: ByteBuffer): Long = {
     val cookie = buf.getInt
-    val (n, hasRuns) =
-      if (cookie == COOKIE_NO_RUN) (buf.getInt, false)
-      else if ((cookie & 0xffff) == COOKIE_RUN) (((cookie >>> 16) & 0xffff) + 1, true)
-      else throw new IllegalArgumentException(s"bad roaring cookie $cookie")
-    // run-cookie bitmaps carry a bitset marking which containers are
-    // RUN-encoded ((start, extra-length) uint16 pairs) — real DV
-    // writers emit these after optimize on dense deletes
-    val runBits =
-      if (!hasRuns) null
-      else { val b = new Array[Byte]((n + 7) / 8); buf.get(b); b }
-    def isRun(i: Int) = hasRuns && (runBits(i >>> 3) & (1 << (i & 7))) != 0
-    val headers = (0 until n).map { _ =>
-      val key = buf.getShort & 0xffff
-      val card = (buf.getShort & 0xffff) + 1
-      (key, card)
-    }
-    val hasOffsets = !hasRuns || n >= NO_OFFSET_THRESHOLD
-    val offsets = if (hasOffsets) (0 until n).map(_ => buf.getInt) else Seq.empty[Int]
-    val out = Seq.newBuilder[Int]
-    (0 until n).foreach { i =>
-      val (key, card) = headers(i)
-      if (hasOffsets) buf.position(start + offsets(i))
-      if (isRun(i)) {
-        val nRuns = buf.getShort & 0xffff
-        var total = 0
-        (0 until nRuns).foreach { _ =>
-          val v0 = buf.getShort & 0xffff
-          val len = buf.getShort & 0xffff // run covers v0 .. v0+len inclusive
-          (v0 to v0 + len).foreach(v => out += (key << 16) | v)
-          total += len + 1
-        }
-        require(total == card,
-          s"run container $i declares cardinality $card but its runs cover $total")
-      } else if (card <= ARRAY_MAX) {
-        (0 until card).foreach { _ =>
-          out += (key << 16) | (buf.getShort & 0xffff)
-        }
-      } else {
-        val bits = new Array[Byte](8192)
-        buf.get(bits)
-        var v = 0
-        while (v < 65536) {
-          if ((bits(v >>> 3) & (1 << (v & 7))) != 0) out += (key << 16) | v
-          v += 1
-        }
-      }
-    }
-    out.result()
+    val n =
+      if (cookie == COOKIE_NO_RUN) buf.getInt
+      else if ((cookie & 0xffff) == COOKIE_RUN) {
+        val n = ((cookie >>> 16) & 0xffff) + 1
+        buf.position(buf.position() + (n + 7) / 8) // the run-container bitset
+        n
+      } else throw new IllegalArgumentException(s"bad roaring cookie $cookie")
+    (0 until n).map { _ => buf.getShort; (buf.getShort & 0xffff) + 1L }.sum
   }
+
+  /** Whether row index `pos` is in [[bitmaps]]' set. */
+  def contains(bits: Array[RoaringBitmap], pos: Long): Boolean = {
+    val high = pos >>> 32
+    high < bits.length && bits(high.toInt).contains(pos.toInt)
+  }
+
+  /** Row indexes collected into 32-bit bitmaps by high word — how a
+    * reader folds position-delete rows into a mask. */
+  final class Positions {
+    private val maps = scala.collection.mutable.ArrayBuffer.empty[RoaringBitmap]
+    def add(pos: Long): Unit = {
+      require(pos >= 0, s"negative row index $pos")
+      val high = (pos >>> 32).toInt
+      while (maps.size <= high) maps += new RoaringBitmap
+      maps(high).add(pos.toInt)
+    }
+    def bitmaps: Array[RoaringBitmap] = maps.toArray
+  }
+
+  /** The union of several [[bitmaps]] results. */
+  def union(sets: Seq[Array[RoaringBitmap]]): Array[RoaringBitmap] =
+    Array.tabulate(if (sets.isEmpty) 0 else sets.map(_.length).max) { high =>
+      RoaringBitmap.or(sets.filter(_.length > high).map(_(high)): _*)
+    }
+
+  /** A RoaringBitmapArray payload of `bits`, serialized by
+    * `org.roaringbitmap` — the form a reader ships to its scan as a mask.
+    * DVs written to a table go through [[serialize]]. */
+  def payload(bits: Array[RoaringBitmap]): Array[Byte] = {
+    val buf = ByteBuffer.allocate(12 + bits.map(_.serializedSizeInBytes).sum)
+      .order(ByteOrder.LITTLE_ENDIAN)
+    buf.putInt(MAGIC)
+    buf.putLong(bits.length.toLong)
+    bits.foreach(_.serialize(buf))
+    buf.array
+  }
+
+  /** Deserialize back to sorted row indexes. */
+  def deserialize(bytes: Array[Byte]): Seq[Long] =
+    bitmaps(bytes).toSeq.zipWithIndex.flatMap { case (bm, high) =>
+      bm.toArray.toSeq.map(low => (high.toLong << 32) | (low & 0xffffffffL))
+    }
 
   // ---- the DV file frame ---------------------------------------------------
 

@@ -223,12 +223,16 @@ final class TxnLog(spark: SparkSession, base: String, statCol: Option[String] = 
     * — the exactly-once contract a `foreachBatch` sink needs when the
     * engine re-delivers a batch after a restart (the committed marker,
     * not the checkpoint, is the source of truth on the table side).
-    * Returns the committed version, or -1 if the batch was already in. */
+    * Returns the committed version, or -1 when nothing was committed:
+    * the batch was already in, or it held no rows. */
   def commitIfAbsent(appId: String, batchId: Long, df: DataFrame): Int = {
     val v = latestVersion()
     val seen = (0 to v).exists(i => readManifest(i).txns.contains(appId -> batchId))
     if (seen) return -1
+    // an empty batch (the write's own observed count) commits nothing,
+    // not even its marker
     val adds = writeGroup(df).toSeq
+    if (adds.isEmpty) return -1
     val committed = commit(adds, Seq.empty, txn = Some(appId -> batchId))
     if (committed < 0) adds.foreach(a => TxnLog.rmrf(s"$base/${a.path}")) // lost the race
     committed
@@ -427,8 +431,7 @@ final class TxnLog(spark: SparkSession, base: String, statCol: Option[String] = 
   def readEvolved(version: Int): DataFrame = {
     val files = snapshotFiles(version)
     if (files.isEmpty) throw new IllegalStateException("empty snapshot read")
-    spark.read.option("mergeSchema", "true")
-      .parquet(files.map(f => s"$base/${f.path}"): _*)
+    LakeScan.paths(spark, files.map(f => s"$base/${f.path}"), mergeSchema = true)
   }
 
   /** Latest-snapshot read. */

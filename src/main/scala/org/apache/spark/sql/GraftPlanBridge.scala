@@ -73,6 +73,70 @@ object GraftPlanBridge {
       .convert(msg).asNullable
   }
 
+  /** A file-source DataFrame over a FIXED list of file statuses: a
+    * `HadoopFsRelation` over a [[GraftFileIndex]] wrapped as a
+    * `LogicalRelation`, so building it neither globs, checks existence
+    * nor lists — Spark's scan, pushdown, vectorized reader and
+    * `_metadata` columns are those of a path read. A `basePath` option
+    * turns on Spark's own hive partition discovery over the statuses'
+    * directories (`schema`'s types win for the columns it declares).
+    * The data schema is `schema` minus the partition columns, else
+    * `inferred`, else the format's own inference over the statuses
+    * (the merge job under `mergeSchema`). */
+  def fileScan(spark: SparkSession, statuses: Seq[org.apache.hadoop.fs.FileStatus],
+               schema: Option[types.StructType], inferred: Option[types.StructType],
+               format: String, options: Map[String, String]): DataFrame = {
+    val cs = spark.asInstanceOf[classic.SparkSession]
+    val index = new GraftFileIndex(cs, statuses, options, schema)
+    val fmt: execution.datasources.FileFormat =
+      if (format == "parquet") new execution.datasources.parquet.ParquetFileFormat
+      else execution.datasources.DataSource.lookupDataSource(format, cs.sessionState.conf)
+        .getConstructor().newInstance().asInstanceOf[execution.datasources.FileFormat]
+    val parts = index.partitionSchema
+    val resolver = cs.sessionState.conf.resolver
+    val dataSchema = schema.map(s => types.StructType(s.filterNot(f =>
+        parts.exists(p => resolver(p.name, f.name)))))
+      .orElse(inferred)
+      .orElse(fmt.inferSchema(cs, options, index.allFiles()))
+      .getOrElse(throw new IllegalArgumentException(
+        s"no schema for the $format files ${statuses.take(3).map(_.getPath).mkString(", ")}"))
+    val relation = execution.datasources.HadoopFsRelation(index, parts, dataSchema.asNullable,
+      None, fmt, options)(cs)
+    classic.Dataset.ofRows(cs, execution.datasources.LogicalRelation(relation))
+  }
+
+  /** A DSv2 parquet table over the same fixed index: Spark's own
+    * `ParquetTable` (its scan builder, pushdown and V2 scan) with the
+    * listing replaced by [[GraftFileIndex]]. */
+  def parquetTable(spark: SparkSession, name: String,
+                   statuses: Seq[org.apache.hadoop.fs.FileStatus],
+                   schema: Option[types.StructType], options: Map[String, String])
+  : execution.datasources.v2.parquet.ParquetTable = {
+    val cs = spark.asInstanceOf[classic.SparkSession]
+    import scala.jdk.CollectionConverters._
+    val index = new GraftFileIndex(cs, statuses, options, schema)
+    new execution.datasources.v2.parquet.ParquetTable(name, cs,
+        new util.CaseInsensitiveStringMap(options.asJava), statuses.map(_.getPath.toString),
+        schema, classOf[execution.datasources.parquet.ParquetFileFormat]) {
+      override lazy val fileIndex: execution.datasources.PartitioningAwareFileIndex = index
+    }
+  }
+
+  /** The string a file scan renders as `_metadata.file_path` for a file
+    * the index handed it at `path` (qualified): Spark's own `SparkPath`
+    * rendering of that `Path`. */
+  def filePathKey(path: org.apache.hadoop.fs.Path): String =
+    org.apache.spark.paths.SparkPath.fromPath(path).toString
+
+  /** TRUE for a row unless the bitmap of its file holds its row index:
+    * `masks` maps a [[filePathKey]] to a RoaringBitmapArray payload
+    * ([[graft.sources.RoaringDv]]) and ships to executors as one
+    * broadcast variable (no job). */
+  def unmaskedRow(spark: SparkSession, masks: Map[String, Array[Byte]],
+                  path: Column, rowIndex: Column): Column =
+    column(RowIndexMask(expression(path), expression(rowIndex),
+      spark.sparkContext.broadcast(masks)))
+
   /** Unload every state-store provider this executor holds for
     * terminated streaming queries (each drain in this engine uses a
     * fresh checkpoint, so nothing ever reloads them) — without this,
@@ -101,6 +165,71 @@ object GraftPlanBridge {
     installer(ext)
     (ext.buildPlannerStrategies(cs), ext.buildOptimizerRules(cs))
   }
+}
+
+/** A file index over statuses the caller already holds (a table log
+  * lists each file with its exact size): `listFiles`, partition pruning
+  * and the constant-metadata filters are Spark's own, but nothing is
+  * listed, globbed or stat'ed. Equality follows `InMemoryFileIndex`
+  * (the set of root paths), so plans over the same files still compare
+  * equal for exchange reuse. */
+final class GraftFileIndex(spark: classic.SparkSession,
+                           statuses: Seq[org.apache.hadoop.fs.FileStatus],
+                           parameters: Map[String, String],
+                           userSchema: Option[types.StructType])
+  extends execution.datasources.PartitioningAwareFileIndex(spark, parameters, userSchema) {
+  import org.apache.hadoop.fs.{FileStatus, Path}
+  override lazy val rootPaths: Seq[Path] = statuses.map(_.getPath)
+  override protected lazy val leafFiles: scala.collection.mutable.LinkedHashMap[Path, FileStatus] =
+    scala.collection.mutable.LinkedHashMap(statuses.map(s => s.getPath -> s): _*)
+  override protected lazy val leafDirToChildrenFiles: Map[Path, Array[FileStatus]] =
+    statuses.toArray.groupBy(_.getPath.getParent)
+  private lazy val spec = inferPartitioning()
+  override def partitionSpec(): execution.datasources.PartitionSpec = spec
+  override def refresh(): Unit = ()
+  override def equals(other: Any): Boolean = other match {
+    case g: GraftFileIndex => rootPaths.toSet == g.rootPaths.toSet
+    case _ => false
+  }
+  override def hashCode(): Int = rootPaths.toSet.hashCode()
+}
+
+/** `unmasked(file_path, row_index)`: FALSE for a row whose file's
+  * deletion bitmap holds its row index. A task decodes each file's
+  * bitmap once (by the file path it last saw, then a per-task cache),
+  * so the per-row cost is one path compare and one bitmap probe. */
+case class RowIndexMask(path: catalyst.expressions.Expression,
+                        rowIndex: catalyst.expressions.Expression,
+                        masks: org.apache.spark.broadcast.Broadcast[Map[String, Array[Byte]]])
+  extends catalyst.expressions.BinaryExpression with catalyst.expressions.Predicate
+    with catalyst.expressions.codegen.CodegenFallback {
+  import org.apache.spark.unsafe.types.UTF8String
+  import org.roaringbitmap.RoaringBitmap
+  override def left: catalyst.expressions.Expression = path
+  override def right: catalyst.expressions.Expression = rowIndex
+  override def nullable: Boolean = false
+  override def prettyName: String = "unmasked"
+  override def flatArguments: Iterator[Any] = Iterator(path, rowIndex)
+
+  @transient private lazy val decoded =
+    scala.collection.mutable.HashMap.empty[UTF8String, Array[RoaringBitmap]]
+  @transient private var lastPath: UTF8String = _
+  @transient private var lastBits: Array[RoaringBitmap] = _
+
+  override def eval(input: catalyst.InternalRow): Any = {
+    val p = path.eval(input).asInstanceOf[UTF8String]
+    if (lastPath == null || p != lastPath) {
+      lastPath = p.clone()
+      lastBits = decoded.getOrElseUpdate(lastPath,
+        masks.value.get(lastPath.toString).map(graft.sources.RoaringDv.bitmaps).orNull)
+    }
+    lastBits == null || !graft.sources.RoaringDv.contains(lastBits,
+      rowIndex.eval(input).asInstanceOf[Long])
+  }
+
+  override protected def withNewChildrenInternal(
+      l: catalyst.expressions.Expression, r: catalyst.expressions.Expression): RowIndexMask =
+    copy(path = l, rowIndex = r)
 }
 
 /** Serializable opener for spec-conformant parquet part files on
@@ -191,8 +320,9 @@ final class GraftDeltaStreamSink(base: String, appId: String)
 /** V1 streaming SINK over the Iceberg writer — what
   * `writeStream.format("graft-iceberg-stream")` starts; idempotence
   * markers ride each committed snapshot's `summary`
-  * ([[graft.sources.IcebergStreamSink]]). Empty batches are skipped
-  * (nothing to commit; the marker exists only with a snapshot). */
+  * ([[graft.sources.IcebergStreamSink]]). Empty batches commit
+  * nothing (the marker exists only with a snapshot); the sink learns
+  * emptiness from its own staged write, not from an extra job. */
 final class GraftIcebergStreamSink(base: String, appId: String)
   extends execution.streaming.Sink {
   override def name(): String = s"graft_iceberg_sink($base)"
@@ -201,15 +331,15 @@ final class GraftIcebergStreamSink(base: String, appId: String)
     val spark = cd.sparkSession
     val batch = spark.internalCreateDataFrame(
       cd.queryExecution.toRdd.map(_.copy()), data.schema, isStreaming = false)
-    if (!batch.isEmpty)
-      graft.sources.IcebergStreamSink.commit(spark, batch, base, appId, batchId)
+    graft.sources.IcebergStreamSink.commit(spark, batch, base, appId, batchId)
     ()
   }
 }
 
 /** V1 streaming SINK over [[graft.sources.TxnLog]] — what
   * `writeStream.format("graft-txnlog-stream")` starts; exactly-once
-  * via the manifest txn markers. Empty batches are skipped. */
+  * via the manifest txn markers. Empty batches commit nothing; the
+  * group write's observed row count says so, not an extra job. */
 final class GraftTxnLogStreamSink(base: String, appId: String)
   extends execution.streaming.Sink {
   override def name(): String = s"graft_txnlog_sink($base)"
@@ -218,11 +348,9 @@ final class GraftTxnLogStreamSink(base: String, appId: String)
     val spark = cd.sparkSession
     val batch = spark.internalCreateDataFrame(
       cd.queryExecution.toRdd.map(_.copy()), data.schema, isStreaming = false)
-    if (!batch.isEmpty) {
-      val log = new graft.sources.TxnLog(spark, base)
-      log.init()
-      log.commitIfAbsent(appId, batchId, batch)
-    }
+    val log = new graft.sources.TxnLog(spark, base)
+    log.init()
+    log.commitIfAbsent(appId, batchId, batch)
     ()
   }
 }

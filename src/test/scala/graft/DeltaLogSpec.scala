@@ -815,17 +815,19 @@ class DeltaLogSpec extends SparkSpec {
       graft.sources.DeltaLogWriter.renameColumn(spark, plain, "tag", "label"))
   }
 
-  test("plan pins: DV reads broadcast-anti-join; colmap filters push to the physical scan") {
-    // DV read: the mask applies as a BroadcastHashJoin LeftAnti over the
-    // ordinary parquet scan — never a nested loop, never a shuffle of
-    // the data side keyed by position
+  test("plan pins: DV reads mask inside the scan (no join); colmap filters push down") {
+    // DV read: the mask applies as one row-index filter over the
+    // ordinary parquet scan — no join, no exchange, no broadcast of
+    // exploded positions
     val dvBase = "/tmp/graft_delta_test/dvplan"
     val df = spark.createDataFrame((1L to 8L).map(Tuple1(_))).toDF("id").coalesce(1)
     graft.sources.DeltaLogWriter.create(spark, df, dvBase, "t-dvplan")
     graft.sources.DeltaLogWriter.deleteWhereDv(spark, dvBase, col("id") <= 2)
-    val dvPlan = DeltaLogReader.read(spark, dvBase).queryExecution.executedPlan.toString
-    assert(dvPlan.contains("BroadcastHashJoin") && dvPlan.contains("LeftAnti"), dvPlan)
-    assert(!dvPlan.contains("BroadcastNestedLoopJoin"), dvPlan)
+    val dvRead = DeltaLogReader.read(spark, dvBase)
+    val dvPlan = dvRead.queryExecution.executedPlan.toString
+    assert(dvPlan.contains("unmasked(") && dvPlan.contains("FileScan parquet"), dvPlan)
+    assert(!dvPlan.contains("Join") && !dvPlan.contains("Exchange"), dvPlan)
+    assert(dvRead.collect().map(_.getLong(0)).sorted.toSeq == (3L to 8L))
     // column mapping: a filter on the LOGICAL name must reach the
     // parquet source as a pushed filter on the PHYSICAL column
     val cmBase = "/tmp/graft_delta_test/cmplan"

@@ -879,6 +879,17 @@ class IcebergSpec extends SparkSpec {
     assert(s99.summary.contains(Map("operation" -> "append")))
     // the stream order still follows the foreign sequence numbers
     assert(meta.history.map(_.id) == Seq(98L, 99L, 100L))
+    // the new snapshot continues the foreign ordering fields: sequence
+    // number, a timestamp past the latest, the top-level counters
+    val s100 = meta.snapshot(100L)
+    assert(s100.sequenceNumber.contains(3L))
+    assert(s100.timestampMs > s99.timestampMs)
+    assert(meta.snapshotAtTimestamp(s100.timestampMs) == 100L)
+    assert(meta.snapshotAtTimestamp(s99.timestampMs) == 99L)
+    val top = meta.other.toMap
+    assert(top("last-sequence-number").asLong == 3L)
+    assert(top("last-updated-ms").asLong == s100.timestampMs)
+    assert(top("last-column-id").asInt == 1)
   }
 
   test("pretty-printed metadata parses to the same table state and reads the same rows") {

@@ -493,13 +493,13 @@ class PlanAuditSpec extends SparkSpec {
       s"column pruning lost through the Delta file list: $read")
   }
 
-  test("q_iceberg_deletes applies position deletes as a broadcast anti-join") {
+  test("q_iceberg_deletes masks position deletes inside the scan (no join)") {
     val p = executedPlanOf("q_iceberg_deletes")
-    // the delete side is metadata-scale: LEFT ANTI must hash-broadcast,
-    // never nested-loop, and the data side stays a parquet scan
-    assert(p.contains("BroadcastHashJoin") && p.contains("LeftAnti"),
-      s"position deletes not a broadcast anti-join:\n$p")
-    assert(!p.contains("BroadcastNestedLoopJoin"), s"BNLJ in the delete path:\n$p")
+    // the deletes fold into per-file bitmaps: one row-index filter over
+    // the parquet scan, no join and no broadcast exchange of positions
+    assert(p.contains("unmasked("), s"position deletes not a row-index mask:\n$p")
+    assert(!p.contains("Join") && !p.contains("BroadcastExchange"),
+      s"a join or broadcast in the delete path:\n$p")
     assert(p.contains("FileScan parquet"), s"data side not a parquet scan:\n$p")
   }
 
